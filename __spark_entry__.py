@@ -740,9 +740,10 @@ def embedding_entity_link(spark, sf_dir):
 
 
 def kg_triples_stream(spark, sf_dir):
-    """Streaming twin of explode_extracted_triples: the IDENTICAL
-    chunk -> score -> Arrow-extract -> clean -> explode operator chain run
-    as a Structured Streaming query (file source, availableNow trigger,
+    """Streaming twin of explode_extracted_triples: the same
+    chunk -> score -> extract -> clean -> explode chain (one extraction
+    kernel, its native items exploded directly) run as a Structured
+    Streaming query (file source, availableNow trigger,
     exactly-once parquet sink) over the fixture corpus — same oracle SQL
     as the batch chain, so batch/stream parity is oracle-checked, not just
     pytest-asserted."""

@@ -7,14 +7,16 @@ reference at /root/reference) as a staged Spark DataFrame pipeline:
       -> assemble (stable per-turn ordering)
       -> chunk (native split/posexplode)
       -> score/filter (native keyword / pandas-UDF fuzzy)
-      -> extract (mapInPandas, schema-guided deterministic backend,
-                  ported validation/cleaning semantics)
+      -> extract (schema-guided deterministic backend as native column
+                  expressions; API backends via mapInPandas; ported
+                  validation/cleaning semantics)
       -> normalize to (subj, pred, obj) triples
       -> entity link (broadcast dictionary join)
       -> canonicalize (connected components)
       -> materialize nodes/edges tables
 
-Everything outside the extraction/scoring pandas UDFs is native Catalyst.
+Everything outside the API-backend extraction and the fuzzy-scoring pandas
+UDFs is native Catalyst.
 """
 
 __version__ = "0.1.0"

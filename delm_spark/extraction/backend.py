@@ -9,8 +9,14 @@ through the SAME cleaning rules the reference applies
 (delm_spark.schemas.clean), so fidelity is defined by the cleaning kernel,
 not the backend.
 
-A real LLM backend plugs in by implementing `extract_raw(text) -> dict`;
-the Spark plumbing (mapInPandas batching, cache dedup, retry) is identical.
+Every backend implements `extract_raw(text) -> dict` (raw, pre-cleaning);
+extract_chunks runs it per row inside one `mapInPandas` stage with retry
+and per-chunk error safety. A backend whose extraction is a pure
+expression chain may also publish `native_extract_items(spec, col)`: the
+CLEANED items as a native array<struct> Column. RuleTripleExtractor does,
+and that one kernel serves every extract_chunks mode and the pipeline's
+triples stage; its `extract_raw` stays as the per-row reference the
+tests compare against.
 """
 
 from __future__ import annotations
@@ -78,133 +84,6 @@ class RuleTripleExtractor:
         ]
         return {self.spec.container_name: items}
 
-    def extract_raw_batch(self, texts) -> list[dict[str, Any]]:
-        """Vectorized batch extraction via pandas `str.extractall` (C regex
-        loop). Match order within a row is document order — same contract
-        as extract_raw."""
-        import pandas as pd
-
-        texts = pd.Series(texts).fillna("").reset_index(drop=True)
-        cname = self.spec.container_name
-        out: list[dict[str, Any]] = [{cname: []} for _ in range(len(texts))]
-        if len(texts) == 0:
-            return out
-        m = texts.str.extractall(self._pattern)
-        if len(m):
-            for (row, _match), subj, phrase, obj in zip(
-                m.index, m["subj"], m["phrase"], m["obj"]
-            ):
-                out[row][cname].append(
-                    {"subj": subj, "pred": self._pred_of[phrase], "obj": obj}
-                )
-        return out
-
-    def native_extract_columns(self, spec, text_col):
-        """Whole-stage-codegen twin of extract_raw + clean_response +
-        json.dumps for the nested all-scalar-string spec shape (r6,
-        guide §4.1: prefer built-ins over any Python boundary): three
-        `regexp_extract_all` passes over the shared pattern yield aligned
-        (subj, phrase, obj) arrays; the cleaning rules and the JSON
-        serialization are native array/string expressions.
-
-        Byte parity with json.dumps holds because every serialized value
-        is JSON-escape-free by construction: subj/obj match ENTITY_RE
-        (`[A-Za-z ]` only) and pred labels / the container name are
-        checked for json-safe characters below — so
-        encode_basestring_ascii(v) == '"' + v + '"' exactly. Returns a
-        dict {json: Column, in_tokens: Column, out_tokens: Column}, or
-        None when the spec/phrase shape disqualifies the native path
-        (caller falls back to the Arrow/pandas stage). Pinned
-        byte-for-byte against the Python path in
-        tests/test_round6_opt.py.
-        """
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        from delm_spark.constants import LLM_NULL_WORDS_LOWERCASE
-
-        if not self._fast_path_ok(spec):
-            return None
-        safe = _re.compile(r"[A-Za-z0-9_ ]*\Z")
-        if not safe.match(spec.container_name):
-            return None
-        for p, label in self._pred_of.items():
-            if not safe.match(p) or not safe.match(label):
-                return None
-        # Java twin of the Python pattern: named groups -> plain groups
-        # (group indices 1=subj, 2=phrase, 3=obj; ENTITY_RE's inner group
-        # is non-capturing). Phrase/entity characters are [A-Za-z ], so
-        # the escaped alternation parses identically under java.util.regex.
-        text = F.coalesce(text_col, F.lit(""))
-        zipped = self._native_match_structs(text)
-        pred_of = self._pred_of
-
-        def item_of(x):
-            subj = x.getField("s")
-            phrase = x.getField("p")
-            obj = x.getField("o")
-            # phrase -> pred label (when-chain over the closed phrase set)
-            expr = None
-            for ph, label in pred_of.items():
-                cond = phrase == F.lit(ph)
-                expr = (
-                    F.when(cond, F.lit(label))
-                    if expr is None
-                    else expr.when(cond, F.lit(label))
-                )
-            vals = {"subj": subj, "pred": expr, "obj": obj}
-            alive = F.lit(True)
-            pieces = []
-            for v in spec.variables:
-                val = vals[v.name]
-                ok = F.lit(True)
-                if v.allowed_values is None:
-                    nones = LLM_NULL_WORDS_LOWERCASE
-                else:
-                    nones = [
-                        w
-                        for w in LLM_NULL_WORDS_LOWERCASE
-                        if w not in v.allowed_values
-                    ]
-                if nones:
-                    ok = ok & ~F.lower(val).isin(*nones)
-                if v.allowed_values:
-                    ok = ok & val.isin(*v.allowed_values)
-                # validate_in_text: vacuously true for verbatim ASCII
-                # captures (see _fast_path_ok)
-                if v.required:
-                    alive = alive & ok
-                    pieces.append(F.concat(F.lit('"%s": "' % v.name), val, F.lit('"')))
-                else:
-                    pieces.append(
-                        F.when(
-                            ok,
-                            F.concat(F.lit('"%s": "' % v.name), val, F.lit('"')),
-                        ).otherwise(F.lit('"%s": null' % v.name))
-                    )
-            body = pieces[0]
-            for p in pieces[1:]:
-                body = F.concat(body, F.lit(", "), p)
-            return F.when(alive, F.concat(F.lit("{"), body, F.lit("}")))
-
-        items = F.filter(
-            F.transform(zipped, lambda x: item_of(x)), lambda x: x.isNotNull()
-        )
-        json_col = F.when(
-            F.size(items) > 0,
-            F.concat(
-                F.lit('{"%s": [' % spec.container_name),
-                F.array_join(items, ", "),
-                F.lit("]}"),
-            ),
-        ).otherwise(F.lit("{}"))
-        return {
-            "json": json_col,
-            "in_tokens": F.floor((F.length(text) + 3) / 4).cast("long"),
-            "out_tokens": F.floor((F.length(json_col) + 3) / 4).cast("long"),
-        }
-
     def _native_match_structs(self, text):
         """array<struct<s: subj, p: phrase, o: obj>> of the raw regex
         matches of `text`, as a native Column.
@@ -225,12 +104,15 @@ class RuleTripleExtractor:
         lambda bodies, so an element_at(arr, i) formulation would re-run
         the whole regex scan once PER ITEM (measured 3x slower than the
         Python stage this replaces)."""
-        import re as _re
-
         from pyspark.sql import functions as F
 
-        jpat = _re.sub(r"\(\?P<[A-Za-z_]+>", "(", self._pattern.pattern)
-        word_shape = _re.compile(r"\A(?: [a-z]+)+ \Z")
+        # Java twin of the Python pattern: named groups -> plain groups
+        # (1=subj, 2=phrase, 3=obj; ENTITY_RE's inner group is
+        # non-capturing). Phrase/entity characters are json-safe (see
+        # _native_ok), so the escaped alternation parses identically
+        # under java.util.regex.
+        jpat = re.sub(r"\(\?P<[A-Za-z_]+>", "(", self._pattern.pattern)
+        word_shape = re.compile(r"\A(?: [a-z]+)+ \Z")
         phrases = list(self._pred_of)
         one_pass = all(word_shape.match(p) for p in phrases) and not any(
             a != b and a in b for a in phrases for b in phrases
@@ -261,25 +143,31 @@ class RuleTripleExtractor:
         )
 
     def native_extract_items(self, spec, text_col):
-        """Typed twin of `native_extract_columns` for consumers that want
-        the cleaned items directly (r6): returns a Column of
-        array<struct<...vars...>> equal element-for-element to
-        from_json(json, schema)[container] over the JSON path — so the
-        triples chain can skip BOTH the JSON serialization and the
-        from_json parse. None when the native path is disqualified."""
-        import re as _re
+        """extract_raw + clean_response as ONE native Column: the cleaned
+        items of `text_col` as array<struct<...spec.variables...>>, equal
+        element for element (order included) to
+        clean_response(extract_raw(text), spec, text)[container]. Runs in
+        whole-stage codegen with no Python boundary; every extract_chunks
+        mode and the pipeline's triples stage consume it.
 
+        Every string it emits is JSON-escape-free by construction: subj/
+        obj match ENTITY_RE (`[A-Za-z ]` only) and pred labels / phrases /
+        the container name pass the json-safe guard in `_native_ok`, so
+        a plain concat serializer reproduces json.dumps byte for byte.
+        None when the spec or phrase set disqualifies the native form
+        (callers fall back to extract_raw)."""
         from pyspark.sql import functions as F
 
         from delm_spark.constants import LLM_NULL_WORDS_LOWERCASE
 
-        if not self._fast_path_ok(spec):
+        if not self._native_ok(spec):
             return None
         text = F.coalesce(text_col, F.lit(""))
         zipped = self._native_match_structs(text)
         pred_of = self._pred_of
 
         def item_of(x):
+            # phrase -> pred label (when-chain over the closed phrase set)
             expr = None
             for ph, label in pred_of.items():
                 cond = x.getField("p") == F.lit(ph)
@@ -294,6 +182,8 @@ class RuleTripleExtractor:
             for v in spec.variables:
                 val = vals[v.name]
                 ok = F.lit(True)
+                # rule 2: null-word filter (nones excludes any null word
+                # the spec explicitly allows)
                 if v.allowed_values is None:
                     nones = LLM_NULL_WORDS_LOWERCASE
                 else:
@@ -304,9 +194,14 @@ class RuleTripleExtractor:
                     ]
                 if nones:
                     ok = ok & ~F.lower(val).isin(*nones)
+                # rule 3: allowed-values filter
                 if v.allowed_values:
                     ok = ok & val.isin(*v.allowed_values)
+                # rule 4 (validate_in_text) is vacuously true for verbatim
+                # ASCII captures — see _native_ok
                 if v.required:
+                    # rule 5: a required var with no surviving value kills
+                    # the whole item
                     alive = alive & ok
                     fields.append(val.alias(v.name))
                 else:
@@ -319,14 +214,23 @@ class RuleTripleExtractor:
             F.transform(zipped, lambda x: item_of(x)), lambda x: x.isNotNull()
         )
 
-    def _fast_path_ok(self, spec) -> bool:
-        """True when `extract_clean_json_batch` reproduces
+    def _native_ok(self, spec) -> bool:
+        """True when `native_extract_items` reproduces
         clean_response(extract_raw(text), spec, text) exactly for this
-        spec shape (memoized per spec object)."""
-        cached = self.__dict__.get("_fast_ok")
+        spec shape and phrase set, JSON-escape-free (memoized per spec
+        object)."""
+        cached = self.__dict__.get("_native_ok_for")
         if cached is not None and cached[0] is spec:
             return cached[1]
-        ok = isinstance(spec, NestedSpec)
+        safe = re.compile(r"[A-Za-z0-9_ ]*\Z")
+        ok = (
+            isinstance(spec, NestedSpec)
+            and safe.match(spec.container_name) is not None
+            and all(
+                safe.match(p) and safe.match(label)
+                for p, label in self._pred_of.items()
+            )
+        )
         if ok:
             for v in spec.variables:
                 if (
@@ -342,97 +246,8 @@ class RuleTripleExtractor:
                 ):
                     ok = False
                     break
-        self._fast_ok = (spec, ok)
+        self._native_ok_for = (spec, ok)
         return ok
-
-    def extract_clean_json_batch(self, texts, spec):
-        """Vectorized extract + clean + serialize (r6, guide §4.2): the
-        whole batch goes through ONE C-regex `extractall`, the cleaning
-        rules run as pandas/numpy masks over the flat match table, and
-        the JSON strings are assembled by vectorized string concat with a
-        per-unique-value `encode_basestring_ascii` cache — no per-row
-        clean_response()/json.dumps() calls.
-
-        Byte-identical to the slow path by construction, pinned by
-        tests/test_round6_opt.py over adversarial inputs. Returns
-        (jsons, errors, in_tokens, out_tokens) lists, or None when the
-        spec shape disqualifies the fast path (caller falls back).
-        """
-        if not self._fast_path_ok(spec):
-            return None
-        import json as _json
-
-        import numpy as np
-        import pandas as pd
-
-        from delm_spark.constants import LLM_NULL_WORDS_LOWERCASE
-
-        texts = pd.Series(texts).fillna("").reset_index(drop=True)
-        n = len(texts)
-        in_toks = ((texts.str.len() + 3) // 4).astype("int64").tolist()
-        cname = spec.container_name
-        empty_json = "{}"
-        if n == 0:
-            return [], [], [], []
-        m = texts.str.extractall(self._pattern)
-        if len(m) == 0:
-            jsons = [empty_json] * n
-            return jsons, [None] * n, in_toks, [1] * n  # len("{}")==2 -> 1 token
-
-        series = {
-            "subj": m["subj"],
-            "pred": m["phrase"].map(self._pred_of),
-            "obj": m["obj"],
-        }
-        enc = _json.encoder.encode_basestring_ascii
-        alive = np.ones(len(m), dtype=bool)
-        pieces = []
-        for v in spec.variables:
-            s = series[v.name]
-            ok = np.ones(len(m), dtype=bool)
-            # rule 2: null-word filter (string vars; nones excludes any
-            # null word the spec explicitly allows)
-            if v.allowed_values is None:
-                nones = LLM_NULL_WORDS_LOWERCASE
-            else:
-                nones = [
-                    w for w in LLM_NULL_WORDS_LOWERCASE if w not in v.allowed_values
-                ]
-            if nones:
-                ok &= ~s.str.lower().isin(nones).to_numpy()
-            # rule 3: allowed-values filter
-            if v.allowed_values:
-                ok &= s.isin(v.allowed_values).to_numpy()
-            # rule 4 (validate_in_text) is vacuously true for verbatim
-            # ASCII capture groups — see _fast_path_ok
-            if v.required:
-                # rule 5: a required var with no surviving value kills
-                # the whole item
-                alive &= ok
-                enc_map = {u: enc(u) for u in pd.unique(s)}
-                val = s.map(enc_map)
-            else:
-                enc_map = {u: enc(u) for u in pd.unique(s)}
-                val = s.map(enc_map).where(pd.Series(ok, index=s.index), "null")
-            pieces.append(('"%s": ' % v.name) + val)
-        item = pieces[0]
-        for p in pieces[1:]:
-            item = item + ", " + p
-        item = "{" + item + "}"
-        # group-join without pandas groupby (its per-group slicing was 80%
-        # of the kernel): extractall output is row-ordered, so boundaries
-        # are one vectorized compare + a C-join per surviving row
-        rows = item.index.get_level_values(0).to_numpy()[alive]
-        strs = item.to_numpy()[alive]
-        head = '{"%s": [' % cname
-        jsons = [empty_json] * n
-        if len(strs):
-            bounds = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
-            ends = np.r_[bounds[1:], len(strs)]
-            for b, e in zip(bounds, ends):
-                jsons[rows[b]] = head + ", ".join(strs[b:e]) + "]}"
-        out_toks = [(len(j) + 3) // 4 for j in jsons]
-        return jsons, [None] * n, in_toks, out_toks
 
 
 class PromptedApiBackend:
@@ -510,19 +325,16 @@ class PromptedApiBackend:
 
 
 class NoOpExtractor:
-    """Plan-shape control backend (bench_scaling no-op mode): the SAME
-    Arrow/mapInPandas stage and DAG as RuleTripleExtractor, but ~zero
-    kernel work — isolates Spark plan/scheduler overhead from the Python
-    kernel's memory-bandwidth ceiling in scaling measurements."""
+    """Plan-shape control backend (bench_scaling no-op mode): the same
+    per-row `mapInPandas` extraction stage and DAG as any Python backend,
+    but ~zero kernel work — isolates Spark plan/scheduler and Arrow
+    transfer overhead from backend cost in scaling measurements."""
 
     def __init__(self, spec):
         self.container_name = spec.container_name
 
     def extract_raw(self, text):
         return {self.container_name: []}
-
-    def extract_raw_batch(self, texts):
-        return [{self.container_name: []} for _ in texts]
 
 
 class CacheOnlyBackend:

@@ -1,20 +1,26 @@
-"""The extraction stage: one `mapInPandas` over Arrow batches.
+"""The extraction stage: schema-guided extract + clean per chunk.
 
 Replaces the reference's batch loop + ThreadPool fan-out
 (/root/reference/src/delm/core/extraction_manager.py:78-242,
-utils/concurrent_processing.py:25-117): a Spark partition's Arrow batch
-plays the role of a DELM batch (`spark.sql.execution.arrow.maxRecordsPerBatch`
-≙ batch_size), task parallelism replaces threads, and per-chunk error
-safety (extraction_manager.py:244-269) is a try/except inside the UDF that
-emits a `delm_errors` column instead of throwing.
+utils/concurrent_processing.py:25-117). The backend alone picks the
+kernel; every mode runs the same one:
 
-Two execution modes:
+  * native — a backend publishing `native_extract_items` (the rule
+    extractor) yields the cleaned items as a Catalyst array<struct>;
+    `_items_json` serializes them to the exact json.dumps(clean_response)
+    bytes. Whole-stage codegen, no Python boundary, null errors.
+  * Python — any other backend runs `extract_raw` per row in one
+    `mapInPandas`: an Arrow batch plays a DELM batch, tasks replace
+    threads, and per-chunk error safety (extraction_manager.py:244-269)
+    is a retry loop that emits `delm_errors` instead of throwing.
+
+Modes:
   * dedup=True  — identical chunk texts are extracted once (`dropDuplicates`
-    on a sha2 cache key, the run-internal equivalent of the reference's
-    exact-match semantic cache, semantic_cache.py:81-103) and fanned back
-    out with a join. Wins whenever the corpus repeats text.
-  * dedup=False — inline: the UDF carries every input column through and
-    appends the extraction columns. Zero shuffle; required for Structured
+    on the semantic cache key, the reference's exact-match cache,
+    semantic_cache.py:81-103) and fanned back out with a join;
+    `cache_dir` / `driver_cache` also persist them across runs.
+  * dedup=False — inline: every input column passes through and the
+    extraction columns are appended. Zero shuffle; required for Structured
     Streaming (no stream-stream join) and best when texts are unique.
 """
 
@@ -27,7 +33,7 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
 from delm_spark.constants import (
     CACHE_HIT_COL,
@@ -55,6 +61,9 @@ _EXTRA_FIELDS = [
     StructField(PART_ID_COL, LongType()),
 ]
 
+#: one extracted row per distinct cache key (dedup / cache modes)
+_KEYED_FIELDS = [StructField(CACHE_KEY_COL, StringType())] + _EXTRA_FIELDS
+
 
 def _token_estimate(s: str) -> int:
     """Documented tiktoken stand-in: ~4 chars/token (reference counts real
@@ -70,40 +79,8 @@ def _extract_series(
     max_retries: int,
     base_delay: float = 0.0,
 ):
-    # fastest path (r6): fully vectorized extract+clean+serialize — no
-    # per-row Python at all. Backends opt in via extract_clean_json_batch
-    # (returns None when the spec shape disqualifies it); any raise falls
-    # through to the slower paths, preserving the per-chunk error-safety
-    # contract.
-    if hasattr(backend, "extract_clean_json_batch"):
-        try:
-            fast = backend.extract_clean_json_batch(texts, spec)
-        except Exception:
-            fast = None
-        if fast is not None:
-            return fast
-
-    # fast path: vectorized backend (C regex loop) + per-row clean. A
-    # raising batch backend falls back to the per-row path below so the
-    # per-chunk error-safety contract (reference extraction_manager.py:
-    # 244-269) holds for batch backends too.
-    if hasattr(backend, "extract_raw_batch"):
-        try:
-            raws = backend.extract_raw_batch(texts)
-        except Exception:
-            raws = None
-        if raws is not None:
-            jsons, errors, in_toks, out_toks = [], [], [], []
-            for text, raw in zip(texts, raws):
-                text = text or ""
-                cleaned = clean_response(raw, spec, text)
-                j = json.dumps(cleaned, sort_keys=False)
-                jsons.append(j)
-                errors.append(None)
-                in_toks.append(_token_estimate(text))
-                out_toks.append(_token_estimate(j))
-            return jsons, errors, in_toks, out_toks
-
+    """Per-row extract_raw + clean + serialize with retry; returns
+    (jsons, errors, in_tokens, out_tokens) lists."""
     jsons, errors, in_toks, out_toks = [], [], [], []
     for text in texts:
         text = text or ""
@@ -118,19 +95,107 @@ def _extract_series(
                 if attempt < max_retries and base_delay > 0:
                     # exponential backoff, reference utils/retry_handler.py:38-58
                     time.sleep(base_delay * (2**attempt))
+        in_toks.append(_token_estimate(text))
         if err is not None:
             jsons.append(None)
             errors.append(json.dumps({"error": err}))
-            in_toks.append(_token_estimate(text))
             out_toks.append(0)
             continue
-        cleaned = clean_response(raw, spec, text)
-        j = json.dumps(cleaned, sort_keys=False)
+        j = json.dumps(clean_response(raw, spec, text), sort_keys=False)
         jsons.append(j)
         errors.append(None)
-        in_toks.append(_token_estimate(text))
         out_toks.append(_token_estimate(j))
     return jsons, errors, in_toks, out_toks
+
+
+def _items_json(items, spec: SchemaSpec):
+    """Cleaned items (array<struct<...spec.variables...>>) -> the exact
+    json.dumps(clean_response(...)) string: `{}` when no item survives,
+    `"name": null` for a dropped optional variable, keys in spec order.
+    A plain concat reproduces encode_basestring_ascii only because every
+    value is JSON-escape-free — the contract of `native_extract_items`."""
+
+    def item(x):
+        parts = [
+            F.coalesce(
+                F.concat(F.lit('"%s": "' % v.name), x.getField(v.name), F.lit('"')),
+                F.lit('"%s": null' % v.name),
+            )
+            for v in spec.variables
+        ]
+        return F.concat(F.lit("{"), F.concat_ws(", ", *parts), F.lit("}"))
+
+    return F.when(
+        F.size(items) > 0,
+        F.concat(
+            F.lit('{"%s": [' % spec.container_name),
+            F.array_join(F.transform(items, item), ", "),
+            F.lit("]}"),
+        ),
+    ).otherwise(F.lit("{}"))
+
+
+def _extract_frame(
+    frame: DataFrame,
+    text_col: str,
+    keep: list,
+    spec: SchemaSpec,
+    backend: ExtractorBackend,
+    max_retries: int,
+    base_delay: float,
+) -> DataFrame:
+    """`frame[keep]` plus the five _EXTRA_FIELDS columns for
+    `frame[text_col]`, through the backend's native items when it has
+    them, else through `extract_raw` per row in one mapInPandas."""
+    native = getattr(backend, "native_extract_items", None)
+    items = native(spec, F.col(text_col)) if native is not None else None
+    if items is not None:
+        # Three projections, each referencing the previous one's
+        # non-cheap output twice (items: size + transform; json: output +
+        # out_tokens), so CollapseProject keeps them apart and the regex
+        # scan runs once per row. A pure expression cannot fail per row:
+        # no retries, errors structurally null.
+        text = F.coalesce(F.col(text_col), F.lit(""))
+        staged = frame.select(
+            *keep,
+            items.alias("__items"),
+            F.floor((F.length(text) + 3) / 4).cast("long").alias(IN_TOKENS_COL),
+        ).select(
+            *keep,
+            _items_json(F.col("__items"), spec).alias(EXTRACTED_JSON_COL),
+            IN_TOKENS_COL,
+        )
+        return staged.select(
+            *keep,
+            EXTRACTED_JSON_COL,
+            F.lit(None).cast(StringType()).alias(ERRORS_COL),
+            IN_TOKENS_COL,
+            F.floor((F.length(EXTRACTED_JSON_COL) + 3) / 4)
+            .cast("long")
+            .alias(OUT_TOKENS_COL),
+            F.spark_partition_id().cast("long").alias(PART_ID_COL),
+        )
+
+    out_schema = StructType([frame.schema[c] for c in keep] + _EXTRA_FIELDS)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else -1
+        for pdf in batches:
+            jsons, errors, itk, otk = _extract_series(
+                pdf[text_col], spec, backend, max_retries, base_delay
+            )
+            out = pdf[keep].copy()
+            out[EXTRACTED_JSON_COL] = jsons
+            out[ERRORS_COL] = errors
+            out[IN_TOKENS_COL] = itk
+            out[OUT_TOKENS_COL] = otk
+            out[PART_ID_COL] = pid
+            yield out
+
+    return frame.mapInPandas(run, schema=out_schema)
 
 
 def _cache_has_data_files(spark, cache_dir: str) -> bool:
@@ -277,93 +342,17 @@ def extract_chunks(
         # its own task lineage
         df = df.drop(PART_ID_COL)
 
-    def _part_id():
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        return ctx.partitionId() if ctx else -1
-
     if driver_cache is not None and cache_dir is not None:
         raise ValueError("pass either cache_dir (parquet) or driver_cache, not both")
     if cache_dir is not None or driver_cache is not None:
         dedup = True
 
     if not dedup:
-        # native inline mode (r6): backends whose extraction is a
-        # deterministic expression chain (RuleTripleExtractor) publish it
-        # as Catalyst columns — the whole stage runs in whole-stage
-        # codegen with NO Python boundary (no Arrow transpose, no pandas
-        # batches; plan shows zero ArrowEvalPython/MapInPandas nodes).
-        # Byte parity with the UDF path is pinned in
-        # tests/test_round6_opt.py. Retries are meaningless for a pure
-        # expression (it cannot raise per-row), and errors are
-        # structurally null, matching the deterministic backend's
-        # behavior under the UDF path.
-        native = getattr(backend, "native_extract_columns", None)
-        cols = native(spec, F.col(text_col)) if native is not None else None
-        if cols is not None:
-            # two-step select: the json expression is non-cheap and
-            # referenced twice (output column + out_tokens), which keeps
-            # CollapseProject from inlining it — it evaluates once per row
-            staged = df.select(
-                "*",
-                cols["json"].alias(EXTRACTED_JSON_COL),
-                cols["in_tokens"].alias(IN_TOKENS_COL),
-            )
-            return staged.select(
-                "*",
-                F.lit(None).cast(StringType()).alias(ERRORS_COL),
-                F.floor((F.length(EXTRACTED_JSON_COL) + 3) / 4)
-                .cast("long")
-                .alias(OUT_TOKENS_COL),
-                F.spark_partition_id().cast("long").alias(PART_ID_COL),
-                F.lit(False).alias(CACHE_HIT_COL),
-            ).select(*(df.columns + [
-                EXTRACTED_JSON_COL, ERRORS_COL, IN_TOKENS_COL,
-                OUT_TOKENS_COL, PART_ID_COL, CACHE_HIT_COL,
-            ]))
+        return _extract_frame(
+            df, text_col, df.columns, spec, backend, max_retries, base_delay
+        ).withColumn(CACHE_HIT_COL, F.lit(False))
 
-        # inline mode: pass every column through, append extraction columns
-        out_schema = StructType(list(df.schema.fields) + _EXTRA_FIELDS)
-
-        def run_inline(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pid = _part_id()
-            for pdf in batches:
-                jsons, errors, itk, otk = _extract_series(
-                    pdf[text_col], spec, backend, max_retries, base_delay
-                )
-                out = pdf.copy()
-                out[EXTRACTED_JSON_COL] = jsons
-                out[ERRORS_COL] = errors
-                out[IN_TOKENS_COL] = itk
-                out[OUT_TOKENS_COL] = otk
-                out[PART_ID_COL] = pid
-                yield out
-
-        return df.mapInPandas(run_inline, schema=out_schema).withColumn(
-            CACHE_HIT_COL, F.lit(False)
-        )
-
-    # dedup mode: extract distinct texts once, join back on the cache key
-    out_schema = StructType([StructField(CACHE_KEY_COL, StringType())] + _EXTRA_FIELDS)
-
-    def run_unique(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = _part_id()
-        for pdf in batches:
-            jsons, errors, itk, otk = _extract_series(
-                pdf["__text"], spec, backend, max_retries, base_delay
-            )
-            yield pd.DataFrame(
-                {
-                    CACHE_KEY_COL: pdf[CACHE_KEY_COL],
-                    EXTRACTED_JSON_COL: jsons,
-                    ERRORS_COL: errors,
-                    IN_TOKENS_COL: itk,
-                    OUT_TOKENS_COL: otk,
-                    PART_ID_COL: pid,
-                }
-            )
-
+    # dedup mode: extract distinct texts once, join back on the cache key.
     # Cache key: the reference's semantic key over (prompt, system, model,
     # temperature), computed in whole-stage codegen. A plain-text sha2 would
     # dedup identically within one run, but the persistent table's identity
@@ -427,17 +416,18 @@ def extract_chunks(
         if cached_ok is not None:
             unique = unique.join(cached_ok, on=CACHE_KEY_COL, how="left_anti")
 
-    # Explicit width for the Python stage: AQE coalesces the dedup shuffle
-    # for JVM byte sizes (a few MB of text -> a handful of partitions),
-    # which would serialize the Arrow/pandas extraction; an explicit
-    # repartition is exempt from AQE coalescing and keeps every core busy.
+    # Explicit width for the extraction stage: AQE coalesces the dedup
+    # shuffle for JVM byte sizes (a few MB of text -> a handful of
+    # partitions), which would serialize the regex/backend work; an
+    # explicit repartition is exempt from AQE coalescing and keeps every
+    # core busy.
     width = df.sparkSession.sparkContext.defaultParallelism * 2
     unique = unique.repartition(width)
-    extracted = unique.mapInPandas(run_unique, schema=out_schema)
+    extracted = _extract_frame(
+        unique, "__text", [CACHE_KEY_COL], spec, backend, max_retries, base_delay
+    )
 
     if driver_cache is not None:
-        from pyspark.sql.types import BooleanType
-
         # Scale ceiling (r6, VERDICT r5 #3): the driver-resident backends
         # (sqlite/fs, mirroring the reference's driver-side caches) pull
         # every miss AND the full snapshot through the driver — on a
@@ -445,18 +435,19 @@ def extract_chunks(
         # corpus. Refuse loudly above the ceiling instead of OOMing the
         # driver mid-collect; the parquet cache_dir backend has no such
         # bound. The count is one extra bounded job on this opt-in path
-        # only — never on the default parquet/inline paths.
-        n_miss = unique.count()
-        if driver_cache_max_rows and n_miss > driver_cache_max_rows:
-            raise RuntimeError(
-                f"driver-resident cache backend: {n_miss} distinct missed "
-                f"prompts exceed driver_cache_max_rows="
-                f"{driver_cache_max_rows}. The sqlite/filesystem backends "
-                "hold every miss and the full snapshot in driver memory; "
-                "for corpora this size use the distributed parquet cache "
-                "(cache_dir=...) instead, or raise driver_cache_max_rows "
-                "if the driver genuinely has the memory."
-            )
+        # only, and only while a ceiling is set (0 = no ceiling, no job).
+        if driver_cache_max_rows:
+            n_miss = unique.count()
+            if n_miss > driver_cache_max_rows:
+                raise RuntimeError(
+                    f"driver-resident cache backend: {n_miss} distinct missed "
+                    f"prompts exceed driver_cache_max_rows="
+                    f"{driver_cache_max_rows}. The sqlite/filesystem backends "
+                    "hold every miss and the full snapshot in driver memory; "
+                    "for corpora this size use the distributed parquet cache "
+                    "(cache_dir=...) instead, or raise driver_cache_max_rows "
+                    "if the driver genuinely has the memory."
+                )
         # ONE action materializes this run's misses; row volume = distinct
         # missed prompts (the quantity a semantic cache stores by
         # definition), so the driver round-trip is bounded
@@ -490,9 +481,7 @@ def extract_chunks(
         for c in (IN_TOKENS_COL, OUT_TOKENS_COL, PART_ID_COL):
             full_pdf[c] = full_pdf[c].fillna(0).astype("int64")
         full_schema = StructType(
-            [StructField(CACHE_KEY_COL, StringType())]
-            + _EXTRA_FIELDS
-            + [StructField(CACHE_HIT_COL, BooleanType())]
+            _KEYED_FIELDS + [StructField(CACHE_HIT_COL, BooleanType())]
         )
         full = spark.createDataFrame(
             full_pdf[[f.name for f in full_schema.fields]], schema=full_schema
@@ -526,7 +515,9 @@ def extract_chunks(
             raise
         # no parquet files anywhere (empty input on a cold cache)
         return keyed.join(
-            spark.createDataFrame([], out_schema), on=CACHE_KEY_COL, how="left"
+            spark.createDataFrame([], StructType(_KEYED_FIELDS)),
+            on=CACHE_KEY_COL,
+            how="left",
         ).withColumn(CACHE_HIT_COL, F.lit(False))
     full = (
         full.filter(F.col(ERRORS_COL).isNull() | (F.col(RUN_ID_COL) == run_id))

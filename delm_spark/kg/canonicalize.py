@@ -251,17 +251,3 @@ def canonical_map(
         "node",
         F.coalesce(F.col("__repr"), F.col("component")).alias("canonical_id"),
     )
-
-
-def canonical_labels(linked_triples: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """Back-compat helper: map every entity id appearing in the linked
-    triples to a component label (dictionary components + singletons)."""
-    cc = canonical_map(dictionary).withColumnRenamed("canonical_id", "component")
-    ids = (
-        linked_triples.select(F.col("subj_id").alias("node"))
-        .unionByName(linked_triples.select(F.col("obj_id").alias("node")))
-        .dropDuplicates(["node"])
-    )
-    return ids.join(cc, "node", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("node"))
-    )

@@ -402,29 +402,46 @@ def score_and_filter(
     return scored.filter(SCORE_OPS[op](F.col(SCORE_COL), threshold))
 
 
-def triples_from_extracted(extracted: DataFrame, spec: SchemaSpec) -> DataFrame:
-    """Stage 5: JSON -> typed rows, natively (from_json + posexplode)."""
-    assert isinstance(spec, NestedSpec)
-    schema: StructType = spark_schema_for(spec)
-    parsed = extracted.withColumn(
-        "__parsed", F.from_json(F.col(EXTRACTED_JSON_COL), schema)
-    )
-    return parsed.select(
+def _explode_items(df: DataFrame, items, spec: SchemaSpec) -> DataFrame:
+    """Stage 5: one row per item of the `items` array<struct> column,
+    keyed by (conv_id, turn_idx, chunk_pos, item_pos), one column per
+    spec variable."""
+    return df.select(
         "conv_id",
         "turn_idx",
         CHUNK_POS_COL,
-        F.posexplode(F.col(f"__parsed.{spec.container_name}")).alias(
-            "item_pos", "__item"
-        ),
+        F.posexplode(items).alias("item_pos", "__item"),
     ).select(
         "conv_id",
         "turn_idx",
         CHUNK_POS_COL,
         "item_pos",
-        F.col("__item.subj").alias("subj"),
-        F.col("__item.pred").alias("pred"),
-        F.col("__item.obj").alias("obj"),
+        *[F.col(f"__item.{v.name}").alias(v.name) for v in spec.variables],
     )
+
+
+def triples_from_extracted(extracted: DataFrame, spec: SchemaSpec) -> DataFrame:
+    """Stage 5 over extract_chunks output: parse the JSON natively
+    (from_json) and explode its items."""
+    assert isinstance(spec, NestedSpec)
+    schema: StructType = spark_schema_for(spec)
+    items = F.from_json(F.col(EXTRACTED_JSON_COL), schema).getField(
+        spec.container_name
+    )
+    return _explode_items(extracted, items, spec)
+
+
+def native_triples(
+    chunks: DataFrame, spec: SchemaSpec, backend: ExtractorBackend
+) -> Optional[DataFrame]:
+    """Stage 5 straight from the chunks when the backend publishes native
+    items: the JSON string is never serialized and from_json never runs.
+    None when the backend has no native form for `spec`."""
+    native = getattr(backend, "native_extract_items", None)
+    items = native(spec, F.col(CHUNK_COL)) if native is not None else None
+    if items is None:
+        return None
+    return _explode_items(chunks, items, spec)
 
 
 def run_pipeline(
@@ -493,12 +510,12 @@ def run_pipeline(
     )
 
     def build_extracted():
-        # only the composite key + text cross the Arrow boundary; role/ts
-        # stay out of the Python stage (column pruning by hand — the UDF is
-        # a black box to Catalyst)
+        # only the composite key + text enter extraction; role/ts stay out
+        # (column pruning by hand — a Python backend's mapInPandas is a
+        # black box to Catalyst)
         df = chunks.select("conv_id", "turn_idx", CHUNK_POS_COL, CHUNK_COL)
         if config.extract_partitions:
-            # round-robin spread of the Python-heavy stage; composite keys
+            # round-robin spread of the extraction stage; composite keys
             # make this safe (no per-partition ordering assumptions)
             df = df.repartition(config.extract_partitions)
         return extract_chunks(
@@ -516,40 +533,10 @@ def run_pipeline(
     def build_triples():
         raw = None
         if runner.dir is None and not config.dedup_extraction and not config.cache_dir:
-            # r6 fast path: with no checkpointed extracted stage to share,
-            # build triples from the backend's NATIVE typed items — the
-            # JSON string is never serialized and from_json never runs
-            # (element-for-element parity with the JSON round-trip is
-            # pinned in tests/test_round6_opt.py). PipelineResult.extracted
+            # with no checkpointed or cached extraction to share, explode
+            # the backend's native items directly. PipelineResult.extracted
             # still exposes the lazy JSON frame for direct consumers.
-            native_items = getattr(backend, "native_extract_items", None)
-            items_col = (
-                native_items(spec, F.col(CHUNK_COL))
-                if native_items is not None
-                else None
-            )
-            if items_col is not None:
-                raw = (
-                    chunks.select(
-                        "conv_id", "turn_idx", CHUNK_POS_COL, items_col.alias("__items")
-                    )
-                    .select(
-                        "conv_id",
-                        "turn_idx",
-                        CHUNK_POS_COL,
-                        F.posexplode("__items").alias("item_pos", "__item"),
-                    )
-                    .select(
-                        "conv_id",
-                        "turn_idx",
-                        CHUNK_POS_COL,
-                        "item_pos",
-                        *[
-                            F.col(f"__item.{v.name}").alias(v.name)
-                            for v in spec.variables
-                        ],
-                    )
-                )
+            raw = native_triples(chunks, spec, backend)
         if raw is None:
             raw = triples_from_extracted(extracted, spec)
         if config.ground_pronouns:

@@ -26,6 +26,20 @@ def normalize_text(col: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
+def _has_map(dt) -> bool:
+    """True when `dt` is or contains (through arrays/structs) a MapType —
+    the one type min(struct(...)) cannot order."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, MapType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_map(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_has_map(f.dataType) for f in dt.fields)
+    return False
+
+
 def exact_dedup(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
@@ -38,11 +52,10 @@ def exact_dedup(
     map-side partial combine (duplicate texts collapse before the
     exchange — the window form shipped every row), and no per-group sort
     runs. Row-identical for orderable columns; frames carrying an
-    unorderable column (MapType) fall back to the window form."""
-    from pyspark.sql.types import MapType
-
+    unorderable column (a MapType at any nesting depth) fall back to the
+    window form."""
     keyed = df.withColumn("__k", F.sha2(normalize_text(F.col(text_col)), 256))
-    if any(isinstance(f.dataType, MapType) for f in df.schema.fields):
+    if _has_map(df.schema):
         from pyspark.sql import Window
 
         w = Window.partitionBy("__k").orderBy(F.col(id_col).asc())

@@ -38,32 +38,6 @@ def cosine(a: Column, b: Column) -> Column:
     ).cast("double")
 
 
-def cosine_pandas_udf():
-    """Arrow-vectorized cosine (Series[array<double>] x2 -> double): the
-    higher-order-function `cosine` expression evaluates INTERPRETED
-    (~25 us/row) — fine for oracle-scale candidate sets, a bottleneck at
-    millions of scored pairs. numpy einsum scores the same pairs ~100x
-    faster, and for integer-valued embeddings (the trigram-hash vectors)
-    the result is BIT-IDENTICAL: dot products and squared norms of small
-    ints are exact in float64 under any summation order."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    def _cos(a, b):
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.maximum(
-            np.sqrt(np.einsum("ij,ij->i", A, A))
-            * np.sqrt(np.einsum("ij,ij->i", B, B)),
-            1e-12,
-        )
-        return pd.Series(num / den)
-
-    return F.pandas_udf(_cos, DoubleType())
-
-
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,

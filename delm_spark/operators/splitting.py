@@ -85,12 +85,6 @@ def paragraph_split_expr(col: Column) -> Column:
     )
 
 
-def sentence_split_expr(col: Column) -> Column:
-    """Split into sentences on `(?<=[.!?])\\s+` (Java regex supports the
-    lookbehind), trim, drop empties."""
-    return regex_split_expr(col, SENTENCE_SPLIT_REGEX)
-
-
 def fixed_window_split_udf(window: int = DEFAULT_FIXED_WINDOW_SIZE,
                            stride: Optional[int] = None):
     """Arrow-batched pandas UDF for FixedWindowSplit

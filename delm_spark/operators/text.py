@@ -1,9 +1,8 @@
 """Text analysis operators for training-data pipelines.
 
 All native column expressions (whole-stage codegen; no UDFs): token
-counting, quality scoring, language-ID heuristic, and rolling-hash
-document fingerprinting. Each is designed to be reproducible in an
-external SQL engine for the correctness oracle.
+counting, quality scoring and a language-ID heuristic. Each is designed
+to be reproducible in an external SQL engine for the correctness oracle.
 """
 
 from __future__ import annotations
@@ -37,22 +36,10 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(r"\w+|[^\w\s]"), 0))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are punctuation."""
     stripped = F.regexp_replace(col, r"[^\p{Punct}]", "")
     return (F.length(stripped) / F.greatest(F.length(col), F.lit(1))).cast("double")
-
-
-def stopword_ratio(col: Column, stopwords: list[str]) -> Column:
-    """Fraction of whitespace tokens that are in `stopwords` (lowercase)."""
-    words = F.split(F.lower(F.trim(col)), r"\s+")
-    sw = F.array(*[F.lit(w) for w in stopwords])
-    hits = F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
-    return (hits / F.greatest(F.size(words), F.lit(1))).cast("double")
 
 
 def quality_score(col: Column) -> Column:
@@ -86,9 +73,3 @@ def lang_id(col: Column) -> Column:
     return F.when(best.getField("hits") > 0, best.getField("lang")).otherwise(
         F.lit("und")
     )
-
-
-def fingerprint64(col: Column) -> Column:
-    """Order-sensitive 64-bit document fingerprint: xxhash64 of the
-    normalized text (rolling-hash analog; one value per document)."""
-    return F.xxhash64(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))

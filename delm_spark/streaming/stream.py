@@ -9,9 +9,11 @@ and extracted, and Spark's streaming checkpoint replaces the staging-table
 anti-join for exactly-once progress tracking.
 
 The transformation chain is IDENTICAL code to the batch path — chunking
-and scoring are stateless narrow ops, and `mapInPandas` extraction is
-supported in streaming — so batch/stream parity holds by construction
-(asserted in tests/test_streaming.py).
+and scoring are stateless narrow ops, and the rule backend's native items
+explode through the same helper as the batch pipeline's triples stage
+(a backend without a native form takes inline extract_chunks, whose
+mapInPandas is streaming-safe) — so batch/stream parity holds by
+construction (asserted in tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from delm_spark.extraction.extract import extract_chunks
 from delm_spark.kg.pipeline import (
     PipelineConfig,
     chunk_transcripts,
+    native_triples,
     score_and_filter,
     triples_from_extracted,
 )
@@ -73,6 +76,9 @@ def streaming_triples(
     chunks = score_and_filter(
         chunk_transcripts(stream), config.keywords, config.score_threshold
     )
+    triples = native_triples(chunks, spec, backend)
+    if triples is not None:
+        return triples
     # dedup=False: dropDuplicates on arbitrary keys isn't allowed without
     # watermark state in streaming; exact-dup extraction cost is bounded per
     # micro-batch instead.

@@ -120,19 +120,6 @@ def test_retry_exhaustion_emits_error_row():
     assert jsons == [None] and "flaky" in errors[0]
 
 
-def test_raising_batch_backend_falls_back_to_per_row():
-    class BadBatch(RuleTripleExtractor):
-        def extract_raw_batch(self, texts):
-            raise RuntimeError("batch path down")
-
-    jsons, errors, _, _ = _extract_series(
-        ["Alice Smith works at Acme Corp.", "noise."], SPEC, BadBatch(SPEC),
-        max_retries=0,
-    )
-    assert errors == [None, None]
-    assert "Alice Smith" in jsons[0]
-
-
 def test_cost_counts_each_distinct_text_once(spark):
     df = _chunk_df(spark, TEXTS)  # 4 rows, 3 distinct
     out = extract_chunks(df, SPEC, RuleTripleExtractor(SPEC), dedup=True)

@@ -155,6 +155,27 @@ def test_exact_dedup_keeps_min_id(spark):
     assert kept == [1, 2]
 
 
+@pytest.mark.parametrize(
+    "ddl, value",
+    [
+        ("array<map<string,int>>", [{"a": 1}]),
+        ("struct<m: map<string,int>>", ({"a": 1},)),
+    ],
+    ids=["array_map", "struct_map"],
+)
+def test_exact_dedup_nested_map_column(spark, ddl, value):
+    """A map nested inside an array or struct is as unorderable as a
+    top-level one: the min(struct) aggregate would fail analysis, so the
+    window form must take over."""
+    df = spark.createDataFrame(
+        [(3, "Hello  World", value), (1, "hello world", value), (2, "different", value)],
+        f"id int, text string, payload {ddl}",
+    )
+    kept = exact_dedup(df, "text", "id").collect()
+    assert sorted(r["id"] for r in kept) == [1, 2]
+    assert all(r["payload"] is not None for r in kept)
+
+
 def test_minhash_and_jaccard_find_near_dups(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")

@@ -74,20 +74,44 @@ def test_entity_link_broadcasts_dictionary(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_extraction_python_stage_is_arrow_batched(spark):
-    """The one sanctioned Python stage must be Arrow-vectorized
-    (MapInPandas), never row-at-a-time Python (BatchEvalPython)."""
+def test_extraction_plan_gate(spark, tmp_path):
+    """The rule backend's extraction is native in every extract_chunks
+    mode: no Python node in anything it runs or returns, and its regex
+    scan appears once in the optimized plan (CollapseProject must not
+    inline the items column into several consumers — each copy would
+    re-run the scan per row). A backend with only extract_raw still gets
+    the Arrow-batched MapInPandas stage, never row-at-a-time Python."""
     from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG, generate_transcripts
     from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.extraction.extract import extract_chunks
     from delm_spark.kg.pipeline import chunk_transcripts
     from delm_spark.schemas.spec import spec_from_dict
+    from tests.test_extraction import MODES, _reference_backend, run_mode
 
     spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
+    backend = RuleTripleExtractor(spec)
     chunks = chunk_transcripts(generate_transcripts(spark, n_convs=5))
-    plan = _plan(extract_chunks(chunks, spec, RuleTripleExtractor(spec)))
-    assert "MapInPandas" in plan
-    assert "BatchEvalPython" not in plan
+    store = spark._jsparkSession.sharedState().statusStore()
+    python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+    for mode in MODES:
+        first = int(store.executionsCount())
+        out = run_mode(chunks, spec, backend, mode, tmp_path / mode)
+        # every SQL execution the call ran (cache writes, driver-cache
+        # collects) plus the plan it returns
+        runs = store.executionsList(first, 1 << 20)
+        plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+        plans.append(_plan(out))
+        for node in python_nodes:
+            assert not any(node in p for p in plans), (mode, node)
+        if mode in ("inline", "dedup"):
+            optimized = out._jdf.queryExecution().optimizedPlan().toString()
+            assert optimized.count("regexp_extract_all") == 1, (mode, optimized)
+
+    python_backend = _reference_backend(backend)
+    for mode in ("inline", "dedup"):
+        plan = _plan(run_mode(chunks, spec, python_backend, mode, tmp_path))
+        assert "MapInPandas" in plan, mode
+        assert "BatchEvalPython" not in plan, mode
 
 
 def test_topk_partial_group_limit(spark):

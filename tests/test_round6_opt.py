@@ -140,136 +140,11 @@ def test_keyword_score_matches_exists_form(spark):
         assert r["new"] == r["old"], (texts[r["i"]], r["new"], r["old"])
 
 
-def test_keyword_score_empty_keywords_raises():
+def test_keyword_score_empty_keywords_raises(spark):
     from delm_spark.operators.scoring import keyword_score_expr
 
     with pytest.raises(ValueError):
         keyword_score_expr(F.lit("x"), [])
-
-
-# ---------------------------------------------------------------------------
-# extraction fast path (extract_clean_json_batch) byte-parity
-# ---------------------------------------------------------------------------
-
-EXTRACT_TEXTS = [
-    None,
-    "",
-    "no facts here at all",
-    "Alice Smith works at Acme Corp.",
-    "Dr Carol Wu uses the Sparkql tool. Bob Jones reports to Carol Wu.",
-    "Eve Adams works at Unknown.",  # null-word object -> item dropped
-    "Frank Mueller dislikes Globex.",  # disallowed predicate -> dropped
-    "Grace Kim works at None.",  # null word, different case path
-    "Hassan Ali works at Acme Corp. Hassan Ali created Flinker.",
-    "B Jones works at N/A.",
-    "A works at B. C uses the D tool. E is located in Paris.",
-    "unmatched sentence with works at but lowercase subject.",
-    "Émile works at Acme Corp.",  # non-ASCII text, ASCII captures
-    "Alice Smith works at Acme Corp",  # no trailing '.' -> no match
-    "Nested Alice Smith works at Acme Corp. twice Alice Smith works at Acme Corp.",
-]
-
-
-def _slow_reference(texts, spec, backend):
-    import json
-
-    from delm_spark.schemas.clean import clean_response
-
-    jsons, in_toks, out_toks = [], [], []
-    for text in texts:
-        text = text or ""
-        raw = backend.extract_raw(text)
-        cleaned = clean_response(raw, spec, text)
-        j = json.dumps(cleaned, sort_keys=False)
-        jsons.append(j)
-        in_toks.append((len(text) + 3) // 4)
-        out_toks.append((len(j) + 3) // 4)
-    return jsons, in_toks, out_toks
-
-
-def test_extract_clean_json_batch_byte_parity():
-    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.schemas.spec import spec_from_dict
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    backend = RuleTripleExtractor(spec)
-    fast = backend.extract_clean_json_batch(EXTRACT_TEXTS, spec)
-    assert fast is not None
-    jsons, errors, in_toks, out_toks = fast
-    ref_jsons, ref_in, ref_out = _slow_reference(EXTRACT_TEXTS, spec, backend)
-    assert jsons == ref_jsons
-    assert errors == [None] * len(EXTRACT_TEXTS)
-    assert in_toks == ref_in
-    assert out_toks == ref_out
-
-
-def test_extract_clean_json_batch_optional_var():
-    """Non-required var: a dropped value serializes as null instead of
-    killing the item."""
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.schemas.spec import spec_from_dict
-
-    cfg = {
-        "schema_type": "nested",
-        "container_name": "triples",
-        "variables": [
-            {"name": "subj", "data_type": "string", "required": True,
-             "validate_in_text": True},
-            {"name": "pred", "data_type": "string", "required": False,
-             "allowed_values": ["works_at"]},
-            {"name": "obj", "data_type": "string", "required": True,
-             "validate_in_text": True},
-        ],
-    }
-    spec = spec_from_dict(cfg)
-    backend = RuleTripleExtractor(spec)
-    texts = [
-        "Alice Smith works at Acme Corp.",
-        "Frank Mueller dislikes Globex.",  # pred dropped -> null, item kept
-        "Eve Adams works at Unknown.",  # required obj dies -> item dropped
-    ]
-    fast = backend.extract_clean_json_batch(texts, spec)
-    assert fast is not None
-    jsons = fast[0]
-    ref_jsons, _, _ = _slow_reference(texts, spec, backend)
-    assert jsons == ref_jsons
-    assert '"pred": null' in jsons[1]
-
-
-def test_extract_clean_json_batch_disqualifies_odd_specs():
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.schemas.spec import spec_from_dict
-
-    base = {
-        "schema_type": "nested",
-        "container_name": "triples",
-        "variables": [
-            {"name": "subj", "data_type": "string", "required": True},
-            {"name": "pred", "data_type": "string", "required": True,
-             "validate_in_text": True},  # mapped value needs real check
-            {"name": "obj", "data_type": "string", "required": True},
-        ],
-    }
-    spec = spec_from_dict(base)
-    # build the backend with a compatible spec, then query with the odd one
-    ok_spec = spec_from_dict(
-        {**base, "variables": [dict(v, validate_in_text=False) for v in base["variables"]]}
-    )
-    backend = RuleTripleExtractor(ok_spec)
-    assert backend.extract_clean_json_batch(["x"], spec) is None
-
-
-def _udf_only_backend(inner):
-    """Strips the native/vectorized entry points so extract_chunks takes
-    the pre-r6 mapInPandas path. SimpleNamespace of bound methods: the
-    executors unpickle methods of the importable backend class, not this
-    test module."""
-    from types import SimpleNamespace
-
-    return SimpleNamespace(
-        extract_raw=inner.extract_raw, extract_raw_batch=inner.extract_raw_batch
-    )
 
 
 def test_driver_cache_row_ceiling_refuses(spark, tmp_path):
@@ -334,141 +209,3 @@ def test_entity_ranks_two_phase_matches_global_window(spark):
     for m in re.finditer(r"Window .*SinglePartition", plan):
         tail = plan[m.start() : m.start() + 2000]
         assert "HashAggregate" in tail, tail
-
-
-def test_native_one_pass_fallback_on_conflicting_phrases(spark):
-    """Custom phrase sets that defeat the one-pass guards (substring
-    conflicts / non-lowercase shapes) must fall back to the 3-pass form
-    and still produce byte-identical output."""
-    import json
-
-    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.extraction.extract import extract_chunks
-    from delm_spark.schemas.clean import clean_response
-    from delm_spark.schemas.spec import spec_from_dict
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    phrases = [
-        (r" is located in ", "located_in"),
-        (r" in ", "works_at"),  # substring of the phrase above
-    ]
-    backend = RuleTripleExtractor(spec, predicate_phrases=phrases)
-    texts = [
-        "Acme Corp is located in Paris.",
-        "Alice Smith in Acme Corp.",
-        "no match",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id int, delm_text_chunk string"
-    )
-    out = extract_chunks(df, spec, backend, dedup=False).collect()
-    got = {r["id"]: r["delm_extracted_data_json"] for r in out}
-    for i, t in enumerate(texts):
-        expect = json.dumps(
-            clean_response(backend.extract_raw(t), spec, t), sort_keys=False
-        )
-        assert got[i] == expect, (t, got[i], expect)
-
-
-def test_native_extract_items_matches_json_roundtrip(spark):
-    """array<struct> items == from_json(json path)[container], element
-    for element (order included), over adversarial chunks."""
-    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.schemas.compile import spark_schema_for
-    from delm_spark.schemas.spec import spec_from_dict
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    backend = RuleTripleExtractor(spec)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(EXTRACT_TEXTS)], "id int, delm_text_chunk string"
-    )
-    items = backend.native_extract_items(spec, F.col("delm_text_chunk"))
-    assert items is not None
-    json_cols = backend.native_extract_columns(spec, F.col("delm_text_chunk"))
-    schema = spark_schema_for(spec)
-    out = df.select(
-        "id",
-        items.alias("native"),
-        F.from_json(json_cols["json"], schema)
-        .getField(spec.container_name)
-        .alias("roundtrip"),
-    ).collect()
-    for r in out:
-        rt = r["roundtrip"] if r["roundtrip"] is not None else []
-        assert (r["native"] or []) == list(rt), (r["id"], r["native"], rt)
-
-
-def test_pipeline_triples_native_equals_udf(spark):
-    """run_pipeline triples/edges identical whether the backend offers
-    the native paths or only the pre-r6 UDF path."""
-    from delm_spark.data.synthetic import entity_dictionary, generate_transcripts
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-    from delm_spark.schemas.spec import spec_from_dict
-
-    t = generate_transcripts(spark, n_convs=40, n_hot=2)
-    d = entity_dictionary(spark)
-    cfg = PipelineConfig()
-    spec = spec_from_dict(cfg.schema_cfg)
-    backend = RuleTripleExtractor(spec)
-    res_native = run_pipeline(spark, t, d, cfg, backend=backend)
-    res_udf = run_pipeline(
-        spark, t, d, cfg, backend=_udf_only_backend(backend)
-    )
-    nat = sorted(map(tuple, res_native.triples.collect()))
-    udf = sorted(map(tuple, res_udf.triples.collect()))
-    assert nat == udf
-    nat_e = sorted(map(tuple, res_native.edges.collect()))
-    udf_e = sorted(map(tuple, res_udf.edges.collect()))
-    assert nat_e == udf_e
-
-
-def test_extract_chunks_native_path_byte_parity(spark):
-    """End-to-end: the native expression path's output columns equal the
-    pre-r6 mapInPandas path row-for-row (JSON string, errors, tokens),
-    and the native plan has NO Python eval node."""
-    import json
-
-    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.extraction.extract import extract_chunks
-    from delm_spark.schemas.clean import clean_response
-    from delm_spark.schemas.spec import spec_from_dict
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    backend = RuleTripleExtractor(spec)
-    rows = [(i, t) for i, t in enumerate(EXTRACT_TEXTS)]
-    df = spark.createDataFrame(rows, "id int, delm_text_chunk string")
-
-    native_df = extract_chunks(df, spec, backend, dedup=False)
-    plan = native_df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, plan
-
-    cols = [
-        "id",
-        "delm_extracted_data_json",
-        "delm_errors",
-        "delm_input_tokens",
-        "delm_output_tokens",
-        "delm_cache_hit",
-    ]
-    native = sorted(map(tuple, native_df.select(*cols).collect()))
-    udf = sorted(
-        map(
-            tuple,
-            extract_chunks(df, spec, _udf_only_backend(backend), dedup=False)
-            .select(*cols)
-            .collect(),
-        )
-    )
-    assert native == udf
-
-    got = {r[0]: r[1] for r in native}
-    for i, t in rows:
-        expect = json.dumps(
-            clean_response(backend.extract_raw(t or ""), spec, t or ""),
-            sort_keys=False,
-        )
-        assert got[i] == expect, (t, got[i], expect)
