@@ -10,14 +10,16 @@ whose recovery is measurable.
 Mentions: 40% one-char-deleted dictionary surfaces (planted, recoverable),
 10% exact dictionary surfaces, 50% unrelated noise (must mostly NOT link
 at the threshold). Reports wall, mentions/sec, planted recall/accuracy,
-noise link rate, LSH bucket histogram of the blocked join (candidate
-volume vs the 1e9-pair cross join the blocking avoids). Steal-gated like
+noise link rate, and the histogram of the dictionary bucket index the
+kernel probes (candidate volume vs the 1e9-pair cross join the blocking
+avoids). Steal-gated like
 bench_dedup.py. Writes BENCH/LINK_SCALE.md and prints ONE JSON line.
 """
 
 from __future__ import annotations
 
 import json
+import tempfile
 import os
 import sys
 import time
@@ -100,14 +102,13 @@ def make_tables(spark):
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from delm_spark.kg.linking import embedding_link_candidates, surface_embedding
-    from delm_spark.operators.similarity import lsh_bucket
+    from delm_spark.kg.linking import _dictionary_index, embedding_link_candidates
     from delm_spark.session import get_spark
 
     spark = get_spark(app_name="delm-link-bench", cores=CORES)
     spark.range(100_000).count()
-    dict_path = f"/tmp/delm_link_dict_{N_DICT}_v{VOCAB}"
-    men_path = f"/tmp/delm_link_mentions_{N_MENTIONS}_v{VOCAB}"
+    dict_path = f"{tempfile.gettempdir()}/delm_link_dict_{N_DICT}_v{VOCAB}"
+    men_path = f"{tempfile.gettempdir()}/delm_link_mentions_{N_MENTIONS}_v{VOCAB}"
     if not (
         Path(dict_path, "_SUCCESS").exists() and Path(men_path, "_SUCCESS").exists()
     ):
@@ -153,29 +154,18 @@ def main() -> None:
     exact_acc = bk.get("exact", (0, 0))[1] / max(totals.get("exact", 1), 1)
     noise_rate = bk.get("noise", (0, 0))[0] / max(totals.get("noise", 1), 1)
 
-    # bucket histogram of the blocked join: dictionary side exploded to
-    # probe masks, grouped by bucket id
-    from delm_spark.operators.similarity import _probe_masks
+    # bucket histogram of the kernel's dictionary index: dictionary rows
+    # probing each (band, bucket)
+    import numpy as np
 
-    de = d.withColumn(
-        "__e", surface_embedding(F.col("surface"), DIM)
-    ).localCheckpoint(eager=True)
-    masks = _probe_masks(PLANES, RADIUS)
-    band_arr = F.array(*[
-        lsh_bucket(F.col("__e"), DIM, PLANES, b * PLANES) for b in range(BANDS)
-    ])
-    buckets = (
-        de.select(F.posexplode(band_arr).alias("band", "b0"))
-        .select("band", F.explode(F.array(*[
-            F.col("b0").bitwiseXOR(F.lit(mk)) for mk in masks])).alias("b"))
-        .groupBy("band", "b").count()
-    )
-    hist = buckets.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max"),
-        F.expr("percentile_approx(count, 0.5)").alias("p50"),
-        F.expr("percentile_approx(count, 0.99)").alias("p99"),
-    ).collect()[0]
+    index = _dictionary_index(d, DIM, PLANES, RADIUS, BANDS)
+    loads = np.array([len(rows) for band in index["probes"] for rows in band.values()])
+    hist = {
+        "n_buckets": len(loads),
+        "p50": int(np.percentile(loads, 50, method="inverted_cdf")),
+        "p99": int(np.percentile(loads, 99, method="inverted_cdf")),
+        "max": int(loads.max()),
+    }
 
     summary = {
         "n_dict": n_dict,
@@ -186,12 +176,7 @@ def main() -> None:
         "typo_recall": round(typo_recall, 4),
         "exact_accuracy": round(exact_acc, 4),
         "noise_link_rate": round(noise_rate, 4),
-        "bucket_histogram": {
-            "n_buckets": hist["n_buckets"],
-            "p50": int(hist["p50"]),
-            "p99": int(hist["p99"]),
-            "max": int(hist["max"]),
-        },
+        "bucket_histogram": hist,
         "bands": BANDS, "planes": PLANES, "radius": RADIUS,
         "threshold": THRESHOLD,
         "cross_join_avoided_pairs": n_dict * n_mentions,
@@ -218,28 +203,28 @@ unrelated noise.
 | planted-typo recall (correct entity) | {typo_recall:.3f} |
 | exact-surface accuracy | {exact_acc:.3f} |
 | noise link rate (false positives at threshold) | {noise_rate:.3f} |
-| LSH bucket histogram (dict x probe masks) | p50={int(hist['p50'])} p99={int(hist['p99'])} max={int(hist['max'])} over {hist['n_buckets']:,} buckets |
+| LSH bucket histogram (dict x probe masks) | p50={hist['p50']} p99={hist['p99']} max={hist['max']} over {hist['n_buckets']:,} buckets |
 | cross-join pairs avoided | {n_dict * n_mentions:,} |
 
-## Scoring kernel (round 5)
+## Scoring kernel
 
-Round 4 scored candidates by joining the mention and dictionary probe
-frames on (band, bucket) and running an Arrow cosine per PAIR row —
-every pair materialized BOTH dim-{DIM} arrays (~1 KB crossing Arrow
-twice) and np.stack ran once per pair: 268 mentions/s (~0.44M scored
-pairs/s) at this corpus. Round 5 cogroups the two frames per (band,
-bucket) (kg/linking.py _cogroup_bucket_argmax): each side's vectors
-cross into Python ONCE per bucket, a blocked numpy matmul scores the
-m x d block ({_MB}-mention blocks bound task memory under bucket skew),
-and only the per-surface bucket-local argmax returns — exact, because
-(score desc, canonical_id asc) is a total order, so the global argmax of
-bucket argmaxes equals the argmax over all pairs; candidates are
-pre-sorted on canonical_id so np.argmax's first-True IS the tie-break.
-The trigram embedding itself moved to an Arrow-batched twin
-(surface_embeddings_fast, bit-identical counts, pinned by
-tests/test_round5_fixes.py). Verdict columns (typo recall / exact
-accuracy / noise rate and every per-kind count) are IDENTICAL to the
-r4 report — the kernel changes wall, not results.
+`embedding_link_candidates` is one Arrow pass (kg/linking.py). The
+driver collects the dictionary once — distinct surfaces, smallest
+canonical id each, rows sorted by canonical_id — and broadcasts a bucket
+index: integer trigram counts, norms, the {BANDS}x{PLANES} hyperplanes,
+and per band a map from each bucket to the sorted dictionary rows within
+probe radius {RADIUS}. ONE mapInPandas stage over the distinct mention
+surfaces then embeds and buckets each Arrow batch with one matmul
+against the hyperplanes, groups the batch's mentions by bucket per band,
+and scores each group against its probe rows with blocked numpy matmuls
+({_MB}-mention blocks bound task memory under bucket skew; no dense
+mention x dictionary matrix). Bands merge on (score desc, row asc);
+row order is canonical_id order, so that is the (score desc,
+canonical_id asc) tie-break. The embeddings are integer-valued, so
+dots and norms are exact in float64 and every score equals the native
+cosine bit for bit (pytest-pinned against an all-pairs reference,
+tests/test_linking.py). The kernel changes wall, not results: recall,
+accuracy and noise rate equal the previous cogroup kernel's.
 
 ## Parameter account (measured r4 on the same corpus; blocking unchanged)
 
@@ -264,14 +249,14 @@ formula above.
 
 ## 100-TB read
 
-The candidate lookup is ONE equi-join shape on (band, bucket) with a
-bounded per-bucket ceiling — the same discipline as the MinHash band
-join (BENCH/DEDUP_SCALE.md) — so mention volume scales the probe side
-linearly while the dictionary side stays fixed; nothing in the plan is
-quadratic. The cogrouped kernel removes the broadcast REQUIREMENT on
-the dictionary side: both frames shuffle once on the bounded key, so a
-million-entity dictionary runs the identical plan un-broadcast, and
-per-task memory stays bounded by bucket load x dim + the fixed-size
+Mention volume scales the one Arrow stage linearly: each distinct
+surface is embedded once and scored only against the dictionary rows its
+buckets probe, with a bounded per-bucket load — the same blocking
+discipline as the MinHash band join (BENCH/DEDUP_SCALE.md) — so nothing
+in the plan is quadratic. The dictionary side is a broadcast: it must be
+broadcast-sized, the same requirement `link_mentions`' exact lookup
+already places on it, and each task holds the index (dictionary x
+{DIM} floats, plus each band's probe lists) and the fixed-size
 matmul block.
 """
     out = Path(__file__).resolve().parent / "BENCH" / "LINK_SCALE.md"

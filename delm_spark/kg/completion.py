@@ -77,6 +77,11 @@ def entity_ranks(
     parted = ents.repartitionByRange(npart, "entity").select(
         "entity", F.spark_partition_id().alias("__blk")
     )
+    # `within` and `offsets` must see the SAME range boundaries (they come
+    # from order-dependent sampling): both read `parted`'s one range
+    # exchange through exchange reuse (spark.sql.exchange.reuse, on by
+    # default), pinned by test_plan_quality's
+    # test_entity_ranks_reuses_range_exchange
     w_in = Window.partitionBy("__blk").orderBy("entity")
     within = parted.withColumn("__rn_in", F.row_number().over(w_in))
     # bounded single-partition window: one row per range partition

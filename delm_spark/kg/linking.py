@@ -11,15 +11,28 @@ blocking* for candidate detection: `surface_embedding` (hashing-trick
 character-trigram features, fully native and oracle-reproducible) +
 `embedding_link_candidates` (sign-LSH bucket blocking + cosine scoring)
 recover surface variants exact matching misses — typos, truncations,
-re-orderings — and keep the candidate join an equi-join on the bucket id,
-the shape that survives a million-entity dictionary no longer worth
-broadcasting.
+re-orderings. The candidate search is one Arrow pass over the distinct
+mention surfaces against a dictionary bucket index built once on the
+driver and broadcast, so the dictionary must be broadcast-sized — the
+same requirement `link_mentions` already places on it.
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: normalize_mention's whitespace class: Java regex \s is ASCII-only
+_WS = re.compile(r"\s+", re.ASCII)
+
+#: mention rows per matmul block inside the scoring kernel — bounds the
+#: score block at MENTION_BLOCK x bucket_load floats no matter how hot a
+#: bucket gets (a skewed 50k x 50k bucket would otherwise be a 20 GB
+#: dense matrix in one task)
+_MENTION_BLOCK = 2048
 
 
 def normalize_mention(col: Column) -> Column:
@@ -55,25 +68,31 @@ def surface_embedding(col: Column, dim: int = 64) -> Column:
     )
 
 
-def _trigram_buckets(surface: str, dim: int, cache: dict) -> list:
-    """Python twin of surface_embedding's trigram bucketing for ONE
-    already-normalized surface: padded '^s$', windows substr(i, 3) for
-    i in 1..max(len-2, 1) (the tail window of a length-2 padded string is
-    the whole 2-char string, matching Spark substr semantics), bucket =
+def _trigram_counts(surfaces, dim: int, cache: dict) -> np.ndarray:
+    """numpy twin of `surface_embedding` over raw surfaces: one float64
+    row of integer trigram counts per surface (a null surface gets a zero
+    row). Normalization replicates normalize_mention exactly: ASCII-\\s+
+    collapse, space-only trim (Spark trim strips ' ' only), then
+    lowercase. Then padded '^s$', windows substr(i, 3) for i in
+    1..max(len-2, 1) (the tail window of a length-2 padded string is the
+    whole 2-char string, matching Spark substr semantics), bucket =
     int(md5(utf8)[:4], 16) % dim. `cache` memoizes trigram -> bucket —
     trigram diversity is alphabet-bounded, so the md5 cost amortizes to
     ~zero across a batch."""
     import hashlib
 
-    padded = "^" + surface + "$"
-    out = []
-    for i in range(max(len(padded) - 2, 1)):
-        t = padded[i : i + 3]
-        b = cache.get(t)
-        if b is None:
-            b = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:4], 16) % dim
-            cache[t] = b
-        out.append(b)
+    out = np.zeros((len(surfaces), dim))
+    for i, s in enumerate(surfaces):
+        if s is None:
+            continue
+        padded = "^" + _WS.sub(" ", s).strip(" ").lower() + "$"
+        for k in range(max(len(padded) - 2, 1)):
+            t = padded[k : k + 3]
+            b = cache.get(t)
+            if b is None:
+                b = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:4], 16) % dim
+                cache[t] = b
+            out[i, b] += 1.0
     return out
 
 
@@ -81,19 +100,12 @@ def surface_embeddings_fast(
     df: DataFrame, surface_col: str, out_col: str, dim: int = 64
 ) -> DataFrame:
     """Arrow-batched numpy twin of `surface_embedding` — identical
-    integer-count vectors (pytest-pinned, tests/test_round5_fixes.py),
-    ~30x the throughput: the native column expression is a nested
-    higher-order function that evaluates INTERPRETED (~130 us/surface),
-    which dominated the linking bench's wall at 100k surfaces.
-    Normalization replicates normalize_mention exactly: ASCII-\\s+
-    collapse (Java regex \\s is ASCII-only), space-only trim (Spark trim
-    strips ' ' only), then lowercase."""
-    import re
-
-    import numpy as np
+    integer-count vectors (pytest-pinned, tests/test_linking.py), ~30x
+    the throughput: the native column expression is a nested higher-order
+    function that evaluates INTERPRETED (~130 us/surface). A null surface
+    gets a null embedding, like the native expression."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    ws = re.compile(r"\s+", re.ASCII)
     schema = StructType(
         list(df.schema.fields) + [StructField(out_col, ArrayType(DoubleType()))]
     )
@@ -101,24 +113,63 @@ def surface_embeddings_fast(
     def gen(batches):
         cache: dict = {}
         for pdf in batches:
-            vecs = []
-            for s in pdf[surface_col]:
-                if s is None:
-                    # null-propagate like the native HOF expression this
-                    # replaced: a null surface gets a null embedding and
-                    # posexplode drops the row downstream.
-                    vecs.append(None)
-                    continue
-                norm = ws.sub(" ", s).strip(" ").lower()
-                v = np.zeros(dim)
-                for b in _trigram_buckets(norm, dim, cache):
-                    v[b] += 1.0
-                vecs.append(v)
+            surfaces = pdf[surface_col].tolist()
+            vecs = _trigram_counts(surfaces, dim, cache)
             out = pdf.copy()
-            out[out_col] = vecs
+            out[out_col] = [None if s is None else v for s, v in zip(surfaces, vecs)]
             yield out
 
     return df.mapInPandas(gen, schema)
+
+
+def _band_buckets(emb: np.ndarray, planes: np.ndarray, n_planes: int) -> np.ndarray:
+    """(rows, bands) sign-LSH bucket ids, the numpy twin of `lsh_bucket`
+    with band b on planes [b*n_planes, (b+1)*n_planes): one matmul
+    against every band's hyperplanes. Integer counts against +-1 planes
+    make each dot exact, so the sign bits equal the native ones."""
+    bits = (emb @ planes.T >= 0).reshape(len(emb), len(planes) // n_planes, n_planes)
+    return (bits.astype(np.int64) << np.arange(n_planes)).sum(axis=2)
+
+
+def _dictionary_index(
+    dictionary: DataFrame, dim: int, n_planes: int, probe_radius: int, bands: int
+) -> dict:
+    """The dictionary side of `embedding_link_candidates`, built on the
+    driver from ONE collect: rows are the distinct surfaces (smallest
+    canonical id per surface) sorted by canonical_id, so a lower row
+    index IS the smaller-canonical-id tie-break. Holds the trigram
+    counts and their norms, the hyperplanes of every band, and per band
+    a map bucket -> sorted rows whose own bucket lies within Hamming
+    distance `probe_radius` (the multi-probe set). Entries with a null
+    surface or canonical id are left out: they can link nothing."""
+    from delm_spark.operators.similarity import _probe_masks, hyperplane_signs
+
+    rows = sorted(
+        (r["canonical_id"], r["surface"])
+        for r in dictionary.filter(
+            F.col("surface").isNotNull() & F.col("canonical_id").isNotNull()
+        )
+        .groupBy("surface")
+        .agg(F.min("canonical_id").alias("canonical_id"))
+        .collect()
+    )
+    emb = _trigram_counts([s for _, s in rows], dim, {})
+    planes = np.array([hyperplane_signs(dim, p) for p in range(bands * n_planes)])
+    masks = np.array(_probe_masks(n_planes, probe_radius))
+    ids = np.repeat(np.arange(len(rows)), len(masks))
+    probes = []
+    for home in _band_buckets(emb, planes, n_planes).T:
+        keys = (home[:, None] ^ masks).ravel()
+        order = np.lexsort((ids, keys))
+        uniq, starts = np.unique(keys[order], return_index=True)
+        probes.append(dict(zip(uniq.tolist(), np.split(ids[order], starts[1:]))))
+    return {
+        "emb": emb,
+        "norms": np.sqrt(np.einsum("ij,ij->i", emb, emb)),
+        "cids": np.array([c for c, _ in rows], dtype=object),
+        "planes": planes,
+        "probes": probes,
+    }
 
 
 def embedding_link_candidates(
@@ -133,10 +184,9 @@ def embedding_link_candidates(
 ) -> DataFrame:
     """Embedding-blocked entity-link candidates: each distinct mention
     surface is matched to its best dictionary entity by trigram-embedding
-    cosine, with sign-LSH bucket blocking so the candidate lookup is ONE
-    equi-join on (band, bucket) (dictionary side exploded to probe masks
-    and broadcast; at million-entity scale the same plan runs un-broadcast
-    as a plain shuffle equi-join on bounded buckets).
+    cosine, with sign-LSH bucket blocking: a mention scores only the
+    dictionary entries whose bucket lies within Hamming distance
+    `probe_radius` of its own.
 
     `bands` > 1 uses that many INDEPENDENT n_planes-bit hash tables (the
     MinHash-LSH banding discipline): a pair is a candidate when ANY band
@@ -147,161 +197,76 @@ def embedding_link_candidates(
     independently). bands=1 is the single-table multi-probe scheme the
     oracle queries pin.
 
+    One pass: the dictionary bucket index (`_dictionary_index`) is built
+    on the driver and broadcast — the dictionary must be broadcast-sized,
+    as `link_mentions` already requires — and ONE mapInPandas stage over
+    the distinct mention surfaces embeds and buckets each Arrow batch,
+    groups its mentions by bucket per band, and scores each group against
+    that bucket's probe rows with blocked matmuls (at most
+    `_MENTION_BLOCK` mentions per block; never a dense mention x
+    dictionary matrix). Trigram embeddings are integer-valued, so dots
+    and squared norms are exact in float64 under any summation order and
+    every score equals the native cosine bit for bit.
+
     Returns (surface, canonical_id, link_score): the best entity per
     mention with cosine >= threshold (ties break to the smallest
-    canonical_id). This is the scoring stage of the north star's
-    'dictionary+embedding blocking' — exact dictionary hits should be
-    resolved by `link_mentions` first; this recovers the near-miss tail.
+    canonical_id); a null surface gets no row. This is the scoring stage
+    of the north star's 'dictionary+embedding blocking' — exact
+    dictionary hits should be resolved by `link_mentions` first; this
+    recovers the near-miss tail.
     """
-    from pyspark.sql import Window
-
-    from delm_spark.operators.similarity import _probe_masks, lsh_bucket
-
-    def band_buckets(vec: Column) -> Column:
-        return F.array(
-            *[lsh_bucket(vec, dim, n_planes, b * n_planes) for b in range(bands)]
-        )
-
-    # Eager cut right after the embedding column on BOTH sides: the
-    # nested-HOF trigram expression otherwise gets CollapseProject-inlined
-    # into every downstream consumer — 8x into lsh_bucket's plane dots,
-    # again into cosine — and analysis/codegen of the composed tree costs
-    # SECONDS per action (measured 7.3 s for a 44-row frame) while the
-    # same ops over a materialized array column compile in ~0.15 s. Both
-    # frames are vocabulary-bounded (distinct mention surfaces /
-    # dictionary entries), so the materialization is small by
-    # construction.
-    # Explicit width for the embedding projection: AQE sizes the dedup
-    # shuffle for JVM bytes, and 100k short surfaces coalesce to ONE
-    # partition — which would run the (interpreted-HOF) embedding
-    # single-threaded. Explicit repartitions are AQE-exempt.
-    width = mentions.sparkSession.sparkContext.defaultParallelism
-    m = (
-        surface_embeddings_fast(
-            mentions.select(F.col(surface_col).alias("surface"))
-            .dropDuplicates(["surface"])
-            .repartition(width),
-            "surface",
-            "__me",
-            dim,
-        )
-        .localCheckpoint(eager=True)
-    )
-    m_b = m.select(
-        "surface",
-        "__me",
-        F.posexplode(band_buckets(F.col("__me"))).alias("__band", "__bkt"),
-    )
-    d = (
-        surface_embeddings_fast(
-            dictionary.select("surface", "canonical_id")
-            # deterministic on duplicate surfaces: smallest canonical id wins
-            .groupBy("surface")
-            .agg(F.min("canonical_id").alias("canonical_id")),
-            "surface",
-            "__de",
-            dim,
-        )
-        .localCheckpoint(eager=True)
-        .select(F.col("surface").alias("__dsurf"), "canonical_id", "__de")
-    )
-    masks = _probe_masks(n_planes, probe_radius)
-    d_b = (
-        d.select(
-            "canonical_id",
-            "__de",
-            F.posexplode(band_buckets(F.col("__de"))).alias("__band", "__b0"),
-        )
-        .withColumn(
-            "__bkt",
-            F.explode(
-                F.array(*[F.col("__b0").bitwiseXOR(F.lit(mk)) for mk in masks])
-            ),
-        )
-        .drop("__b0")
-    )
-    # Grouped bucket scoring (cogroup + one numpy matmul per bucket)
-    # instead of join-then-per-pair-cosine: the join shape materialized
-    # every candidate PAIR as a Spark row carrying BOTH dim-wide arrays
-    # (~1 KB/pair crossing Arrow twice), and np.stack ran once per pair
-    # row. Here each side's vectors cross into Python ONCE per bucket,
-    # the m x d score block is one BLAS matmul, and only the per-surface
-    # bucket-local argmax (3 narrow columns) comes back — the global
-    # argmax of bucket argmaxes equals the argmax over all pairs because
-    # (score desc, canonical_id asc) is a total order. Identical scores:
-    # trigram embeddings are integer-valued, so dots and squared norms
-    # are exact in float64 under ANY summation order (matmul == einsum
-    # == interpreted fold), and the tie-break is reproduced exactly by
-    # pre-sorting each bucket's candidates on canonical_id and taking
-    # the FIRST maximum.
-    scored = _cogroup_bucket_argmax(m_b, d_b)
-    w = Window.partitionBy("surface").orderBy(
-        F.desc("link_score"), F.asc("canonical_id")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("link_score") >= threshold))
-        .drop("__rn")
-    )
-
-
-#: mention rows per matmul block inside the bucket kernel — bounds the
-#: score block at MENTION_BLOCK x bucket_load floats no matter how hot a
-#: bucket gets (a skewed 50k x 50k bucket would otherwise be a 20 GB
-#: dense matrix in one task)
-_MENTION_BLOCK = 2048
-
-
-def _cogroup_bucket_argmax(m_b: DataFrame, d_b: DataFrame) -> DataFrame:
-    """Per-(band, bucket) grouped scoring kernel: cogroup the mention and
-    dictionary probe frames, stack each side's embeddings once, score
-    with a blocked numpy matmul, and emit ONE row per mention surface —
-    its bucket-local best candidate under (score desc, canonical_id asc).
-
-    Scale shape: both sides shuffle once on the bounded (band, bucket)
-    key — no broadcast requirement, so the same plan runs unchanged when
-    the dictionary outgrows a broadcast; per-task memory is bounded by
-    bucket load x dim + the _MENTION_BLOCK-row score block."""
-    import numpy as np
     import pandas as pd
 
-    def score(key, mpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"surface": [], "canonical_id": [], "link_score": []}
-        ).astype({"surface": "object", "canonical_id": "object"})
-        if len(mpdf) == 0 or len(dpdf) == 0:
-            return empty
-        # candidates sorted on canonical_id so np.argmax's first-True
-        # semantics IS the smallest-canonical-id tie-break
-        dpdf = dpdf.sort_values("canonical_id", kind="mergesort")
-        D = np.stack(dpdf["__de"].to_numpy()).astype(np.float64)
-        cids = dpdf["canonical_id"].to_numpy()
-        dn = np.sqrt(np.einsum("ij,ij->i", D, D))
-        surfaces, bests, scores = [], [], []
-        for lo in range(0, len(mpdf), _MENTION_BLOCK):
-            blk = mpdf.iloc[lo : lo + _MENTION_BLOCK]
-            M = np.stack(blk["__me"].to_numpy()).astype(np.float64)
-            mn = np.sqrt(np.einsum("ij,ij->i", M, M))
-            S = (M @ D.T) / np.maximum(np.outer(mn, dn), 1e-12)
-            mx = S.max(axis=1)
-            j = np.argmax(S == mx[:, None], axis=1)
-            surfaces.append(blk["surface"].to_numpy())
-            bests.append(cids[j])
-            scores.append(mx)
-        return pd.DataFrame(
-            {
-                "surface": np.concatenate(surfaces),
-                "canonical_id": np.concatenate(bests),
-                "link_score": np.concatenate(scores),
-            }
-        )
+    spark = mentions.sparkSession
+    bc = spark.sparkContext.broadcast(
+        _dictionary_index(dictionary, dim, n_planes, probe_radius, bands)
+    )
 
+    def score(batches):
+        ix = bc.value
+        emb, norms, cids = ix["emb"], ix["norms"], ix["cids"]
+        cache: dict = {}
+        for pdf in batches:
+            surf = pdf["surface"].to_numpy(dtype=object)
+            surf = surf[[s is not None for s in surf]]
+            m = _trigram_counts(surf, dim, cache)
+            mn = np.sqrt(np.einsum("ij,ij->i", m, m))
+            best = np.full(len(surf), -np.inf)
+            row = np.full(len(surf), -1)
+            for home, probes in zip(_band_buckets(m, ix["planes"], n_planes).T, ix["probes"]):
+                order = np.argsort(home, kind="stable")
+                keys, starts = np.unique(home[order], return_index=True)
+                for key, members in zip(keys.tolist(), np.split(order, starts[1:])):
+                    cand = probes.get(key)
+                    if cand is None:
+                        continue
+                    d, dn = emb[cand], norms[cand]
+                    for lo in range(0, len(members), _MENTION_BLOCK):
+                        mi = members[lo : lo + _MENTION_BLOCK]
+                        s = (m[mi] @ d.T) / np.maximum(np.outer(mn[mi], dn), 1e-12)
+                        mx = s.max(axis=1)
+                        # cand is sorted, so the first maximum is the
+                        # smallest row; bands merge on (score desc, row asc)
+                        r = cand[np.argmax(s == mx[:, None], axis=1)]
+                        win = (mx > best[mi]) | ((mx == best[mi]) & (r < row[mi]))
+                        best[mi[win]], row[mi[win]] = mx[win], r[win]
+            keep = (row >= 0) & (best >= threshold)
+            yield pd.DataFrame(
+                {
+                    "surface": surf[keep],
+                    "canonical_id": cids[row[keep]],
+                    "link_score": best[keep],
+                }
+            )
+
+    # Explicit width: AQE sizes the dedup shuffle for JVM bytes, and 100k
+    # short surfaces coalesce to ONE partition — which would run the
+    # Python kernel single-threaded. Explicit repartitions are AQE-exempt.
     return (
-        m_b.groupBy("__band", "__bkt")
-        .cogroup(d_b.groupBy("__band", "__bkt"))
-        .applyInPandas(
-            score, "surface string, canonical_id string, link_score double"
-        )
+        mentions.select(F.col(surface_col).alias("surface"))
+        .dropDuplicates(["surface"])
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(score, "surface string, canonical_id string, link_score double")
     )
 
 
@@ -319,11 +284,13 @@ def resolve_mention_residue(
     surfaces resolve to canonical entities.
 
     Input is `link_mentions` output (subj_id / obj_id present). The
-    candidate search runs over DISTINCT unlinked surfaces — bounded by the
-    corpus's unique mention vocabulary, not its triple count — and the
-    rewrite is two left equi-joins on the mention id (AQE broadcasts the
-    resolved map when it is small; at web scale it stays a plain shuffle
-    equi-join, never a crossJoin)."""
+    candidate search is `embedding_link_candidates`' one Arrow pass over
+    the DISTINCT unlinked surfaces — bounded by the corpus's unique
+    mention vocabulary, not its triple count — against the broadcast
+    dictionary index, so the dictionary must be broadcast-sized, as for
+    `link_mentions`. The rewrite is two left equi-joins on the mention id
+    (AQE broadcasts the resolved map when it is small; otherwise it stays
+    a plain shuffle equi-join, never a crossJoin)."""
     mention_ids = (
         # ONE scan of the (checkpointed) triples frame instead of a
         # subj/obj union of two scans (r6) — same multiset, same distinct
@@ -336,13 +303,11 @@ def resolve_mention_residue(
         # already normalize_mention()-normalized (idempotent downstream)
         .withColumn("surface", F.expr("substring(__mid, 9)"))
     )
-    # residue-free short circuit (r6): with zero unlinked mentions the
-    # rewrite is the identity, but the candidate search still costs ~2 s
-    # of fixed stage overhead (two Arrow stages, two eager checkpoints, a
-    # cogroup shuffle, a window) over empty frames. One cheap existence
-    # probe over the already-materialized triples frame skips all of it;
-    # corpora with residue pay the probe (one short scan) and proceed
-    # unchanged.
+    # residue-free short circuit: with zero unlinked mentions the rewrite
+    # is the identity, but the candidate search would still collect and
+    # broadcast the dictionary index and run its Arrow stage. One cheap
+    # existence probe over the already-materialized triples frame skips
+    # all of it; corpora with residue pay the probe (one short scan).
     if mention_ids.isEmpty():
         return triples
     cands = embedding_link_candidates(

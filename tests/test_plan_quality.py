@@ -24,6 +24,25 @@ def _has_codegen(df) -> bool:
     return "WholeStageCodegen" in _plan(df, "codegen")
 
 
+def _last_execution_id(store) -> int:
+    runs = store.executionsList()
+    return runs.apply(runs.size() - 1).executionId() if runs.size() else -1
+
+
+def _executions_since(store, last: int) -> list:
+    """SQL executions with an id above `last`, oldest first. Selected by
+    id, not by list position: the status store keeps only the newest
+    spark.sql.ui.retainedExecutions (1000), so in a long session its
+    count stops growing and a positional offset selects nothing."""
+    runs = store.executionsList()
+    out = []
+    for i in range(runs.size() - 1, -1, -1):
+        if runs.apply(i).executionId() <= last:
+            break
+        out.append(runs.apply(i))
+    return out[::-1]
+
+
 def test_q1_pushes_filter_and_prunes_columns(spark):
     df = entry_mod.q1_pricing_summary(spark, SF_DIR)
     plan = _plan(df)
@@ -94,12 +113,11 @@ def test_extraction_plan_gate(spark, tmp_path):
     python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
     for mode in MODES:
-        first = int(store.executionsCount())
+        last = _last_execution_id(store)
         out = run_mode(chunks, spec, backend, mode, tmp_path / mode)
         # every SQL execution the call ran (cache writes, driver-cache
         # collects) plus the plan it returns
-        runs = store.executionsList(first, 1 << 20)
-        plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+        plans = [e.physicalPlanDescription() for e in _executions_since(store, last)]
         plans.append(_plan(out))
         for node in python_nodes:
             assert not any(node in p for p in plans), (mode, node)
@@ -112,6 +130,45 @@ def test_extraction_plan_gate(spark, tmp_path):
         plan = _plan(run_mode(chunks, spec, python_backend, mode, tmp_path))
         assert "MapInPandas" in plan, mode
         assert "BatchEvalPython" not in plan, mode
+
+
+def test_residue_linking_is_one_arrow_pass(spark):
+    """The embedding residue pass runs its candidate search as ONE
+    Arrow-batched scoring stage: no cogroup, no window argmax, no
+    row-at-a-time Python and no eager localCheckpoint job in anything
+    resolve_mention_residue runs, from the call through collecting its
+    result (the subj/obj rewrite joins reuse the one scored exchange)."""
+    from delm_spark.kg.linking import resolve_mention_residue
+    from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
+
+    d = entry_mod._fixture_dictionary(spark)
+    linked = run_pipeline(
+        spark, entry_mod._typo_transcripts(spark), d, PipelineConfig()
+    ).triples.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = _last_execution_id(store)
+    sc.setJobGroup("residue-gate", "residue linking plan gate")
+    try:
+        # every column, as the pipeline's stage commit consumes it
+        rows = resolve_mention_residue(linked, d).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    before = linked.filter(F.col("obj_id").startswith("mention:")).count()
+    assert sum(r["obj_id"].startswith("mention:") for r in rows) < before
+
+    # executed operator trees only: the formatted description repeats each
+    # node in its details section and in the pre-reuse initial plan
+    trees = [
+        e.physicalPlanDescription().split("\n\n")[0].split("== Initial Plan ==")[0]
+        for e in _executions_since(store, last)
+    ]
+    for node in ("FlatMapCoGroupsInPandas", "Window", "BatchEvalPython"):
+        assert not any(node in t for t in trees), node
+    assert sum(t.count("MapInPandas") for t in trees) == 1
+    jobs = spark._jsparkSession.sparkContext().statusStore()
+    names = [jobs.job(j).name() for j in sc.statusTracker().getJobIdsForGroup("residue-gate")]
+    assert names and not any(n.startswith("localCheckpoint") for n in names), names
 
 
 def test_topk_partial_group_limit(spark):
@@ -281,6 +338,26 @@ def test_negative_samples_broadcasts_entity_ranks(spark):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_entity_ranks_reuses_range_exchange(spark):
+    """entity_ranks reads its range-partitioned vocabulary twice (the
+    within-block row_number and the block census); the ranks are right
+    only if both read the SAME range boundaries, so the executed plan
+    must run the range exchange once and reuse it for the second read."""
+    from delm_spark.kg.completion import entity_ranks
+
+    t = spark.createDataFrame(
+        [(f"e{i}", "p", f"e{i+1}") for i in range(50)],
+        "subj string, pred string, obj string",
+    )
+    ranks = entity_ranks(t)
+    assert sorted(r["rank"] for r in ranks.collect()) == list(range(51))
+    final = ranks._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    ranged = [ln for ln in final.splitlines() if "rangepartitioning" in ln]
+    assert len(ranged) == 2, final
+    assert sum("ReusedExchange" in ln for ln in ranged) == 1, final
 
 
 def test_link_prediction_no_cartesian_all_native(spark):

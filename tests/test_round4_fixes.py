@@ -1,12 +1,11 @@
 """Round-4 regressions: transport signature inference with defaulted
 params, empty-cache-dir cold detection, legacy flat cache-layout migration,
-cache auto-compaction, typed CC convergence sentinel, and the composed
-embedding-linked pipeline."""
+cache auto-compaction, typed CC convergence sentinel, and the
+embedding-link config section."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
 from delm_spark.extraction.backend import CacheOnlyBackend, RuleTripleExtractor
@@ -192,40 +191,9 @@ def test_connected_components_long_ids_above_2_53(spark):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r3 #1: embedding linking composed into run_pipeline — typo'd
-# surfaces resolve to canonical ids through the flagship chain
+# VERDICT r3 #1: embedding linking composed into run_pipeline — the config
+# section threads through (the typo-resolution test is in test_linking.py)
 # ---------------------------------------------------------------------------
-
-def test_run_pipeline_embedding_link_resolves_typos(spark):
-    from delm_spark.data.synthetic import entity_dictionary
-    from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-
-    t = spark.createDataFrame(
-        [
-            # 'Acme Cor' is a one-char truncation of dictionary 'acme corp'
-            ("c1", 0, "user", "Alice Smith works at Acme Cor.", "", "2026-01-01"),
-            # exact hit for contrast
-            ("c2", 0, "user", "Bob Jones works at Acme Corp.", "", "2026-01-01"),
-        ],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    d = entity_dictionary(spark)
-
-    exact = run_pipeline(spark, t, d, PipelineConfig())
-    by_conv = {r["conv_id"]: r for r in exact.triples.collect()}
-    assert by_conv["c1"]["obj_id"] == "mention:acme cor"  # exact linking misses
-
-    composed = run_pipeline(
-        spark, t, d, PipelineConfig(embedding_link=True, embedding_link_threshold=0.5)
-    )
-    by_conv = {r["conv_id"]: r for r in composed.triples.collect()}
-    assert by_conv["c1"]["obj_id"] == "org:acme"  # embedding pass recovers it
-    assert by_conv["c2"]["obj_id"] == "org:acme"
-    assert by_conv["c1"]["subj_id"] == "person:alice_smith"
-    # and the canonical edge table reflects the recovered link
-    edges = {r["conv_id"]: r for r in composed.edges.collect()}
-    assert edges["c1"]["obj_canonical"] == "org:acme"
-
 
 def test_pipeline_section_embedding_link_threads_through():
     from delm_spark.config import DelmConfig

@@ -6,39 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_surface_embeddings_fast_identical_to_native(spark):
-    """The Arrow-batched trigram-embedding twin must reproduce the native
-    column expression exactly — including normalization (ASCII-\\s+
-    collapse, space-only trim, lowercase), tail-window substr semantics
-    on short strings, and UTF-8 md5 bucketing of non-ASCII trigrams."""
-    from delm_spark.kg.linking import surface_embedding, surface_embeddings_fast
-
-    surfaces = [
-        "alice smith",
-        "Alice  Smith",          # case + double space
-        " alice\tsmith ",        # trim + tab collapse
-        "a",                     # padded length 3 -> one window
-        "",                      # padded length 2 -> tail window '^$'
-        "ab",                    # padded length 4
-        "josé garcía-lópez",     # multi-byte UTF-8 trigrams
-        "ACME Corp.",
-        "x" * 200,               # long run, repeated trigram
-        "w00042 w10993 w05511",  # bench-shaped vocab surface
-    ]
-    df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    native = {
-        r["surface"]: list(r["e"])
-        for r in df.select(
-            "surface", surface_embedding(F.col("surface"), 64).alias("e")
-        ).collect()
-    }
-    fast = {
-        r["surface"]: list(r["e"])
-        for r in surface_embeddings_fast(df, "surface", "e", 64).collect()
-    }
-    assert fast == native
-
-
 def test_hashed_linear_score_null_and_empty_text(spark):
     """ADVICE r4: null-text docs must not vanish from hashed_linear_score
     output, and empty-string text must not score a phantom '' token."""
@@ -201,20 +168,6 @@ def test_decode_image_malformed_jpeg_returns_none():
     assert good[tq_off] == 0
     good[tq_off] = 1
     assert decode_image(bytes(good)) is None
-
-
-def test_surface_embeddings_fast_null_surface(spark):
-    """Review r5: a null surface must null-propagate (row dropped at
-    posexplode) like the native expression, not TypeError the task."""
-    from delm_spark.kg.linking import surface_embeddings_fast
-
-    df = spark.createDataFrame(
-        [("alice",), (None,), ("bob",)], "surface string"
-    )
-    rows = surface_embeddings_fast(df, "surface", "e", 64).collect()
-    by_s = {r["surface"]: r["e"] for r in rows}
-    assert by_s[None] is None
-    assert by_s["alice"] is not None and by_s["bob"] is not None
 
 
 def test_label_propagation_keeps_self_loop_only_nodes(spark):
