@@ -1855,9 +1855,9 @@ def kmeans_clusters_embeddings(spark, sf_dir):
     integer squared-L2, centroid update = sum div count, md5-ordered
     deterministic init, argmin ties to the smallest cluster — so the
     3-iteration fit + assignment is bit-reproducible and the oracle
-    unrolls the identical math in SQL. Assignment is a broadcast
-    single-row nested-loop (packed centroid array) + native array_min
-    fold: ZERO shuffle of the corpus side."""
+    unrolls the identical math in SQL. Assignment is a native array_min
+    fold over a constant-folded centroid literal: ZERO shuffle of the
+    corpus side."""
     from delm_spark.operators.cluster import kmeans_cluster
 
     emb = _spread(_t(spark, sf_dir, "embeddings"))

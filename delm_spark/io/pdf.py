@@ -476,20 +476,6 @@ def _parse_pdf_texts(data: bytes) -> list[str]:
     return texts
 
 
-def pdf_decode_udf():
-    """Arrow-batched Series[bytes] -> Series[str] text-layer decoder — the
-    same `decode_udf` seam marker OCR would plug into."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-
-    def _decode(content):
-        return content.map(
-            lambda b: parse_pdf_bytes(bytes(b)) if b is not None else None
-        )
-
-    return F.pandas_udf(_decode, StringType())
-
-
 def load_pdf(spark, path: str):
     """S4: PDFs -> (delm_file_name, delm_raw_data, decode_quality), text
     layer decoded on executors. decode_quality is the min-over-pages

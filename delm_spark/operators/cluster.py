@@ -28,9 +28,10 @@ Scale shape (100 TB / 1000-executor framing):
   iteration re-reads the materialized micro-vectors, never the source
   scan (at cluster scale this is the standard persist-the-working-set
   pattern; k iterations = k passes is Lloyd's irreducible cost);
-* centroids are k x dim BIGINTs (k<=4096 -> <=2 MiB) — ALWAYS broadcast;
-  the assignment is a broadcast nested-loop over k candidates folded by
-  a single min(struct) aggregation, no shuffle;
+* centroids are k x dim BIGINTs (k<=4096 -> <=2 MiB) held on the driver
+  and inlined as one constant-folded literal (`_assign_best_expr`); the
+  assignment is a per-row array_min(struct) fold over the k candidates —
+  no join, no shuffle;
 * the update is ONE hash aggregation per iteration shuffled on
   cluster_id with map-side partial sums (dim sum columns + count) —
   bytes shuffled per iteration: O(k x dim x partitions), independent of
@@ -92,66 +93,28 @@ def kmeans_init(
     )
 
 
-def kmeans_assign(
-    vectors_micro: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "vm",
-) -> DataFrame:
-    """Nearest-centroid assignment with ZERO shuffle of the big side.
-
-    The k centroids are packed into ONE row (collect_list aggregation of
-    the tiny centroid table — never the corpus), broadcast, and attached
-    by a broadcast nested-loop join of a single row; the argmin is then a
-    per-row native fold: ``array_min(transform(cands, c -> struct(dist,
-    cluster_id)))`` — struct ordering gives (smallest distance, then
-    smallest cluster_id) without recomputing the distance per comparison.
-    No groupBy, no exchange, no Python; the only bound is the packed
-    centroid row (k x dim x 8 bytes — 2 MiB at k=4096, dim=64).
-
-    Input vectors must already be micro-unit arrays (see `vec_micro`).
-    Returns (id_col, vec_col, cluster_id, dist_micro2)."""
-    packed = centroids.agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cands")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("__cands"),
-            lambda c: F.struct(
-                _dist2(F.col(vec_col), c["centroid"]).alias("dist_micro2"),
-                c["cluster_id"].alias("cluster_id"),
-            ),
-        )
-    )
-    return (
-        vectors_micro.crossJoin(F.broadcast(packed))
-        .select(F.col(id_col), F.col(vec_col), best.alias("__best"))
-        .select(
-            id_col,
-            vec_col,
-            F.col("__best.cluster_id").alias("cluster_id"),
-            F.col("__best.dist_micro2").alias("dist_micro2"),
-        )
-    )
-
-
 def _assign_best_expr(cent_rows, vec_col: str) -> Column:
-    """argmin struct over a CONSTANT-FOLDED literal centroid array (r6):
-    the centroid table is model state (k x dim BIGINTs, <= 2 MiB at the
-    k=4096 ceiling), so shipping it as a literal — folded ONCE by
-    ConstantFolding, never re-evaluated per row — replaces the broadcast
-    crossJoin of a packed row without changing a single distance or
-    tie-break (same struct types: long dist, int cluster_id)."""
-    cands = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cluster_id"),
-                F.array(*[F.lit(int(x)) for x in c])
-                .cast("array<bigint>")
-                .alias("centroid"),
-            )
+    """argmin struct over a CONSTANT-FOLDED literal centroid array: the
+    centroid table is model state (k x dim BIGINTs, <= 2 MiB at the
+    k=4096 ceiling), folded ONCE by ConstantFolding and never
+    re-evaluated per row — the assignment needs no join and no shuffle of
+    the corpus side. Ties go to the smallest cluster_id by struct
+    ordering (long dist, then int cluster_id).
+
+    The centroid array is ONE SQL-text expression, `array(named_struct(
+    'cluster_id', 0, 'centroid', CAST(array(1L, ...) AS array<bigint>)),
+    ...)`, handed to the JVM in a single py4j call, so building it costs
+    the same handful of calls at any k x dim; a Column per number would
+    cost ~36 s of py4j calls per Lloyd iteration at k=4096, dim=64."""
+    cands = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('cluster_id', {int(cid)}, 'centroid', CAST(array("
+            + ", ".join(f"{int(x)}L" for x in c)
+            + ") AS array<bigint>))"
             for cid, c in cent_rows
-        ]
+        )
+        + ")"
     )
     return F.array_min(
         F.transform(

@@ -152,19 +152,20 @@ def minhash_signatures_agg(
     row. Exploding first makes the shingle work happen exactly once, and the
     k md5s per shingle are the irreducible hash-family cost.
 
+    The k salted mins and the signature array are SQL text over the
+    operator's own internal columns (`min(md5(concat('salt{i}|', __s)))
+    AS __m{i}`), parsed in the JVM: building costs one py4j call per
+    aggregate, not one per expression node.
+
     Returns (id_col, __sig: array<string> of length k).
     """
     sh = df.select(
         F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("__s")
     )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"salt{i}|"), F.col("__s")))).alias(f"__m{i}")
-        for i in range(k)
-    ]
+    aggs = [F.expr(f"min(md5(concat('salt{i}|', __s))) AS __m{i}") for i in range(k)]
     sig = sh.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        id_col, F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("__sig")
-    )
+    mins = ", ".join(f"__m{i}" for i in range(k))
+    return sig.select(id_col, F.expr(f"array({mins}) AS __sig"))
 
 
 def minhash_lsh_pairs(
@@ -365,6 +366,11 @@ def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFra
     md5(salt|shingle): reproducible in any SQL engine for the correctness
     oracle (DuckDB: ('0x' || substr(md5(t),1,15))::BIGINT).
 
+    The 60 bit-count aggregates and the 60-term majority fold are SQL
+    text over the operator's internal columns (`__h`, `__b{b}`, `__n`),
+    parsed in the JVM: building costs one py4j call per aggregate and one
+    for the fold, not one per expression node.
+
     Returns (id_col, __sh: long).
     """
     toks = df.select(
@@ -379,18 +385,17 @@ def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFra
         .alias("__h"),
     )
     aggs = [
-        F.sum(
-            F.shiftrightunsigned(F.col("__h"), b).bitwiseAND(F.lit(1))
-        ).alias(f"__b{b}")
+        F.expr(f"sum(shiftrightunsigned(__h, {b}) & 1) AS __b{b}")
         for b in range(SIMHASH_BITS)
     ]
-    aggs.append(F.count(F.lit(1)).alias("__n"))
+    aggs.append(F.expr("count(1) AS __n"))
     g = toks.groupBy(id_col).agg(*aggs)
-    acc = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        bit = (F.col(f"__b{b}") * 2 >= F.col("__n")).cast("long")
-        acc = acc + bit * F.lit(1 << b)
-    return g.select(id_col, acc.alias("__sh"))
+    # left-deep: ((0 + bit0 * 1) + bit1 * 2) + ... , bit b weighted 2^b
+    fold = "CAST(0 AS BIGINT)" + "".join(
+        f" + CAST(__b{b} * 2 >= __n AS BIGINT) * {1 << b}"
+        for b in range(SIMHASH_BITS)
+    )
+    return g.select(id_col, F.expr(f"{fold} AS __sh"))
 
 
 def simhash_dedup_pairs(

@@ -171,16 +171,3 @@ def merge_records(
     else:
         raise TypeError(f"Unknown spec type {type(spec).__name__}")
     return parsed.groupBy(record_col).agg(*aggs)
-
-
-def merge_simple_records(
-    extracted: DataFrame,
-    spec: SchemaSpec,
-    record_col: str,
-    pos_col: str,
-    json_col: str = "delm_extracted_data_json",
-) -> DataFrame:
-    """Back-compat alias: the simple-schema case of merge_records (formerly
-    one vote join per scalar variable — now a single aggregation)."""
-    assert isinstance(spec, SimpleSpec)
-    return merge_records(extracted, spec, record_col, pos_col, json_col)

@@ -210,13 +210,10 @@ def embedding_near_dup_pairs(
     sig = embeddings.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).withColumn("__bkt", lsh_bucket(F.col("__v"), dim, n_planes))
-    masks = _probe_masks(n_planes, probe_radius)
     probed = sig.select(
         "__id",
         "__v",
-        F.explode(
-            F.array(*[F.col("__bkt").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("__pbkt"),
+        F.explode(_probe_buckets("__bkt", n_planes, probe_radius)).alias("__pbkt"),
     )
     a, b = probed.alias("a"), sig.alias("b")
     # a's probe set meets b's home bucket exactly once per pair within
@@ -252,10 +249,18 @@ def lsh_bucket(
 ) -> Column:
     """Sign-LSH bucket id: n_planes-bit signature of hyperplane sign bits.
     `plane_offset` selects an independent plane family — band b of a
-    banded scheme uses planes [b*n_planes, (b+1)*n_planes)."""
+    banded scheme uses planes [b*n_planes, (b+1)*n_planes).
+
+    Each plane is ONE SQL-text array literal (`array(1.0D, -1.0D, ...)`,
+    parsed in the JVM), so building the expression costs O(n_planes) py4j
+    calls, not O(n_planes x dim). The `D` suffix keeps the plane
+    array<double>: a bare `1.0` is a DECIMAL in Spark SQL. One n_planes x
+    dim matrix literal indexed per plane would build faster still, but
+    analyzes about twice as slowly."""
     acc = F.lit(0).cast("long")
     for p in range(n_planes):
-        plane = F.array(*[F.lit(s) for s in hyperplane_signs(dim, plane_offset + p)])
+        signs = hyperplane_signs(dim, plane_offset + p)
+        plane = F.expr("array(" + ", ".join(f"{s!r}D" for s in signs) + ")")
         bit = (dot(vec, plane) >= 0).cast("long")
         acc = acc + bit * F.lit(1 << p)
     return acc
@@ -264,6 +269,14 @@ def lsh_bucket(
 def _probe_masks(n_planes: int, radius: int) -> list:
     """All XOR masks with popcount <= radius — the multi-probe bucket set."""
     return [m for m in range(1 << n_planes) if bin(m).count("1") <= radius]
+
+
+def _probe_buckets(bucket_col: str, n_planes: int, radius: int) -> Column:
+    """The multi-probe bucket array `array(b ^ m0, b ^ m1, ...)` of an
+    internal bucket column, as ONE SQL-text expression: one py4j call,
+    not three per mask."""
+    xors = ", ".join(f"{bucket_col} ^ {m}" for m in _probe_masks(n_planes, radius))
+    return F.expr(f"array({xors})")
 
 
 def lsh_topk(
@@ -298,13 +311,9 @@ def lsh_topk(
     q_sig = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn("__qbkt", lsh_bucket(F.col("__qv"), dim, n_planes))
-    masks = _probe_masks(n_planes, probe_radius)
     q_b = F.broadcast(
         q_sig.withColumn(
-            "__bkt",
-            F.explode(
-                F.array(*[F.col("__qbkt").bitwiseXOR(F.lit(m)) for m in masks])
-            ),
+            "__bkt", F.explode(_probe_buckets("__qbkt", n_planes, probe_radius))
         )
     )
     # buckets partition the space, so each (query, embedding) pair matches

@@ -75,6 +75,16 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 otherwise captures the Python call site (a stack walk,
+        # getActiveSession and several py4j round-trips) on EVERY Column
+        # operation, so building a DataFrame costs a multiple of its
+        # expression-node count in py4j calls — about half the build time
+        # of the simhash builder. Cost: analysis errors no longer carry the
+        # Python file:line of the failing expression in their DataFrame
+        # context (the JVM message and the Python traceback are
+        # unchanged). PySpark reads it once per process, at the first
+        # Column operation after a session exists.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # GC / JVM tuning seam (local mode = driver JVM is the executor): on a
     # real cluster these land in spark.executor.extraJavaOptions instead

@@ -1,5 +1,7 @@
 import os
 import sys
+import threading
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -73,6 +75,31 @@ def ref_delm():
         "splitting": ref_split,
         "scoring": ref_score,
     }
+
+
+@contextmanager
+def py4j_calls():
+    """Counts the py4j round-trips (`send_command`) this thread makes in
+    the block; yields a one-element list holding the running count.
+    py4j's finalizer thread sends the deletions of garbage-collected
+    JavaObjects asynchronously, at times unrelated to the block, so calls
+    from other threads are not counted."""
+    from py4j.java_gateway import GatewayClient
+
+    me = threading.get_ident()
+    count = [0]
+    orig = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return orig(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        yield count
+    finally:
+        GatewayClient.send_command = orig
 
 
 _SESSION: dict = {}

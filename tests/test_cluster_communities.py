@@ -1,18 +1,19 @@
 """Closed-form tests for exact-integer k-means (operators/cluster.py) and
 synchronous LPA communities (kg/communities.py). Oracle parity at sf0.001
 lives in test_oracle_parity.py; these pin hand-computed values and the
-plan shape (zero-shuffle assignment, no Python stages)."""
+driver-side construction cost of the assignment expression."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from delm_spark.kg.communities import label_propagation
 from delm_spark.operators.cluster import (
-    kmeans_assign,
+    _assign_best_expr,
     kmeans_cluster,
     kmeans_fit,
     vec_micro,
 )
+from tests.conftest import py4j_calls
 
 # ------------------------------------------------------------------ k-means
 
@@ -59,23 +60,31 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     assert all(r.centroid is not None for r in cent)
 
 
-def test_kmeans_assign_plan_no_shuffle_no_python(spark):
-    """The corpus-side assignment must be a broadcast nested-loop of ONE
-    packed row + a native fold: no Exchange on the vector side, no
-    Python stage anywhere."""
-    rows = [(i, [float(i), 0.0]) for i in range(20)]
-    emb = _emb(spark, rows)
-    cent = kmeans_fit(emb, k=2, iters=1)
-    vm = emb.select("vec_id", vec_micro(F.col("embedding")).alias("vm"))
-    plan = (
-        kmeans_assign(vm, cent)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in plan
-    # everything upstream of the BNLJ on the streamed (vector) side is
-    # scan+project — no exchange before the join on that side
-    streamed = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "Exchange" not in streamed
+def test_assign_best_expr_py4j_calls_independent_of_k(spark):
+    """The centroid literal is ONE SQL-text expression: constructing the
+    assignment costs the same few py4j calls at k=4 and at the documented
+    k=4096, dim=64 ceiling (one `F.lit` per number made ~1.3M calls,
+    ~36 s per Lloyd iteration). It still assigns exactly: negative
+    micro-units parse, and an equidistant point goes to the smaller
+    cluster_id."""
+    def cents(k, dim):
+        return [(c, [(c * 7919 + j) % 2_000_001 - 1_000_000 for j in range(dim)])
+                for c in range(k)]
+
+    _assign_best_expr(cents(4, 64), "vm")  # warm
+    calls = {}
+    for k in (4, 4096):
+        c = cents(k, 64)
+        with py4j_calls() as n:
+            _assign_best_expr(c, "vm")
+        calls[k] = n[0]
+    assert calls[4096] == calls[4] <= 200, calls
+
+    vm = spark.createDataFrame([(0, [0, 0]), (1, [-9, 1])], "id int, vm array<bigint>")
+    best = _assign_best_expr([(3, [-2, 0]), (1, [2, 0]), (2, [-10, 0])], "vm")
+    got = {r["id"]: (r["b"]["cluster_id"], r["b"]["dist_micro2"])
+           for r in vm.select("id", best.alias("b")).collect()}
+    assert got == {0: (1, 4), 1: (2, 2)}
 
 
 def test_kmeans_micro_quantization_floor(spark):

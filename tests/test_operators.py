@@ -3,12 +3,21 @@ distributed-vs-pure merge equivalence and dedup/similarity sanity."""
 
 from __future__ import annotations
 
+import hashlib
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from delm_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs
+from delm_spark.operators.dedup import (
+    SIMHASH_BITS,
+    exact_dedup,
+    minhash_lsh_pairs,
+    minhash_signatures_agg,
+    ngram_jaccard_pairs,
+    simhash_signatures_agg,
+)
 from delm_spark.operators.explode import explode_json_results
 from delm_spark.operators.merge import majority_vote_df, merge_nested_records
 from delm_spark.operators.scoring import keyword_score_expr, validate_score_filter
@@ -191,6 +200,92 @@ def test_minhash_and_jaccard_find_near_dups(spark):
                df, "text", "id", threshold=0.5, allow_all_pairs=True
            ).collect()}
     assert (1, 2) in jac and jac[(1, 2)] > 0.5
+
+
+def _norm_words(text: str) -> list:
+    """Python twin of `split(normalize_text(text), ' ')` for ASCII text."""
+    return re.sub(r"\s+", " ", text).strip(" ").lower().split(" ")
+
+
+def _token_hash(tok: str) -> int:
+    return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+
+
+def _simhash_ref(text: str) -> int:
+    hs = [_token_hash(t) for t in set(_norm_words(text))]
+    return sum(
+        1 << b
+        for b in range(SIMHASH_BITS)
+        if 2 * sum((h >> b) & 1 for h in hs) >= len(hs)
+    )
+
+
+def test_simhash_signatures_agg_matches_md5_reference(spark):
+    """The SQL-text bit votes and fold equal a pure-Python md5 SimHash:
+    an exact-half vote (2*sum == n) sets the bit, bit 59 (the top bit of
+    the 15-hex-digit token hash) lands in the signature, an empty text
+    hashes its one empty token, and a null text yields no row."""
+    top = next(f"tok{i}" for i in range(100) if _token_hash(f"tok{i}") >> 59)
+    texts = {
+        1: "alpha beta",
+        2: top,
+        3: f"The  quick\tBROWN fox {top} the quick brown dog",
+        4: "",
+        5: None,
+        6: "one two three four five six seven eight nine ten eleven",
+    }
+    df = spark.createDataFrame(list(texts.items()), "id int, text string")
+    got = {
+        r["id"]: r["__sh"]
+        for r in simhash_signatures_agg(df, "text", "id").collect()
+    }
+    want = {i: _simhash_ref(t) for i, t in texts.items() if t is not None}
+    assert got == want
+    # the cases are really exercised: "alpha" and "beta" differ in some bit
+    h = [_token_hash(t) for t in ("alpha", "beta")]
+    assert any((h[0] >> b & 1) != (h[1] >> b & 1) for b in range(SIMHASH_BITS))
+    assert got[2] >> 59 == 1 and got[2] == _token_hash(top)
+
+
+def _shingles_ref(text, n: int = 3) -> list:
+    if text is None:
+        return [None]
+    w = _norm_words(text)
+    if len(w) < n:
+        return [" ".join(w)]
+    return sorted({" ".join(w[i : i + n]) for i in range(len(w) - n + 1)})
+
+
+def test_minhash_signatures_agg_matches_hashlib_mins(spark):
+    """k=16 SQL-text salted mins equal hashlib's: min over the shingle
+    set of md5('salt{i}|' + shingle) hex digests; a text shorter than n
+    words is its own single shingle, a null text a null signature."""
+    k = 16
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "The quick  brown fox jumps over the lazy DOG again",
+        3: "two words",
+        4: "",
+        5: None,
+        6: "a a a a a a",
+    }
+    df = spark.createDataFrame(list(texts.items()), "id int, text string")
+    got = {
+        r["id"]: list(r["__sig"])
+        for r in minhash_signatures_agg(df, "text", "id", k=k).collect()
+    }
+    want = {}
+    for i, t in texts.items():
+        sh = _shingles_ref(t)
+        want[i] = (
+            [None] * k
+            if sh == [None]
+            else [
+                min(hashlib.md5(f"salt{j}|{s}".encode()).hexdigest() for s in sh)
+                for j in range(k)
+            ]
+        )
+    assert got == want
 
 
 def test_brute_force_topk_self_first(spark):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tests.conftest import TESTDATA
+from tests.conftest import TESTDATA, py4j_calls
 
 SF_DIR = str(TESTDATA / "sf0.001")
 
@@ -487,3 +487,30 @@ def test_rdfs_closure_corpus_joins_all_broadcast(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+#: py4j round-trips allowed for ONE warm build (no action on the result) of
+#: each query: about 1.5x the count the SQL-text builders make (814 / 605 /
+#: 1,383 / 1,735 on the sf0.001 fixtures). Building every hyperplane sign,
+#: SimHash bit vote, MinHash salt and centroid number as its own Column
+#: made 2,537 / 8,781 / 7,873 / 13,689. kmeans' build includes its Lloyd
+#: iterations (one collect each).
+PY4J_BUILD_BUDGET = {
+    "near_dup_pipeline_docs": 1200,
+    "simhash_pairs_docs": 900,
+    "lsh_topk_embeddings": 2000,
+    "kmeans_clusters_embeddings": 2600,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PY4J_BUILD_BUDGET))
+def test_builder_py4j_budget(spark, name):
+    """Driver-side build cost guard: the near-dup/ANN/k-means builders
+    hand their large repetitive expressions to the JVM as SQL text, and
+    the session skips PySpark's per-Column call-site capture. Either
+    regressing multiplies the py4j calls per build by 3-20x."""
+    build = entry_mod.queries()[name]
+    build(spark, SF_DIR)  # warm: first-use class loading is not the builder's
+    with py4j_calls() as n:
+        build(spark, SF_DIR)
+    assert n[0] <= PY4J_BUILD_BUDGET[name], (name, n[0])

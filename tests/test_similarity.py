@@ -3,6 +3,8 @@ exact brute force, and the candidate-join plan shape."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -242,3 +244,57 @@ def test_pq_train_refines_and_stays_broadcast_sized(spark):
     a = sorted(map(tuple, trained.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b
+
+
+def _lsh_bucket_longhand(vec, dim, n_planes, plane_offset):
+    """Reference: every hyperplane sign its own `F.lit` Column — the
+    construction `lsh_bucket` replaced with one SQL-text array per plane."""
+    from delm_spark.operators.similarity import dot, hyperplane_signs
+
+    acc = F.lit(0).cast("long")
+    for p in range(n_planes):
+        plane = F.array(*[F.lit(s) for s in hyperplane_signs(dim, plane_offset + p)])
+        bit = (dot(vec, plane) >= 0).cast("long")
+        acc = acc + bit * F.lit(1 << p)
+    return acc
+
+
+def _optimized(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#N", plan)
+    return re.sub(r"lambda (\w+?)_\d+", r"lambda \1_N", plan)
+
+
+@pytest.mark.parametrize("plane_offset", [0, 8])
+def test_lsh_bucket_matches_longhand_reference(spark, plane_offset):
+    """The SQL-text hyperplanes give the same optimized plan (modulo
+    expression ids) and the same bucket per row as per-sign `F.lit`s, over
+    1,500 seeded vectors plus the edge rows: zero vector (every dot is 0,
+    every bit set), null vector and null element (null bucket), and -0.0
+    components."""
+    from delm_spark.operators.similarity import lsh_bucket
+
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(1500)]
+    neg_zero = [float(x) for x in rng.normal(size=DIM)]
+    neg_zero[::3] = [-0.0] * len(neg_zero[::3])
+    with_null = [float(x) for x in rng.normal(size=DIM)]
+    with_null[5] = None
+    rows += [
+        (1500, [0.0] * DIM),
+        (1501, None),
+        (1502, with_null),
+        (1503, [-0.0] * DIM),
+        (1504, neg_zero),
+    ]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    got = df.select("id", lsh_bucket(F.col("v"), DIM, 8, plane_offset).alias("b"))
+    ref = df.select(
+        "id", _lsh_bucket_longhand(F.col("v"), DIM, 8, plane_offset).alias("b")
+    )
+    assert _optimized(got) == _optimized(ref)
+    g = dict(got.collect())
+    assert g == dict(ref.collect())
+    assert g[1500] == g[1503] == 255
+    assert g[1501] is None and g[1502] is None
+    assert len(set(g.values())) > 100  # the planes actually split the space
