@@ -8,20 +8,22 @@ list), so the join is shuffle-free regardless of triple volume.
 
 Beyond the exact lookup, the north star names *dictionary + embedding
 blocking* for candidate detection: `surface_embedding` (hashing-trick
-character-trigram features, fully native and oracle-reproducible) +
-`embedding_link_candidates` (sign-LSH bucket blocking + cosine scoring)
-recover surface variants exact matching misses — typos, truncations,
-re-orderings. The candidate search is one Arrow pass over the distinct
-mention surfaces against a dictionary bucket index built once on the
-driver and broadcast, so the dictionary must be broadcast-sized — the
-same requirement `link_mentions` already places on it.
+character-trigram features, fully native and oracle-reproducible) and
+one numpy kernel, `_best_links` (sign-LSH bucket blocking + cosine
+against a dictionary index broadcast from the driver, so the dictionary
+must be broadcast-sized, as for `link_mentions`), recover the typos,
+truncations and re-orderings exact matching misses: over distinct
+surfaces in `embedding_link_candidates`, over the `mention:` ids of
+linked triples in `resolve_mention_residue`.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Iterator, Tuple
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -134,25 +136,20 @@ def _band_buckets(emb: np.ndarray, planes: np.ndarray, n_planes: int) -> np.ndar
 def _dictionary_index(
     dictionary: DataFrame, dim: int, n_planes: int, probe_radius: int, bands: int
 ) -> dict:
-    """The dictionary side of `embedding_link_candidates`, built on the
-    driver from ONE collect: rows are the distinct surfaces (smallest
-    canonical id per surface) sorted by canonical_id, so a lower row
-    index IS the smaller-canonical-id tie-break. Holds the trigram
+    """The dictionary side of `_best_links`, built on the driver from ONE
+    collect (no shuffle: the smallest canonical id per surface is taken
+    here): rows are the distinct surfaces sorted by canonical_id, so a
+    lower row index IS the smaller-canonical-id tie-break. Holds the trigram
     counts and their norms, the hyperplanes of every band, and per band
     a map bucket -> sorted rows whose own bucket lies within Hamming
     distance `probe_radius` (the multi-probe set). Entries with a null
     surface or canonical id are left out: they can link nothing."""
     from delm_spark.operators.similarity import _probe_masks, hyperplane_signs
 
-    rows = sorted(
-        (r["canonical_id"], r["surface"])
-        for r in dictionary.filter(
-            F.col("surface").isNotNull() & F.col("canonical_id").isNotNull()
-        )
-        .groupBy("surface")
-        .agg(F.min("canonical_id").alias("canonical_id"))
-        .collect()
-    )
+    smallest: dict = {}
+    for surface, cid in dictionary.select("surface", "canonical_id").dropna().collect():
+        smallest[surface] = min(cid, smallest.get(surface, cid))
+    rows = sorted((c, s) for s, c in smallest.items())
     emb = _trigram_counts([s for _, s in rows], dim, {})
     planes = np.array([hyperplane_signs(dim, p) for p in range(bands * n_planes)])
     masks = np.array(_probe_masks(n_planes, probe_radius))
@@ -170,6 +167,41 @@ def _dictionary_index(
         "planes": planes,
         "probes": probes,
     }
+
+
+def _best_links(surfaces, ix: dict, dim: int, n_planes: int, cache: dict):
+    """The scoring kernel: (best, row) arrays giving each surface's (none
+    may be null) best cosine and dictionary row under the index `ix` (ties
+    break to the smaller row, i.e. canonical_id; row -1 when no entry
+    shares a probed bucket). Groups the surfaces by bucket per band and
+    scores each group against that bucket's probe rows in blocked matmuls
+    of at most `_MENTION_BLOCK` surfaces (never a dense surface x
+    dictionary matrix). Trigram embeddings are integer-valued, so dots
+    and squared norms are exact in float64 under any summation order and
+    every score equals the native cosine bit for bit."""
+    emb, norms = ix["emb"], ix["norms"]
+    m = _trigram_counts(surfaces, dim, cache)
+    mn = np.sqrt(np.einsum("ij,ij->i", m, m))
+    best = np.full(len(surfaces), -np.inf)
+    row = np.full(len(surfaces), -1)
+    for home, probes in zip(_band_buckets(m, ix["planes"], n_planes).T, ix["probes"]):
+        order = np.argsort(home, kind="stable")
+        keys, starts = np.unique(home[order], return_index=True)
+        for key, members in zip(keys.tolist(), np.split(order, starts[1:])):
+            cand = probes.get(key)
+            if cand is None:
+                continue
+            d, dn = emb[cand], norms[cand]
+            for lo in range(0, len(members), _MENTION_BLOCK):
+                mi = members[lo : lo + _MENTION_BLOCK]
+                s = (m[mi] @ d.T) / np.maximum(np.outer(mn[mi], dn), 1e-12)
+                mx = s.max(axis=1)
+                # cand is sorted, so the first maximum is the smallest
+                # row; bands merge on (score desc, row asc)
+                r = cand[np.argmax(s == mx[:, None], axis=1)]
+                win = (mx > best[mi]) | ((mx == best[mi]) & (r < row[mi]))
+                best[mi[win]], row[mi[win]] = mx[win], r[win]
+    return best, row
 
 
 def embedding_link_candidates(
@@ -200,13 +232,7 @@ def embedding_link_candidates(
     One pass: the dictionary bucket index (`_dictionary_index`) is built
     on the driver and broadcast — the dictionary must be broadcast-sized,
     as `link_mentions` already requires — and ONE mapInPandas stage over
-    the distinct mention surfaces embeds and buckets each Arrow batch,
-    groups its mentions by bucket per band, and scores each group against
-    that bucket's probe rows with blocked matmuls (at most
-    `_MENTION_BLOCK` mentions per block; never a dense mention x
-    dictionary matrix). Trigram embeddings are integer-valued, so dots
-    and squared norms are exact in float64 under any summation order and
-    every score equals the native cosine bit for bit.
+    the distinct mention surfaces runs `_best_links` on each Arrow batch.
 
     Returns (surface, canonical_id, link_score): the best entity per
     mention with cosine >= threshold (ties break to the smallest
@@ -215,8 +241,6 @@ def embedding_link_candidates(
     dictionary hits should be resolved by `link_mentions` first; this
     recovers the near-miss tail.
     """
-    import pandas as pd
-
     spark = mentions.sparkSession
     bc = spark.sparkContext.broadcast(
         _dictionary_index(dictionary, dim, n_planes, probe_radius, bands)
@@ -224,37 +248,16 @@ def embedding_link_candidates(
 
     def score(batches):
         ix = bc.value
-        emb, norms, cids = ix["emb"], ix["norms"], ix["cids"]
         cache: dict = {}
         for pdf in batches:
             surf = pdf["surface"].to_numpy(dtype=object)
             surf = surf[[s is not None for s in surf]]
-            m = _trigram_counts(surf, dim, cache)
-            mn = np.sqrt(np.einsum("ij,ij->i", m, m))
-            best = np.full(len(surf), -np.inf)
-            row = np.full(len(surf), -1)
-            for home, probes in zip(_band_buckets(m, ix["planes"], n_planes).T, ix["probes"]):
-                order = np.argsort(home, kind="stable")
-                keys, starts = np.unique(home[order], return_index=True)
-                for key, members in zip(keys.tolist(), np.split(order, starts[1:])):
-                    cand = probes.get(key)
-                    if cand is None:
-                        continue
-                    d, dn = emb[cand], norms[cand]
-                    for lo in range(0, len(members), _MENTION_BLOCK):
-                        mi = members[lo : lo + _MENTION_BLOCK]
-                        s = (m[mi] @ d.T) / np.maximum(np.outer(mn[mi], dn), 1e-12)
-                        mx = s.max(axis=1)
-                        # cand is sorted, so the first maximum is the
-                        # smallest row; bands merge on (score desc, row asc)
-                        r = cand[np.argmax(s == mx[:, None], axis=1)]
-                        win = (mx > best[mi]) | ((mx == best[mi]) & (r < row[mi]))
-                        best[mi[win]], row[mi[win]] = mx[win], r[win]
+            best, row = _best_links(surf, ix, dim, n_planes, cache)
             keep = (row >= 0) & (best >= threshold)
             yield pd.DataFrame(
                 {
                     "surface": surf[keep],
-                    "canonical_id": cids[row[keep]],
+                    "canonical_id": ix["cids"][row[keep]],
                     "link_score": best[keep],
                 }
             )
@@ -279,58 +282,47 @@ def resolve_mention_residue(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Second linking pass (the north star's 'dictionary + EMBEDDING
-    blocking'): rewrite `mention:<norm>` ids that exact dictionary lookup
-    left behind through `embedding_link_candidates`, so typo'd / truncated
-    surfaces resolve to canonical entities.
+    blocking'): rewrite each `mention:<norm>` id that exact lookup left in
+    `link_mentions` output to the canonical id `_best_links` finds for
+    `<norm>` at cosine >= threshold.
 
-    Input is `link_mentions` output (subj_id / obj_id present). The
-    candidate search is `embedding_link_candidates`' one Arrow pass over
-    the DISTINCT unlinked surfaces — bounded by the corpus's unique
-    mention vocabulary, not its triple count — against the broadcast
-    dictionary index, so the dictionary must be broadcast-sized, as for
-    `link_mentions`. The rewrite is two left equi-joins on the mention id
-    (AQE broadcasts the resolved map when it is small; otherwise it stays
-    a plain shuffle equi-join, never a crossJoin)."""
-    mention_ids = (
-        # ONE scan of the (checkpointed) triples frame instead of a
-        # subj/obj union of two scans (r6) — same multiset, same distinct
-        triples.select(
-            F.explode(F.array(F.col("subj_id"), F.col("obj_id"))).alias("__mid")
-        )
-        .filter(F.col("__mid").startswith("mention:"))
-        .dropDuplicates(["__mid"])
-        # strip the 'mention:' prefix (8 chars) — the residue surface is
-        # already normalize_mention()-normalized (idempotent downstream)
-        .withColumn("surface", F.expr("substring(__mid, 9)"))
-    )
-    # residue-free short circuit: with zero unlinked mentions the rewrite
-    # is the identity, but the candidate search would still collect and
-    # broadcast the dictionary index and run its Arrow stage. One cheap
-    # existence probe over the already-materialized triples frame skips
-    # all of it; corpora with residue pay the probe (one short scan).
-    if mention_ids.isEmpty():
-        return triples
-    cands = embedding_link_candidates(
-        mention_ids,
-        dictionary,
-        dim=dim,
-        n_planes=n_planes,
-        probe_radius=probe_radius,
-        threshold=threshold,
-    )
-    remap = mention_ids.join(cands, "surface").select("__mid", "canonical_id")
-    r_s = remap.select(
-        F.col("__mid").alias("__ms"), F.col("canonical_id").alias("__cs")
-    )
-    r_o = remap.select(
-        F.col("__mid").alias("__mo"), F.col("canonical_id").alias("__co")
-    )
-    return (
-        triples.join(r_s, triples["subj_id"] == r_s["__ms"], "left")
-        .join(r_o, triples["obj_id"] == r_o["__mo"], "left")
-        .withColumn("subj_id", F.coalesce(F.col("__cs"), F.col("subj_id")))
-        .withColumn("obj_id", F.coalesce(F.col("__co"), F.col("obj_id")))
-        .drop("__ms", "__cs", "__mo", "__co")
+    ONE projection over `triples`, narrowed without a shuffle to the
+    default parallelism so its Python tasks run in one wave: one iterator
+    pandas UDF takes the residue surfaces of subj_id and obj_id (null for
+    exact hits and null ids), scores each Arrow batch's distinct surfaces
+    that its task has not seen yet, and returns both ids as one struct;
+    `coalesce` keeps the ids it did not resolve. No join, and nothing
+    upstream needs materializing."""
+    sc = triples.sparkSession.sparkContext
+    bc = sc.broadcast(_dictionary_index(dictionary, dim, n_planes, probe_radius, 1))
+
+    def resolve(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
+        ix = bc.value
+        cache: dict = {}
+        #: surface -> canonical id or None, memoized for the whole task
+        links: dict = {}
+        for subj, obj in batches:
+            uniq = pd.unique(pd.concat([subj, obj]).dropna())
+            new = [s for s in uniq if s not in links]
+            if new:
+                best, row = _best_links(new, ix, dim, n_planes, cache)
+                hit = (row >= 0) & (best >= threshold)
+                ids = np.full(len(new), None, dtype=object)
+                ids[hit] = ix["cids"][row[hit]]
+                links.update(zip(new, ids.tolist()))
+            # Series.map(dict) costs len(dict): map via this batch's part
+            batch = {s: links[s] for s in uniq}
+            yield pd.DataFrame({"subj_id": subj.map(batch), "obj_id": obj.map(batch)})
+
+    def residue(c: str) -> Column:
+        # the id minus its 'mention:' prefix: already normalize_mention()ed
+        return F.when(F.col(c).startswith("mention:"), F.expr(f"substring({c}, 9)"))
+
+    udf = F.pandas_udf(resolve, "subj_id string, obj_id string")
+    kept = {c: F.coalesce(F.col(f"__r.{c}"), F.col(c)).alias(c) for c in ("subj_id", "obj_id")}
+    narrow = triples.coalesce(sc.defaultParallelism)
+    return narrow.withColumn("__r", udf(residue("subj_id"), residue("obj_id"))).select(
+        *[kept.get(c, F.col(c)) for c in triples.columns]
     )
 
 

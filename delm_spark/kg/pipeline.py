@@ -15,6 +15,7 @@ idempotent by construction.
 
 from __future__ import annotations
 
+import json
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -51,12 +52,21 @@ class StageRunner:
     re-reads it. Without a checkpoint dir it is a passthrough (pure lazy
     plan; Catalyst fuses stages).
 
+    A committed stage directory holds the parquet files, `_SUCCESS` and
+    two `_`-prefixed sidecars (invisible to the parquet reader), each
+    created once after the write: `_delm_config_fingerprint` (below) and
+    `_delm_stage.json`, the observed metrics and the read schema
+    (partition columns last). Reads pass that schema, so they run no
+    schema-inference job and "007" partition values stay strings. A stage
+    committed without `_delm_stage.json` resumes with an inferred schema
+    and the metrics the earlier layout's shared `_delm_state.json` holds
+    for it (read, never rewritten). Iceberg stages read via the catalog.
+
     `fingerprint` guards resume against config drift, like the reference's
     verify_resume_config (experiment_manager.py): each committed stage
-    stores the config fingerprint it was built with (a `_`-prefixed sidecar
-    file, invisible to the parquet reader); resuming with a different
-    fingerprint refuses by default (`on_config_change="error"`) or rebuilds
-    the stale stage (`"rebuild"`).
+    stores the config fingerprint it was built with; resuming with a
+    different fingerprint refuses by default (`on_config_change="error"`)
+    or rebuilds the stale stage (`"rebuild"`).
     """
 
     def __init__(
@@ -75,8 +85,7 @@ class StageRunner:
         # stage-table format: 'parquet' (default in-sandbox) or 'iceberg'
         # (auto-selected when the runtime jar + a SparkCatalog are present;
         # the north star names Iceberg tables — delm_spark/io/iceberg.py).
-        # Sidecars (fingerprint, _delm_state.json) stay files under
-        # checkpoint_dir in both modes.
+        # Sidecars stay files under checkpoint_dir in both modes.
         if storage is None:
             from delm_spark.io.iceberg import configured_catalog, iceberg_available
 
@@ -94,24 +103,10 @@ class StageRunner:
         #: per-stage named metrics (rows, errors, token sums — the
         #: reference's batch-progress counters + cost state,
         #: extraction_manager.py:130-141, experiment_manager.py:487-513),
-        #: collected via DataFrame.observe at write time and persisted to
-        #: _delm_state.json so they survive restarts (resumed stages
+        #: collected via DataFrame.observe at write time and stored in the
+        #: stage's sidecar, so they survive restarts (resumed stages
         #: report the stored values).
         self.metrics: dict[str, dict] = {}
-        if self.dir is not None and self._state_path().exists():
-            import json as _json
-
-            self.metrics = _json.loads(self._state_path().read_text())
-
-    def _state_path(self) -> Path:
-        assert self.dir is not None
-        return self.dir / "_delm_state.json"
-
-    def _save_state(self) -> None:
-        import json as _json
-
-        self.dir.mkdir(parents=True, exist_ok=True)
-        self._state_path().write_text(_json.dumps(self.metrics, indent=1, sort_keys=True))
 
     def _path(self, name: str) -> Path:
         assert self.dir is not None
@@ -143,11 +138,21 @@ class StageRunner:
             w.parquet(str(self._path(name)))
 
     def _read_stage(self, name: str) -> DataFrame:
+        side_path = self._path(name) / "_delm_stage.json"
+        side = json.loads(side_path.read_text()) if side_path.exists() else None
+        legacy = self.dir / "_delm_state.json"
+        if side is not None:
+            self.metrics[name] = side["metrics"]
+        elif legacy.exists() and name in (old := json.loads(legacy.read_text())):
+            self.metrics[name] = old[name]
         if self.storage == "iceberg":
             from delm_spark.io import iceberg
 
             return iceberg.read_stage(self.spark, self._ident(name))
-        return self.spark.read.parquet(str(self._path(name)))
+        reader = self.spark.read
+        if side is not None:
+            reader = reader.schema(StructType.fromJson(side["schema"]))
+        return reader.parquet(str(self._path(name)))
 
     def is_committed(self, name: str) -> bool:
         if self.dir is None:
@@ -203,10 +208,10 @@ class StageRunner:
                     "semantics). Pass on_config_change='rebuild' or use a "
                     "fresh checkpoint_dir."
                 )
-        if self.storage == "parquet" and p.exists():
-            # partial write from a killed run — rebuild atomically (the
-            # iceberg path needs no repair: an uncommitted snapshot is
-            # invisible by construction)
+        if p.exists():
+            # partial write from a killed run — rebuild atomically (an
+            # uncommitted iceberg snapshot is invisible by construction;
+            # its directory holds only sidecars of a table that is gone)
             shutil.rmtree(p)
         df = build()
         if PART_ID_COL not in df.columns:
@@ -230,10 +235,18 @@ class StageRunner:
         df = df.observe(obs, *exprs)
         self._write_stage(df, name, partition_by=partition_by, sort_by=sort_by)
         self.metrics[name] = {k: int(v) for k, v in obs.get.items()}
-        self._save_state()
+        parts = list(partition_by or ())
+        read_schema = StructType(
+            [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
+        )
+        # each sidecar is a new file (the directory was cleared before the
+        # build): replacing one just after a parquet write stalled 30-80 ms
+        p.mkdir(parents=True, exist_ok=True)
         if self.fingerprint is not None:
-            p.mkdir(parents=True, exist_ok=True)
             self._fp_path(name).write_text(self.fingerprint)
+        (p / "_delm_stage.json").write_text(
+            json.dumps({"metrics": self.metrics[name], "schema": read_schema.jsonValue()})
+        )
         self.built.append(name)
         return self._read_stage(name)
 
@@ -312,7 +325,6 @@ def config_fingerprint(config: "PipelineConfig", backend) -> str:
     resuming under a different config must not silently return stale
     results (reference experiment_manager.verify_resume_config)."""
     import hashlib
-    import json as _json
 
     material = {
         "schema_cfg": config.schema_cfg,
@@ -350,7 +362,7 @@ def config_fingerprint(config: "PipelineConfig", backend) -> str:
             "prompt_template": call.prompt_template,
         }
     return hashlib.sha256(
-        _json.dumps(material, sort_keys=True, default=str).encode("utf-8")
+        json.dumps(material, sort_keys=True, default=str).encode("utf-8")
     ).hexdigest()
 
 
@@ -564,13 +576,8 @@ def run_pipeline(
         if config.embedding_link:
             from delm_spark.kg.linking import resolve_mention_residue
 
-            # cut the DAG once: the residue resolver consumes the linked
-            # frame three times (subj mentions, obj mentions, the rewrite
-            # joins) — without a materialization each consumer would
-            # recompute the whole upstream extraction (measured 2.6x the
-            # exact pipeline's wall at sf0.1; eager avoids the AQE
-            # concurrent-branch duplication a lazy persist invites)
-            linked = linked.localCheckpoint(eager=True)
+            # no DAG cut: the resolver is one projection over the linked
+            # frame, so the upstream extraction runs once, unmaterialized
             linked = resolve_mention_residue(
                 linked,
                 dictionary,

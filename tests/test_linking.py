@@ -248,3 +248,58 @@ def test_run_pipeline_embedding_link_resolves_typos(spark):
     # and the canonical edge table reflects the recovered link
     edges = {r["conv_id"]: r for r in composed.edges.collect()}
     assert edges["c1"]["obj_canonical"] == "org:acme"
+
+
+def _resolve(spark, rows, dictionary) -> list:
+    """resolve_mention_residue over (k, subj_id, obj_id) rows, run as ONE
+    task so that surfaces repeated across its Arrow batches meet again."""
+    df = spark.createDataFrame(rows, "k int, subj_id string, obj_id string").coalesce(1)
+    d = spark.createDataFrame(dictionary, "surface string, canonical_id string")
+    out = linking.resolve_mention_residue(df, d)
+    assert out.columns == df.columns
+    return sorted(tuple(r) for r in out.collect())
+
+
+def test_resolver_matches_kernel_across_batches_and_passes_nulls(spark):
+    """Each `mention:` id resolves to the reference kernel's link,
+    whether its surface repeats inside one Arrow batch or across many
+    (two rows per batch); null ids and ids that are not `mention:` pass
+    through unchanged."""
+    dictionary = _dictionary_rows(spark)
+    surfaces = [s[:-1] for s, _ in dictionary[:12]] + ["zzz qqq", "x"]
+    want = reference_links(surfaces, dictionary)
+    assert 5 < len(want) < len(surfaces)
+    rows = [
+        (i, f"mention:{surfaces[i % len(surfaces)]}", f"mention:{surfaces[i * 5 % len(surfaces)]}")
+        for i in range(4 * len(surfaces))
+    ]
+    rows += [(900, None, "org:acme"), (901, "person:alice_smith", None), (902, None, None)]
+
+    def resolved(mid):
+        hit = mid is not None and mid.startswith("mention:") and want.get(mid[8:])
+        return hit[0] if hit else mid
+
+    expected = sorted((k, resolved(s), resolved(o)) for k, s, o in rows)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        assert _resolve(spark, rows, dictionary) == expected
+    finally:
+        spark.conf.set(key, prev)
+    assert _resolve(spark, rows, dictionary) == expected
+
+
+def test_resolver_without_residue_and_memo_per_task(spark):
+    """A frame with no `mention:` id, or resolved against an empty
+    dictionary, comes back unchanged; and the resolved-surface memo lives
+    in one task, not in the (reused) Python worker: the same surface
+    resolves against whichever dictionary the call was given."""
+    exact = [(1, "org:acme", "person:bob_jones"), (2, None, "org:acme")]
+    dictionary = [("acme corp", "org:a"), ("globex inc", "org:c")]
+    assert _resolve(spark, exact, dictionary) == sorted(exact)
+    rows = [(1, "person:x", "mention:acme cor")]
+    assert _resolve(spark, rows, []) == rows
+    assert _resolve(spark, rows, dictionary) == [(1, "person:x", "org:a")]
+    moved = [("acme corp", "org:z"), ("globex inc", "org:c")]
+    assert _resolve(spark, rows, moved) == [(1, "person:x", "org:z")]

@@ -132,19 +132,29 @@ def test_extraction_plan_gate(spark, tmp_path):
         assert "BatchEvalPython" not in plan, mode
 
 
-def test_residue_linking_is_one_arrow_pass(spark):
-    """The embedding residue pass runs its candidate search as ONE
-    Arrow-batched scoring stage: no cogroup, no window argmax, no
-    row-at-a-time Python and no eager localCheckpoint job in anything
+def _job_names(spark, group: str) -> list:
+    jobs = spark._jsparkSession.sparkContext().statusStore()
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    return [jobs.job(j).name() for j in ids]
+
+
+def test_residue_linking_is_one_arrow_pass(spark, tmp_path):
+    """The embedding residue pass is ONE Arrow projection over the linked
+    triples: one ArrowEvalPython and no join, exchange, cogroup, window
+    argmax, row-at-a-time Python or eager localCheckpoint job in anything
     resolve_mention_residue runs, from the call through collecting its
-    result (the subj/obj rewrite joins reuse the one scored exchange)."""
+    result — and the checkpointed pipeline runs no localCheckpoint job
+    either (the resolver consumes the linked frame once, so nothing
+    upstream is materialized for it)."""
     from delm_spark.kg.linking import resolve_mention_residue
     from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
 
     d = entry_mod._fixture_dictionary(spark)
-    linked = run_pipeline(
-        spark, entry_mod._typo_transcripts(spark), d, PipelineConfig()
-    ).triples.localCheckpoint(eager=True)
+    typos = entry_mod._typo_transcripts(spark)
+    linked = run_pipeline(spark, typos, d, PipelineConfig()).triples.localCheckpoint(
+        eager=True
+    )
+    before = linked.filter(F.col("obj_id").startswith("mention:")).count()
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
     last = _last_execution_id(store)
@@ -154,7 +164,6 @@ def test_residue_linking_is_one_arrow_pass(spark):
         rows = resolve_mention_residue(linked, d).collect()
     finally:
         sc.setJobGroup(None, None)
-    before = linked.filter(F.col("obj_id").startswith("mention:")).count()
     assert sum(r["obj_id"].startswith("mention:") for r in rows) < before
 
     # executed operator trees only: the formatted description repeats each
@@ -163,12 +172,100 @@ def test_residue_linking_is_one_arrow_pass(spark):
         e.physicalPlanDescription().split("\n\n")[0].split("== Initial Plan ==")[0]
         for e in _executions_since(store, last)
     ]
-    for node in ("FlatMapCoGroupsInPandas", "Window", "BatchEvalPython"):
+    for node in ("FlatMapCoGroupsInPandas", "Window", "BatchEvalPython", "Join", "Exchange"):
         assert not any(node in t for t in trees), node
-    assert sum(t.count("MapInPandas") for t in trees) == 1
-    jobs = spark._jsparkSession.sparkContext().statusStore()
-    names = [jobs.job(j).name() for j in sc.statusTracker().getJobIdsForGroup("residue-gate")]
+    assert sum(t.count("ArrowEvalPython") for t in trees) == 1
+    names = _job_names(spark, "residue-gate")
     assert names and not any(n.startswith("localCheckpoint") for n in names), names
+
+    # one wave of Python tasks however wide the input: a wider frame is
+    # narrowed to the default parallelism, without a shuffle
+    n = 3 * sc.defaultParallelism
+    wide = linked.repartition(n).localCheckpoint(eager=True)
+    assert wide.rdd.getNumPartitions() == n
+    narrow = resolve_mention_residue(wide, d)
+    assert narrow.rdd.getNumPartitions() == sc.defaultParallelism
+    assert sorted(map(tuple, narrow.collect())) == sorted(map(tuple, rows))
+
+    sc.setJobGroup("residue-gate-pipeline", "checkpointed linked pipeline")
+    try:
+        cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "ck"), embedding_link=True)
+        assert "s3_triples" in run_pipeline(spark, typos, d, cfg).runner.built
+    finally:
+        sc.setJobGroup(None, None)
+    names = _job_names(spark, "residue-gate-pipeline")
+    assert names and not any(n.startswith("localCheckpoint") for n in names), names
+
+
+#: Spark jobs per checkpointed stage of the fixture pipeline (dedup
+#: extraction + embedding residue linking), counted by job group; the
+#: budgets are the measured counts. "read" is every
+#: StageRunner._read_stage call (no job: the stored schema is passed, so
+#: nothing is inferred), "other" what runs outside any stage (the
+#: canonical-map collect). s3_triples = dictionary-index collect,
+#: dictionary broadcast, write.
+JOB_BUDGET = {
+    "build": {
+        "s1_chunks": 1,
+        "s2_extracted": 4,
+        "s3_triples": 3,
+        "s4_edges": 2,
+        "s5_nodes": 2,
+        "read": 0,
+        "other": 1,
+    },
+    "resume": {"read": 0, "other": 1},
+}
+
+
+def test_checkpointed_pipeline_job_budget(spark, tmp_path, monkeypatch):
+    """Per-stage job counts of the checkpointed pipeline and of its resume
+    pass stay within JOB_BUDGET; the resume pass reuses every stage and
+    runs no schema-inference job."""
+    import uuid
+
+    from delm_spark.kg.pipeline import PipelineConfig, StageRunner, run_pipeline
+
+    sc = spark.sparkContext
+    stage, read = StageRunner.stage, StageRunner._read_stage
+
+    def grouped(group, fn):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", f"{tag}:{group}")
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(
+        StageRunner,
+        "stage",
+        lambda self, name, *a, **k: grouped(name, lambda: stage(self, name, *a, **k)),
+    )
+    monkeypatch.setattr(
+        StageRunner, "_read_stage", lambda self, name: grouped("read", lambda: read(self, name))
+    )
+    cfg = PipelineConfig(
+        checkpoint_dir=str(tmp_path / "ck"), dedup_extraction=True, embedding_link=True
+    )
+    d = entry_mod._fixture_dictionary(spark)
+    t = entry_mod._typo_transcripts(spark)
+    counts = {}
+    for run in ("build", "resume"):
+        tag = uuid.uuid4().hex
+        res = grouped("other", lambda: run_pipeline(spark, t, d, cfg))
+        groups = ("read", "other", *res.runner.built)
+        counts[run] = {
+            g: len(sc.statusTracker().getJobIdsForGroup(f"{tag}:{g}")) for g in groups
+        }
+    assert not res.runner.built and len(res.runner.resumed) == 5
+    over = {
+        (run, g): (n, JOB_BUDGET[run][g])
+        for run in counts
+        for g, n in counts[run].items()
+        if n > JOB_BUDGET[run][g]
+    }
+    assert not over, f"(run, group): (jobs, budget) over budget: {over}"
 
 
 def test_topk_partial_group_limit(spark):

@@ -74,8 +74,9 @@ def test_checkpointed_and_direct_runs_agree(spark, ckpt_dir):
 
 def test_stage_metrics_observed_and_persisted(spark, ckpt_dir):
     """observe()-collected per-stage metrics (rows/errors/tokens) are
-    written to _delm_state.json and survive a restart: resumed stages
-    report the stored values without recomputation."""
+    written to each committed stage's _delm_stage.json sidecar and survive
+    a restart: resumed stages report the stored values without
+    recomputation."""
     import json
 
     t = generate_transcripts(spark, n_convs=20)
@@ -89,13 +90,95 @@ def test_stage_metrics_observed_and_persisted(spark, ckpt_dir):
     assert m1["s1_chunks"]["rows"] > 0
     assert m1["s2_extracted"]["errors"] == 0
     assert m1["s2_extracted"]["input_tokens"] > 0
-    # persisted state file matches the in-memory metrics
-    state = json.loads((Path(ckpt_dir) / "_delm_state.json").read_text())
-    assert state == m1
+    # each stage's sidecar holds its in-memory metrics
+    for name, metrics in m1.items():
+        side = json.loads((Path(ckpt_dir) / name / "_delm_stage.json").read_text())
+        assert side["metrics"] == metrics
+    assert sorted(p.name for p in Path(ckpt_dir).iterdir()) == sorted(m1)
 
     second = run_pipeline(spark, t, d, cfg)
     assert not second.runner.built
     assert second.runner.metrics == m1, "metrics must survive restart"
+
+
+def test_stage_without_sidecar_resumes(spark, ckpt_dir):
+    """A stage committed before stages carried _delm_stage.json (parquet +
+    _SUCCESS + _delm_config_fingerprint) still resumes, with its schema
+    inferred, and returns the same rows. Its metrics come from the shared
+    _delm_state.json of that layout, which is read but never rewritten."""
+    import json
+
+    t = generate_transcripts(spark, n_convs=20)
+    d = entity_dictionary(spark)
+    cfg = PipelineConfig(checkpoint_dir=ckpt_dir)
+    first = run_pipeline(spark, t, d, cfg)
+    baseline = _triples_set(first)
+    edges = sorted(tuple(r) for r in first.edges.drop("delm_part_id").collect())
+    for side in Path(ckpt_dir).glob("*/_delm_stage.json"):
+        side.unlink()
+    # the earlier layout's state file, here without an entry for one stage
+    legacy = {k: v for k, v in first.runner.metrics.items() if k != "s5_nodes"}
+    state = Path(ckpt_dir) / "_delm_state.json"
+    state.write_text(json.dumps(legacy, indent=1, sort_keys=True))
+    before = (state.read_text(), state.stat().st_ino, state.stat().st_mtime_ns)
+
+    second = run_pipeline(spark, t, d, cfg)
+    assert not second.runner.built
+    assert second.runner.resumed == first.runner.built
+    assert second.runner.metrics == legacy
+    assert (state.read_text(), state.stat().st_ino, state.stat().st_mtime_ns) == before
+    assert _triples_set(second) == baseline
+    assert sorted(tuple(r) for r in second.edges.drop("delm_part_id").collect()) == edges
+
+
+def _tree(root: Path) -> dict:
+    return {
+        p: (p.stat().st_ino, p.stat().st_mtime_ns) for p in root.rglob("*") if p.is_file()
+    }
+
+
+def test_checkpoint_files_never_replaced(spark, ckpt_dir, monkeypatch):
+    """Every file a stage commit leaves is created once: from the commit
+    to the end of the run and its resume pass, no file under
+    checkpoint_dir changes inode or mtime, and none is added outside a
+    commit."""
+    from delm_spark.kg.pipeline import StageRunner
+
+    committed: dict = {}
+    stage = StageRunner.stage
+
+    def snapshot(runner, name, *args, **kwargs):
+        out = stage(runner, name, *args, **kwargs)
+        committed.update(_tree(runner._path(name)))
+        return out
+
+    monkeypatch.setattr(StageRunner, "stage", snapshot)
+    t = generate_transcripts(spark, n_convs=20)
+    d = entity_dictionary(spark)
+    cfg = PipelineConfig(checkpoint_dir=ckpt_dir, embedding_link=True)
+    run_pipeline(spark, t, d, cfg)
+    assert len([p for p in committed if p.name == "_delm_stage.json"]) == 5
+    assert _tree(Path(ckpt_dir)) == committed
+    assert not run_pipeline(spark, t, d, cfg).runner.built
+    assert _tree(Path(ckpt_dir)) == committed
+
+
+def test_partition_column_keeps_written_type(spark, tmp_path):
+    """A string partition column whose values look numeric reads back as
+    the written strings, fresh and resumed: the stored read schema types
+    it, not partition-value inference (which turned '007' into 7)."""
+    from delm_spark.kg.pipeline import StageRunner
+
+    def build():
+        return spark.createDataFrame([("a", "2020"), ("b", "007")], "k string, pred string")
+
+    runner = StageRunner(spark, str(tmp_path / "ck"), storage="parquet")
+    for _ in ("commit", "resume"):
+        df = runner.stage("s", build, partition_by=["pred"])
+        assert df.columns == ["k", "delm_part_id", "pred"]
+        assert dict(df.dtypes)["pred"] == "string"
+        assert sorted((r["k"], r["pred"]) for r in df.collect()) == [("a", "2020"), ("b", "007")]
+    assert runner.built == ["s"] and runner.resumed == ["s"]
 
 
 def test_graph_tables_partitioned_and_clustered(spark, ckpt_dir):
