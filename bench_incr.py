@@ -237,7 +237,7 @@ the one-pass signature aggregation) and persisted; each arriving batch
 broadcasts its own band table and shingles against the index scan, so
 steady-state cost is O(batch) + one index scan, with only
 (batch, candidate) pairs ever reaching an exchange. Writing the band
-table bucketed by `__bucket` (io/bucketed.py) makes the probe
+table bucketed by `__bucket` makes the probe
 co-located on a real cluster; the exact-Jaccard re-rank touches only
 LSH survivors.
 """

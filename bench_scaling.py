@@ -87,21 +87,8 @@ def run_level(cores: int) -> dict:
         ).write.mode("overwrite").parquet(CORPUS)
     tr = spark.read.parquet(CORPUS)
     n_turns = tr.count()
-    # no-op mode (SPARK_GRAFT_SCALE_NOOP): identical plan, trivial Arrow
-    # kernel — measures how the PLAN scales when the Python kernel's
-    # memory-bandwidth ceiling is removed from the equation
-    backend = None
-    if os.environ.get("SPARK_GRAFT_SCALE_NOOP"):
-        from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-        from delm_spark.extraction.backend import NoOpExtractor
-        from delm_spark.schemas.spec import spec_from_dict
-
-        backend = NoOpExtractor(spec_from_dict(TRIPLE_SCHEMA_CFG))
-
     # warmup run (untimed): JIT + page cache
-    run_pipeline(
-        spark, tr, entity_dictionary(spark), PipelineConfig(), backend=backend
-    ).edges.count()
+    run_pipeline(spark, tr, entity_dictionary(spark), PipelineConfig()).edges.count()
 
     accepted, rejected, windows, n = [], [], [], 0
     for _ in range(MAX_ATTEMPTS):
@@ -109,9 +96,7 @@ def run_level(cores: int) -> dict:
         s0, t0c = steal_counters()
         w0 = int(time.time() * 1000)
         t0 = time.perf_counter()
-        res = run_pipeline(
-            spark, tr, entity_dictionary(spark), PipelineConfig(), backend=backend
-        )
+        res = run_pipeline(spark, tr, entity_dictionary(spark), PipelineConfig())
         n = res.edges.count()
         wall = round(time.perf_counter() - t0, 1)
         w1 = int(time.time() * 1000)
@@ -158,58 +143,24 @@ def _control_cpu_work(_):
     return n
 
 
-def _control_kernel_work(_):
-    """The ACTUAL Arrow extraction kernel, isolated from Spark."""
-    import random
-
-    sys.path.insert(0, str(REPO))
-    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-    from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.extraction.extract import _extract_series
-    from delm_spark.schemas.spec import spec_from_dict
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    be = RuleTripleExtractor(spec)
-    rnd = random.Random(1)
-    names = ["Alice Smith", "Bob Jones", "Carol Wu", "Dan Brown"]
-    orgs = ["Acme Corp", "Globex Inc", "Initech"]
-    texts = [
-        f"{rnd.choice(names)} works at {rnd.choice(orgs)}. the weather was "
-        f"nice that day. {rnd.choice(names)} reports to {rnd.choice(names)}."
-        for _ in range(2000)
-    ]
-    t0 = time.perf_counter()
-    n = 0
-    while time.perf_counter() - t0 < 8.0:
-        _extract_series(texts, spec, be, 0)
-        n += len(texts)
-    return n
-
-
 def run_controls() -> dict:
-    """Spark-free hardware-ceiling controls at the same two worker counts:
-    (a) pure register/L1 compute (sha256 over a 4 KB buffer) — what the
-    host's vCPUs can deliver at all; (b) the ACTUAL Arrow extraction kernel
-    (pandas extractall + cleaning) — the pipeline's Python stage, isolated
-    from Spark. Their scaling efficiencies bound what any plan can reach."""
+    """Spark-free hardware-ceiling control at the same two worker counts:
+    pure register/L1 compute (sha256 over a 4 KB buffer) — what the host's
+    vCPUs can deliver at all, which bounds what any plan can reach."""
     from multiprocessing import Pool
 
-    out = {}
-    for name, fn in (
-        ("pure_compute_sha256", _control_cpu_work),
-        ("extraction_kernel", _control_kernel_work),
-    ):
-        r = {}
-        for w in (LOW, HIGH):
-            with Pool(w) as p:
-                r[w] = sum(p.map(fn, range(w)))
-        out[name] = {
+    r = {}
+    for w in (LOW, HIGH):
+        with Pool(w) as p:
+            r[w] = sum(p.map(_control_cpu_work, range(w)))
+    return {
+        "pure_compute_sha256": {
             "low_ops": r[LOW],
             "high_ops": r[HIGH],
             "scaling_x": round(r[HIGH] / r[LOW], 2),
             "efficiency": round(r[HIGH] / r[LOW] / (HIGH / LOW), 2),
         }
-    return out
+    }
 
 
 def main() -> None:
@@ -294,41 +245,33 @@ Best-of-accepted per level.
 
 **Scaling efficiency (thr_{HIGH} / thr_{LOW}) / {ratio:.0f} = {eff:.3f}** (target >= 0.8)
 {decomposition}
-## Hardware-ceiling controls (Spark-free, same worker counts)
+## Hardware-ceiling control (Spark-free, same worker counts)
 
 What can {HIGH} processes deliver over {LOW} on THIS host, independent of
-any Spark plan? Two multiprocessing controls, run back-to-back with the
+any Spark plan? One multiprocessing control, run back-to-back with the
 sweep:
 
 | control | {LOW}w ops | {HIGH}w ops | scaling | efficiency |
 |---|---|---|---|---|
 | pure compute (sha256, L1-resident) | {controls['pure_compute_sha256']['low_ops']} | {controls['pure_compute_sha256']['high_ops']} | {controls['pure_compute_sha256']['scaling_x']}x | {controls['pure_compute_sha256']['efficiency']} |
-| the pipeline's extraction kernel (pandas extractall + cleaning) | {controls['extraction_kernel']['low_ops']} | {controls['extraction_kernel']['high_ops']} | {controls['extraction_kernel']['scaling_x']}x | {controls['extraction_kernel']['efficiency']} |
 
 The pure-compute control is the host's vCPU ceiling — {LOW}->{HIGH}
 workers deliver {controls['pure_compute_sha256']['scaling_x']}x, not
 {ratio:.0f}x, on a machine whose /proc/stat steal reads ~0 (host-level
-contention is invisible to the guest). The extraction kernel — the
-pipeline's dominant stage, isolated from Spark entirely — reaches
-{controls['extraction_kernel']['scaling_x']}x
-(efficiency {controls['extraction_kernel']['efficiency']}): its
-memory-streaming pandas work contends on the memory subsystem that the
-{HIGH} vCPUs share. **No plan can scale better than its dominant kernel on
-this box**; the irreducible account for the pipeline is (a) the kernel
-ceiling above, (b) JVM GC growth with thread count (see gc_sec), (c) wave
-quantization of the map stage, and (d) sub-gate host noise (the accepted
-walls' spread at steal~0 shows +/-2x run-to-run drift this VM imposes).
-On a real 4N-executor cluster each executor owns its memory channels and
-GC heap, so (a)/(b) do not transfer; the plan itself ships constant
-distributed work across levels (task-seconds of identical plans, table
-above).
+contention is invisible to the guest). The rest of the pipeline's
+account is (a) that ceiling, (b) JVM GC growth with thread count (see
+gc_sec), (c) wave quantization of the map stage, and (d) sub-gate host
+noise (the accepted walls' spread at steal~0 shows +/-2x run-to-run
+drift this VM imposes). On a real 4N-executor cluster each executor owns
+its memory channels and GC heap, so (a)/(b) do not transfer; the plan
+itself ships constant distributed work across levels (task-seconds of
+identical plans, table above).
 
 ## Scale design notes
 
-The pipeline (scan -> native chunk/score -> Arrow extract -> broadcast
-link -> CC) is a single linear DAG with zero in-memory persists; the only
-shuffle-free Python stage is the Arrow extraction. Structural choices that
-keep it scalable (profiled in round 1 with event logs):
+The pipeline (scan -> native chunk/score -> native extract -> broadcast
+link -> CC) is a single linear DAG with zero in-memory persists. Structural
+choices that keep it scalable (profiled in round 1 with event logs):
 
 1. single linear DAG, zero persists — AQE materializes independent
    branches of persisted-stage plans concurrently over a cold cache

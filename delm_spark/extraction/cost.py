@@ -98,13 +98,6 @@ class BudgetExceededError(RuntimeError):
     kept)."""
 
 
-def check_budget(summary: CostSummary, max_budget: float | None) -> bool:
-    """True if within budget (None = unlimited). Call between stage
-    actions; on False the driver stops scheduling further stages
-    (reference extraction_manager.py:193-195 semantics, stage-granular)."""
-    return max_budget is None or summary.cost_usd <= max_budget
-
-
 def estimate_input_cost(
     chunks: DataFrame, text_col: str, model: str = "gpt-4o-mini"
 ) -> float:

@@ -1,12 +1,15 @@
 """Entity canonicalization via connected components (north-rule stage 7).
 
-Iterative min-label propagation over an undirected edge table: each node's
-label converges to the smallest label in its component. The driver loop
-uses hash joins per iteration (AQE-managed), `localCheckpoint()` to cut
-lineage growth, and stops at fixpoint. For the alias graphs this pipeline
-produces (small diameter: surface <-> canonical star shapes) convergence
-takes 2-3 iterations; large-diameter graphs would warrant the
-large-star/small-star variant (see BTS, ICDE 2024 — not needed here).
+`connected_components`: iterative min-label propagation over an
+undirected edge table: each node's label converges to the smallest label
+in its component. Graphs up to DRIVER_CC_MAX_EDGES edges run union-find
+on the driver; larger ones run a driver loop of hash joins per iteration
+(AQE-managed), `localCheckpoint()` to cut lineage growth, stopping at
+fixpoint. Large-diameter graphs would warrant the large-star/small-star
+variant (see BTS, ICDE 2024 — not needed here).
+
+`canonical_map`: the pipeline's entity canonicalization over the alias
+graph of the broadcast-sized dictionary, always by driver union-find.
 """
 
 from __future__ import annotations
@@ -176,9 +179,7 @@ def connected_components(
     return labels
 
 
-def canonical_map(
-    dictionary: DataFrame, driver_cutoff: int = DRIVER_CC_MAX_EDGES
-) -> DataFrame:
+def canonical_map(dictionary: DataFrame) -> DataFrame:
     """(node -> canonical_id) map from the dictionary's alias graph alone.
 
     Canonicalization depends only on the alias graph (surface <->
@@ -189,65 +190,36 @@ def canonical_map(
     The component representative is the smallest non-mention node
     (a curated canonical id) when one exists.
 
-    Output is broadcast-sized whenever the dictionary is (north rule).
-    The dictionary-sized path runs as ONE collect job + pure-Python
-    union-find + a LocalTableScan result — a fixed ~0.5 s/job scheduler
-    cost per eager step makes every avoidable job count in local mode,
-    and the result is consumed only via broadcast joins. Larger
-    dictionaries fall back to the distributed CC loop (agreement-tested
-    against the driver path in tests/test_connected_components.py).
+    The dictionary is broadcast-sized by contract (`link_mentions`
+    broadcasts it whole), so this is ONE collect + pure-Python union-find
+    + a LocalTableScan result, consumed only via broadcast joins. Over
+    `run_pipeline`'s local dictionary snapshot the collect runs no job.
     """
     spark = dictionary.sparkSession
     # The node namespace of this graph is inherently string ('mention:'
     # prefix), so a numeric canonical_id column is normalized up front:
-    # without the cast the driver path mixes str and int nodes (startswith
-    # raises) and the distributed path unions string/bigint edge columns.
-    dictionary = dictionary.select(
+    # without the cast str and int nodes mix (startswith raises).
+    rows = dictionary.select(
         "surface", F.col("canonical_id").cast("string").alias("canonical_id")
-    )
-    # ONE job decides the path AND fetches the rows (limit cutoff+1: if the
-    # extra row comes back the dictionary is over-cutoff -> distributed)
-    rows = (
-        dictionary.select("surface", "canonical_id")
-        .limit(driver_cutoff + 1)
-        .collect()
-    )
-    if len(rows) <= driver_cutoff:
-        # skip null surfaces/ids: the distributed path's concat yields NULL
-        # and filters the edge out, so the driver path must not fabricate a
-        # 'mention:None' node (the two paths are agreement-tested)
-        pairs = [
-            (f"mention:{r['surface']}", r["canonical_id"])
-            for r in rows
-            if r["surface"] is not None and r["canonical_id"] is not None
-        ]
-        comp = _driver_union_find(pairs)
-        # representative per component: smallest non-mention node, else label
-        best: dict = {}
-        for node, c in comp.items():
-            if not node.startswith("mention:"):
-                if c not in best or node < best[c]:
-                    best[c] = node
-        out = sorted((node, best.get(c, c)) for node, c in comp.items())
-        import pandas as pd
+    ).collect()
+    # skip null surfaces/ids: an edge with a null end links nothing, and
+    # must not fabricate a 'mention:None' node
+    pairs = [
+        (f"mention:{r['surface']}", r["canonical_id"])
+        for r in rows
+        if r["surface"] is not None and r["canonical_id"] is not None
+    ]
+    comp = _driver_union_find(pairs)
+    # representative per component: smallest non-mention node, else label
+    best: dict = {}
+    for node, c in comp.items():
+        if not node.startswith("mention:"):
+            if c not in best or node < best[c]:
+                best[c] = node
+    out = sorted((node, best.get(c, c)) for node, c in comp.items())
+    import pandas as pd
 
-        # Arrow-backed (see connected_components): every broadcast build
-        # over this map must be a JVM LocalTableScan, not a Python task
-        pdf = pd.DataFrame(out, columns=["node", "canonical_id"])
-        return spark.createDataFrame(
-            pdf, "node string, canonical_id string"
-        ).coalesce(1)
-    dict_edges = dictionary.select(
-        F.concat(F.lit("mention:"), F.col("surface")).alias("src"),
-        F.col("canonical_id").alias("dst"),
-    )
-    cc = connected_components(dict_edges)
-    repr_ = cc.groupBy("component").agg(
-        F.min(
-            F.when(~F.col("node").startswith("mention:"), F.col("node"))
-        ).alias("__repr")
-    )
-    return cc.join(repr_, "component").select(
-        "node",
-        F.coalesce(F.col("__repr"), F.col("component")).alias("canonical_id"),
-    )
+    # Arrow-backed (see connected_components): every broadcast build
+    # over this map must be a JVM LocalTableScan, not a Python task
+    pdf = pd.DataFrame(out, columns=["node", "canonical_id"])
+    return spark.createDataFrame(pdf, "node string, canonical_id string").coalesce(1)

@@ -172,24 +172,3 @@ def canonicalize_predicates(
     return labeled.join(F.broadcast(members), "canonical_pred").select(
         "pred", "canonical_pred", "n_members", "n_pairs"
     )
-
-
-def apply_predicate_mapping(
-    triples: DataFrame,
-    mapping: DataFrame,
-    pred_col: str = "pred",
-) -> DataFrame:
-    """Rewrite ``pred_col`` to its canonical form via the (broadcast)
-    mapping produced by ``canonicalize_predicates``. Predicates absent
-    from the mapping pass through unchanged — the same left-join +
-    coalesce contract the entity dictionary join uses."""
-    m = mapping.select(
-        F.col("pred").alias("__from"), F.col("canonical_pred").alias("__to")
-    )
-    return (
-        triples.join(
-            F.broadcast(m), triples[pred_col] == F.col("__from"), "left"
-        )
-        .withColumn(pred_col, F.coalesce(F.col("__to"), F.col(pred_col)))
-        .drop("__from", "__to")
-    )

@@ -38,10 +38,27 @@ from delm_spark.extraction.backend import ExtractorBackend, RuleTripleExtractor
 from delm_spark.extraction.extract import extract_chunks
 from delm_spark.kg.canonicalize import canonical_map
 from delm_spark.kg.linking import link_mentions
+from delm_spark.kg.update import nodes_from_edges
 from delm_spark.operators.scoring import keyword_score_expr
 from delm_spark.operators.splitting import paragraph_split_expr
 from delm_spark.schemas.compile import spark_schema_for
 from delm_spark.schemas.spec import NestedSpec, SchemaSpec, spec_from_dict
+
+#: columns of the edge table, in order (s4_edges; the streaming sink
+#: appends the same columns)
+EDGE_COLS = [
+    "conv_id",
+    "turn_idx",
+    CHUNK_POS_COL,
+    "item_pos",
+    "subj",
+    "pred",
+    "obj",
+    "subj_id",
+    "obj_id",
+    "subj_canonical",
+    "obj_canonical",
+]
 
 
 class StageRunner:
@@ -64,9 +81,9 @@ class StageRunner:
 
     `fingerprint` guards resume against config drift, like the reference's
     verify_resume_config (experiment_manager.py): each committed stage
-    stores the config fingerprint it was built with; resuming with a
-    different fingerprint refuses by default (`on_config_change="error"`)
-    or rebuilds the stale stage (`"rebuild"`).
+    stores the config fingerprint it was built with, and resuming with a
+    different fingerprint refuses, naming the stage directory. A fresh
+    checkpoint dir, or deleting the stale stage directories, rebuilds.
     """
 
     def __init__(
@@ -74,14 +91,12 @@ class StageRunner:
         spark: SparkSession,
         checkpoint_dir: Optional[str] = None,
         fingerprint: Optional[str] = None,
-        on_config_change: str = "error",
         storage: Optional[str] = None,
         iceberg_namespace: str = "delm.stages",
     ):
         self.spark = spark
         self.dir = Path(checkpoint_dir) if checkpoint_dir else None
         self.fingerprint = fingerprint
-        self.on_config_change = on_config_change
         # stage-table format: 'parquet' (default in-sandbox) or 'iceberg'
         # (auto-selected when the runtime jar + a SparkCatalog are present;
         # the north star names Iceberg tables — delm_spark/io/iceberg.py).
@@ -169,14 +184,6 @@ class StageRunner:
         fp = self._fp_path(name)
         return fp.exists() and fp.read_text() == self.fingerprint
 
-    def invalidate(self, name: str) -> None:
-        if self.dir is None:
-            return
-        if self.storage == "iceberg":
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(name)}")
-        if self._path(name).exists():
-            shutil.rmtree(self._path(name))
-
     def stage(
         self,
         name: str,
@@ -195,19 +202,17 @@ class StageRunner:
             return build()
         p = self._path(name)
         if self.is_committed(name):
-            if self._fingerprint_ok(name):
-                self.resumed.append(name)
-                return self._read_stage(name)
-            if self.on_config_change == "rebuild":
-                self.invalidate(name)
-            else:
+            if not self._fingerprint_ok(name):
                 raise RuntimeError(
                     f"checkpointed stage {name!r} at {p} was built with a "
                     "different pipeline config/schema; refusing to resume "
                     "(reference experiment_manager.verify_resume_config "
-                    "semantics). Pass on_config_change='rebuild' or use a "
-                    "fresh checkpoint_dir."
+                    "semantics). Use a fresh checkpoint_dir, or delete "
+                    f"{p} to rebuild this stage (later stages built with the "
+                    "old config are refused the same way)."
                 )
+            self.resumed.append(name)
+            return self._read_stage(name)
         if p.exists():
             # partial write from a killed run — rebuild atomically (an
             # uncommitted iceberg snapshot is invisible by construction;
@@ -477,12 +482,19 @@ def run_pipeline(
         spark, config.checkpoint_dir, fingerprint=config_fingerprint(config, backend)
     )
 
+    # ONE driver snapshot of the broadcast-sized dictionary (one collect
+    # job) as an Arrow-backed local frame: canonical_map, link_mentions and
+    # the residue resolver's index all read this LocalTableScan, so their
+    # own collects run no job and the source is scanned once per run.
+    entries = dictionary.select("surface", "canonical_id")
+    dictionary = spark.createDataFrame(entries.toArrow(), entries.schema)
+
     # canonical map from the dictionary's alias graph alone (driver-side
-    # union-find for broadcast-sized dictionaries, ONE collect job) — no
-    # triples dependency, so the main DAG below stays strictly linear with
-    # every stage consumed exactly once. The result is a LocalTableScan,
-    # so repeated broadcast builds don't recompute anything: no eager
-    # checkpoints (each one costs a dedicated ~0.5 s job in local mode).
+    # union-find) — no triples dependency, so the main DAG below stays
+    # strictly linear with every stage consumed exactly once. The result
+    # is a LocalTableScan, so repeated broadcast builds don't recompute
+    # anything: no eager checkpoints (each one costs a dedicated ~0.5 s
+    # job in local mode).
     labels = canonical_map(dictionary)
 
     integrity = None
@@ -599,22 +611,14 @@ def run_pipeline(
         )
         # canonical map is broadcast-sized by design; unmapped entities are
         # singleton components (coalesce to their own id)
+        canon = {
+            c: F.coalesce(c, F.col(c.replace("canonical", "id"))).alias(c)
+            for c in ("subj_canonical", "obj_canonical")
+        }
         return (
             triples.join(F.broadcast(l_s), "subj_id", "left")
             .join(F.broadcast(l_o), "obj_id", "left")
-            .select(
-                "conv_id",
-                "turn_idx",
-                CHUNK_POS_COL,
-                "item_pos",
-                "subj",
-                "pred",
-                "obj",
-                "subj_id",
-                "obj_id",
-                F.coalesce("subj_canonical", F.col("subj_id")).alias("subj_canonical"),
-                F.coalesce("obj_canonical", F.col("obj_id")).alias("obj_canonical"),
-            )
+            .select(*[canon.get(c, F.col(c)) for c in EDGE_COLS])
         )
 
     # graph materialization (north star: PARTITIONED edge/node tables):
@@ -624,25 +628,12 @@ def run_pipeline(
     # stats prune point lookups without a high-cardinality partition key.
     edges = runner.stage("s4_edges", build_edges, partition_by=["pred"])
 
-    def build_nodes():
-        # node table derived from the edge output (one scan of the final
-        # table, not a recompute of the triples DAG): every entity id
-        # observed in the graph plus its canonical component
-        return (
-            edges.select(
-                F.col("subj_id").alias("entity_id"),
-                F.col("subj_canonical").alias("canonical_id"),
-            )
-            .unionByName(
-                edges.select(
-                    F.col("obj_id").alias("entity_id"),
-                    F.col("obj_canonical").alias("canonical_id"),
-                )
-            )
-            .dropDuplicates(["entity_id"])
-        )
-
-    nodes = runner.stage("s5_nodes", build_nodes, sort_by=["entity_id"])
+    # node table derived from the edge output (one scan of the final
+    # table, not a recompute of the triples DAG): every entity id observed
+    # in the graph plus its canonical component
+    nodes = runner.stage(
+        "s5_nodes", lambda: nodes_from_edges(edges), sort_by=["entity_id"]
+    )
 
     return PipelineResult(
         chunks=chunks,

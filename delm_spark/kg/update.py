@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 def nodes_from_edges(edges: DataFrame) -> DataFrame:
     """Node table implied by an edge table: every endpoint with its
-    canonical component (same derivation as run_pipeline's build_nodes)."""
+    canonical component (run_pipeline's s5_nodes stage is this)."""
     return (
         edges.select(
             F.col("subj_id").alias("entity_id"),

@@ -7,7 +7,7 @@ uncompressed payloads are plain struct-parseable bytes — so the decode
 stage for PCM WAV audio and DIB-frame AVI video is REAL here, not a
 stub. Compressed codecs (MP3/AAC, H.264/VP9, MJPEG) genuinely need the
 libraries and stay behind the pluggable `decoder` seam in
-operators/multimodal.py (`require_real_decoders`).
+operators/multimodal.py.
 
 Scope (documented like image_codec.py's):
   * WAV: RIFF/WAVE, PCM (format tag 1), 8-bit unsigned or 16-bit signed

@@ -190,42 +190,6 @@ def _kmeans_fit_rows(
     return cent_rows, vm
 
 
-def _cent_rows_df(spark, cent_rows) -> DataFrame:
-    """(cluster_id int, centroid array<bigint>) as an Arrow-backed local
-    frame (LocalTableScan — no Python-RDD tasks on downstream actions)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "cluster_id": [c for c, _ in cent_rows],
-            "centroid": [list(v) for _, v in cent_rows],
-        }
-    )
-    return spark.createDataFrame(pdf, "cluster_id int, centroid array<bigint>")
-
-
-def kmeans_fit(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "kmeans",
-) -> DataFrame:
-    """Lloyd's algorithm for `iters` fixed iterations in exact integer
-    arithmetic. Returns the final centroid table
-    (cluster_id, centroid: array<bigint> micro).
-
-    Per iteration: literal-centroid assignment (no shuffle of the corpus
-    side) -> ONE hash aggregation on cluster_id computing per-dimension
-    integer sums + count (map-side combinable) -> centroid = sum div
-    count (truncate toward zero, == DuckDB ``//``), applied driver-side
-    (see _kmeans_fit_rows). A cluster that loses all members keeps its
-    previous centroid."""
-    cent_rows, _ = _kmeans_fit_rows(embeddings, k, iters, id_col, vec_col, salt)
-    return _cent_rows_df(embeddings.sparkSession, cent_rows)
-
-
 def kmeans_cluster(
     embeddings: DataFrame,
     k: int = 8,

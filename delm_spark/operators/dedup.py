@@ -4,12 +4,16 @@ Beyond the reference's exact-match cache dedup (semantic_cache.py:81-103),
 these are the standard training-data-pipeline dedup family, all expressed
 as native DataFrame programs (no Python in the hot path):
 
-  * exact_dedup        — hash-groupBy, keep first by a deterministic order
-  * minhash_signature  — k permutation-free min-hashes over shingles
-                         (md5-based so an external SQL oracle can reproduce)
-  * minhash_lsh_pairs  — band the signature, bucket-join to candidate pairs
-  * simhash            — 64-bit sign-aggregated token hash
-  * ngram_jaccard      — exact Jaccard over shingle sets for candidate pairs
+  * exact_dedup            — hash-groupBy, keep first by a deterministic
+                             order
+  * minhash_signatures_agg — k permutation-free min-hashes over shingles
+                             (md5-based so an external SQL oracle can
+                             reproduce)
+  * minhash_lsh_pairs      — band the signature, bucket-join to candidate
+                             pairs
+  * simhash_signatures_agg — 64-bit sign-aggregated token hash
+  * ngram_jaccard_pairs    — exact Jaccard over shingle sets for candidate
+                             pairs
 
 Scale notes: the LSH band join shuffles on (band_id, band_hash) — bucket
 counts are bounded by band width, and the pair join is an equi-join AQE
@@ -110,32 +114,6 @@ def shingles(col: Column, n: int = 3) -> Column:
     """Word n-gram shingle SET of normalized text (array<string>,
     distinct) — `word_ngrams(col, n, distinct=True)` by definition."""
     return word_ngrams(col, n, distinct=True)
-
-
-def minhash_from_shingles(sh: Column, k: int = 16) -> Column:
-    """k-wide MinHash signature (array<string>) from a shingle array column.
-
-    Hash family: md5(salt_i || shingle); the minimum is taken in
-    lexicographic order of the hex digest. md5+string-min keeps the
-    construction reproducible in any SQL engine (the correctness oracle),
-    unlike engine-specific 64-bit hashes.
-    """
-    def _min_hash(i: int):
-        # NB: capture i via factory, NOT a defaulted lambda arg — PySpark
-        # treats a two-parameter lambda as (element, index) and would bind
-        # the array index over the default.
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"salt{i}|"), s)))
-        )
-
-    return F.array(*[_min_hash(i) for i in range(k)])
-
-
-def minhash_signature(col: Column, k: int = 16, n: int = 3) -> Column:
-    """k-wide MinHash signature computed directly from text. Prefer
-    materializing `shingles()` into a column first (one projection) when
-    k is large — shingle construction then runs once per row, not k times."""
-    return minhash_from_shingles(shingles(col, n), k)
 
 
 def minhash_signatures_agg(
@@ -506,10 +484,10 @@ def minhash_index(
     (doc, band) — and shingles_df is (id_col, __sh array<string>).
 
     Both are meant to be WRITTEN as staging tables once and appended to
-    as batches survive; write bands_df bucketed by __bucket
-    (io/bucketed.py) so the per-batch candidate probe is a co-located
-    join on the corpus side. At 100 TB the index is the only state the
-    dedup pass keeps — the corpus text itself is never re-read.
+    as batches survive; a catalog table bucketed by __bucket
+    (`DataFrameWriter.bucketBy`) makes the per-batch candidate probe a
+    co-located join on the corpus side. At 100 TB the index is the only
+    state the dedup pass keeps — the corpus text itself is never re-read.
     """
     sig = minhash_signatures_agg(df, text_col, id_col, k=k, n=n)
     bands_df = sig.select(
@@ -631,7 +609,6 @@ def near_dup_canonical(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Cluster-level near-dup RESOLUTION — the op a training-data pipeline
     actually runs (pair lists are diagnostics; what ships is "keep one
@@ -660,10 +637,8 @@ def near_dup_canonical(
         threshold=threshold,
         candidates=minhash_lsh_pairs(df, text_col, id_col, k=k, bands=bands, n=n),
     )
-    cc_kwargs = {} if driver_cutoff is None else {"driver_cutoff": driver_cutoff}
     comp = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        **cc_kwargs,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     ids = df.select(F.col(id_col))
     return (

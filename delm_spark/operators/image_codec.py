@@ -247,15 +247,6 @@ def decode_image(data: bytes) -> Optional[np.ndarray]:
     return None
 
 
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize via index maps — the standard thumbnail /
-    fixed-input-shape step, fully numpy."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def luma(img: np.ndarray) -> np.ndarray:
     """Rec. 601 luma plane from 1/2/3/4-channel uint8."""
     if img.ndim == 2:

@@ -6,8 +6,7 @@ Three tiers of realness here:
   * container-header metadata (PNG/GIF/JPEG/BMP dims) — real, stdlib;
   * PIXEL decode for PNG, GIF, JPEG (baseline + progressive), and uncompressed BMP — real, stdlib/numpy
     (operators/image_codec.py: zlib + scanline filters), feeding
-    `image_pixel_stats` (luma stats + histogram) and nearest-neighbor
-    resize;
+    `image_pixel_stats` (luma stats + histogram);
   * audio SAMPLE decode for PCM WAV and video FRAME decode + fixed-rate
     frame sampling for uncompressed-DIB AVI — real, stdlib
     (operators/av_codec.py: RIFF chunk walking), feeding
@@ -15,7 +14,7 @@ Three tiers of realness here:
   * JPEG pixels / compressed audio/video (MP3, H.264, MJPEG) —
     genuinely need codec libraries, so the embedding-feature stage keeps
     the pluggable `decoder` seam (`decoder=None` uses a deterministic
-    fake; `require_real_decoders()` raises). Plugging
+    fake). Plugging
     Pillow/torchaudio/ffmpeg in means passing a `decoder` callable;
     nothing else changes.
 
@@ -119,40 +118,6 @@ def image_header_dims(content: bytes) -> tuple[Optional[str], Optional[int], Opt
     except (struct.error, IndexError):
         pass
     return None, None, None
-
-
-def image_metadata(media: DataFrame, batch_rows: int = 256) -> DataFrame:
-    """media -> (media_id, format, width, height): container-header
-    metadata via an Arrow-batched UDF — the decode stage that IS possible
-    without codec libraries; pixel-level work stays behind the `decoder`
-    seam of extract_media_features."""
-    schema = StructType(
-        [
-            StructField("media_id", StringType()),
-            StructField("format", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                part = pdf.iloc[start : start + batch_rows]
-                parsed = [
-                    image_header_dims(bytes(c) if c is not None else b"")
-                    for c in part["content"]
-                ]
-                yield pd.DataFrame(
-                    {
-                        "media_id": part["media_id"].values,
-                        "format": [p[0] for p in parsed],
-                        "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                        "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    }
-                )
-
-    return media.select("media_id", "content").mapInPandas(run, schema=schema)
 
 
 def image_pixel_stats(media: DataFrame, batch_rows: int = 64) -> DataFrame:
@@ -337,21 +302,6 @@ def video_frame_stats(
     return media.select("media_id", "content").mapInPandas(run, schema=schema)
 
 
-def require_real_decoders() -> None:
-    """Real codec path for compressed audio/video — unavailable in this
-    environment by design (PNG/GIF/JPEG-baseline-and-progressive/BMP
-    pixels, PCM WAV audio, and uncompressed-AVI frames ARE decoded
-    natively: see image_pixel_stats, audio_features, video_frame_stats)."""
-    raise NotImplementedError(
-        "MP3/H.264 (and arithmetic-coded JPEG) decoding needs "
-        "torchaudio/ffmpeg; pass a `decoder` callable to "
-        "extract_media_features instead (PNG, GIF, baseline+progressive "
-        "JPEG, uncompressed BMP, PCM WAV, and DIB-frame AVI decode "
-        "natively via operators/image_codec.py, jpeg_codec.py, and "
-        "av_codec.py)"
-    )
-
-
 def extract_media_features(
     media: DataFrame,
     decoder: Optional[Callable[[bytes, str], np.ndarray]] = None,
@@ -388,28 +338,6 @@ def extract_media_features(
 
     cols = ["media_id", "kind", "content"]
     return media.select(*cols).mapInPandas(run, schema=out_schema)
-
-
-def synthetic_media(spark, n: int = 100) -> DataFrame:
-    """Deterministic fake media table matching MEDIA_SCHEMA (payload =
-    hash-derived bytes; exercises binary columns end-to-end)."""
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 7)
-        rows.append(
-            (
-                f"m{i:06d}",
-                kind,
-                bytearray(payload),
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                64 + i % 512 if kind != "audio" else None,
-                64 + (i * 7) % 512 if kind != "audio" else None,
-                (1000 + i * 37) if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def media_dedup_by_content(media: DataFrame) -> DataFrame:

@@ -5,10 +5,9 @@ conversations with hundreds of turns). Three mechanisms, by situation:
 
   1. AQE skew-join splitting — on by default in the session factory
      (`spark.sql.adaptive.skewJoin.enabled`); covers join-side skew.
-  2. Salted repartition — for the Python-heavy extraction stage, a
-     round-robin `repartition(n)` suffices because rows carry composite
-     keys (no per-partition ordering assumption); for key-preserving
-     stages use `repartition_salted` (key + deterministic salt).
+  2. Round-robin repartition — for the Python-heavy extraction stage,
+     `repartition(n)` suffices because rows carry composite keys (no
+     per-partition ordering assumption).
   3. Two-phase salted aggregation — for algebraic aggregates over a
      skewed key: partial agg on (key, salt) spreads the hot key over
      `buckets` reducers, final agg on key combines partials. This is
@@ -29,15 +28,6 @@ def salt_col(df_cols: list, buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in df_cols]), F.lit(buckets))
 
 
-def repartition_salted(
-    df: DataFrame, n_partitions: int, key: str, buckets: int, salt_by: list | None = None
-) -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over `buckets`
-    partitions while cold keys stay co-located per (key, salt) pair."""
-    salted = df.withColumn("__salt", salt_col(salt_by or df.columns, buckets))
-    return salted.repartition(n_partitions, F.col(key), F.col("__salt")).drop("__salt")
-
-
 def salted_count(
     df: DataFrame, key: str, buckets: int = 16, salt_by: list | None = None
 ) -> DataFrame:
@@ -46,12 +36,3 @@ def salted_count(
     salted = df.withColumn("__salt", salt_col(salt_by or df.columns, buckets))
     partial = salted.groupBy(key, "__salt").agg(F.count(F.lit(1)).alias("__pn"))
     return partial.groupBy(key).agg(F.sum("__pn").alias("n"))
-
-
-def salted_sum(
-    df: DataFrame, key: str, value: str, buckets: int = 16, salt_by: list | None = None
-) -> DataFrame:
-    """Two-phase sum per key. Returns (key, total)."""
-    salted = df.withColumn("__salt", salt_col(salt_by or df.columns, buckets))
-    partial = salted.groupBy(key, "__salt").agg(F.sum(value).alias("__ps"))
-    return partial.groupBy(key).agg(F.sum("__ps").alias("total"))

@@ -122,61 +122,3 @@ def clean_response(
         return out
 
     raise TypeError(f"Unknown spec type {type(spec).__name__}")
-
-
-def is_valid_json_dict(data: dict[str, Any], spec: SchemaSpec) -> bool:
-    """Validate golden/expected JSON against the spec (driver-side only;
-    reference schemas.py:270-293, 401-435, 501-521)."""
-
-    def _scalar_ok(val: Any, base: str) -> bool:
-        if base == "number":
-            return isinstance(val, float)
-        if base == "integer":
-            return isinstance(val, int) and not isinstance(val, bool)
-        if base == "string" or base == "date":
-            return isinstance(val, str)
-        if base == "boolean":
-            return isinstance(val, bool)
-        return True
-
-    def _vars_ok(item: dict[str, Any], variables: tuple) -> bool:
-        for v in variables:
-            if v.required and v.name not in item:
-                return False
-            if v.name not in item:
-                continue
-            val = item[v.name]
-            if v.is_list():
-                if not isinstance(val, list):
-                    return False
-                if not all(_scalar_ok(x, v.base_type()) for x in val):
-                    return False
-            else:
-                if isinstance(val, list):
-                    return False
-                if val is not None and not _scalar_ok(val, v.base_type()):
-                    return False
-        return True
-
-    if isinstance(spec, SimpleSpec):
-        return _vars_ok(data, spec.variables)
-    if isinstance(spec, NestedSpec):
-        items = data.get(spec.container_name)
-        if not isinstance(items, list):
-            return False
-        return all(isinstance(it, dict) and _vars_ok(it, spec.variables) for it in items)
-    if isinstance(spec, MultipleSpec):
-        for name, sub in spec.schemas:
-            if name not in data:
-                return False
-            sub_data = data[name]
-            if isinstance(sub, NestedSpec):
-                # multiple-schema goldens store the bare item list
-                # (reference schemas.py:508-515)
-                if not is_valid_json_dict({sub.container_name: sub_data}, sub):
-                    return False
-            else:
-                if not is_valid_json_dict(sub_data, sub):
-                    return False
-        return True
-    raise TypeError(f"Unknown spec type {type(spec).__name__}")

@@ -38,22 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
 
-from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-from delm_spark.kg.update import nodes_from_edges
-
-EDGE_COLS = [
-    "conv_id",
-    "turn_idx",
-    "chunk_pos",
-    "item_pos",
-    "subj",
-    "pred",
-    "obj",
-    "subj_id",
-    "obj_id",
-    "subj_canonical",
-    "obj_canonical",
-]
+from delm_spark.kg.pipeline import EDGE_COLS, PipelineConfig, run_pipeline
 
 
 def _existing_conv_ids(spark: SparkSession, edges_path: str) -> Optional[DataFrame]:
@@ -111,12 +96,3 @@ def run_streaming_kg_merge(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def read_streamed_graph(
-    spark: SparkSession, out_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(nodes, edges) view of a streamed KG sink — nodes re-derived from
-    edge endpoints, preserving the build invariant nodes == endpoints."""
-    edges = spark.read.parquet(f"{out_dir}/edges").select(*EDGE_COLS)
-    return nodes_from_edges(edges), edges

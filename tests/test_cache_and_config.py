@@ -5,6 +5,7 @@ guard."""
 from __future__ import annotations
 
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,11 +17,9 @@ from delm_spark.extraction.extract import _extract_series, extract_chunks
 from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
 from delm_spark.operators.sample import seeded_sample, seeded_sample_records
 from delm_spark.schemas.spec import spec_from_dict
+from tests.backends import CacheOnlyBackend
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
-
-
-from delm_spark.extraction.backend import CacheOnlyBackend
 
 
 class FlakyBackend:
@@ -82,7 +81,7 @@ def test_persistent_cache_extends_incrementally(spark, tmp_path):
 
 
 def test_cached_error_rows_retry_next_run(spark, tmp_path):
-    from delm_spark.extraction.backend import FailingBackend
+    from tests.backends import FailingBackend
 
     cache = str(tmp_path / "semantic_cache")
     df = _chunk_df(spark, TEXTS[:2])
@@ -155,8 +154,13 @@ def test_resume_refuses_on_config_change(spark, tmp_path):
     run_pipeline(spark, t, d, cfg).edges.count()
 
     changed = PipelineConfig(checkpoint_dir=ckpt, score_threshold=0.5)
-    with pytest.raises(RuntimeError, match="different pipeline config"):
+    with pytest.raises(RuntimeError, match="different pipeline config") as err:
         run_pipeline(spark, t, d, changed).edges.count()
+    # the advice must be one the caller can follow: it names the stage
+    # directory to delete and no option run_pipeline cannot pass
+    msg = str(err.value)
+    assert str(Path(ckpt) / "s1_chunks") in msg
+    assert "on_config_change" not in msg
 
     # unchanged config resumes every stage
     res = run_pipeline(spark, t, d, PipelineConfig(checkpoint_dir=ckpt))

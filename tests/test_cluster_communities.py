@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from delm_spark.kg.communities import label_propagation
 from delm_spark.operators.cluster import (
     _assign_best_expr,
+    _kmeans_fit_rows,
     kmeans_cluster,
-    kmeans_fit,
     vec_micro,
 )
 from tests.conftest import py4j_calls
@@ -53,11 +53,13 @@ def test_kmeans_deterministic_and_exact_integer(spark):
 def test_kmeans_empty_cluster_keeps_centroid(spark):
     """With k=3 over 3 identical points, two clusters lose all members
     after the first assignment; their centroids must persist (no NULL
-    centroids, fit still returns k rows)."""
+    centroids, the fit kmeans_cluster assigns against keeps k rows)."""
     rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [1.0, 1.0])]
-    cent = kmeans_fit(_emb(spark, rows), k=3, iters=2).collect()
+    cent, _ = _kmeans_fit_rows(_emb(spark, rows), 3, 2, "vec_id", "embedding", "kmeans")
     assert len(cent) == 3
-    assert all(r.centroid is not None for r in cent)
+    assert all(c is not None for _, c in cent)
+    out = kmeans_cluster(_emb(spark, rows), k=3, iters=2).collect()
+    assert len(out) == 3 and all(r.dist_micro2 == 0 for r in out)
 
 
 def test_assign_best_expr_py4j_calls_independent_of_k(spark):

@@ -165,12 +165,10 @@ def _attempts(log_path):
 def test_prompted_backend_flaky_transport_e2e(spark, tmp_path):
     import yaml
 
-    from delm_spark.extraction.backend import (
-        FlakyLoggingTransport,
-        PromptedApiBackend,
-    )
+    from delm_spark.extraction.backend import PromptedApiBackend
     from delm_spark.extraction.cost import BudgetExceededError
     from delm_spark.schemas.spec import spec_from_dict
+    from tests.backends import FlakyLoggingTransport
 
     cfg = yaml.safe_load(
         API_CONFIG.replace("{cache_dir}", str(tmp_path / "cache"))

@@ -9,14 +9,11 @@ import os
 import pytest
 
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-from delm_spark.extraction.backend import (
-    CacheOnlyBackend,
-    FailingBackend,
-    RuleTripleExtractor,
-)
+from delm_spark.extraction.backend import RuleTripleExtractor
 from delm_spark.extraction.extract import extract_chunks
 from delm_spark.extraction.fs_cache import FilesystemSemanticCache
 from delm_spark.schemas.spec import spec_from_dict
+from tests.backends import CacheOnlyBackend, FailingBackend
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
 

@@ -1,5 +1,5 @@
 """Stdlib PNG/BMP pixel codec: encode->decode round-trips across every
-filter type and color type, BMP layouts, resize, luma stats, and the
+filter type and color type, BMP layouts, luma stats, and the
 Spark image_pixel_stats operator."""
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from delm_spark.operators.image_codec import (
     encode_png,
     luma,
     pixel_stats,
-    resize_nearest,
 )
 
 
@@ -118,12 +117,6 @@ def test_decode_image_dispatch_and_resilience():
 
 def test_resize_and_stats():
     img = _gradient(10, 20, 3)
-    small = resize_nearest(img, 5, 4)
-    assert small.shape == (4, 5, 3)
-    # nearest-neighbor: every output pixel exists in the input
-    assert set(map(tuple, small.reshape(-1, 3))) <= set(
-        map(tuple, img.reshape(-1, 3))
-    )
     st = pixel_stats(img)
     assert st["n_pixels"] == 200
     assert 0 <= st["mean_luma"] <= 255

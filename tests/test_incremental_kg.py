@@ -110,6 +110,12 @@ class TestStreamingKgMerge:
     foreachBatch drives the batch pipeline per micro-batch and appends
     fresh conversations only."""
 
+    @staticmethod
+    def _sink_edges(spark, tmp_path):
+        from delm_spark.kg.pipeline import EDGE_COLS
+
+        return spark.read.parquet(str(tmp_path / "kg" / "edges")).select(*EDGE_COLS)
+
     def _feed(self, spark, tmp_path, batches):
         feed = str(tmp_path / "feed")
         for b in batches:
@@ -119,10 +125,8 @@ class TestStreamingKgMerge:
     def test_two_microbatch_stream_equals_from_scratch(
         self, spark, tmp_path, built
     ):
-        from delm_spark.streaming.kg_stream import (
-            read_streamed_graph,
-            run_streaming_kg_merge,
-        )
+        from delm_spark.kg.update import nodes_from_edges
+        from delm_spark.streaming.kg_stream import run_streaming_kg_merge
         from delm_spark.streaming.stream import read_transcript_stream
 
         d, cfg = built["d"], built["cfg"]
@@ -134,7 +138,8 @@ class TestStreamingKgMerge:
         q.awaitTermination()
         # >=2 micro-batches actually ran (one file per trigger)
         assert q.lastProgress["batchId"] >= 1
-        nodes, edges = read_streamed_graph(spark, str(tmp_path / "kg"))
+        edges = self._sink_edges(spark, tmp_path)
+        nodes = nodes_from_edges(edges)
         scratch = built["scratch"]
         cols = [f.name for f in edges.schema.fields]
         assert _rows(edges.select(*cols)) == _rows(scratch.edges.select(*cols))
@@ -144,10 +149,7 @@ class TestStreamingKgMerge:
         """Restarting the stream with a FRESH checkpoint over the same feed
         (worst-case redelivery: every micro-batch replayed) appends zero
         rows — exactly-once emerges from conv-granular idempotence."""
-        from delm_spark.streaming.kg_stream import (
-            read_streamed_graph,
-            run_streaming_kg_merge,
-        )
+        from delm_spark.streaming.kg_stream import run_streaming_kg_merge
         from delm_spark.streaming.stream import read_transcript_stream
 
         d, cfg = built["d"], built["cfg"]
@@ -159,10 +161,8 @@ class TestStreamingKgMerge:
             )
             q.awaitTermination()
             if ckpt == "ckpt_a":
-                _, edges = read_streamed_graph(spark, str(tmp_path / "kg"))
-                first = _rows(edges)
-        _, edges = read_streamed_graph(spark, str(tmp_path / "kg"))
-        assert _rows(edges) == first
+                first = _rows(self._sink_edges(spark, tmp_path))
+        assert _rows(self._sink_edges(spark, tmp_path)) == first
 
 
 def test_graph_diff_hand_values(spark):

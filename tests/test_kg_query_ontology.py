@@ -4,11 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from delm_spark.kg.ontology import (
-    apply_predicate_mapping,
-    canonicalize_predicates,
-    predicate_similarity,
-)
+from delm_spark.kg.ontology import canonicalize_predicates, predicate_similarity
 from delm_spark.kg.query import match_pattern
 
 
@@ -145,15 +141,6 @@ def test_canonicalize_predicates_clusters_and_singletons(aliased):
     # tighter threshold: no cluster survives
     loose = canonicalize_predicates(aliased, min_jaccard_micro=600_000)
     assert all(r["n_members"] == 1 for r in loose.collect())
-
-
-def test_apply_predicate_mapping(aliased):
-    mapping = canonicalize_predicates(aliased, min_jaccard_micro=500_000)
-    out = apply_predicate_mapping(aliased, mapping)
-    assert out.columns == aliased.columns
-    preds = {r["pred"] for r in out.select("pred").distinct().collect()}
-    assert preds == {"works_at", "mentors"}
-    assert out.count() == aliased.count()
 
 
 def test_resolve_functional_ranking_and_statuses(spark):

@@ -3,16 +3,39 @@ decode determinism."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from delm_spark.operators.multimodal import (
     FEATURE_DIM,
+    MEDIA_SCHEMA,
     extract_media_features,
     media_dedup_by_content,
-    require_real_decoders,
-    synthetic_media,
 )
+
+
+def synthetic_media(spark, n: int = 100):
+    """Deterministic fake media table matching MEDIA_SCHEMA (payload =
+    hash-derived bytes; exercises binary columns end-to-end)."""
+    kinds = ["image", "audio", "video"]
+    rows = []
+    for i in range(n):
+        kind = kinds[i % 3]
+        payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 7)
+        rows.append(
+            (
+                f"m{i:06d}",
+                kind,
+                bytearray(payload),
+                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+                64 + i % 512 if kind != "audio" else None,
+                64 + (i * 7) % 512 if kind != "audio" else None,
+                (1000 + i * 37) if kind != "image" else None,
+            )
+        )
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -42,11 +65,6 @@ def test_custom_decoder_plugs_in(spark, media):
     )
     row = feats.first()
     assert row["features"] == [0.0] * FEATURE_DIM
-
-
-def test_real_decoder_stub_raises():
-    with pytest.raises(NotImplementedError):
-        require_real_decoders()
 
 
 def test_media_dedup_by_content(spark):
@@ -101,21 +119,3 @@ def test_image_header_dims_pure():
     assert image_header_dims(b"not an image") == (None, None, None)
     assert image_header_dims(b"") == (None, None, None)
     assert image_header_dims(_png(1, 1)[:12]) == (None, None, None)  # truncated
-
-
-def test_image_metadata_distributed(spark):
-    from delm_spark.operators.multimodal import MEDIA_SCHEMA, image_metadata
-
-    rows = [
-        ("m1", "image", bytearray(_png(640, 480)), "image/png", None, None, None),
-        ("m2", "image", bytearray(_jpeg(320, 200)), "image/jpeg", None, None, None),
-        ("m3", "image", bytearray(_gif(5, 7)), "image/gif", None, None, None),
-        ("m4", "image", bytearray(b"garbage"), "image/png", None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: (r["format"], r["width"], r["height"])
-           for r in image_metadata(media).collect()}
-    assert got["m1"] == ("png", 640, 480)
-    assert got["m2"] == ("jpeg", 320, 200)
-    assert got["m3"] == ("gif", 5, 7)
-    assert got["m4"] == (None, None, None)

@@ -201,14 +201,15 @@ def test_residue_linking_is_one_arrow_pass(spark, tmp_path):
 #: extraction + embedding residue linking), counted by job group; the
 #: budgets are the measured counts. "read" is every
 #: StageRunner._read_stage call (no job: the stored schema is passed, so
-#: nothing is inferred), "other" what runs outside any stage (the
-#: canonical-map collect). s3_triples = dictionary-index collect,
-#: dictionary broadcast, write.
+#: nothing is inferred), "other" what runs outside any stage (the one
+#: dictionary snapshot collect; the canonical map and the residue index
+#: read that local snapshot without a job). s3_triples = dictionary
+#: broadcast, write.
 JOB_BUDGET = {
     "build": {
         "s1_chunks": 1,
         "s2_extracted": 4,
-        "s3_triples": 3,
+        "s3_triples": 2,
         "s4_edges": 2,
         "s5_nodes": 2,
         "read": 0,

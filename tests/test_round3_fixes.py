@@ -11,11 +11,12 @@ from pyspark.sql import functions as F
 
 from delm_spark.config import DelmConfig
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-from delm_spark.extraction.backend import CacheOnlyBackend, RuleTripleExtractor
+from delm_spark.extraction.backend import RuleTripleExtractor
 from delm_spark.extraction.cost import summarize_cost
 from delm_spark.extraction.extract import compact_cache, extract_chunks
 from delm_spark.kg.pipeline import score_and_filter
 from delm_spark.schemas.spec import spec_from_dict
+from tests.backends import CacheOnlyBackend
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
 
@@ -99,11 +100,9 @@ def test_canonical_map_null_rows_agree_across_paths(spark):
          ("acme corporation", "ent:acme")],
         "surface string, canonical_id string",
     )
-    driver = sorted(tuple(r) for r in canonical_map(d).collect())
-    distributed = sorted(tuple(r) for r in canonical_map(d, driver_cutoff=0).collect())
-    assert driver == distributed
-    assert all("None" not in n for n, _ in driver)
-    assert ("mention:acme corp", "ent:acme") in driver
+    rows = sorted(tuple(r) for r in canonical_map(d).collect())
+    assert all("None" not in n for n, _ in rows)
+    assert ("mention:acme corp", "ent:acme") in rows
 
 
 # ---------------------------------------------------------------------------
@@ -202,7 +201,7 @@ def test_cache_row_count_stays_at_distinct_keys(spark, tmp_path):
 
 
 def test_compact_cache_drops_stale_error_rows(spark, tmp_path):
-    from delm_spark.extraction.backend import FailingBackend
+    from tests.backends import FailingBackend
 
     cache = str(tmp_path / "cache")
     df = _chunk_df(spark, TEXTS[:2])

@@ -8,13 +8,14 @@ from __future__ import annotations
 import pytest
 
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-from delm_spark.extraction.backend import CacheOnlyBackend, RuleTripleExtractor
+from delm_spark.extraction.backend import RuleTripleExtractor
 from delm_spark.extraction.extract import (
     _count_run_partitions,
     _migrate_legacy_cache_layout,
     extract_chunks,
 )
 from delm_spark.schemas.spec import spec_from_dict
+from tests.backends import CacheOnlyBackend
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
 

@@ -7,14 +7,11 @@ from __future__ import annotations
 import pytest
 
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
-from delm_spark.extraction.backend import (
-    CacheOnlyBackend,
-    FailingBackend,
-    RuleTripleExtractor,
-)
+from delm_spark.extraction.backend import RuleTripleExtractor
 from delm_spark.extraction.extract import extract_chunks
 from delm_spark.extraction.sqlite_cache import SqliteSemanticCache
 from delm_spark.schemas.spec import spec_from_dict
+from tests.backends import CacheOnlyBackend, FailingBackend
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
 
