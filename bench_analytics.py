@@ -23,113 +23,81 @@ compare-to-self):
   occurrences cross-checked against an independent per-conversation
   count plan (sum of max(tool_turns - 1, 0)).
 
-Steal-gated like bench_cc/bench_graph; per-phase wall + event-log
-shuffle volume. Writes BENCH/ANALYTICS_SCALE.md, prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/ANALYTICS_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_analytics.py [--scale S]`.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_CLIQUES = int(os.environ.get("SPARK_GRAFT_AN_CLIQUES", "50000"))
+SCALE = bench_util.cli().scale
+N_CLIQUES = bench_util.scaled(50_000, SCALE)
 CLIQUE = 12
 N_NODES = N_CLIQUES * CLIQUE
 N_EDGES = N_CLIQUES * (CLIQUE * (CLIQUE - 1) // 2)
-N_VECS = int(os.environ.get("SPARK_GRAFT_AN_VECS", "1000000"))
+N_VECS = bench_util.scaled(1_000_000, SCALE)
 DIM = 16
-N_SKETCH_ROWS = int(os.environ.get("SPARK_GRAFT_AN_SKETCH", "20000000"))
-N_DISTINCT = 3_000_000
-N_CONVS = int(os.environ.get("SPARK_GRAFT_AN_CONVS", "200000"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_AN_ATTEMPTS", "3"))
-EDGES = f"/tmp/delm_an_edges_{N_CLIQUES}"
-VECS = f"/tmp/delm_an_vecs_{N_VECS}"
-TRANS = f"/tmp/delm_an_trans_{N_CONVS}"
-EVDIR = "/tmp/delm_an_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
+N_SKETCH_ROWS = bench_util.scaled(20_000_000, SCALE)
+N_DISTINCT = bench_util.scaled(3_000_000, SCALE)
+N_CONVS = bench_util.scaled(200_000, SCALE)
 
 
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from delm_spark.data.synthetic import generate_transcripts
     from delm_spark.kg.communities import label_propagation
     from delm_spark.kg.trajectory import tool_sequences
     from delm_spark.kg.walks import random_walks
     from delm_spark.operators.cluster import kmeans_cluster
     from delm_spark.operators.sketch import hll_cardinality, kmv_distinct
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-analytics-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
+    spark, evdir = bench_util.session("analytics")
 
     # ---- inputs, materialized once (untimed) -----------------------------
-    if not Path(EDGES, "_SUCCESS").exists():
+    def make_edges(spark):
         pairs = [(i, j) for i in range(CLIQUE) for j in range(i + 1, CLIQUE)]
         offs = F.array(
             *[F.struct(F.lit(i).alias("i"), F.lit(j).alias("j")) for i, j in pairs]
         )
-        (
-            spark.range(0, N_CLIQUES, 1, 64)
-            .select((F.col("id") * CLIQUE).alias("base"), F.explode(offs).alias("p"))
-            .select(
-                F.lpad((F.col("base") + F.col("p.i")).cast("string"), 7, "0").alias("src"),
-                F.lpad((F.col("base") + F.col("p.j")).cast("string"), 7, "0").alias("dst"),
-            )
-            .write.mode("overwrite")
-            .parquet(EDGES)
+        return spark.range(0, N_CLIQUES, 1, 64).select(
+            (F.col("id") * CLIQUE).alias("base"), F.explode(offs).alias("p")
+        ).select(
+            F.lpad((F.col("base") + F.col("p.i")).cast("string"), 7, "0").alias("src"),
+            F.lpad((F.col("base") + F.col("p.j")).cast("string"), 7, "0").alias("dst"),
         )
-    edges = spark.read.parquet(EDGES)
-    assert edges.count() == N_EDGES
 
-    if not Path(VECS, "_SUCCESS").exists():
+    edges, n = bench_util.corpus(spark, f"an_edges_{N_CLIQUES}", make_edges)
+    assert n == N_EDGES
+
+    def make_vecs(spark):
         # center c = vec_id % 8 at coordinate 100*c per dim, plus a small
         # deterministic jitter — clusters are trivially separable, which
         # keeps the DETERMINISM assertion the load-bearing one
-        (
-            spark.range(0, N_VECS, 1, 64)
-            .select(
-                F.col("id").alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(DIM - 1)),
-                    lambda d: (
-                        (F.col("id") % 8) * 100.0
-                        + ((F.col("id") * 31 + d) % 7) * 0.01
-                    ).cast("double"),
-                ).alias("embedding"),
-            )
-            .write.mode("overwrite")
-            .parquet(VECS)
+        return spark.range(0, N_VECS, 1, 64).select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                F.sequence(F.lit(0), F.lit(DIM - 1)),
+                lambda d: (
+                    (F.col("id") % 8) * 100.0
+                    + ((F.col("id") * 31 + d) % 7) * 0.01
+                ).cast("double"),
+            ).alias("embedding"),
         )
-    vecs = spark.read.parquet(VECS)
-    assert vecs.count() == N_VECS
 
-    if not Path(TRANS, "_SUCCESS").exists():
-        from delm_spark.data.synthetic import generate_transcripts
+    vecs, n = bench_util.corpus(spark, f"an_vecs_{N_VECS}", make_vecs)
+    assert n == N_VECS
 
-        generate_transcripts(spark, n_convs=N_CONVS).write.mode(
-            "overwrite"
-        ).parquet(TRANS)
-    trans = spark.read.parquet(TRANS)
-    n_turns = trans.count()
+    trans, n_turns = bench_util.corpus(
+        spark,
+        f"an_trans_{N_CONVS}",
+        lambda spark: generate_transcripts(spark, n_convs=N_CONVS),
+    )
 
     # ---- phases -----------------------------------------------------------
     def phase_lpa():
@@ -217,39 +185,8 @@ def main() -> None:
         ("tool_sequences_200k", phase_toolseq),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
-    summary = {
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
-    }
-    print(json.dumps(summary))
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
+    summary = {"cores": spark.sparkContext.defaultParallelism, **run}
 
     p = {r["phase"]: r for r in run["phases"]}
     rows = "\n".join(
@@ -267,8 +204,8 @@ def main() -> None:
     }
     md = f"""# BENCH — round-5 analytics family at scale
 
-Generated {date.today().isoformat()} by bench_analytics.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {"MET" if run["steal_pct"] <= STEAL_MAX else "NOT met — walls are upper bounds"}; best-attempt steal {run["steal_pct"]}%).
+Generated {date.today().isoformat()} by bench_analytics.py on local[{summary["cores"]}]
+(steal gate <= {bench_util.STEAL_GATE}%: {"MET" if run["steal_gate_met"] else "NOT met — walls are upper bounds"}; best-attempt steal {run["steal_pct"]}%).
 
 Inputs: {N_CLIQUES:,} disjoint {CLIQUE}-cliques ({N_NODES:,} nodes /
 {N_EDGES:,} edges), {N_VECS:,} {DIM}-dim vectors around 8 separable
@@ -311,8 +248,7 @@ map pass + bounded-register (256-row) / top-k (256-row) aggregations —
 the canonical mergeable shapes; tool-sequence mining is one conv_id
 exchange (window) + one combinable n-gram aggregation.
 """
-    Path("BENCH/ANALYTICS_SCALE.md").write_text(md)
-    spark.stop()
+    bench_util.report("ANALYTICS_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

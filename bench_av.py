@@ -19,34 +19,24 @@ stages run on every core, with every checked feature closed-form:
 - dedup: media_dedup_by_content over the audio corpus keeps exactly
   N_DISTINCT rows.
 
-Steal-gated like bench_graph.py; per-phase wall + event-log shuffle
-volume. Writes BENCH/AV_SCALE.md and prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/AV_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_av.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_WAV = int(os.environ.get("SPARK_GRAFT_AV_WAVS", "200000"))
-N_DISTINCT = int(os.environ.get("SPARK_GRAFT_AV_DISTINCT", "180000"))
-N_AVI = int(os.environ.get("SPARK_GRAFT_AV_AVIS", "20000"))
+SCALE = bench_util.cli().scale
+# a multiple of 1000: the amplitude probe samples every 1000th clip
+N_WAV = bench_util.scaled(200_000, SCALE, 1000)
+N_DISTINCT = bench_util.scaled(180_000, SCALE)
+N_AVI = bench_util.scaled(20_000, SCALE)
 WAV_SAMPLES = 1000
 AVI_FRAMES, AVI_W = 8, 16
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_AV_ATTEMPTS", "3"))
-WAVS = f"/tmp/delm_av_wavs_{N_WAV}_{N_DISTINCT}"
-AVIS = f"/tmp/delm_av_avis_{N_AVI}"
-EVDIR = "/tmp/delm_av_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
 
 
 def _wav_samples(v: int):
@@ -82,9 +72,9 @@ def make_wavs(spark):
                 }
             )
 
-    return spark.range(0, N_WAV, 1, CORES * 2).mapInPandas(
-        gen, schema="media_id string, content binary"
-    )
+    return spark.range(
+        0, N_WAV, 1, spark.sparkContext.defaultParallelism * 2
+    ).mapInPandas(gen, schema="media_id string, content binary")
 
 
 def make_avis(spark):
@@ -108,9 +98,9 @@ def make_avis(spark):
                 out.append((f"v{v:08d}", encode_avi(frames, fps=5)))
             yield pd.DataFrame(out, columns=["media_id", "content"])
 
-    return spark.range(0, N_AVI, 1, CORES * 2).mapInPandas(
-        gen, schema="media_id string, content binary"
-    )
+    return spark.range(
+        0, N_AVI, 1, spark.sparkContext.defaultParallelism * 2
+    ).mapInPandas(gen, schema="media_id string, content binary")
 
 
 def main() -> None:
@@ -122,26 +112,10 @@ def main() -> None:
         media_dedup_by_content,
         video_frame_stats,
     )
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-av-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
-    for path, maker in ((WAVS, make_wavs), (AVIS, make_avis)):
-        if not Path(path, "_SUCCESS").exists():
-            maker(spark).write.mode("overwrite").parquet(path)
-    wavs = spark.read.parquet(WAVS)
-    avis = spark.read.parquet(AVIS)
-    n_wav, n_avi = wavs.count(), avis.count()  # warm page cache
+    spark, evdir = bench_util.session("av")
+    wavs, n_wav = bench_util.corpus(spark, f"av_wavs_{N_WAV}_{N_DISTINCT}", make_wavs)
+    avis, n_avi = bench_util.corpus(spark, f"av_avis_{N_AVI}", make_avis)
     assert (n_wav, n_avi) == (N_WAV, N_AVI), (n_wav, n_avi)
 
     def phase_audio():
@@ -168,7 +142,7 @@ def main() -> None:
         for mid, got in probe.items():
             v = int(mid[1:]) % N_DISTINCT
             assert got == int(_wav_samples(v).astype(np.int64).sum()), mid
-        return {"clips": N_WAV, "clips_per_sec": None}
+        return {"clips": N_WAV}
 
     def phase_video():
         vf = video_frame_stats(avis, every_k=2)
@@ -207,57 +181,26 @@ def main() -> None:
         ("media_dedup_sha256", phase_dedup),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            if extra.get("clips_per_sec", 0) is None:
-                extra["clips_per_sec"] = round(extra["clips"] / wall, 1)
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        # keep the LOWEST-steal attempt: if every attempt exceeds the
-        # gate, publish the least-contended one and say the gate failed,
-        # never silently the last one
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)  # event-log flush
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
+    audio = run["phases"][0]
+    audio["clips_per_sec"] = round(audio["clips"] / audio["wall_sec"], 1)
+    cores = spark.sparkContext.defaultParallelism
     summary = {
         "n_wav": n_wav,
         "n_avi": n_avi,
         "n_distinct": N_DISTINCT,
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
+        "cores": cores,
+        **run,
     }
-    print(json.dumps(summary))
 
     rows = "\n".join(
         f"| {r['phase']} | {r['wall_sec']} | {r['shuffle_write_mb']} | {r['n_jobs']} |"
         for r in run["phases"]
     )
-    audio = next(r for r in run["phases"] if r["phase"] == "audio_decode_features")
     md = f"""# BENCH — multimodal decode at {n_wav:,} audio clips / {n_avi:,} videos
 
-Generated {date.today().isoformat()} by bench_av.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {'MET' if run['steal_pct'] <= STEAL_MAX else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_av.py on local[{cores}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
 
 Corpus: {n_wav:,} 1000-sample PCM WAV clips (~2 KB each; payloads repeat
 with period {N_DISTINCT:,}) and {n_avi:,} 8-frame 16x16 uncompressed-DIB
@@ -274,7 +217,7 @@ media_dedup_by_content).
 {rows}
 
 Audio decode throughput: **{audio['clips_per_sec']:,} clips/sec**
-({CORES} cores, RIFF parse + int16 feature pass per clip inside one
+({cores} cores, RIFF parse + int16 feature pass per clip inside one
 Arrow-batched mapInPandas stage).
 
 100-TB read: decode is embarrassingly parallel — both feature stages are
@@ -287,9 +230,7 @@ payloads. The dedup phase shuffles 32-byte sha256 keys + ids, never
 payload bytes, via the same WindowGroupLimit survivor pattern as
 exact_dedup_docs.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "AV_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("AV_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -13,38 +13,25 @@ Reports: iteration count (pointer jumping => O(log diameter); asserted
 per-iteration wall, shuffle write volume per iteration (event-log
 TaskEnd metrics), the num_partitions derivation, and a closed-form
 component census check (component count + exact size histogram + min-label
-invariant). Steal-gated like bench_dedup.py. Writes BENCH/CC_SCALE.md and
-prints ONE JSON line.
+invariant). Steal-gated with event-log attribution (bench_util). Writes
+BENCH/CC_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_cc.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_STAR_EDGES = int(os.environ.get("SPARK_GRAFT_CC_STAR_EDGES", "2500000"))
-N_CHAIN_EDGES = int(os.environ.get("SPARK_GRAFT_CC_CHAIN_EDGES", "2500000"))
+SCALE = bench_util.cli().scale
 SPOKES = 100          # star fan-in
 CHAIN_LEN = 64        # edges per chain (diameter 64)
 # whole components only — a trailing partial star/chain would break the
 # closed-form census
-N_STAR_EDGES -= N_STAR_EDGES % SPOKES
-N_CHAIN_EDGES -= N_CHAIN_EDGES % CHAIN_LEN
+N_STAR_EDGES = bench_util.scaled(2_500_000, SCALE, SPOKES)
+N_CHAIN_EDGES = bench_util.scaled(2_500_000, SCALE, CHAIN_LEN)
 CHAIN_BASE = 10**10   # id offset separating chain nodes from star nodes
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_CC_ATTEMPTS", "3"))
-EDGES = f"/tmp/delm_cc_edges_{N_STAR_EDGES}_{N_CHAIN_EDGES}"
-EVDIR = "/tmp/delm_cc_eventlog"
-
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
 
 
 def make_edges(spark):
@@ -70,68 +57,47 @@ def make_edges(spark):
     return stars.unionByName(chains)
 
 
-def shuffle_per_window(app_dir: Path, windows: list) -> list:
-    """Shuffle/task/job sums per wall window (bench_util event-log walk)."""
-    return [
-        {k: w[k] for k in ("shuffle_write_mb", "shuffle_records", "n_tasks", "n_jobs")}
-        for w in parse_task_windows(app_dir, windows)
-    ]
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
     from delm_spark.kg import canonicalize
     from delm_spark.kg.canonicalize import connected_components
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-cc-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
+    spark, evdir = bench_util.session("cc")
+    edges, n_edges = bench_util.corpus(
+        spark, f"cc_edges_{N_STAR_EDGES}_{N_CHAIN_EDGES}", make_edges
     )
-    spark.range(100_000).count()  # JIT warmup
-    if not Path(EDGES, "_SUCCESS").exists():
-        make_edges(spark).write.mode("overwrite").parquet(EDGES)
-    edges = spark.read.parquet(EDGES)
-    n_edges = edges.count()  # warm page cache
 
     n_stars = N_STAR_EDGES // SPOKES
     n_chains = N_CHAIN_EDGES // CHAIN_LEN
     expected_components = n_stars + n_chains
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        t0_ms = int(time.time() * 1000)
-        t0 = time.perf_counter()
-        cc = connected_components(edges, driver_cutoff=0)
-        n_nodes = cc.count()
-        wall = round(time.perf_counter() - t0, 2)
-        t1_ms = int(time.time() * 1000)
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {
-            "wall_sec": wall,
-            "steal_pct": st,
-            "n_nodes": n_nodes,
+    labels = {}
+
+    def phase_cc():
+        labels["cc"] = connected_components(edges, driver_cutoff=0)
+        return {
+            "n_nodes": labels["cc"].count(),
             "iterations": canonicalize.LAST_RUN_ITERATIONS,
             "iter_seconds": list(canonicalize.LAST_RUN_ITER_SECONDS),
-            "window": (t0_ms, t1_ms),
-            "labels": cc,
         }
-        # keep the LOWEST-steal attempt; never silently publish the last
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-    cc = run.pop("labels")
+
+    (attempt,), _ = bench_util.run_phases(
+        spark, evdir, [("connected_components", phase_cc)]
+    )
+    # the census below reads the last attempt's labels: every attempt
+    # labels the same graph deterministically
+    cc = labels["cc"]
+    phase = attempt["phases"][0]
+    run = {
+        "wall_sec": phase["wall_sec"],
+        "steal_pct": attempt["steal_pct"],
+        "steal_gate_met": attempt["steal_gate_met"],
+        **{k: phase[k] for k in ("n_nodes", "iterations", "iter_seconds")},
+    }
+    shuffle = {
+        k: phase[k] for k in ("shuffle_write_mb", "shuffle_records", "n_tasks", "n_jobs")
+    }
 
     # O(log diameter) evidence: plain propagation needs 64 rounds for the
     # chains; pointer jumping must land far under that
@@ -154,10 +120,6 @@ def main() -> None:
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     derived = max(1, min(width, 2 * n_edges // 1_000_000 + 1))
 
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)  # event-log flush
-    shuffle = shuffle_per_window(evdir, [run.pop("window")])[0]
-
     summary = {
         "n_edges": n_edges,
         "n_star_components": n_stars,
@@ -165,21 +127,19 @@ def main() -> None:
         "expected_components": expected_components,
         "census_ok": True,
         "num_partitions_derived": derived,
-        "cores": CORES,
+        "cores": spark.sparkContext.defaultParallelism,
         "run": run,
         "shuffle": shuffle,
         "edges_per_sec": round(n_edges / run["wall_sec"], 1),
     }
-    print(json.dumps(summary))
-
     iters = run["iter_seconds"]
     iter_rows = "\n".join(
         f"| {i + 1} | {s} |" for i, s in enumerate(iters)
     )
     md = f"""# BENCH — distributed connected components at {n_edges:,} edges
 
-Generated {date.today().isoformat()} by bench_cc.py on local[{CORES}]
-(steal-gated <= {STEAL_MAX}%; measured steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_cc.py on local[{summary['cores']}]
+(steal-gated <= {bench_util.STEAL_GATE}%; measured steal {run['steal_pct']}%).
 
 Graph: {n_stars:,} star components ({SPOKES} spokes per hub — fan-in
 skew) + {n_chains:,} chain components (diameter {CHAIN_LEN} — the shape
@@ -218,9 +178,7 @@ fan-in skew is absorbed by the groupBy partial aggregation (map-side
 combine of neighbor-min messages) — no single-key hotspot reaches the
 reduce side with more than its partial minima.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "CC_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("CC_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -19,34 +19,24 @@ this is the scale evidence point:
   and a deterministic whole-result fingerprint that must agree across
   attempts (hash-sum of every output row).
 
-Steal-gated like bench_graph.py; writes BENCH/COMPLETION_SCALE.md and
-prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/COMPLETION_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_completion.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-B = int(os.environ.get("SPARK_GRAFT_LP_BLOCKS", "40000"))  # 64-node blocks
+SCALE = bench_util.cli().scale
+B = bench_util.scaled(40_000, SCALE)  # 64-node blocks
 N_NODES = B * 64
 N_EDGES = B * (63 + 62)
-N_POS = int(os.environ.get("SPARK_GRAFT_NEG_POSITIVES", "2000000"))
+N_POS = bench_util.scaled(2_000_000, SCALE)
 N_ENT = 100_000
 K_NEG = 4
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_LP_ATTEMPTS", "3"))
-EDGES = f"/tmp/delm_graph_edges_{B}"  # shared with bench_graph.py
-POS = f"/tmp/delm_neg_positives_{N_POS}"
-
-from bench_util import steal_counters  # noqa: E402
 
 
 def make_edges(spark):
@@ -79,18 +69,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from delm_spark.kg.completion import link_prediction_scores, negative_samples
-    from delm_spark.session import get_spark
 
-    spark = get_spark(app_name="delm-completion-bench", cores=CORES)
-    spark.range(100_000).count()  # JIT warmup
-    if not Path(EDGES, "_SUCCESS").exists():
-        make_edges(spark).write.mode("overwrite").parquet(EDGES)
-    if not Path(POS, "_SUCCESS").exists():
-        make_positives(spark).write.mode("overwrite").parquet(POS)
-    edges = spark.read.parquet(EDGES)
-    pos = spark.read.parquet(POS)
-    assert edges.count() == N_EDGES
-    assert pos.count() == N_POS
+    spark, evdir = bench_util.session("completion")
+    # the edge corpus is bench_graph.py's
+    edges, n_edges = bench_util.corpus(spark, f"graph_edges_{B}", make_edges)
+    pos, n_pos = bench_util.corpus(spark, f"neg_positives_{N_POS}", make_positives)
+    assert n_edges == N_EDGES
+    assert n_pos == N_POS
 
     fingerprints = []
 
@@ -181,22 +166,7 @@ def main() -> None:
         ("link_prediction", phase_link_prediction),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results = []
-        for name, fn in phases:
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results}
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
 
     # determinism across attempts: the hash-drawn sample is a pure
     # function of the input
@@ -211,19 +181,18 @@ def main() -> None:
         "k": K_NEG,
         "n_entities": N_ENT,
         "n_edges": N_EDGES,
-        "cores": CORES,
+        "cores": spark.sparkContext.defaultParallelism,
         "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
+        "steal_gate_met": run["steal_gate_met"],
         "negatives_per_sec": neg_rate,
         "pairs_per_sec": lp_rate,
         "phases": run["phases"],
     }
-    print(json.dumps(summary))
 
     md = f"""# BENCH — KG completion at scale
 
-Generated {date.today().isoformat()} by bench_completion.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {'MET' if run['steal_pct'] <= STEAL_MAX else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_completion.py on local[{summary['cores']}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
 
 Same `kg/completion.py` operators as the oracle-checked queries
 (`negative_samples_kg`, `link_prediction_kg`); every assertion below ran
@@ -273,9 +242,7 @@ principled cut since 1/ln(deg) vanishes for super-hubs; per-neighbor
 terms are integer-quantized before the sum, so results are
 aggregation-order independent at any parallelism.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "COMPLETION_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("COMPLETION_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -25,33 +25,23 @@ phase shuffles for real, with every checked property closed-form:
   frac * n_s, and the kept-id checksum is identical when the input is
   repartitioned (membership is partitioning-independent).
 
-Steal-gated like bench_graph.py; per-phase wall + event-log shuffle
-volume. Writes BENCH/CURATION_SCALE.md and prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/CURATION_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_curation.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_CUR_DOCS", "1000000"))
+SCALE = bench_util.cli().scale
+N_DOCS = bench_util.scaled(1_000_000, SCALE)
 DOC_WORDS = 50
 VOCAB = 1000
 SPAM_MOD, CONTAM_MOD, NEEDLE_MOD = 53, 100, 1000  # 53 prime: plants never land on spam docs
 BENCH_PHRASE = " ".join(f"benchtok{i}" for i in range(8))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_CUR_ATTEMPTS", "3"))
-DOCS = f"/tmp/delm_cur_docs_{N_DOCS}"
-EVDIR = "/tmp/delm_cur_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
 
 
 def _doc_words(v: int) -> list:
@@ -85,7 +75,9 @@ def make_docs(spark):
                 }
             )
 
-    return spark.range(0, N_DOCS, 1, CORES * 2).mapInPandas(
+    return spark.range(
+        0, N_DOCS, 1, spark.sparkContext.defaultParallelism * 2
+    ).mapInPandas(
         gen, schema="doc_id long, text string, lang string"
     )
 
@@ -102,24 +94,9 @@ def main() -> None:
     )
     from delm_spark.operators.sample import stratified_sample
     from delm_spark.operators.search import bm25_topk
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-curation-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
-    if not Path(DOCS, "_SUCCESS").exists():
-        make_docs(spark).write.mode("overwrite").parquet(DOCS)
-    docs = spark.read.parquet(DOCS)
-    n = docs.count()  # warm page cache
+    spark, evdir = bench_util.session("curation")
+    docs, n = bench_util.corpus(spark, f"cur_docs_{N_DOCS}", make_docs)
     assert n == N_DOCS, n
 
     # the held-out "benchmark": 1k docs carrying the planted phrase plus
@@ -274,43 +251,8 @@ def main() -> None:
         ("stratified_sample_2x", phase_stratified),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        # keep the LOWEST-steal attempt: if every attempt exceeds the
-        # gate, publish the least-contended one and say the gate failed,
-        # never silently the last one
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)  # event-log flush
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
-    summary = {
-        "n_docs": N_DOCS,
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
-    }
-    print(json.dumps(summary))
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
+    summary = {"n_docs": N_DOCS, "cores": spark.sparkContext.defaultParallelism, **run}
 
     rows = "\n".join(
         f"| {r['phase']} | {r['wall_sec']} | {r['shuffle_write_mb']} | {r['n_jobs']} |"
@@ -319,8 +261,8 @@ def main() -> None:
     dec = next(r for r in run["phases"] if r["phase"].startswith("decontam"))
     md = f"""# BENCH — corpus curation at {N_DOCS:,} docs (~{N_DOCS * DOC_WORDS // 1_000_000}M tokens)
 
-Generated {date.today().isoformat()} by bench_curation.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {'MET' if run['steal_pct'] <= STEAL_MAX else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_curation.py on local[{summary['cores']}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
 
 Corpus: {N_DOCS:,} deterministic ~{DOC_WORDS}-word docs over a {VOCAB}-word
 vocabulary; 1-in-{SPAM_MOD} docs are a repeated two-word phrase (Gopher
@@ -347,9 +289,7 @@ shuffles words once to build the bounded vocabulary then broadcasts it
 per-row array filter, only per-(doc, matched-term) rows move);
 stratified sampling is a pure map-side filter — zero exchange.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "CURATION_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("CURATION_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

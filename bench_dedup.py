@@ -12,31 +12,22 @@ one-word-append mutation of id-1), then times
 
 reporting docs/sec per operator plus the LSH bucket-size distribution —
 the evidence that the equi-join buckets stay bounded (the property that
-makes the shuffle shape survive a 100x scale-up). Steal-gated like
-bench_scaling.py. Writes BENCH/DEDUP_SCALE.md and prints one JSON line.
+makes the shuffle shape survive a 100x scale-up). Steal-gated with
+event-log attribution (bench_util). Writes BENCH/DEDUP_SCALE.md at full
+scale; prints ONE JSON line. Usage: `python bench_dedup.py [--scale S]`.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_DEDUP_DOCS", "100000"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_DEDUP_ATTEMPTS", "4"))
-CORPUS = f"/tmp/delm_dedup_docs_{N_DOCS}"
+SCALE = bench_util.cli().scale
+N_DOCS = bench_util.scaled(100_000, SCALE)
 VOCAB = 2000
 WORDS_PER_DOC = 120
-
-
-from bench_util import steal_counters  # noqa: E402
 
 
 def make_corpus(spark):
@@ -67,47 +58,35 @@ def main() -> None:
         ngram_jaccard_pairs,
         simhash_dedup_pairs,
     )
-    from delm_spark.session import get_spark
 
-    spark = get_spark(app_name="delm-dedup-bench", cores=CORES)
-    spark.range(100_000).count()
-    if not Path(CORPUS, "_SUCCESS").exists():
-        make_corpus(spark).write.mode("overwrite").parquet(CORPUS)
-    docs = spark.read.parquet(CORPUS)
-    n = docs.count()  # warm page cache
-
-    def timed(name, fn, results):
-        for _ in range(MAX_ATTEMPTS):
-            spark.catalog.clearCache()
-            s0, c0 = steal_counters()
-            t0 = time.perf_counter()
-            out_count = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            s1, c1 = steal_counters()
-            st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-            if st <= STEAL_MAX:
-                results[name] = {
-                    "sec": wall,
-                    "docs_per_sec": round(n / wall, 1),
-                    "rows_out": out_count,
-                    "steal_pct": st,
-                }
-                return
-        results[name] = {"sec": None, "note": f"no run under {STEAL_MAX}% steal"}
-
-    results: dict = {}
-    timed("minhash_lsh_pairs", lambda: minhash_lsh_pairs(
-        docs, "text", "doc_id", k=16, bands=4).count(), results)
-    timed("simhash_pairs", lambda: simhash_dedup_pairs(
-        docs, "text", "doc_id", max_hamming=3).count(), results)
+    spark, evdir = bench_util.session("dedup")
+    docs, n = bench_util.corpus(spark, f"dedup_docs_{N_DOCS}", make_corpus)
 
     def near_dup():
         cand = minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4)
-        return ngram_jaccard_pairs(
+        return {"rows_out": ngram_jaccard_pairs(
             docs, "text", "doc_id", threshold=0.8, candidates=cand
-        ).count()
+        ).count()}
 
-    timed("near_dup_pipeline", near_dup, results)
+    phases = [
+        ("minhash_lsh_pairs", lambda: {"rows_out": minhash_lsh_pairs(
+            docs, "text", "doc_id", k=16, bands=4).count()}),
+        ("simhash_pairs", lambda: {"rows_out": simhash_dedup_pairs(
+            docs, "text", "doc_id", max_hamming=3).count()}),
+        ("near_dup_pipeline", near_dup),
+    ]
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
+    results: dict = {
+        r["phase"]: {
+            "sec": r["wall_sec"],
+            "docs_per_sec": round(n / r["wall_sec"], 1),
+            "rows_out": r["rows_out"],
+            "steal_pct": run["steal_pct"],
+            "shuffle_write_mb": r["shuffle_write_mb"],
+            "n_jobs": r["n_jobs"],
+        }
+        for r in run["phases"]
+    }
 
     # planted-recall check: pairs (i, i+1) for i%10==0 must be found
     cand = minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4)
@@ -143,14 +122,17 @@ def main() -> None:
         "candidate_pairs": int(hist["candidate_pairs"]),
     }
 
-    summary = {"n_docs": n, "cores": CORES, "results": results}
-    line = json.dumps(summary)
-    print(line)
+    summary = {
+        "n_docs": n,
+        "cores": spark.sparkContext.defaultParallelism,
+        "steal_gate_met": run["steal_gate_met"],
+        "results": results,
+    }
 
     md = f"""# BENCH — dedup family at {n:,} docs
 
-Generated {date.today().isoformat()} by bench_dedup.py on local[{CORES}]
-(steal-gated <= {STEAL_MAX}%). Corpus: deterministic hash-derived docs,
+Generated {date.today().isoformat()} by bench_dedup.py on local[{summary['cores']}]
+(steal-gated <= {bench_util.STEAL_GATE}%). Corpus: deterministic hash-derived docs,
 {WORDS_PER_DOC} words from a {VOCAB}-word vocab, 10% planted near-dup
 pairs (one-word mutation).
 
@@ -183,10 +165,7 @@ Raw JSON:
 {json.dumps(summary, indent=2)}
 ```
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "DEDUP_SCALE.md"
-    out.parent.mkdir(exist_ok=True)
-    out.write_text(md)
-    spark.stop()
+    bench_util.report("DEDUP_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

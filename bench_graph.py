@@ -14,32 +14,22 @@ answer closed-form:
   offset (64 equivalence classes across B blocks — asserted per offset)
 - triangles: exactly 62 * B
 
-Steal-gated like bench_cc.py; per-phase wall + event-log shuffle volume.
-Writes BENCH/GRAPH_SCALE.md and prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/GRAPH_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_graph.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-B = int(os.environ.get("SPARK_GRAFT_GRAPH_BLOCKS", "40000"))  # 64-node blocks
+SCALE = bench_util.cli().scale
+B = bench_util.scaled(40_000, SCALE)  # 64-node blocks
 N_NODES = B * 64
 N_EDGES = B * (63 + 62)
-KHOP_SEEDS = 1000
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_GRAPH_ATTEMPTS", "3"))
-EDGES = f"/tmp/delm_graph_edges_{B}"
-EVDIR = "/tmp/delm_graph_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
+KHOP_SEEDS = min(1000, B)  # one seed per block head
 
 
 def make_edges(spark):
@@ -64,24 +54,9 @@ def main() -> None:
         pagerank,
         triangle_count,
     )
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-graph-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
-    if not Path(EDGES, "_SUCCESS").exists():
-        make_edges(spark).write.mode("overwrite").parquet(EDGES)
-    edges = spark.read.parquet(EDGES)
-    n_edges = edges.count()  # warm page cache
+    spark, evdir = bench_util.session("graph")
+    edges, n_edges = bench_util.corpus(spark, f"graph_edges_{B}", make_edges)
     assert n_edges == N_EDGES, n_edges
 
     def phase_degree():
@@ -137,45 +112,14 @@ def main() -> None:
         ("triangles", phase_triangles),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        # keep the LOWEST-steal attempt: if every attempt exceeds the
-        # gate, publish the least-contended one and say the gate failed,
-        # never silently the last one
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)  # event-log flush
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
     summary = {
         "n_edges": n_edges,
         "n_nodes": N_NODES,
         "blocks": B,
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
+        "cores": spark.sparkContext.defaultParallelism,
+        **run,
     }
-    print(json.dumps(summary))
 
     rows = "\n".join(
         f"| {r['phase']} | {r['wall_sec']} | {r['shuffle_write_mb']} | {r['n_jobs']} |"
@@ -183,8 +127,8 @@ def main() -> None:
     )
     md = f"""# BENCH — graph analytics at {n_edges:,} edges / {N_NODES:,} nodes
 
-Generated {date.today().isoformat()} by bench_graph.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {'MET' if run['steal_pct'] <= STEAL_MAX else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_graph.py on local[{summary['cores']}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
 
 Graph: {B:,} independent 64-node blocks, each carrying a chain (i, i+1)
 and a skip (i, i+2) edge set — every phase's answer is closed-form and
@@ -210,9 +154,7 @@ wedges are generated at each edge's lower-(degree, id) endpoint, which
 bounds per-apex fan-out by arboricity — hub-skewed graphs cannot blow up
 the wedge count.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "GRAPH_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("GRAPH_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -14,26 +14,22 @@ bit-exactly (operators/jpeg_codec.py docstring). Format assignment is
 v % 4: 0=png, 1=gif, 2=jpeg (baseline), 3=bmp, with every 8th jpeg
 written progressive instead — both entropy modes under load.
 
-Steal-gated like bench_av.py; per-format wall + rows/s. Writes
-BENCH/IMAGE_SCALE.md and prints ONE JSON line.
+Steal-gated with event-log attribution (bench_util). Writes
+BENCH/IMAGE_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_images.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
+import collections
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_IMG = int(os.environ.get("SPARK_GRAFT_IMG_N", "48000"))
+SCALE = bench_util.cli().scale
+N_IMG = bench_util.scaled(48_000, SCALE)
 W = H = 32
 TILES = (H // 8) * (W // 8)
-
-from bench_util import steal_counters  # noqa: E402
 
 
 def expected_luma_sum(v: int) -> int:
@@ -80,43 +76,34 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from delm_spark.operators.multimodal import image_pixel_stats
-    from delm_spark.session import get_spark
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, evdir = bench_util.session("images")
+    media, n = bench_util.corpus(spark, f"img_corpus_{N_IMG}", make_images)
 
-    corpus = "/tmp/delm_img_corpus"
-    if not Path(corpus, "_SUCCESS").exists():
-        make_images(spark).write.mode("overwrite").parquet(corpus)
-    media = spark.read.parquet(corpus)
-    n = media.count()  # warm page cache
+    def phase_decode():
+        stats = image_pixel_stats(media.select("media_id", "v", "content"))
+        return {"by_format": (
+            stats.withColumn(
+                "luma_sum",
+                F.round(F.col("mean_luma").cast("double") * F.col("n_pixels")).cast(
+                    "long"
+                ),
+            )
+            .groupBy("format")
+            .agg(
+                F.count("*").alias("rows"),
+                F.sum("luma_sum").alias("luma_total"),
+                F.sum(F.col("n_pixels")).alias("px"),
+            )
+            .collect()
+        )}
 
-    s0, t0c = steal_counters()
-    t0 = time.perf_counter()
-    stats = image_pixel_stats(media.select("media_id", "v", "content"))
-    agg = (
-        stats.withColumn(
-            "luma_sum",
-            F.round(F.col("mean_luma").cast("double") * F.col("n_pixels")).cast(
-                "long"
-            ),
-        )
-        .groupBy("format")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum("luma_sum").alias("luma_total"),
-            F.sum(F.col("n_pixels")).alias("px"),
-        )
-        .collect()
-    )
-    wall = round(time.perf_counter() - t0, 1)
-    s1, t1c = steal_counters()
-    steal = round((s1 - s0) / max(t1c - t0c, 1) * 100, 1)
+    (run,), _ = bench_util.run_phases(spark, evdir, [("image_pixel_stats", phase_decode)])
+    phase = run["phases"][0]
+    wall, steal, agg = phase["wall_sec"], run["steal_pct"], phase["by_format"]
 
     by_fmt = {r["format"]: r for r in agg}
     # closed-form totals per format
-    import collections
-
     want = collections.Counter()
     want_rows = collections.Counter()
     fmt_of = {0: "png", 1: "gif", 2: "jpeg", 3: "bmp"}
@@ -136,17 +123,16 @@ def main() -> None:
         "wall_sec": wall,
         "images_per_sec": round(n / wall, 1),
         "steal_pct": steal,
+        "steal_gate_met": run["steal_gate_met"],
         "closed_form_luma_match": ok,
         "per_format_rows": {f: by_fmt[f]["rows"] for f in fmt_of.values()},
     }
-    report = Path("BENCH/IMAGE_SCALE.md")
-    report.write_text(
-        f"""# BENCH — image-codec decode at scale
+    md = f"""# BENCH — image-codec decode at scale
 
 Generated {date.today()} by bench_images.py. {n:,} 32x32 images
 (PNG / GIF / JPEG / BMP, round-robin by id; every 8th JPEG written
 progressive), all decoded by the pure-stdlib/numpy codecs inside ONE
-Arrow `image_pixel_stats` pass on local[{os.environ.get("SPARK_GRAFT_CPUS", "32")}].
+Arrow `image_pixel_stats` pass on local[{spark.sparkContext.defaultParallelism}].
 
 | images | wall s | images/s | steal% | closed-form luma match |
 |---|---|---|---|---|
@@ -164,9 +150,7 @@ the same `decoder` seam. The number that matters at 100 TB is that the
 stage is embarrassingly parallel — one Arrow batch per task, zero
 shuffle — so codec swap changes the constant, not the shape.
 """
-    )
-    print(json.dumps(result))
-    spark.stop()
+    bench_util.report("IMAGE_SCALE", result, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -21,37 +21,31 @@ reshuffled). Every check is closed-form:
 - 24k fresh docs must all come back is_dup=0 (zero shingle overlap
   means even a band collision cannot pass the Jaccard filter).
 
-Steal-gated; per-phase wall + event-log shuffle volume. Writes
-BENCH/INCR_DEDUP_SCALE.md and prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/INCR_DEDUP_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_incr.py [--scale S]` (S >= 0.04: the 1k mutation sources
+need a 20k-doc corpus).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
+import tempfile
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_CORPUS = int(os.environ.get("SPARK_GRAFT_INCR_CORPUS", "500000"))
-N_EXACT = int(os.environ.get("SPARK_GRAFT_INCR_EXACT", "25000"))
-N_MUT = 1000
-N_FRESH = int(os.environ.get("SPARK_GRAFT_INCR_FRESH", "24000"))
+SCALE = bench_util.cli().scale
+N_CORPUS = bench_util.scaled(500_000, SCALE)
+N_EXACT = bench_util.scaled(25_000, SCALE)
+N_MUT = 1000  # the >= 0.95 recall floor needs this many mutations
+N_FRESH = bench_util.scaled(24_000, SCALE)
 DOC_WORDS = 50
 P = 9_999_991
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_INCR_ATTEMPTS", "3"))
-CORPUS = f"/tmp/delm_incr_corpus_{N_CORPUS}"
-BATCH = f"/tmp/delm_incr_batch_{N_CORPUS}_{N_EXACT}_{N_FRESH}"
-INDEX_BANDS = f"/tmp/delm_incr_idx_bands_{N_CORPUS}"
-INDEX_SH = f"/tmp/delm_incr_idx_sh_{N_CORPUS}"
-EVDIR = "/tmp/delm_incr_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
+# exact copies of docs 10*j and mutations of docs 20*m+1 must exist
+if N_CORPUS < max(10 * N_EXACT, 20 * N_MUT):
+    raise SystemExit(f"--scale {SCALE}: a {N_CORPUS}-doc corpus is too small")
+INDEX_BANDS = f"{tempfile.gettempdir()}/delm_incr_idx_bands_{N_CORPUS}"
+INDEX_SH = f"{tempfile.gettempdir()}/delm_incr_idx_sh_{N_CORPUS}"
 
 
 def _words(d: int) -> list:
@@ -72,7 +66,8 @@ def _batch_text(j: int) -> tuple:
     return " ".join(_words(N_CORPUS + 1000 + j)), "fresh", -1  # disjoint ids
 
 
-def _writer(spark, n, path, fn):
+def _docs(n, fn):
+    """Corpus builder: `fn(id)` -> (doc_id, text, kind, src) for ids 0..n-1."""
     import pandas as pd
 
     def gen(batches):
@@ -80,39 +75,29 @@ def _writer(spark, n, path, fn):
             rows = [fn(int(v)) for v in pdf["id"].astype("int64")]
             yield pd.DataFrame(rows, columns=["doc_id", "text", "kind", "src"])
 
-    if not Path(path, "_SUCCESS").exists():
-        spark.range(0, n, 1, CORES * 2).mapInPandas(
-            gen, schema="doc_id long, text string, kind string, src long"
-        ).write.mode("overwrite").parquet(path)
+    return lambda spark: spark.range(
+        0, n, 1, spark.sparkContext.defaultParallelism * 2
+    ).mapInPandas(gen, schema="doc_id long, text string, kind string, src long")
 
 
 def main() -> None:
     from pyspark.sql import functions as F
 
     from delm_spark.operators.dedup import incremental_dedup, minhash_index
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-incr-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
-
-    _writer(
-        spark, N_CORPUS, CORPUS, lambda v: (v, " ".join(_words(v)), "corpus", -1)
+    spark, evdir = bench_util.session("incr")
+    corpus, n = bench_util.corpus(
+        spark,
+        f"incr_corpus_{N_CORPUS}",
+        _docs(N_CORPUS, lambda v: (v, " ".join(_words(v)), "corpus", -1)),
     )
     n_batch = N_EXACT + N_MUT + N_FRESH
-    _writer(spark, n_batch, BATCH, lambda j: (N_CORPUS + j, *_batch_text(j)))
-    corpus = spark.read.parquet(CORPUS)
-    batch = spark.read.parquet(BATCH)
-    assert corpus.count() == N_CORPUS and batch.count() == n_batch
+    batch, n_b = bench_util.corpus(
+        spark,
+        f"incr_batch_{N_CORPUS}_{N_EXACT}_{N_FRESH}",
+        _docs(n_batch, lambda j: (N_CORPUS + j, *_batch_text(j))),
+    )
+    assert n == N_CORPUS and n_b == n_batch
 
     def phase_index():
         bands_df, sh_df = minhash_index(corpus)
@@ -168,44 +153,13 @@ def main() -> None:
         ("batch_probe_50k", phase_probe),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        # keep the LOWEST-steal attempt: if every attempt exceeds the
-        # gate, publish the least-contended one and say the gate failed,
-        # never silently the last one
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
     summary = {
         "n_corpus": N_CORPUS,
         "n_batch": n_batch,
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
+        "cores": spark.sparkContext.defaultParallelism,
+        **run,
     }
-    print(json.dumps(summary))
 
     rows = "\n".join(
         f"| {r['phase']} | {r['wall_sec']} | {r['shuffle_write_mb']} | {r['n_jobs']} |"
@@ -214,8 +168,8 @@ def main() -> None:
     probe = next(r for r in run["phases"] if r["phase"].startswith("batch_probe"))
     md = f"""# BENCH — incremental dedup: {N_CORPUS:,}-doc index, {n_batch:,}-doc batch
 
-Generated {date.today().isoformat()} by bench_incr.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {'MET' if run['steal_pct'] <= STEAL_MAX else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_incr.py on local[{summary['cores']}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; best-attempt steal {run['steal_pct']}%).
 
 Corpus docs are pairwise shingle-disjoint by construction (quadratic
 (doc, position) word mixing — a shared 3-word run forces identical
@@ -241,9 +195,7 @@ table bucketed by `__bucket` makes the probe
 co-located on a real cluster; the exact-Jaccard re-rank touches only
 LSH survivors.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "INCR_DEDUP_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("INCR_DEDUP_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -21,37 +21,30 @@ assertion (no compare-to-self):
   objects, the first asserted 3x): exactly 1M 'current' rows, every one
   the support-3 object.
 
-Steal-gated like bench_cc/bench_analytics; per-phase wall + event-log
-shuffle volume. Writes BENCH/KGQUERY_SCALE.md, prints ONE JSON line.
+Per-phase wall and event-log attribution (bench_util). Writes
+BENCH/KGQUERY_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_kgquery.py [--scale S]` (S >= 0.01: 200 orgs, one per city).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
+import math
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_PERSONS = int(os.environ.get("SPARK_GRAFT_KQ_PERSONS", "1000000"))
-N_ORGS = int(os.environ.get("SPARK_GRAFT_KQ_ORGS", "20000"))
+SCALE = bench_util.cli().scale
+ORG_N = 50  # members per org
+# orgs in multiples of 8 keep N_PERSONS = 50 * N_ORGS a multiple of 16,
+# which the property-path gcd preconditions below need
+N_ORGS = bench_util.scaled(20_000, SCALE, 8)
+N_PERSONS = ORG_N * N_ORGS
 N_CITIES = 200
-N_NOISE = int(os.environ.get("SPARK_GRAFT_KQ_NOISE", "3000000"))
-N_PREDS = int(os.environ.get("SPARK_GRAFT_KQ_PREDS", "1000"))
-PAIRS_PER_PRED = int(os.environ.get("SPARK_GRAFT_KQ_PAIRS", "5000"))
-N_SUBJECTS = int(os.environ.get("SPARK_GRAFT_KQ_SUBJECTS", "1000000"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_KQ_ATTEMPTS", "3"))
-TRIPLES = f"/tmp/delm_kq_triples_{N_PERSONS}x{N_ORGS}x{N_NOISE}"
-ALIASED = f"/tmp/delm_kq_aliased_{N_PREDS}x{PAIRS_PER_PRED}"
-FACTS = f"/tmp/delm_kq_facts_{N_SUBJECTS}"
-EVDIR = "/tmp/delm_kq_eventlog"
-
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
+N_NOISE = 3 * N_PERSONS
+N_PREDS = 1000
+PAIRS_PER_PRED = bench_util.scaled(5000, SCALE)
+N_SUBJECTS = bench_util.scaled(1_000_000, SCALE)
 
 # the colleague closed form needs equal-size orgs
 assert N_PERSONS % N_ORGS == 0, "N_PERSONS must be a multiple of N_ORGS"
@@ -61,13 +54,10 @@ assert N_NOISE % N_PERSONS == 0, "N_NOISE must be a multiple of N_PERSONS"
 # ... and hop levels must never collide: a*s ≡ b (mod P) is solvable iff
 # gcd(a, P) | b, so f=f^2 (6s ≡ -13) and f=f^3 / f^2=f^3 (48s ≡ -104)
 # must be UNsolvable for the per-level census to be exactly P each
-import math  # noqa: E402
-
 assert 13 % math.gcd(6, N_PERSONS) != 0, "hop collision: 6s=-13 solvable"
 assert 104 % math.gcd(48, N_PERSONS) != 0, "hop collision: 48s=-104 solvable"
 # the typing census counts min(N_ORGS, N_CITIES) distinct cities
 assert N_ORGS >= N_CITIES, "need every city id realized"
-ORG_N = N_PERSONS // N_ORGS  # members per org
 EXPECT_COLLEAGUES = N_ORGS * (ORG_N * (ORG_N - 1) // 2)
 
 
@@ -77,23 +67,11 @@ def main() -> None:
     from delm_spark.kg.ontology import canonicalize_predicates
     from delm_spark.kg.query import match_pattern
     from delm_spark.kg.quality import resolve_functional
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR)
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name="delm-kgquery-bench",
-        cores=CORES,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.range(100_000).count()  # JIT warmup
+    spark, evdir = bench_util.session("kgquery")
 
     # ---- inputs, materialized once (untimed) -----------------------------
-    if not Path(TRIPLES, "_SUCCESS").exists():
+    def make_triples(spark):
         person = F.format_string("person%08d", F.col("id"))
         works = spark.range(0, N_PERSONS, 1, 64).select(
             person.alias("subj_id"),
@@ -116,17 +94,17 @@ def main() -> None:
                 "person%08d", (F.col("id") * 7 + 13) % N_PERSONS
             ).alias("obj_id"),
         )
-        works.unionByName(located).unionByName(noise).write.mode(
-            "overwrite"
-        ).parquet(TRIPLES)
-    triples = spark.read.parquet(TRIPLES)
-    n_triples = triples.count()
+        return works.unionByName(located).unionByName(noise)
+
+    triples, n_triples = bench_util.corpus(
+        spark, f"kq_triples_{N_PERSONS}x{N_ORGS}x{N_NOISE}", make_triples
+    )
     assert n_triples == N_PERSONS + N_ORGS + N_NOISE
 
-    if not Path(ALIASED, "_SUCCESS").exists():
+    def make_aliased(spark):
         # base predicate b asserts PAIRS_PER_PRED distinct (subj, obj)
         # pairs, EACH under both surface forms p<b> and p<b>_alt
-        (
+        return (
             spark.range(0, N_PREDS * PAIRS_PER_PRED, 1, 64)
             .select(
                 (F.col("id") % N_PREDS).alias("b"),
@@ -143,15 +121,16 @@ def main() -> None:
                     )
                 ).alias("pred"),
             )
-            .write.mode("overwrite")
-            .parquet(ALIASED)
         )
-    aliased = spark.read.parquet(ALIASED)
-    assert aliased.count() == 2 * N_PREDS * PAIRS_PER_PRED
 
-    if not Path(FACTS, "_SUCCESS").exists():
+    aliased, n = bench_util.corpus(
+        spark, f"kq_aliased_{N_PREDS}x{PAIRS_PER_PRED}", make_aliased
+    )
+    assert n == 2 * N_PREDS * PAIRS_PER_PRED
+
+    def make_facts(spark):
         # subject i: obj 0 asserted at turns 0,1,2; objs 1 and 2 once
-        (
+        return (
             spark.range(0, N_SUBJECTS, 1, 64)
             .select(
                 F.format_string("e%08d", F.col("id")).alias("subj_id"),
@@ -172,11 +151,10 @@ def main() -> None:
                 F.concat(F.lit("c-"), F.col("subj_id")).alias("conv_id"),
                 "turn_idx",
             )
-            .write.mode("overwrite")
-            .parquet(FACTS)
         )
-    facts = spark.read.parquet(FACTS)
-    assert facts.count() == 5 * N_SUBJECTS
+
+    facts, n = bench_util.corpus(spark, f"kq_facts_{N_SUBJECTS}", make_facts)
+    assert n == 5 * N_SUBJECTS
 
     # ---- phases -----------------------------------------------------------
     def phase_chain():
@@ -335,39 +313,8 @@ def main() -> None:
         ("property_path_3hop_3m", phase_path),
     ]
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        results, windows = [], []
-        for name, fn in phases:
-            t0_ms = int(time.time() * 1000)
-            t0 = time.perf_counter()
-            extra = fn()
-            wall = round(time.perf_counter() - t0, 2)
-            windows.append((t0_ms, int(time.time() * 1000)))
-            results.append({"phase": name, "wall_sec": wall, **extra})
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"steal_pct": st, "phases": results, "windows": windows}
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
-
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    time.sleep(2)
-    shuffles = parse_task_windows(evdir, run.pop("windows"))
-    for r, sh in zip(run["phases"], shuffles):
-        r["shuffle_write_mb"] = sh["shuffle_write_mb"]
-        r["n_jobs"] = sh["n_jobs"]
-
-    summary = {
-        "cores": CORES,
-        "steal_pct": run["steal_pct"],
-        "steal_gate_met": run["steal_pct"] <= STEAL_MAX,
-        "phases": run["phases"],
-    }
-    print(json.dumps(summary))
+    (run,), _ = bench_util.run_phases(spark, evdir, phases)
+    summary = {"cores": spark.sparkContext.defaultParallelism, **run}
 
     p = {r["phase"]: r for r in run["phases"]}
     rows = "\n".join(
@@ -394,8 +341,8 @@ def main() -> None:
     }
     md = f"""# BENCH — round-5 KG query family at scale
 
-Generated {date.today().isoformat()} by bench_kgquery.py on local[{CORES}]
-(steal gate <= {STEAL_MAX}%: {"MET" if run["steal_pct"] <= STEAL_MAX else "NOT met — walls are upper bounds"}; best-attempt steal {run["steal_pct"]}%).
+Generated {date.today().isoformat()} by bench_kgquery.py on local[{summary["cores"]}]
+(steal gate <= {bench_util.STEAL_GATE}%: {"MET" if run["steal_gate_met"] else "NOT met — walls are upper bounds"}; best-attempt steal {run["steal_pct"]}%).
 
 Inputs: {n_triples:,}-triple table ({N_PERSONS:,} works_at +
 {N_ORGS:,} located_in + {N_NOISE:,} noise-predicate triples the
@@ -460,8 +407,7 @@ the driver fast path). Functional resolution shuffles map-side-combined
 partials first and windows only the aggregated one-row-per-asserted-
 object frame.
 """
-    Path("BENCH/KGQUERY_SCALE.md").write_text(md)
-    spark.stop()
+    bench_util.report("KGQUERY_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -12,43 +12,30 @@ Mentions: 40% one-char-deleted dictionary surfaces (planted, recoverable),
 at the threshold). Reports wall, mentions/sec, planted recall/accuracy,
 noise link rate, and the histogram of the dictionary bucket index the
 kernel probes (candidate volume vs the 1e9-pair cross join the blocking
-avoids). Steal-gated like
-bench_dedup.py. Writes BENCH/LINK_SCALE.md and prints ONE JSON line.
+avoids). Steal-gated with event-log attribution (bench_util). Writes
+BENCH/LINK_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_link.py [--scale S]`.
 
 It also times `resolve_mention_residue`, the pipeline's residue pass,
-over the same mentions shaped as linked triples (`time_resolver`): that
-pass scores each surface once per task that holds it, so it reports how
-many (task, surface) pairs it scores per distinct surface.
+over the same mentions shaped as linked triples (`residue_triples`),
+after one untimed warm-up run: that pass scores each surface once per
+task that holds it, so it reports how many (task, surface) pairs it
+scores per distinct surface.
 """
 
 from __future__ import annotations
 
-import json
-import tempfile
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_DICT = int(os.environ.get("SPARK_GRAFT_LINK_DICT", "10000"))
-N_MENTIONS = int(os.environ.get("SPARK_GRAFT_LINK_MENTIONS", "100000"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_LINK_ATTEMPTS", "3"))
-DIM = int(os.environ.get("SPARK_GRAFT_LINK_DIM", "64"))
-PLANES = int(os.environ.get("SPARK_GRAFT_LINK_PLANES", "8"))
-RADIUS = int(os.environ.get("SPARK_GRAFT_LINK_RADIUS", "0"))
-BANDS = int(os.environ.get("SPARK_GRAFT_LINK_BANDS", "8"))
-THRESHOLD = float(os.environ.get("SPARK_GRAFT_LINK_THRESHOLD", "0.75"))
-VOCAB = int(os.environ.get("SPARK_GRAFT_LINK_VOCAB", "20000"))
+SCALE = bench_util.cli().scale
+N_DICT = bench_util.scaled(10_000, SCALE)
+N_MENTIONS = bench_util.scaled(100_000, SCALE)
+DIM, PLANES, RADIUS, BANDS, THRESHOLD = 64, 8, 0, 8, 0.75
+VOCAB = 20000
 #: triples of the resolver timing: ten per mention, so surfaces recur
 N_TRIPLES = 10 * N_MENTIONS
-
-
-from bench_util import steal_counters  # noqa: E402
 
 
 def make_tables(spark):
@@ -106,17 +93,15 @@ def make_tables(spark):
     )
 
 
-def time_resolver(spark, d, m) -> dict:
-    """`resolve_mention_residue` (default blocking and threshold) over
-    N_TRIPLES cached triples spread over 4 x defaultParallelism
-    partitions: subj_id is the `mention:` id of a hash-picked mention;
-    obj_id is one too in 6 rows of 10, an exact `ent:` id in 3 and null
-    in 1. Reports the best wall of two runs after a warm-up, the
-    resolved residue ids, and `repeat`: the distinct (task, surface)
-    pairs of the resolver's tasks over the distinct residue surfaces."""
+def residue_triples(spark, d, m):
+    """N_TRIPLES cached triples for `resolve_mention_residue`, spread over
+    4 x defaultParallelism partitions: subj_id is the `mention:` id of a
+    hash-picked mention; obj_id is one too in 6 rows of 10, an exact
+    `ent:` id in 3 and null in 1. Returns (triples, mention-id column,
+    facts): the residue ids and surfaces, and `repeat`: the distinct
+    (task, surface) pairs of the resolver's tasks over the distinct
+    residue surfaces."""
     from pyspark.sql import functions as F
-
-    from delm_spark.kg.linking import resolve_mention_residue
 
     sc = spark.sparkContext
     n_m = m.count()
@@ -158,17 +143,9 @@ def time_resolver(spark, d, m) -> dict:
         .distinct()
         .count()
     )
-    walls = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        left = resolve_mention_residue(tri, d).select(mid).filter(residue).count()
-        walls.append(round(time.perf_counter() - t0, 2))
-    tri.unpersist()
-    return {
+    return tri, mid, {
         "n_triples": N_TRIPLES,
-        "wall_sec": min(walls[1:]),
         "residue_ids": n_ids,
-        "resolved_ids": n_ids - left,
         "residue_surfaces": distinct,
         "repeat": round(pairs / distinct, 2),
     }
@@ -177,27 +154,21 @@ def time_resolver(spark, d, m) -> dict:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from delm_spark.kg.linking import _dictionary_index, embedding_link_candidates
-    from delm_spark.session import get_spark
+    from delm_spark.kg.linking import (
+        _dictionary_index,
+        embedding_link_candidates,
+        resolve_mention_residue,
+    )
 
-    spark = get_spark(app_name="delm-link-bench", cores=CORES)
-    spark.range(100_000).count()
-    dict_path = f"{tempfile.gettempdir()}/delm_link_dict_{N_DICT}_v{VOCAB}"
-    men_path = f"{tempfile.gettempdir()}/delm_link_mentions_{N_MENTIONS}_v{VOCAB}"
-    if not (
-        Path(dict_path, "_SUCCESS").exists() and Path(men_path, "_SUCCESS").exists()
-    ):
-        d, m = make_tables(spark)
-        d.write.mode("overwrite").parquet(dict_path)
-        m.write.mode("overwrite").parquet(men_path)
-    d = spark.read.parquet(dict_path)
-    m = spark.read.parquet(men_path)
-    n_dict, n_mentions = d.count(), m.count()
+    spark, evdir = bench_util.session("link")
+    d, n_dict = bench_util.corpus(
+        spark, f"link_dict_{N_DICT}_v{VOCAB}", lambda spark: make_tables(spark)[0]
+    )
+    m, n_mentions = bench_util.corpus(
+        spark, f"link_mentions_{N_MENTIONS}_v{VOCAB}", lambda spark: make_tables(spark)[1]
+    )
 
-    run = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, c0 = steal_counters()
-        t0 = time.perf_counter()
+    def phase_link():
         cands = embedding_link_candidates(
             m, d, dim=DIM, n_planes=PLANES, probe_radius=RADIUS,
             threshold=THRESHOLD, bands=BANDS,
@@ -212,19 +183,30 @@ def main() -> None:
             )
             .collect()
         )
-        wall = round(time.perf_counter() - t0, 2)
-        s1, c1 = steal_counters()
-        st = round((s1 - s0) / max(c1 - c0, 1) * 100, 1)
-        attempt = {"wall_sec": wall, "steal_pct": st,
-                   "by_kind": {r["kind"]: (r["linked"], r["correct"]) for r in agg}}
-        # keep the LOWEST-steal attempt; never silently publish the last
-        if run is None or st < run["steal_pct"]:
-            run = attempt
-        if st <= STEAL_MAX:
-            break
+        return {"by_kind": {r["kind"]: (r["linked"], r["correct"]) for r in agg}}
+
+    tri, mid, resolver = residue_triples(spark, d, m)
+
+    def phase_resolver():
+        residue = resolve_mention_residue(tri, d).select(mid)
+        left = residue.filter(F.col("mid").startswith("mention:")).count()
+        return {"resolved_ids": resolver["residue_ids"] - left}
+
+    phase_resolver()  # warm-up (untimed)
+    (attempt,), _ = bench_util.run_phases(
+        spark, evdir, [("link_candidates", phase_link), ("residue_resolver", phase_resolver)]
+    )
+    tri.unpersist()
+    link, res = attempt["phases"]
+    run = {
+        "wall_sec": link["wall_sec"],
+        "steal_pct": attempt["steal_pct"],
+        "steal_gate_met": attempt["steal_gate_met"],
+        "by_kind": link["by_kind"],
+    }
+    resolver.update(wall_sec=res["wall_sec"], resolved_ids=res["resolved_ids"])
 
     totals = {r: int(c) for r, c in m.groupBy("kind").count().collect()}
-    resolver = time_resolver(spark, d, m)
     bk = run["by_kind"]
     typo_recall = bk.get("typo", (0, 0))[1] / max(totals.get("typo", 1), 1)
     exact_acc = bk.get("exact", (0, 0))[1] / max(totals.get("exact", 1), 1)
@@ -246,7 +228,7 @@ def main() -> None:
     summary = {
         "n_dict": n_dict,
         "n_mentions": n_mentions,
-        "cores": CORES,
+        "cores": spark.sparkContext.defaultParallelism,
         "run": run,
         "mentions_per_sec": round(n_mentions / run["wall_sec"], 1),
         "typo_recall": round(typo_recall, 4),
@@ -258,14 +240,13 @@ def main() -> None:
         "cross_join_avoided_pairs": n_dict * n_mentions,
         "resolver": resolver,
     }
-    print(json.dumps(summary))
 
     from delm_spark.kg.linking import _MENTION_BLOCK as _MB
 
     md = f"""# BENCH — embedding-blocked entity linking at scale
 
-Generated {date.today().isoformat()} by bench_link.py on local[{CORES}]
-(steal-gated <= {STEAL_MAX}%; measured {run['steal_pct']}%).
+Generated {date.today().isoformat()} by bench_link.py on local[{summary['cores']}]
+(steal-gated <= {bench_util.STEAL_GATE}%; measured {run['steal_pct']}%).
 
 {n_mentions:,} DISTINCT mention surfaces vs a {n_dict:,}-entity
 dictionary (dim={DIM} trigram-hash embeddings, {PLANES} hyperplanes,
@@ -341,12 +322,10 @@ The residue resolver runs the same kernel inside one projection over
 the triples, with no shuffle: each task scores the surfaces it holds
 once, so a surface recurring across tasks is scored once per task
 ("scorings per surface" above, at most the default parallelism of
-{CORES}). That repeat is work the candidate search's global distinct
+{summary['cores']}). That repeat is work the candidate search's global distinct
 does not do; it grows with the task count, not with the vocabulary.
 """
-    out = Path(__file__).resolve().parent / "BENCH" / "LINK_SCALE.md"
-    out.write_text(md)
-    print(f"wrote {out}", file=sys.stderr)
+    bench_util.report("LINK_SCALE", summary, md, SCALE == 1)
 
 
 if __name__ == "__main__":

@@ -12,30 +12,25 @@ rank-1 is the query itself (cosine 1.0) WHENEVER it survives the ADC
 candidate cut, so the self-hit rate is a direct recall diagnostic — a
 0.8 floor is asserted and the exact rate reported.
 
-Steal-gated like the other bench harnesses. Writes BENCH/PQ_SCALE.md and
-prints ONE JSON line.
+Steal-gated with event-log attribution (bench_util). Writes
+BENCH/PQ_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_pq.py [--scale S]`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
+import tempfile
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_VECS = int(os.environ.get("SPARK_GRAFT_PQ_VECS", "1000000"))
+SCALE = bench_util.cli().scale
+N_QUERIES = 100
+# a multiple of N_QUERIES: every (N_VECS / N_QUERIES)-th vector is a query
+N_VECS = bench_util.scaled(1_000_000, SCALE, N_QUERIES)
 DIM = 64
 M, K_CODES, TOPK, REFINE = 8, 64, 10, 16
-N_QUERIES = 100
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-VECS = f"/tmp/delm_pq_vecs_{N_VECS}"
-
-from bench_util import steal_counters  # noqa: E402
+ENCODED = f"{tempfile.gettempdir()}/delm_pq_encoded"
 
 
 def make_vecs(spark):
@@ -55,32 +50,11 @@ def make_vecs(spark):
             v = centers[ids % 65536] + 0.25 * noise
             yield pd.DataFrame({"vec_id": ids, "embedding": list(v)})
 
-    return spark.range(0, N_VECS, 1, CORES * 4).mapInPandas(
+    return spark.range(
+        0, N_VECS, 1, spark.sparkContext.defaultParallelism * 4
+    ).mapInPandas(
         gen, schema="vec_id long, embedding array<double>"
     )
-
-
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_PQ_ATTEMPTS", "3"))
-
-
-def _timed(fn):
-    """Run a phase steal-gated, retrying up to MAX_ATTEMPTS when the VM
-    was contended during its window (host steal fluctuates minute to
-    minute; a several-minute train phase often straddles a spike). The
-    LOWEST-steal attempt is kept — never silently the last."""
-    best = None
-    for _ in range(MAX_ATTEMPTS):
-        s0, t0c = steal_counters()
-        t0 = time.perf_counter()
-        out = fn()
-        wall = round(time.perf_counter() - t0, 1)
-        s1, t1c = steal_counters()
-        steal = round((s1 - s0) / max(t1c - t0c, 1) * 100, 1)
-        if best is None or steal < best[2]:
-            best = (out, wall, steal)
-        if steal <= STEAL_MAX:
-            break
-    return best
 
 
 def main() -> None:
@@ -93,45 +67,53 @@ def main() -> None:
         pq_train,
     )
     from delm_spark.operators.similarity import brute_force_topk
-    from delm_spark.session import get_spark
 
-    spark = get_spark(app_name="delm-pq-bench", cores=CORES)
-    spark.range(100_000).count()
-    if not Path(VECS, "_SUCCESS").exists():
-        make_vecs(spark).write.mode("overwrite").parquet(VECS)
-    emb = spark.read.parquet(VECS)
-    n = emb.count()
+    spark, evdir = bench_util.session("pq")
+    emb, n = bench_util.corpus(spark, f"pq_vecs_{N_VECS}", make_vecs)
     assert n == N_VECS, n
     queries = emb.filter(F.col("vec_id") % (N_VECS // N_QUERIES) == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    state = {}
 
     # --- train (Lloyd refinement) -------------------------------------------
     def train():
-        return pq_train(emb, M, K_CODES, iters=3, dim=DIM)
-
-    books, train_wall, train_steal = _timed(train)
+        state["books"] = pq_train(emb, M, K_CODES, iters=3, dim=DIM)
+        return {}
 
     # --- encode (ingest-time, once) ------------------------------------------
     # the persisted PACKED table (one row per vector, m codes) is what
     # queries scan — encode cost is ingest, not query
     def encode():
-        enc = pq_encode_fast(emb, books, M, dim=DIM, packed=True)
-        enc.write.mode("overwrite").parquet("/tmp/delm_pq_encoded")
-        return spark.read.parquet("/tmp/delm_pq_encoded").count()
-
-    n_enc, enc_wall, enc_steal = _timed(encode)
-    assert n_enc == N_VECS, n_enc
-    enc_table = spark.read.parquet("/tmp/delm_pq_encoded")
+        enc = pq_encode_fast(emb, state["books"], M, dim=DIM, packed=True)
+        enc.write.mode("overwrite").parquet(ENCODED)
+        return {"n_enc": spark.read.parquet(ENCODED).count()}
 
     # --- PQ query (trained books, precomputed codes) --------------------------
     def pq_query():
-        return pq_topk(
+        state["pq_rows"] = pq_topk(
             emb, queries, m=M, k_codes=K_CODES, k=TOPK, refine=REFINE,
-            dim=DIM, codebooks=books, encoded_packed=enc_table,
+            dim=DIM, codebooks=state["books"],
+            encoded_packed=spark.read.parquet(ENCODED),
         ).collect()
+        return {}
 
-    pq_rows, pq_wall, pq_steal = _timed(pq_query)
+    # --- exact ground truth ----------------------------------------------------
+    def exact_query():
+        state["bf_rows"] = brute_force_topk(emb, queries, k=TOPK).select(
+            "query_id", "vec_id", "rank"
+        ).collect()
+        return {}
+
+    (run,), _ = bench_util.run_phases(
+        spark,
+        evdir,
+        [("train", train), ("encode", encode), ("pq", pq_query), ("bf", exact_query)],
+    )
+    walls = {p["phase"]: p["wall_sec"] for p in run["phases"]}
+    pq_rows, bf_rows = state["pq_rows"], state["bf_rows"]
+    n_enc = run["phases"][1]["n_enc"]
+    assert n_enc == N_VECS, n_enc
     assert len(pq_rows) == N_QUERIES * TOPK, len(pq_rows)
     self_hits = sum(
         1 for r in pq_rows if r["rank"] == 1 and r["vec_id"] == r["query_id"]
@@ -143,14 +125,6 @@ def main() -> None:
     # equality, is the honest assertion; the rate is reported.
     self_rate = self_hits / N_QUERIES
     assert self_rate >= 0.8, self_hits
-
-    # --- exact ground truth ----------------------------------------------------
-    def exact_query():
-        return brute_force_topk(emb, queries, k=TOPK).select(
-            "query_id", "vec_id", "rank"
-        ).collect()
-
-    bf_rows, bf_wall, bf_steal = _timed(exact_query)
 
     # --- untrained baseline (sampled codebooks, same refine) -----------------
     raw_rows = pq_topk(
@@ -177,42 +151,37 @@ def main() -> None:
     # monotonically improve ADC *recall* on a strongly clustered corpus —
     # both variants are reported, neither is asserted above the other.
 
-    # never publish a contended phase as gated
-    for name, st in (("train", train_steal), ("encode", enc_steal),
-                     ("pq", pq_steal), ("bf", bf_steal)):
-        assert st <= STEAL_MAX, f"{name} phase exceeded the steal gate: {st}"
     raw_bytes = N_VECS * DIM * 8
     pq_bytes = N_VECS * M  # one uint8-sized code per subspace
     out = {
         "metric": "pq_bench",
         "n_vecs": N_VECS,
-        "train_wall_sec": train_wall,
-        "train_steal_pct": train_steal,
-        "encode_wall_sec": enc_wall,
-        "encode_steal_pct": enc_steal,
-        "encode_vecs_per_sec": round(N_VECS / enc_wall, 1),
-        "pq_query_wall_sec": pq_wall,
-        "pq_steal_pct": pq_steal,
-        "bf_query_wall_sec": bf_wall,
-        "bf_steal_pct": bf_steal,
+        "cores": spark.sparkContext.defaultParallelism,
+        "steal_pct": run["steal_pct"],
+        "steal_gate_met": run["steal_gate_met"],
+        "train_wall_sec": walls["train"],
+        "encode_wall_sec": walls["encode"],
+        "encode_vecs_per_sec": round(N_VECS / walls["encode"], 1),
+        "pq_query_wall_sec": walls["pq"],
+        "bf_query_wall_sec": walls["bf"],
         "recall_at_10": round(recall, 4),
         "recall_at_10_untrained": round(recall_raw, 4),
         "self_hit_rate": round(self_rate, 2),
         "compression_x": round(raw_bytes / pq_bytes, 1),
-        "pq_speedup_vs_bf_x": round(bf_wall / pq_wall, 2),
+        "pq_speedup_vs_bf_x": round(walls["bf"] / walls["pq"], 2),
     }
     md = f"""# BENCH — PQ-ADC ANN at 1M vectors
 
-Generated {date.today().isoformat()} by bench_pq.py on local[{CORES}]
-(steal-gated <= {STEAL_MAX}%; per-phase steal shown). m={M} subspaces,
-{K_CODES} codes each, refine={REFINE}x over top-{TOPK}.
+Generated {date.today().isoformat()} by bench_pq.py on local[{out['cores']}]
+(steal gate <= {bench_util.STEAL_GATE}%: {'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'};
+steal over the four phases {run['steal_pct']}%). m={M} subspaces, {K_CODES} codes each, refine={REFINE}x over top-{TOPK}.
 
-| phase | wall s | steal % | note |
-|---|---|---|---|
-| train (3 Lloyd iters) | {train_wall} | {train_steal} | assignment = fast encode, update = one groupBy mean per iter |
-| encode {N_VECS:,} vecs (INGEST, once) | {enc_wall} | {enc_steal} | {out['encode_vecs_per_sec']:,} vecs/s, packed one-row-per-vector table persisted |
-| PQ query ({N_QUERIES} queries, scans codes table) | {pq_wall} | {pq_steal} | unrolled native ADC fold over the broadcast dtab + {REFINE * TOPK}-candidate exact re-rank; {out['pq_speedup_vs_bf_x']}x faster than brute force |
-| brute force (ground truth) | {bf_wall} | {bf_steal} | {N_QUERIES} x {N_VECS:,} exact cosines |
+| phase | wall s | note |
+|---|---|---|
+| train (3 Lloyd iters) | {walls['train']} | assignment = fast encode, update = one groupBy mean per iter |
+| encode {N_VECS:,} vecs (INGEST, once) | {walls['encode']} | {out['encode_vecs_per_sec']:,} vecs/s, packed one-row-per-vector table persisted |
+| PQ query ({N_QUERIES} queries, scans codes table) | {walls['pq']} | unrolled native ADC fold over the broadcast dtab + {REFINE * TOPK}-candidate exact re-rank; {out['pq_speedup_vs_bf_x']}x faster than brute force |
+| brute force (ground truth) | {walls['bf']} | {N_QUERIES} x {N_VECS:,} exact cosines |
 
 Round-5 query shape (VERDICT r4 Performance #3): the r4 plan joined the
 m-rows-per-vector encode against a per-(query, subspace, code) table and
@@ -234,9 +203,7 @@ The encoded table is what a 100 TB deployment scans: {M} bytes/vector
 instead of {DIM * 8}, with the exact re-rank touching only
 refine*k = {REFINE * TOPK} raw vectors per query (an id-equi join).
 """
-    Path("BENCH/PQ_SCALE.md").write_text(md)
-    print(json.dumps(out))
-    spark.stop()
+    bench_util.report("PQ_SCALE", out, md, SCALE == 1)
 
 
 if __name__ == "__main__":

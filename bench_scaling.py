@@ -1,131 +1,131 @@
 #!/usr/bin/env python
 """Scaling-efficiency evidence: run the KG pipeline at two parallelism
-levels (local[4] vs local[16] by default — an N vs 4N pair that stays
-below this box's ~16-core memory-bandwidth saturation knee, so it models
-the north rule's add-executors regime where each executor brings its own
-memory channels; see BENCH/BASELINE.md's round-5 two-pair account. The
-saturated-socket pair is reachable via SPARK_GRAFT_SCALE_LOW=8
-SPARK_GRAFT_SCALE_HIGH=32) on the same materialized input and report
-throughput at both plus efficiency = (thr_high / thr_low) / (high / low).
+levels on the same materialized input and report throughput at both plus
+efficiency = (thr_high / thr_low) / (cores_high / cores_low).
 
-Methodology (results written to BENCH/BASELINE.md):
-  * STEAL-GATED acceptance: this Firecracker VM shows 0-35% host CPU steal
-    fluctuating minute to minute; a run only counts if its interval steal
-    is <= SPARK_GRAFT_STEAL_MAX (default 6%). Up to MAX_ATTEMPTS runs per
-    level until RUNS accepted.
+A level is a Spark master. The default pair, local[4] vs local[16], is an
+N vs 4N pair that stays below this box's ~16-core memory-bandwidth
+saturation knee, so it models the north rule's add-executors regime where
+each executor brings its own memory channels; see BENCH/BASELINE.md's
+round-5 two-pair account. The saturated-socket pair is
+`--levels 'local[8]' 'local[32]'`; the executor-ISOLATED pair is
+`--levels 'local-cluster[1,8,12288]' 'local-cluster[4,8,12288]'`:
+separate executor JVMs with their OWN heaps, GC and Python worker pools,
+the closest in-sandbox analog of the N -> 4N EXECUTOR regime (local[N]
+shares one JVM heap, so its scaling residual conflates plan behavior with
+single-heap GC). Each level runs in a fresh subprocess (a JVM cannot
+change master mid-session).
+
+Methodology (results written to BENCH/BASELINE.md at full scale with the
+default levels):
+  * STEAL-GATED acceptance: a run counts only if its interval steal is
+    <= STEAL_GATE (stricter than the other scale scripts); bench_util's
+    attempt loop runs until RUNS are accepted.
   * Best-of-accepted wall time per level.
   * Event-log task-time decomposition: every run's window is matched
     against SparkListenerTaskEnd events, giving the distributed work
     (executor run/CPU/GC seconds, task and job counts) behind each wall
     time — wall ~= cpu_sec / cores + overhead, itemizing what does not
     scale (driver/scheduler time, GC, steal).
+
+Usage: `python bench_scaling.py [--scale S] [--levels LOW HIGH]`.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import os
+import re
 import subprocess
 import sys
 import time
 from datetime import date
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent
-N_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "3200000"))
-RUNS = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_SCALE_ATTEMPTS", "7"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "6"))
-LOW = int(os.environ.get("SPARK_GRAFT_SCALE_LOW", "4"))
-HIGH = int(os.environ.get("SPARK_GRAFT_SCALE_HIGH", "16"))
+import bench_util
+
+DEFAULT_LEVELS = ["local[4]", "local[16]"]
+parser = argparse.ArgumentParser()
+parser.add_argument(
+    "--levels",
+    nargs=2,
+    default=DEFAULT_LEVELS,
+    metavar="MASTER",
+    help="the low and high Spark masters (default: local[4] local[16])",
+)
+parser.add_argument("--child", metavar="MASTER", help=argparse.SUPPRESS)
+ARGS = bench_util.cli(parser)
+N_CONVS = bench_util.scaled(3_200_000, ARGS.scale)
+RUNS = 3
+STEAL_GATE = 6.0
 #: corpus written as 256 files and scanned with 4m splits -> ~256 map
 #: tasks: 8 waves at 32 cores, so a straggler (hot conversation) costs a
 #: fraction of a wave, not half the run (66 tasks = 2 waves measured a
 #: 60s max task bounding the 32-core wall)
-N_FILES = int(os.environ.get("SPARK_GRAFT_SCALE_FILES", "256"))
-CORPUS = f"/tmp/delm_scaling_transcripts_{N_CONVS}_p{N_FILES}"
-EVDIR = "/tmp/delm_scaling_eventlogs"
+N_FILES = 256
 
 
-from bench_util import parse_task_windows, steal_counters  # noqa: E402
+def cores(master: str) -> int:
+    """Task slots of a `local[N]` or `local-cluster[execs,cores,mem]` master."""
+    m = re.fullmatch(
+        r"local\[(\d+)\]|local-cluster\[(\d+),\s*(\d+),\s*\d+\]", master
+    )
+    if m is None:
+        raise SystemExit(f"unsupported level {master!r}")
+    return int(m[1]) if m[1] else int(m[2]) * int(m[3])
 
 
-def parse_event_log(app_dir: Path, windows: list) -> list:
-    """Thin wrapper over bench_util.parse_task_windows keeping this
-    report's historical field subset."""
-    return [
-        {k: w[k] for k in ("task_sec", "cpu_sec", "gc_sec", "n_tasks", "n_jobs")}
-        for w in parse_task_windows(app_dir, windows)
-    ]
-
-
-def run_level(cores: int) -> dict:
-    sys.path.insert(0, str(REPO))
+def run_level(master: str) -> dict:
     from delm_spark.data.synthetic import entity_dictionary, generate_transcripts
     from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-    from delm_spark.session import get_spark
 
-    evdir = Path(EVDIR) / f"cores{cores}"
-    evdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(
-        app_name=f"delm-scaling-{cores}",
-        cores=cores,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": str(evdir),
-            "spark.eventLog.compress": "false",
+    n = cores(master)
+    spark, evdir = bench_util.session(
+        f"scaling-{n}",
+        {
+            "spark.master": master,
+            "spark.sql.shuffle.partitions": str(max(n * 2, 8)),
             "spark.sql.files.maxPartitionBytes": "4m",
         },
     )
-    spark.range(100_000).count()
-    if not Path(CORPUS, "_SUCCESS").exists():
-        # many output files: parquet row groups are indivisible scan units,
-        # so a corpus written from few partitions caps downstream map
-        # parallelism no matter what maxPartitionBytes says
-        generate_transcripts(
+    # many output files: parquet row groups are indivisible scan units,
+    # so a corpus written from few partitions caps downstream map
+    # parallelism no matter what maxPartitionBytes says
+    tr, n_turns = bench_util.corpus(
+        spark,
+        f"scaling_transcripts_{N_CONVS}_p{N_FILES}",
+        lambda spark: generate_transcripts(
             spark, n_convs=N_CONVS, n_hot=N_CONVS // 1000, partitions=N_FILES
-        ).write.mode("overwrite").parquet(CORPUS)
-    tr = spark.read.parquet(CORPUS)
-    n_turns = tr.count()
-    # warmup run (untimed): JIT + page cache
-    run_pipeline(spark, tr, entity_dictionary(spark), PipelineConfig()).edges.count()
+        ),
+    )
 
-    accepted, rejected, windows, n = [], [], [], 0
-    for _ in range(MAX_ATTEMPTS):
-        spark.catalog.clearCache()
-        s0, t0c = steal_counters()
-        w0 = int(time.time() * 1000)
-        t0 = time.perf_counter()
+    def pipeline():
         res = run_pipeline(spark, tr, entity_dictionary(spark), PipelineConfig())
-        n = res.edges.count()
-        wall = round(time.perf_counter() - t0, 1)
-        w1 = int(time.time() * 1000)
-        s1, t1c = steal_counters()
-        steal = round((s1 - s0) / max(t1c - t0c, 1) * 100, 1)
-        entry = {"wall_sec": wall, "steal_pct": steal}
-        if steal <= STEAL_MAX:
-            accepted.append(entry)
-            windows.append((w0, w1))
-        else:
-            rejected.append(entry)
-        if len(accepted) >= RUNS:
-            break
+        return {"n_triples": res.edges.count()}
+
+    pipeline()  # warmup run (untimed): JIT + page cache
+    kept, rejected = bench_util.run_phases(
+        spark, evdir, [("kg_pipeline", pipeline)], gate=STEAL_GATE, runs=RUNS
+    )
     spark.stop()
-    time.sleep(2)  # let the event log flush/close
-    task_stats = parse_event_log(evdir, windows)
-    for e, ts in zip(accepted, task_stats):
-        e.update(ts)
-    best = min((e["wall_sec"] for e in accepted), default=float("nan"))
-    best_entry = min(accepted, key=lambda e: e["wall_sec"]) if accepted else {}
+
+    def flat(a):
+        (p,) = a["phases"]
+        del p["phase"]
+        return {"steal_pct": a["steal_pct"], **p}
+
+    accepted = [flat(a) for a in kept]
+    best = min(accepted, key=lambda e: e["wall_sec"])
     return {
-        "cores": cores,
+        "master": master,
+        "cores": n,
+        "steal_gate_met": kept[0]["steal_gate_met"],
         "accepted": accepted,
-        "rejected": rejected,
-        "best_sec": best,
-        "best": best_entry,
-        "n_triples": n,
+        "rejected": [flat(a) for a in rejected],
+        "best_sec": best["wall_sec"],
+        "best": best,
+        "n_triples": best["n_triples"],
         "n_turns": n_turns,
-        "triples_per_sec": round(n / best, 1) if accepted else 0.0,
+        "triples_per_sec": round(best["n_triples"] / best["wall_sec"], 1),
     }
 
 
@@ -143,70 +143,62 @@ def _control_cpu_work(_):
     return n
 
 
-def run_controls() -> dict:
+def run_controls(low: int, high: int) -> dict:
     """Spark-free hardware-ceiling control at the same two worker counts:
     pure register/L1 compute (sha256 over a 4 KB buffer) — what the host's
     vCPUs can deliver at all, which bounds what any plan can reach."""
     from multiprocessing import Pool
 
     r = {}
-    for w in (LOW, HIGH):
+    for w in (low, high):
         with Pool(w) as p:
             r[w] = sum(p.map(_control_cpu_work, range(w)))
     return {
         "pure_compute_sha256": {
-            "low_ops": r[LOW],
-            "high_ops": r[HIGH],
-            "scaling_x": round(r[HIGH] / r[LOW], 2),
-            "efficiency": round(r[HIGH] / r[LOW] / (HIGH / LOW), 2),
+            "low_ops": r[low],
+            "high_ops": r[high],
+            "scaling_x": round(r[high] / r[low], 2),
+            "efficiency": round(r[high] / r[low] / (high / low), 2),
         }
     }
 
 
 def main() -> None:
-    if os.environ.get("SPARK_GRAFT_SCALE_CHILD"):
-        print(json.dumps(run_level(int(os.environ["SPARK_GRAFT_SCALE_CHILD"]))))
+    if ARGS.child:
+        print(json.dumps(run_level(ARGS.child)))
         return
-    results = {}
-    for cores in (LOW, HIGH):
-        # per-level JSON snapshots make the sweep resumable: a hung or
-        # killed level can be retried alone (local-mode runs occasionally
-        # wedge on this VM) without redoing the other level
-        snap = Path(f"/tmp/delm_scaling_level_{N_CONVS}_{cores}.json")
-        if snap.exists() and not os.environ.get("SPARK_GRAFT_SCALE_FRESH"):
-            results[cores] = json.loads(snap.read_text())
-            continue
+    results = []
+    for master in ARGS.levels:
         out = subprocess.run(
-            [sys.executable, str(REPO / "bench_scaling.py")],
-            env=dict(os.environ, SPARK_GRAFT_SCALE_CHILD=str(cores)),
-            capture_output=True, text=True, check=True,
+            [sys.executable, __file__, "--scale", str(ARGS.scale), "--child", master],
+            stdout=subprocess.PIPE, text=True, check=True, cwd=bench_util.REPO,
         )
-        line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-        results[cores] = json.loads(line)
-        snap.write_text(line)
-    lo, hi = results[LOW], results[HIGH]
-    ratio = HIGH / LOW
-    eff = (hi["triples_per_sec"] / lo["triples_per_sec"]) / ratio if lo["triples_per_sec"] else 0
-    controls = run_controls()
+        results.append(json.loads(out.stdout.strip().splitlines()[-1]))
+    lo, hi = results
+    lo_m, hi_m = ARGS.levels
+    low, high = lo["cores"], hi["cores"]
+    ratio = high / low
+    eff = hi["triples_per_sec"] / lo["triples_per_sec"] / ratio
+    controls = run_controls(low, high)
     raw_json = json.dumps(
-        {str(k): v for k, v in results.items()} | {"controls": controls}, indent=2
+        dict(zip(ARGS.levels, results)) | {"controls": controls}, indent=2
     )
 
     def row(r):
-        b = r.get("best", {})
+        b = r["best"]
         walls = [e["wall_sec"] for e in r["accepted"]]
         steals = [e["steal_pct"] for e in r["accepted"]]
         return (
-            f"| local[{r['cores']}] | {r['best_sec']} | {r['triples_per_sec']} | "
-            f"{walls} | {steals} | {b.get('task_sec', '-')} | {b.get('cpu_sec', '-')} | "
-            f"{b.get('gc_sec', '-')} | {b.get('n_tasks', '-')} | {b.get('n_jobs', '-')} |"
+            f"| {r['master']} | {r['best_sec']} | {r['triples_per_sec']} | "
+            f"{walls} | {steals} | {b['task_sec']} | {b['cpu_sec']} | "
+            f"{b['gc_sec']} | {b['n_tasks']} | {b['n_jobs']} |"
         )
 
-    lo_b, hi_b = lo.get("best", {}), hi.get("best", {})
+    lo_b, hi_b = lo["best"], hi["best"]
     decomposition = ""
-    if lo_b.get("cpu_sec") and hi_b.get("cpu_sec"):
-        lo_ideal = lo_b["cpu_sec"] / LOW
-        hi_ideal = hi_b["cpu_sec"] / HIGH
+    if lo_b["cpu_sec"] and hi_b["cpu_sec"]:
+        lo_ideal = lo_b["cpu_sec"] / low
+        hi_ideal = hi_b["cpu_sec"] / high
         decomposition = f"""
 ## Task-time decomposition (best accepted run per level)
 
@@ -216,11 +208,11 @@ same plan):
 
 | cores | wall s | cpu_sec/cores (ideal) | residual s | residual % |
 |---|---|---|---|---|
-| {LOW} | {lo_b['wall_sec']} | {lo_ideal:.1f} | {lo_b['wall_sec'] - lo_ideal:.1f} | {100 * (lo_b['wall_sec'] - lo_ideal) / lo_b['wall_sec']:.0f}% |
-| {HIGH} | {hi_b['wall_sec']} | {hi_ideal:.1f} | {hi_b['wall_sec'] - hi_ideal:.1f} | {100 * (hi_b['wall_sec'] - hi_ideal) / hi_b['wall_sec']:.0f}% |
+| {low} | {lo_b['wall_sec']} | {lo_ideal:.1f} | {lo_b['wall_sec'] - lo_ideal:.1f} | {100 * (lo_b['wall_sec'] - lo_ideal) / lo_b['wall_sec']:.0f}% |
+| {high} | {hi_b['wall_sec']} | {hi_ideal:.1f} | {hi_b['wall_sec'] - hi_ideal:.1f} | {100 * (hi_b['wall_sec'] - hi_ideal) / hi_b['wall_sec']:.0f}% |
 
-The residual bundles driver/scheduler time between jobs ({hi_b.get('n_jobs', '?')}
-jobs/run), Python worker startup, GC ({hi_b.get('gc_sec', '?')} s at {HIGH}
+The residual bundles driver/scheduler time between jobs ({hi_b['n_jobs']}
+jobs/run), Python worker startup, GC ({hi_b['gc_sec']} s at {high}
 cores), and any steal below the gate. Executor CPU seconds themselves
 (the distributed work a real cluster would spread over executors) scale
 by {lo_b['cpu_sec']:.0f} -> {hi_b['cpu_sec']:.0f} s (ratio
@@ -232,30 +224,30 @@ extra work).
 
 Generated {date.today().isoformat()} by bench_scaling.py. Same job, same
 materialized input ({hi['n_turns']:,} transcript turns, {N_CONVS:,} conversations),
-run at local[{LOW}] vs local[{HIGH}] (the N vs 4N parallelism levels of
+run at {lo_m} vs {hi_m} (the N vs 4N parallelism levels of
 BASELINE.md:35) on one machine. Runs are STEAL-GATED: a run counts only if
-interval host-CPU steal <= {STEAL_MAX}% (this VM fluctuates 0-35%);
+interval host-CPU steal <= {STEAL_GATE}% (this VM fluctuates 0-35%);
 {RUNS} accepted runs per level (rejected runs listed in the raw JSON).
 Best-of-accepted per level.
 
-| cores | best sec | triples/sec | accepted walls (s) | steal% | task_sec | cpu_sec | gc_sec | tasks | jobs |
+| level | best sec | triples/sec | accepted walls (s) | steal% | task_sec | cpu_sec | gc_sec | tasks | jobs |
 |---|---|---|---|---|---|---|---|---|---|
 {row(lo)}
 {row(hi)}
 
-**Scaling efficiency (thr_{HIGH} / thr_{LOW}) / {ratio:.0f} = {eff:.3f}** (target >= 0.8)
+**Scaling efficiency (thr_{high} / thr_{low}) / {ratio:.0f} = {eff:.3f}** (target >= 0.8)
 {decomposition}
 ## Hardware-ceiling control (Spark-free, same worker counts)
 
-What can {HIGH} processes deliver over {LOW} on THIS host, independent of
+What can {high} processes deliver over {low} on THIS host, independent of
 any Spark plan? One multiprocessing control, run back-to-back with the
 sweep:
 
-| control | {LOW}w ops | {HIGH}w ops | scaling | efficiency |
+| control | {low}w ops | {high}w ops | scaling | efficiency |
 |---|---|---|---|---|
 | pure compute (sha256, L1-resident) | {controls['pure_compute_sha256']['low_ops']} | {controls['pure_compute_sha256']['high_ops']} | {controls['pure_compute_sha256']['scaling_x']}x | {controls['pure_compute_sha256']['efficiency']} |
 
-The pure-compute control is the host's vCPU ceiling — {LOW}->{HIGH}
+The pure-compute control is the host's vCPU ceiling — {low}->{high}
 workers deliver {controls['pure_compute_sha256']['scaling_x']}x, not
 {ratio:.0f}x, on a machine whose /proc/stat steal reads ~0 (host-level
 contention is invisible to the guest). The rest of the pipeline's
@@ -298,18 +290,16 @@ Raw per-level JSON:
 {raw_json}
 ```
 """
-    out = REPO / "BENCH" / "BASELINE.md"
-    out.parent.mkdir(exist_ok=True)
-    # preserve the hand-maintained cross-round history (everything from
-    # the first "## Round-" section on) — a refresh replaces only the
-    # generated measurement sections above it
-    if out.exists() and "\n## Round-" in out.read_text():
-        hist = out.read_text()
-        md = md.rstrip() + "\n\n" + hist[hist.index("\n## Round-") + 1 :]
-    out.write_text(md)
-    print(json.dumps({"efficiency": round(eff, 3),
-                      "thr_low": lo["triples_per_sec"], "thr_high": hi["triples_per_sec"],
-                      "report": str(out)}))
+    summary = {
+        "efficiency": round(eff, 3),
+        "thr_low": lo["triples_per_sec"],
+        "thr_high": hi["triples_per_sec"],
+        "levels": ARGS.levels,
+        "steal_gate_met": lo["steal_gate_met"] and hi["steal_gate_met"],
+    }
+    bench_util.report(
+        "BASELINE", summary, md, ARGS.scale == 1 and ARGS.levels == DEFAULT_LEVELS
+    )
 
 
 if __name__ == "__main__":

@@ -12,7 +12,9 @@ bench.py's own sf-derived sizing). Results go into the ONE JSON line
 bench.py prints; the comparison table lands in BENCH/BASELINE.md
 (written by hand from the two JSON lines, round 4).
 
-Usage: python bench_sf1.py            # builds /tmp/delm_testdata_sf1, runs bench.py
+Usage: `python bench_sf1.py [--scale S]` replicates sf(0.1 * S), found
+beside bench.py's SF_DIR, into a temp-dir "sf1" and runs bench.py on it
+(--scale 0.1 replicates sf0.01; bench.py still sizes its KG corpus as sf1).
 """
 
 from __future__ import annotations
@@ -20,15 +22,18 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench
+import bench_util
 
-SRC = os.environ.get("SPARK_GRAFT_SF_SRC", "/root/testdata/sf0.1")
+SCALE = bench_util.cli().scale
+SRC = Path(bench.SF_DIR).parent / f"sf{0.1 * SCALE:g}"
+REPLICAS = 10
 #: the final path component must be literally 'sf1' — bench.py derives the
 #: scale factor (and the kg corpus size) from the directory name
-DST = "/tmp/delm_testdata/sf1"
-REPLICAS = 10
+DST = Path(tempfile.gettempdir(), "delm_testdata", f"{SRC.name}x{REPLICAS}", "sf1")
 
 
 def build(spark) -> None:
@@ -116,16 +121,14 @@ def build(spark) -> None:
 
 
 def main() -> None:
-    from delm_spark.session import get_spark
-
     if not Path(DST, "embeddings.parquet", "_SUCCESS").exists():
-        spark = get_spark(app_name="delm-sf1-build", cores=16)
+        spark, _ = bench_util.session("sf1-build")
         build(spark)
         spark.stop()
         print(f"built {DST}", file=sys.stderr)
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=DST)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(DST))
     subprocess.run(
-        [sys.executable, str(Path(__file__).resolve().parent / "bench.py")],
+        [sys.executable, str(bench_util.REPO / "bench.py")],
         env=env,
         check=True,
     )

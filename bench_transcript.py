@@ -26,34 +26,26 @@ purchase BEFORE any click — so every regular purchase's match is exactly
 its own timestamp minus 55 s and each user has exactly one unmatched
 purchase. Asserted exactly, not statistically.
 
-Steal-gated like bench_graph.py. Writes BENCH/TRANSCRIPT_SCALE.md and
-prints ONE JSON line.
+Steal-gated with event-log attribution (bench_util). Writes
+BENCH/TRANSCRIPT_SCALE.md at full scale; prints ONE JSON line. Usage:
+`python bench_transcript.py [--scale S]`.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
 from datetime import date
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+import bench_util
 
-N_ORGANIC = int(os.environ.get("SPARK_GRAFT_TC_CONVS", "1000000"))
+SCALE = bench_util.cli().scale
+# a multiple of 100 keeps the planted-range sizes exact
+N_ORGANIC = bench_util.scaled(1_000_000, SCALE, 100)
 N_SHORT = N_ORGANIC // 100
 N_TOOLY = N_ORGANIC // 100
 N_DUP = N_ORGANIC // 50
 N_NEAR = N_ORGANIC // 50
-N_USERS = int(os.environ.get("SPARK_GRAFT_ASOF_USERS", "1000000"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "10"))
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_TC_ATTEMPTS", "3"))
-TURNS = f"/tmp/delm_tc_turns_{N_ORGANIC}"
-EVENTS = f"/tmp/delm_asof_events_{N_USERS}"
-
-from bench_util import steal_counters  # noqa: E402
+N_USERS = bench_util.scaled(1_000_000, SCALE)
 
 B0, B1, B2, B3 = (
     N_ORGANIC,
@@ -106,7 +98,9 @@ def make_turns(spark):
                 rows, columns=["conv_id", "turn_idx", "role", "text"]
             )
 
-    return spark.range(0, B4, 1, CORES * 4).mapInPandas(
+    return spark.range(
+        0, B4, 1, spark.sparkContext.defaultParallelism * 4
+    ).mapInPandas(
         gen, schema="conv_id string, turn_idx int, role string, text string"
     )
 
@@ -117,7 +111,9 @@ def make_events(spark):
     from pyspark.sql import functions as F
 
     base = F.lit("2024-01-01 00:00:00").cast("timestamp")
-    u = spark.range(0, N_USERS, 1, CORES * 4).select(
+    u = spark.range(
+        0, N_USERS, 1, spark.sparkContext.defaultParallelism * 4
+    ).select(
         F.col("id").alias("user_id")
     )
     k = spark.range(9).select(F.col("id").alias("k"))
@@ -142,66 +138,25 @@ def make_events(spark):
     return clicks.unionByName(purch).unionByName(early)
 
 
-def _timed(fn):
-    s0, t0c = steal_counters()
-    t0 = time.perf_counter()
-    out = fn()
-    wall = round(time.perf_counter() - t0, 1)
-    s1, t1c = steal_counters()
-    steal = round((s1 - s0) / max(t1c - t0c, 1) * 100, 1)
-    return out, wall, steal
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
     from delm_spark.curate import TranscriptCurationConfig, run_transcript_curation
     from delm_spark.operators.temporal import asof_join
-    from delm_spark.session import get_spark
 
-    spark = get_spark(app_name="delm-transcript-bench", cores=CORES)
-    spark.range(100_000).count()
-    if not Path(TURNS, "_SUCCESS").exists():
-        make_turns(spark).write.mode("overwrite").parquet(TURNS)
-    if not Path(EVENTS, "_SUCCESS").exists():
-        make_events(spark).write.mode("overwrite").parquet(EVENTS)
-    turns = spark.read.parquet(TURNS)
-    events = spark.read.parquet(EVENTS)
-    n_turns, n_events = turns.count(), events.count()
-
-    results = {}
+    spark, evdir = bench_util.session("transcript")
+    turns, n_turns = bench_util.corpus(spark, f"tc_turns_{N_ORGANIC}", make_turns)
+    events, n_events = bench_util.corpus(spark, f"asof_events_{N_USERS}", make_events)
 
     # ---- transcript curation ---------------------------------------------
     def run_tc():
         out = run_transcript_curation(
             turns, config=TranscriptCurationConfig(pack_budget=2048)
         )
-        return {
+        return {"census": {
             r["status"]: r["n"]
             for r in out.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-
-    for _ in range(MAX_ATTEMPTS):
-        census, wall, steal = _timed(run_tc)
-        if steal <= STEAL_MAX:
-            break
-    # never publish a contended number as "steal-gated"
-    assert steal <= STEAL_MAX, f"all attempts exceeded the steal gate: {steal}"
-    assert sum(census.values()) == B4, census
-    assert census["too_short"] == N_SHORT, census
-    assert census["tool_heavy"] == N_TOOLY, census
-    assert census["exact_dup"] == N_DUP, census
-    near_recall = census.get("near_dup", 0) / N_NEAR
-    assert 0.99 <= near_recall <= 1.0, census
-    results["transcript_curation"] = {
-        "n_convs": B4,
-        "n_turns": n_turns,
-        "wall_sec": wall,
-        "steal_pct": steal,
-        "convs_per_sec": round(B4 / wall, 1),
-        "census": census,
-        "near_dup_recall": round(near_recall, 4),
-    }
+        }}
 
     # ---- as-of join --------------------------------------------------------
     def run_asof():
@@ -228,13 +183,30 @@ def main() -> None:
                     )
                 ).cast("long")
             ).alias("wrong_gap"),
-        ).collect()[0]
+        ).collect()[0].asDict()
 
-    for _ in range(MAX_ATTEMPTS):
-        agg, wall, steal = _timed(run_asof)
-        if steal <= STEAL_MAX:
-            break
-    assert steal <= STEAL_MAX, f"all attempts exceeded the steal gate: {steal}"
+    (run,), _ = bench_util.run_phases(
+        spark, evdir, [("transcript_curation", run_tc), ("asof_join", run_asof)]
+    )
+    results = {"steal_pct": run["steal_pct"], "steal_gate_met": run["steal_gate_met"]}
+    tc, asof = run["phases"]
+    census, wall = tc["census"], tc["wall_sec"]
+    assert sum(census.values()) == B4, census
+    assert census["too_short"] == N_SHORT, census
+    assert census["tool_heavy"] == N_TOOLY, census
+    assert census["exact_dup"] == N_DUP, census
+    near_recall = census.get("near_dup", 0) / N_NEAR
+    assert 0.99 <= near_recall <= 1.0, census
+    results["transcript_curation"] = {
+        "n_convs": B4,
+        "n_turns": n_turns,
+        "wall_sec": wall,
+        "convs_per_sec": round(B4 / wall, 1),
+        "census": census,
+        "near_dup_recall": round(near_recall, 4),
+    }
+
+    agg, wall = asof, asof["wall_sec"]
     assert agg["n"] == N_USERS * 10, agg
     assert agg["unmatched"] == N_USERS, agg  # exactly the pre-click purchases
     assert agg["wrong_gap"] == 0, agg  # every match is its own click, 55 s back
@@ -242,15 +214,15 @@ def main() -> None:
         "n_events": n_events,
         "left_rows": int(agg["n"]),
         "wall_sec": wall,
-        "steal_pct": steal,
         "rows_per_sec": round(agg["n"] / wall, 1),
     }
 
     md = f"""# BENCH — transcript curation + as-of join at scale
 
 Generated {date.today().isoformat()} by bench_transcript.py on
-local[{CORES}] (steal-gated <= {STEAL_MAX}%). Every asserted property is
-closed-form (see module docstring); a failed assertion aborts the bench,
+local[{spark.sparkContext.defaultParallelism}] (steal gate <= {bench_util.STEAL_GATE}%:
+{'MET' if run['steal_gate_met'] else 'NOT met — walls are upper bounds'}; steal {run['steal_pct']}%).
+Every asserted property is closed-form (see module docstring); a failed assertion aborts the bench,
 so a published number IS a correctness proof at this scale.
 
 ## Transcript curation ({B4:,} conversations, {n_turns:,} turns)
@@ -278,9 +250,9 @@ Every matched purchase resolved to its own user's click exactly 55 s
 earlier; every pre-click purchase (1 per user) correctly unmatched under
 the 60 s tolerance. ONE shuffle on user_id (union-window form).
 """
-    Path("BENCH/TRANSCRIPT_SCALE.md").write_text(md)
-    print(json.dumps({"metric": "transcript_bench", **results}))
-    spark.stop()
+    bench_util.report(
+        "TRANSCRIPT_SCALE", {"metric": "transcript_bench", **results}, md, SCALE == 1
+    )
 
 
 if __name__ == "__main__":

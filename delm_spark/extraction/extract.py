@@ -53,6 +53,13 @@ from delm_spark.schemas.spec import SchemaSpec
 IN_TOKENS_COL = "delm_input_tokens"
 OUT_TOKENS_COL = "delm_output_tokens"
 
+#: a parquet cache_dir with this many run partitions is compacted before
+#: the warm read, which scans every partition
+AUTO_COMPACT_RUNS = 16
+#: distinct missed prompts above which the driver-resident cache backends
+#: refuse: they hold every miss and the full snapshot in driver memory
+DRIVER_CACHE_MAX_ROWS = 2_000_000
+
 _EXTRA_FIELDS = [
     StructField(EXTRACTED_JSON_COL, StringType()),
     StructField(ERRORS_COL, StringType()),
@@ -308,9 +315,7 @@ def extract_chunks(
     base_delay: float = 0.0,
     cache_dir: Optional[str] = None,
     call_spec: Optional[CallSpec] = None,
-    auto_compact_runs: int = 16,
     driver_cache=None,
-    driver_cache_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Run schema-guided extraction over `df[text_col]`.
 
@@ -397,7 +402,7 @@ def extract_chunks(
         # grows with run count. Compact BEFORE the read (file listings are
         # resolved at read time; compacting after would invalidate the lazy
         # plan's file index mid-query).
-        if auto_compact_runs and _count_run_partitions(cache_dir) >= auto_compact_runs:
+        if _count_run_partitions(cache_dir) >= AUTO_COMPACT_RUNS:
             compact_cache(spark, cache_dir)
         try:
             cached = spark.read.parquet(cache_dir)
@@ -434,20 +439,17 @@ def extract_chunks(
         # FIRST run the "bounded by distinct missed prompts" bound IS the
         # corpus. Refuse loudly above the ceiling instead of OOMing the
         # driver mid-collect; the parquet cache_dir backend has no such
-        # bound. The count is one extra bounded job on this opt-in path
-        # only, and only while a ceiling is set (0 = no ceiling, no job).
-        if driver_cache_max_rows:
-            n_miss = unique.count()
-            if n_miss > driver_cache_max_rows:
-                raise RuntimeError(
-                    f"driver-resident cache backend: {n_miss} distinct missed "
-                    f"prompts exceed driver_cache_max_rows="
-                    f"{driver_cache_max_rows}. The sqlite/filesystem backends "
-                    "hold every miss and the full snapshot in driver memory; "
-                    "for corpora this size use the distributed parquet cache "
-                    "(cache_dir=...) instead, or raise driver_cache_max_rows "
-                    "if the driver genuinely has the memory."
-                )
+        # bound. The count is one extra bounded job on this opt-in path.
+        n_miss = unique.count()
+        if n_miss > DRIVER_CACHE_MAX_ROWS:
+            raise RuntimeError(
+                f"driver-resident cache backend: {n_miss} distinct missed "
+                f"prompts exceed the {DRIVER_CACHE_MAX_ROWS}-row ceiling. The "
+                "sqlite/filesystem backends hold every miss and the full "
+                "snapshot in driver memory; for corpora this size set "
+                "`semantic_cache.backend: parquet`, the distributed cache "
+                "with no driver-side bound."
+            )
         # ONE action materializes this run's misses; row volume = distinct
         # missed prompts (the quantity a semantic cache stores by
         # definition), so the driver round-trip is bounded

@@ -44,6 +44,9 @@ from delm_spark.operators.splitting import paragraph_split_expr
 from delm_spark.schemas.compile import spark_schema_for
 from delm_spark.schemas.spec import NestedSpec, SchemaSpec, spec_from_dict
 
+#: Iceberg namespace of the stage tables when stages are stored as Iceberg
+ICEBERG_NAMESPACE = "delm.stages"
+
 #: columns of the edge table, in order (s4_edges; the streaming sink
 #: appends the same columns)
 EDGE_COLS = [
@@ -92,7 +95,6 @@ class StageRunner:
         checkpoint_dir: Optional[str] = None,
         fingerprint: Optional[str] = None,
         storage: Optional[str] = None,
-        iceberg_namespace: str = "delm.stages",
     ):
         self.spark = spark
         self.dir = Path(checkpoint_dir) if checkpoint_dir else None
@@ -112,7 +114,6 @@ class StageRunner:
         if storage not in ("parquet", "iceberg"):
             raise ValueError(f"unknown stage storage {storage!r}")
         self.storage = storage
-        self.iceberg_namespace = iceberg_namespace
         self.resumed: list[str] = []
         self.built: list[str] = []
         #: per-stage named metrics (rows, errors, token sums — the
@@ -131,7 +132,7 @@ class StageRunner:
         return self._path(name) / "_delm_config_fingerprint"
 
     def _ident(self, name: str) -> str:
-        return f"{self.iceberg_namespace}.{name}"
+        return f"{ICEBERG_NAMESPACE}.{name}"
 
     def _write_stage(
         self, df: DataFrame, name: str, partition_by=None, sort_by=None

@@ -247,29 +247,3 @@ def test_pipeline_triples_native_equals_udf(spark):
     nat_e = sorted(map(tuple, res_native.edges.collect()))
     udf_e = sorted(map(tuple, res_udf.edges.collect()))
     assert nat_e == udf_e
-
-
-def test_driver_cache_without_ceiling_runs_no_probe_job(spark, tmp_path):
-    """driver_cache_max_rows=0 means no ceiling, so the distinct-miss
-    count probe must not run: the same cold extraction costs strictly
-    fewer jobs than under a ceiling."""
-    from delm_spark.extraction.sqlite_cache import SqliteSemanticCache
-
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    df = _text_df(spark, EXTRACT_TEXTS)
-    sc = spark.sparkContext
-
-    def jobs(max_rows):
-        group = f"driver-cache-probe-{max_rows}"
-        cache = SqliteSemanticCache(str(tmp_path / f"{max_rows}.db"))
-        sc.setJobGroup(group, "driver cache probe test")
-        try:
-            extract_chunks(
-                df, spec, RuleTripleExtractor(spec),
-                driver_cache=cache, driver_cache_max_rows=max_rows,
-            )
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    assert jobs(0) < jobs(1_000_000)

@@ -128,16 +128,17 @@ def test_legacy_flat_cache_layout_migrates_and_serves_hits(spark, tmp_path):
 # construction (the warm read scans every partition)
 # ---------------------------------------------------------------------------
 
-def test_auto_compaction_bounds_run_partitions(spark, tmp_path):
+def test_auto_compaction_bounds_run_partitions(spark, tmp_path, monkeypatch):
+    from delm_spark.extraction import extract
+
     cache = str(tmp_path / "cache")
     df = _chunk_df(spark, TEXTS)
     limit = 3
+    monkeypatch.setattr(extract, "AUTO_COMPACT_RUNS", limit)
     baseline = None
     for i in range(limit + 2):
         backend = RuleTripleExtractor(SPEC) if i == 0 else CacheOnlyBackend()
-        out = extract_chunks(
-            df, SPEC, backend, cache_dir=cache, auto_compact_runs=limit
-        )
+        out = extract_chunks(df, SPEC, backend, cache_dir=cache)
         got = sorted(
             (r["chunk_id"], r["delm_extracted_data_json"]) for r in out.collect()
         )

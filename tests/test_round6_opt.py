@@ -147,14 +147,14 @@ def test_keyword_score_empty_keywords_raises(spark):
         keyword_score_expr(F.lit("x"), [])
 
 
-def test_driver_cache_row_ceiling_refuses(spark, tmp_path):
+def test_driver_cache_row_ceiling_refuses(spark, tmp_path, monkeypatch):
     """The driver-resident cache backends must refuse (with remediation
     text) when the distinct-miss count exceeds the configured ceiling —
     a first run's misses are corpus-sized and would otherwise OOM the
     driver mid-collect (VERDICT r5 #3)."""
     from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
+    from delm_spark.extraction import extract
     from delm_spark.extraction.backend import RuleTripleExtractor
-    from delm_spark.extraction.extract import extract_chunks
     from delm_spark.extraction.sqlite_cache import SqliteSemanticCache
     from delm_spark.schemas.spec import spec_from_dict
 
@@ -164,15 +164,19 @@ def test_driver_cache_row_ceiling_refuses(spark, tmp_path):
         [(i, f"doc {i} text") for i in range(5)],
         "chunk_id long, delm_text_chunk string",
     )
-    with pytest.raises(RuntimeError, match="driver_cache_max_rows"):
-        extract_chunks(
-            df, spec, RuleTripleExtractor(spec),
-            driver_cache=cache, driver_cache_max_rows=2,
+    monkeypatch.setattr(extract, "DRIVER_CACHE_MAX_ROWS", 2)
+    with pytest.raises(RuntimeError) as err:
+        extract.extract_chunks(
+            df, spec, RuleTripleExtractor(spec), driver_cache=cache,
         )
+    # the only production caller, DelmSpark.process_via_llm, takes its
+    # cache from the config, so the remedy must be a config setting
+    assert "semantic_cache.backend: parquet" in str(err.value)
+    assert "driver_cache_max_rows" not in str(err.value)
     # under the ceiling: unchanged behavior
-    out = extract_chunks(
-        df, spec, RuleTripleExtractor(spec),
-        driver_cache=cache, driver_cache_max_rows=100,
+    monkeypatch.setattr(extract, "DRIVER_CACHE_MAX_ROWS", 100)
+    out = extract.extract_chunks(
+        df, spec, RuleTripleExtractor(spec), driver_cache=cache,
     )
     assert out.count() == 5
 
