@@ -237,7 +237,7 @@ filtered guarantee is one left-anti hash join on the corruption's own
 key. The entity rank is the only global construct and is bounded by the
 vocabulary, not the corpus (swap in the packing prefix-sum at extreme
 vocabularies). Link prediction's wedge join fans out as sum deg(w)^2 —
-bounded here by design and by `max_hub_degree` in the wild, the
+bounded here by design; in the wild a hub-degree ceiling is the
 principled cut since 1/ln(deg) vanishes for super-hubs; per-neighbor
 terms are integer-quantized before the sum, so results are
 aggregation-order independent at any parallelism.

@@ -150,6 +150,8 @@ the same `decoder` seam. The number that matters at 100 TB is that the
 stage is embarrassingly parallel — one Arrow batch per task, zero
 shuffle — so codec swap changes the constant, not the shape.
 """
+    # a wrong decode fails the run before the report can rewrite BENCH/
+    assert ok, f"decoded luma totals differ from the closed form: {result}"
     bench_util.report("IMAGE_SCALE", result, md, SCALE == 1)
 
 

@@ -126,7 +126,13 @@ def main() -> None:
         build(spark)
         spark.stop()
         print(f"built {DST}", file=sys.stderr)
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(DST))
+    # bench.py defaults to local[32]; size it to this host's cores unless
+    # the caller chose SPARK_GRAFT_CPUS (the caller's environment wins)
+    env = {
+        "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": str(DST),
+    }
     subprocess.run(
         [sys.executable, str(bench_util.REPO / "bench.py")],
         env=env,

@@ -79,7 +79,6 @@ def run_curation(
     config: CurationConfig = CurationConfig(),
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """Run the composed curation chain. Returns one row per INPUT doc:
     (id_col, status, pack_id, n_tokens) where status is 'kept' or the
@@ -91,8 +90,7 @@ def run_curation(
     Multi-consumed stage frames are eagerly localCheckpoint-ed (pitfall:
     a frame consumed by N branches of one action recomputes its whole
     upstream N times — the LSH+Jaccard subtree would otherwise run once
-    for the survivor anti-join and again for the disposition join).
-    Pass eager=False to keep the chain fully lazy (test-scale only)."""
+    for the survivor anti-join and again for the disposition join)."""
     # NULL text must still receive a disposition row (an equi-join on a
     # null hash would silently drop it): normalize to '' at the door —
     # null/empty docs dedup together and carry zero tokens
@@ -100,16 +98,13 @@ def run_curation(
         id_col, F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
 
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if eager else df
-
     # stage 1: exact dedup — smallest id per normalized content hash
     keyed = base.withColumn("__h", F.sha2(normalize_text(F.col(text_col)), 256))
     winners = keyed.groupBy("__h").agg(F.min(id_col).alias("__keep"))
     exact = keyed.join(winners, "__h").select(
         id_col, text_col, (F.col(id_col) == F.col("__keep")).alias("__exact_keep")
     )
-    exact = _pin(exact)
+    exact = exact.localCheckpoint(eager=True)
     s1 = exact.filter("__exact_keep").select(id_col, text_col)
 
     # stage 2: near-dup — greedy keep-first over verified LSH pairs
@@ -130,7 +125,11 @@ def run_curation(
             threshold=config.near_dup_threshold,
             candidates=cand,
         )
-        losers = _pin(verified.select(F.col("id_b").alias(id_col)).distinct())
+        losers = (
+            verified.select(F.col("id_b").alias(id_col))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
         s2 = s1.join(losers, id_col, "left_anti")
     else:
         losers = None
@@ -138,8 +137,10 @@ def run_curation(
 
     # stage 3: Gopher quality rules (map-only)
     if config.quality:
-        flags = _pin(
-            gopher_quality(s2, text_col, id_col).select(id_col, "pass_quality")
+        flags = (
+            gopher_quality(s2, text_col, id_col)
+            .select(id_col, "pass_quality")
+            .localCheckpoint(eager=True)
         )
         s3 = s2.join(flags.filter("pass_quality = 1"), id_col, "left_semi")
         failed_quality = flags.filter("pass_quality = 0").select(id_col)
@@ -149,16 +150,14 @@ def run_curation(
 
     # stage 4: decontamination against the held-out set
     if test_df is not None:
-        verdicts = _pin(
-            decontaminate(
-                s3,
-                test_df,
-                text_col,
-                id_col,
-                n=config.decontam_n,
-                max_overlap=config.decontam_max_overlap,
-            ).select(id_col, "contaminated")
-        )
+        verdicts = decontaminate(
+            s3,
+            test_df,
+            text_col,
+            id_col,
+            n=config.decontam_n,
+            max_overlap=config.decontam_max_overlap,
+        ).select(id_col, "contaminated").localCheckpoint(eager=True)
         s4 = s3.join(verdicts.filter("contaminated = 0"), id_col, "left_semi")
         contaminated = verdicts.filter("contaminated = 1").select(id_col)
     else:
@@ -288,7 +287,6 @@ def run_transcript_curation(
     turns: DataFrame,
     test_df: Optional[DataFrame] = None,
     config: TranscriptCurationConfig = TranscriptCurationConfig(),
-    eager: bool = True,
 ) -> DataFrame:
     """Curate raw multi-turn transcripts (the BASELINE.json input shape:
     conv_id, turn_idx, role, text, ...) into a training-ready packed
@@ -306,9 +304,7 @@ def run_transcript_curation(
     input conversation; status is the FIRST stage that dropped it
     ('too_short' | 'tool_heavy' | 'exact_dup' | 'near_dup') or 'kept'.
     """
-    asm = assemble_conversations(turns)
-    if eager:
-        asm = asm.localCheckpoint(eager=True)
+    asm = assemble_conversations(turns).localCheckpoint(eager=True)
     structural = asm.select(
         "conv_id",
         # null conv_id first: a null key never equi-matches, so without an
@@ -353,7 +349,6 @@ def run_transcript_curation(
         ),
         text_col="text",
         id_col="pack_key",
-        eager=eager,
     )
     linked = (
         keyed.select("conv_id", "pack_key")

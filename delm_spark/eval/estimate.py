@@ -84,4 +84,4 @@ def merged_records(triples: DataFrame) -> DataFrame:
     """Per-conversation consolidated triple lists in chunk order (the
     record-level merge the reference applies before evaluation,
     performance_estimation.py:159-183)."""
-    return merge_nested_records(triples, record_col="conv_id")
+    return merge_nested_records(triples)

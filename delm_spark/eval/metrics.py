@@ -69,12 +69,7 @@ def set_confusion(
     )
 
 
-def field_path_confusion(
-    pairs: DataFrame,
-    spec,
-    expected_json_col: str = "expected_json",
-    extracted_json_col: str = "extracted_json",
-) -> DataFrame:
+def field_path_confusion(pairs: DataFrame, spec) -> DataFrame:
     """Recursive field-path P/R/F1 (reference
     performance_estimation.py:280-388) over per-record JSON pairs,
     distributed: the per-record tree walk (a pure-Python kernel,
@@ -84,8 +79,8 @@ def field_path_confusion(
     reference's defaultdict accumulation (py:352-369), but parallel over
     records.
 
-    `pairs` carries one row per record with the merged expected and
-    extracted JSON strings. Returns (field, tp, fp, fn, precision,
+    `pairs` carries one row per record with the merged expected_json and
+    extracted_json strings. Returns (field, tp, fp, fn, precision,
     recall, f1).
     """
     import json as _json
@@ -109,7 +104,7 @@ def field_path_confusion(
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for e_json, p_json in zip(pdf[expected_json_col], pdf[extracted_json_col]):
+            for e_json, p_json in zip(pdf["expected_json"], pdf["extracted_json"]):
                 y_true = _json.loads(e_json) if e_json else {}
                 y_pred = _json.loads(p_json) if p_json else {}
                 for fld, m in all_levels_precision_recall(
@@ -119,7 +114,7 @@ def field_path_confusion(
             yield pd.DataFrame(rows, columns=["field", "tp", "fp", "fn"])
 
     counts = (
-        pairs.select(expected_json_col, extracted_json_col)
+        pairs.select("expected_json", "extracted_json")
         .mapInPandas(walk, schema=out_schema)
         .groupBy("field")
         .agg(F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn"))

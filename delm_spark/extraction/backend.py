@@ -56,15 +56,11 @@ class RuleTripleExtractor:
     (post_processing.py:32-38, 99-110).
     """
 
-    def __init__(
-        self,
-        spec: SchemaSpec,
-        predicate_phrases: Optional[list[tuple[str, str]]] = None,
-    ):
+    def __init__(self, spec: SchemaSpec):
         if not isinstance(spec, NestedSpec):
             raise TypeError("RuleTripleExtractor requires a nested triple spec")
         self.spec = spec
-        phrases = predicate_phrases or DEFAULT_PREDICATE_PHRASES
+        phrases = DEFAULT_PREDICATE_PHRASES
         # ONE combined pattern (alternation over predicate phrases) — a
         # single left-to-right scan yields matches already in document
         # order and is ~len(phrases)x cheaper than per-predicate scans.
@@ -88,41 +84,30 @@ class RuleTripleExtractor:
         """array<struct<s: subj, p: phrase, o: obj>> of the raw regex
         matches of `text`, as a native Column.
 
-        One-pass form when the phrase set allows it: a single
-        `regexp_extract_all(text, pat, 0)` (full matches), with subj/obj
-        recovered by substring_index around the detected phrase. Sound
-        because (a) every phrase is space-delimited lowercase words with
-        leading/trailing spaces while ENTITY_RE captures only ever have
-        an UPPERCASE letter after a space — so no phrase can occur inside
-        a capture, and any in-match occurrence of another phrase must lie
-        wholly inside the real phrase; with (b) no phrase a substring of
-        another, only the real phrase can match. Phrase sets violating
-        (a)/(b) fall back to three aligned group passes (arrays_zip).
+        One pass: a single `regexp_extract_all(text, pat, 0)` (full
+        matches), with subj/obj recovered by substring_index around the
+        detected phrase. Sound because (a) every DEFAULT_PREDICATE_PHRASES
+        phrase is space-delimited lowercase words with leading/trailing
+        spaces while ENTITY_RE captures only ever have an UPPERCASE letter
+        after a space — so no phrase can occur inside a capture, and any
+        in-match occurrence of another phrase must lie wholly inside the
+        real phrase; with (b) no phrase a substring of another, only the
+        real phrase can match.
 
-        Either way each regexp pass is referenced EXACTLY ONCE outside
-        any lambda: CollapseProject inlines aliased expressions into
-        lambda bodies, so an element_at(arr, i) formulation would re-run
-        the whole regex scan once PER ITEM (measured 3x slower than the
-        Python stage this replaces)."""
+        The regexp pass is referenced EXACTLY ONCE outside any lambda:
+        CollapseProject inlines aliased expressions into lambda bodies, so
+        an element_at(arr, i) formulation would re-run the whole regex
+        scan once PER ITEM (measured 3x slower than the Python stage this
+        replaces)."""
         from pyspark.sql import functions as F
 
         # Java twin of the Python pattern: named groups -> plain groups
         # (1=subj, 2=phrase, 3=obj; ENTITY_RE's inner group is
-        # non-capturing). Phrase/entity characters are json-safe (see
-        # _native_ok), so the escaped alternation parses identically
-        # under java.util.regex.
+        # non-capturing). Phrase/entity characters are `[A-Za-z ]` only,
+        # so the escaped alternation parses identically under
+        # java.util.regex.
         jpat = re.sub(r"\(\?P<[A-Za-z_]+>", "(", self._pattern.pattern)
-        word_shape = re.compile(r"\A(?: [a-z]+)+ \Z")
         phrases = list(self._pred_of)
-        one_pass = all(word_shape.match(p) for p in phrases) and not any(
-            a != b and a in b for a in phrases for b in phrases
-        )
-        if not one_pass:
-            return F.arrays_zip(
-                F.regexp_extract_all(text, F.lit(jpat), 1).alias("s"),
-                F.regexp_extract_all(text, F.lit(jpat), 2).alias("p"),
-                F.regexp_extract_all(text, F.lit(jpat), 3).alias("o"),
-            )
 
         def split_match(m):
             expr = None
@@ -151,11 +136,11 @@ class RuleTripleExtractor:
         mode and the pipeline's triples stage consume it.
 
         Every string it emits is JSON-escape-free by construction: subj/
-        obj match ENTITY_RE (`[A-Za-z ]` only) and pred labels / phrases /
-        the container name pass the json-safe guard in `_native_ok`, so
-        a plain concat serializer reproduces json.dumps byte for byte.
-        None when the spec or phrase set disqualifies the native form
-        (callers fall back to extract_raw)."""
+        obj match ENTITY_RE (`[A-Za-z ]` only), the DEFAULT_PREDICATE_PHRASES
+        labels and phrases are `[a-z_ ]` only, and the container name
+        passes the json-safe guard in `_native_ok`, so a plain concat
+        serializer reproduces json.dumps byte for byte. None when the spec
+        disqualifies the native form (callers fall back to extract_raw)."""
         from pyspark.sql import functions as F
 
         from delm_spark.constants import LLM_NULL_WORDS_LOWERCASE
@@ -217,8 +202,7 @@ class RuleTripleExtractor:
     def _native_ok(self, spec) -> bool:
         """True when `native_extract_items` reproduces
         clean_response(extract_raw(text), spec, text) exactly for this
-        spec shape and phrase set, JSON-escape-free (memoized per spec
-        object)."""
+        spec shape, JSON-escape-free (memoized per spec object)."""
         cached = self.__dict__.get("_native_ok_for")
         if cached is not None and cached[0] is spec:
             return cached[1]
@@ -226,10 +210,6 @@ class RuleTripleExtractor:
         ok = (
             isinstance(spec, NestedSpec)
             and safe.match(spec.container_name) is not None
-            and all(
-                safe.match(p) and safe.match(label)
-                for p, label in self._pred_of.items()
-            )
         )
         if ok:
             for v in spec.variables:

@@ -223,7 +223,7 @@ def _cache_has_data_files(spark, cache_dir: str) -> bool:
     return False
 
 
-def _is_cold_cache_error(e: Exception, cache_dir: str, spark=None) -> bool:
+def _is_cold_cache_error(e: Exception, cache_dir: str, spark) -> bool:
     """True when a cache_dir read failure means "no cached data yet".
 
     Two shapes qualify: the directory is absent (PATH_NOT_FOUND), or it
@@ -242,18 +242,10 @@ def _is_cold_cache_error(e: Exception, cache_dir: str, spark=None) -> bool:
     if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
         return True
     if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg:
-        if spark is not None:
-            try:
-                return not _cache_has_data_files(spark, cache_dir)
-            except Exception:
-                return False  # probe failed -> original read error raises
-        root = _local_cache_path(cache_dir)
-        if root is None:
-            return False
-        for f in root.rglob("*"):
-            if f.is_file() and not f.name.startswith((".", "_")):
-                return False  # real data files present -> not cold
-        return True
+        try:
+            return not _cache_has_data_files(spark, cache_dir)
+        except Exception:
+            return False  # probe failed -> original read error raises
     return False
 
 
@@ -309,7 +301,6 @@ def extract_chunks(
     df: DataFrame,
     spec: SchemaSpec,
     backend: ExtractorBackend,
-    text_col: str = CHUNK_COL,
     dedup: bool = True,
     max_retries: int = 0,
     base_delay: float = 0.0,
@@ -317,7 +308,7 @@ def extract_chunks(
     call_spec: Optional[CallSpec] = None,
     driver_cache=None,
 ) -> DataFrame:
-    """Run schema-guided extraction over `df[text_col]`.
+    """Run schema-guided extraction over the `delm_text_chunk` column.
 
     Returns `df` plus delm_extracted_data_json (cleaned JSON string),
     delm_errors (string or null), delm_input_tokens / delm_output_tokens,
@@ -354,7 +345,7 @@ def extract_chunks(
 
     if not dedup:
         return _extract_frame(
-            df, text_col, df.columns, spec, backend, max_retries, base_delay
+            df, CHUNK_COL, df.columns, spec, backend, max_retries, base_delay
         ).withColumn(CACHE_HIT_COL, F.lit(False))
 
     # dedup mode: extract distinct texts once, join back on the cache key.
@@ -365,10 +356,10 @@ def extract_chunks(
     call = call_spec or getattr(backend, "call_spec", None) or CallSpec()
     keyed = df.withColumn(
         CACHE_KEY_COL,
-        cache_key_expr(spec, F.coalesce(F.col(text_col), F.lit("")), call),
+        cache_key_expr(spec, F.coalesce(F.col(CHUNK_COL), F.lit("")), call),
     )
     unique = (
-        keyed.select(CACHE_KEY_COL, F.col(text_col).alias("__text"))
+        keyed.select(CACHE_KEY_COL, F.col(CHUNK_COL).alias("__text"))
         .dropDuplicates([CACHE_KEY_COL])
     )
 

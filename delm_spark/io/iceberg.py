@@ -14,9 +14,10 @@ the StageRunner detects it at construction and commits stages as Iceberg
 snapshots via `writeTo(...).createOrReplace()` instead, keyed as
 `<catalog>.<namespace>.<stage_name>` tables.
 
-The write/read/exists primitives live at module level so the dispatch
-logic is unit-testable without the jar (tests monkeypatch them and assert
-the parquet and iceberg code paths hand back identical frames).
+The runtime probe, the catalog lookup and the write/read/exists
+primitives live at module level so the dispatch logic is unit-testable
+without the jar (tests monkeypatch them and assert the parquet and
+iceberg code paths hand back identical frames).
 """
 
 from __future__ import annotations

@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from delm_spark.constants import FILE_NAME_COL, RAW_DATA_COL
 
 
-def load_text(spark: SparkSession, path: str, recursive: bool = True) -> DataFrame:
-    """S1: whole-file text (.txt/.md) -> (delm_file_name, delm_raw_data)."""
+def load_text(spark: SparkSession, path: str) -> DataFrame:
+    """S1: whole-file text (.txt/.md), recursively under `path` ->
+    (delm_file_name, delm_raw_data)."""
     return (
         spark.read.option("wholetext", "true")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .text(path)
         .select(
             F.input_file_name().alias(FILE_NAME_COL),
@@ -214,9 +215,8 @@ def load_directory(
     spark: SparkSession,
     directory: str,
     target_column: Optional[str] = None,
-    recursive: bool = True,
 ):
-    """S9: load every file of a directory as ONE DataFrame, enforcing a
+    """S9: load every file of a directory tree as ONE DataFrame, enforcing a
     single extension across the tree (reference data_loaders.py:331-383:
     glob, skip IGNORE_FILES, single-extension validation, union). The
     union is native — the matched file list goes to one reader call.
@@ -226,12 +226,11 @@ def load_directory(
     root = Path(directory)
     if not root.is_dir():
         raise ValueError(f"{directory} is not a directory")
-    it = root.rglob("*") if recursive else root.glob("*")
     # skip both '_'-prefixed (Spark _SUCCESS markers) and '.'-prefixed
     # sidecars (.part-*.crc, ._SUCCESS.crc) — a Spark-written parquet
     # dataset must load as a corpus directory
     files = sorted(
-        str(p) for p in it
+        str(p) for p in root.rglob("*")
         if p.is_file()
         and p.name not in IGNORE_FILES
         and not p.name.startswith("_")

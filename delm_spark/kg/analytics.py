@@ -28,7 +28,7 @@ Scale notes (100 TB / 1000-executor framing):
   C(k,2) pairs with a native nested-transform expression (no Python, no
   join), and hash-aggregates pair counts (second shuffle). Per-entity
   conversation counts are an independent aggregate of the same exploded
-  frame, joined back by broadcast when small and by equi-join otherwise.
+  frame, joined back by broadcast.
   The association measure is the co-occurrence LIFT
   (`P(a,b) / (P(a)P(b))` = exp(PMI)) in exact micro-units:
   `(1_000_000 * N * c_ab) div (c_a * c_b)` — pure BIGINT arithmetic,
@@ -41,23 +41,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def triple_provenance(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    subj_surface_col: str = "subj",
-    obj_surface_col: str = "obj",
-) -> DataFrame:
+def triple_provenance(triples: DataFrame) -> DataFrame:
     """Support statistics per canonical triple.
 
     Returns one row per (subj_id, pred, obj_id) with
       n_support  — total supporting extractions,
       n_convs    — distinct conversations asserting it,
-      n_surfaces — distinct (subj_surface_col, obj_surface_col)
-                   surface-form pairs,
+      n_surfaces — distinct (subj, obj) surface-form pairs,
       first_seen — lexicographically smallest `conv_id#turn_idx` pointer
                    (zero-padded turn index so string order == numeric
                    order), a deterministic provenance anchor.
@@ -66,22 +56,16 @@ def triple_provenance(
     """
     first_ptr = F.min(
         F.concat(
-            F.col(conv_col),
+            F.col("conv_id"),
             F.lit("#"),
-            F.lpad(F.col(turn_col).cast("string"), 6, "0"),
+            F.lpad(F.col("turn_idx").cast("string"), 6, "0"),
         )
     )
-    return triples.groupBy(
-        F.col(subj_col).alias("subj_id"),
-        F.col(pred_col).alias("pred"),
-        F.col(obj_col).alias("obj_id"),
-    ).agg(
+    return triples.groupBy("subj_id", "pred", "obj_id").agg(
         F.count(F.lit(1)).alias("n_support"),
-        F.countDistinct(F.col(conv_col)).alias("n_convs"),
+        F.countDistinct(F.col("conv_id")).alias("n_convs"),
         F.countDistinct(
-            F.concat_ws(
-                "|", F.col(subj_surface_col), F.col(obj_surface_col)
-            )
+            F.concat_ws("|", F.col("subj"), F.col("obj"))
         ).alias("n_surfaces"),
         first_ptr.alias("first_seen"),
     )
@@ -106,14 +90,7 @@ def _sorted_pairs(arr: Column) -> Column:
     )
 
 
-def entity_cooccurrence(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    obj_col: str = "obj_id",
-    conv_col: str = "conv_id",
-    min_cooccur: int = 1,
-    broadcast_entity_counts: bool = True,
-) -> DataFrame:
+def entity_cooccurrence(triples: DataFrame) -> DataFrame:
     """Entity-pair co-occurrence counts and exact-integer lift.
 
     Two entities co-occur when both are mentioned (as subject or object
@@ -132,12 +109,10 @@ def entity_cooccurrence(
     broadcast joins against the per-entity count table. A conversation
     with k entities emits C(k,2) pairs map-side; k is bounded by
     conversation length, not corpus size, so there is no skew blow-up.
-    `broadcast_entity_counts=False` switches the count joins to plain
-    equi-joins for entity vocabularies too large to broadcast.
     """
     ents = triples.select(
-        F.col(conv_col).alias("__conv"),
-        F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias("__e"),
+        F.col("conv_id").alias("__conv"),
+        F.explode(F.array(F.col("subj_id"), F.col("obj_id"))).alias("__e"),
     ).distinct()
     per_conv = ents.groupBy("__conv").agg(
         F.sort_array(F.collect_set("__e")).alias("__es")
@@ -148,11 +123,12 @@ def entity_cooccurrence(
             F.col("__p.a").alias("entity_a"), F.col("__p.b").alias("entity_b")
         )
         .agg(F.count(F.lit(1)).alias("n_cooccur"))
-        .filter(F.col("n_cooccur") >= min_cooccur)
+        # always true; kept so the optimized plan stays byte-identical
+        .filter(F.col("n_cooccur") >= 1)
     )
-    ent_counts = ents.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
-    if broadcast_entity_counts:
-        ent_counts = F.broadcast(ent_counts)
+    ent_counts = F.broadcast(
+        ents.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
+    )
     # N as a broadcast one-row cross join: keeps the result a pure
     # DataFrame (no driver action) and AQE plans it as BNLJ of 1 row.
     n_convs = per_conv.agg(F.count(F.lit(1)).alias("__n"))

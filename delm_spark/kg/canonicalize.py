@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 #: (the canonical dictionary is broadcast-sized BY DESIGN, north rule)
 DRIVER_CC_MAX_EDGES = 100_000
 
+#: label-propagation rounds of a distributed run before it stops short of
+#: fixpoint (pointer jumping converges in O(log diameter) rounds)
+CC_MAX_ITER = 20
+
 #: iterations of the last distributed connected_components run (test hook
 #: for the one-job-per-iteration property)
 LAST_RUN_ITERATIONS = 0
@@ -55,26 +59,21 @@ def _driver_union_find(pairs: list) -> dict:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    num_partitions: int | None = None,
-    driver_cutoff: int = DRIVER_CC_MAX_EDGES,
+    edges: DataFrame, driver_cutoff: int = DRIVER_CC_MAX_EDGES
 ) -> DataFrame:
-    """Return (node, component) with component = min node label (string
-    ordering) reachable from the node.
+    """Return (node, component) over the undirected (src, dst) edges, with
+    component = min node label (string ordering) reachable from the node.
 
-    `num_partitions` sizes the per-iteration shuffles; when omitted it is
-    derived from the edge count (small graphs run on few partitions — an
-    iterative loop over a tiny frame at full shuffle width pays task-
-    scheduling overhead proportional to cores x iterations, which is
-    exactly the anti-scaling pattern the bench would expose).
+    The per-iteration shuffles are sized from the edge count (small graphs
+    run on few partitions — an iterative loop over a tiny frame at full
+    shuffle width pays task-scheduling overhead proportional to cores x
+    iterations, which is exactly the anti-scaling pattern the bench would
+    expose).
     """
     spark = edges.sparkSession
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .dropDuplicates(["a", "b"])
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .localCheckpoint(eager=True)
@@ -105,10 +104,9 @@ def connected_components(
                 [StructField("node", node_type), StructField("component", node_type)]
             ),
         ).coalesce(1)
-    if num_partitions is None:
-        # ~1M edges per partition, clamped to the session's shuffle width
-        width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        num_partitions = max(1, min(width, n_edges // 1_000_000 + 1))
+    # ~1M edges per partition, clamped to the session's shuffle width
+    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = max(1, min(width, n_edges // 1_000_000 + 1))
     sym = sym.repartition(num_partitions, "a").localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -123,7 +121,7 @@ def connected_components(
     LAST_RUN_ITER_SECONDS.clear()
     import time as _time
 
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         _iter_t0 = _time.perf_counter()
         # neighbor label messages + own label, take min per node; the old
         # label rides along (__old: one non-null per node, from the labels

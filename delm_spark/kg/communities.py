@@ -36,13 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 4,
-) -> DataFrame:
-    """Fixed-round synchronous LPA over an edge list.
+def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
+    """Fixed-round synchronous LPA over a (src, dst) edge list.
 
     Self-loops are dropped and parallel edges collapse to one (simple
     undirected graph — vote counts are neighbor counts, not mention
@@ -53,8 +48,8 @@ def label_propagation(
     (node, community, n_members), ordered by nothing (caller sorts).
     """
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         # null endpoints are malformed rows, not nodes: without this
         # filter a (x, null) edge would seed a (node=null, lbl=null)
         # label row that no vote join ever touches and surface as a
@@ -64,7 +59,7 @@ def label_propagation(
         .distinct()
     )
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")

@@ -25,16 +25,13 @@ Scale notes (100 TB / 1000-executor framing):
   from operators/packing.py (same contract).
 - `link_prediction_scores` enumerates wedges u–w–v through each common
   neighbor w: one self-equi-join of the adjacency list on w. Fan-out is
-  sum_w deg(w)^2, so super-hubs dominate; `max_hub_degree` drops w above
-  a degree ceiling — the standard cut, and principled here because a hub
-  with huge degree contributes ~1/ln(deg) ≈ 0 to Adamic-Adar anyway.
+  sum_w deg(w)^2, so super-hubs dominate (a hub of huge degree adds only
+  ~1/ln(deg) to Adamic-Adar; a degree ceiling on w is the standard cut).
   Existing edges are removed with one left-anti join, so the output is a
   ranked table of *missing* edges.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,9 +47,7 @@ def _portable_hash(*cols) -> "F.Column":
     return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
 
 
-def entity_ranks(
-    triples: DataFrame, subj_col: str = "subj", obj_col: str = "obj"
-) -> DataFrame:
+def entity_ranks(triples: DataFrame) -> DataFrame:
     """Dense 0-based rank over the distinct entity vocabulary (subjects
     union objects), ordered by entity string — the deterministic id
     space negative sampling draws replacements from.
@@ -69,8 +64,8 @@ def entity_ranks(
     partition order, so offset + within-rank reproduces the global dense
     rank exactly."""
     ents = (
-        triples.select(F.col(subj_col).alias("entity"))
-        .unionByName(triples.select(F.col(obj_col).alias("entity")))
+        triples.select(F.col("subj").alias("entity"))
+        .unionByName(triples.select(F.col("obj").alias("entity")))
         .distinct()
     )
     npart = max(triples.sparkSession.sparkContext.defaultParallelism, 1)
@@ -100,14 +95,7 @@ def entity_ranks(
     )
 
 
-def negative_samples(
-    triples: DataFrame,
-    k: int = 2,
-    seed: int = 0,
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-) -> DataFrame:
+def negative_samples(triples: DataFrame, k: int = 2, seed: int = 0) -> DataFrame:
     """Filtered TransE-style negative sampling: k corrupted triples per
     positive, head or tail replaced by a hash-chosen entity, minus the
     degenerate draws (replacement == original) and minus any corruption
@@ -122,12 +110,8 @@ def negative_samples(
     surviving draw: (subj, pred, obj, neg_idx, corrupt_side, neg_subj,
     neg_obj).
     """
-    pos = triples.select(
-        F.col(subj_col).alias("subj"),
-        F.col(pred_col).alias("pred"),
-        F.col(obj_col).alias("obj"),
-    ).distinct()
-    ranks = entity_ranks(pos, "subj", "obj")
+    pos = triples.select("subj", "pred", "obj").distinct()
+    ranks = entity_ranks(pos)
     n_ent = F.broadcast(ranks.agg(F.count("*").alias("__n_ent")))
 
     h = _portable_hash(
@@ -179,10 +163,7 @@ def negative_samples(
 
 
 def link_prediction_scores(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hub_degree: Optional[int] = None,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Common-neighbor / Adamic-Adar / resource-allocation scores for
     node pairs NOT currently connected, over the canonical simple
@@ -196,9 +177,7 @@ def link_prediction_scores(
 
     One adjacency self-join on w enumerates the wedges; per-w terms are
     quantized to integers BEFORE the sum so the result is independent of
-    aggregation order and exactly reproducible in SQL. `max_hub_degree`
-    (if set) drops wedges through nodes above that degree — the standard
-    hub cut that bounds the deg(w)^2 fan-out at web scale.
+    aggregation order and exactly reproducible in SQL.
     Returns (u, v, common_neighbors, aa_micro, ra_micro).
     """
     und = undirected_edges(edges, src, dst)
@@ -206,8 +185,6 @@ def link_prediction_scores(
         und.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
     deg = adj.groupBy("node").agg(F.count("*").cast("long").alias("degree"))
-    if max_hub_degree is not None:
-        deg = deg.filter(F.col("degree") <= max_hub_degree)
     # per-w integer terms, fixed before any aggregation. The division is
     # when()-guarded to keep the expression TOTAL: degree-1 nodes can
     # never be wedge centers (they lack two distinct neighbors) so their
@@ -230,7 +207,7 @@ def link_prediction_scores(
     wedges = (
         a1.join(a2, "node")
         .filter(F.col("u") < F.col("v"))
-        .join(wdeg, "node")  # inner: hub-cut nodes drop their wedges
+        .join(wdeg, "node")
     )
     scored = wedges.groupBy("u", "v").agg(
         F.count("*").cast("long").alias("common_neighbors"),

@@ -15,7 +15,7 @@ Shape:
 1. collect the distinct unresolved mention ids with their support
    (occurrence counts over both triple endpoints) — one
    map-side-combinable aggregation;
-2. cluster their surfaces within Levenshtein ``max_edits`` using the
+2. cluster their surfaces within Levenshtein distance 1 using the
    existing FastSS deletion-neighborhood join
    (operators/editdist.py — bounded variant fan-out, never all-pairs)
    and connected components over the VERIFIED pair graph only
@@ -25,12 +25,12 @@ Shape:
    smallest string), and mint the deterministic id
    ``entity:<md5(component label)[:16]>`` — retry/partition-independent
    because the component label is the min member surface;
-4. only multi-member clusters are minted (``min_members=2`` default): a
+4. only multi-member clusters are minted: a
    one-off singleton mention carries no evidence of being a stable
    entity, and minting it would just rename every unknown.
 
 Scale notes: the mention vocabulary is corpus-sized but the FastSS
-explode is bounded (len^max_edits variants per surface) and the
+explode is bounded (len variants per surface) and the
 candidate join is an equi-join on variant hash buckets; CC runs over
 verified pairs only (cluster graphs are tiny cliques/stars). The
 returned mapping is a (mention vocabulary)-sized table — apply it with
@@ -45,15 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 MENTION_PREFIX = "mention:"
 
 
-def consolidate_mentions(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    obj_col: str = "obj_id",
-    max_edits: int = 1,
-    min_members: int = 2,
-    min_len: int = 3,
-    max_len: int = 64,
-) -> DataFrame:
+def consolidate_mentions(triples: DataFrame) -> DataFrame:
     """Cluster unresolved ``mention:*`` endpoints by surface edit
     distance and mint deterministic entity ids for recurring variants.
 
@@ -61,32 +53,23 @@ def consolidate_mentions(
     (mention_id, new_id, display, n_members, cluster_support), where
     ``display`` is the cluster's most-supported surface (ties to the
     smallest), ``n_members`` its distinct-surface count, and
-    ``cluster_support`` the summed occurrence count. Mentions in
-    clusters smaller than ``min_members`` are not returned.
+    ``cluster_support`` the summed occurrence count. Singleton mentions
+    are not returned. Surfaces of 3-64 characters take part.
     """
-    if min_members < 2:
-        raise ValueError("min_members must be >= 2 (singletons stay mentions)")
     from delm_spark.kg.canonicalize import connected_components
     from delm_spark.operators.editdist import edit_distance_pairs
 
     plen = len(MENTION_PREFIX)
     mentions = (
-        triples.select(F.col(subj_col).alias("id"))
-        .unionByName(triples.select(F.col(obj_col).alias("id")))
+        triples.select(F.col("subj_id").alias("id"))
+        .unionByName(triples.select(F.col("obj_id").alias("id")))
         .filter(F.col("id").startswith(MENTION_PREFIX))
         .groupBy("id")
         .agg(F.count(F.lit(1)).cast("long").alias("support"))
         .withColumn("surface", F.expr(f"substring(id, {plen + 1})"))
         .localCheckpoint(eager=True)
     )
-    pairs = edit_distance_pairs(
-        mentions,
-        col="surface",
-        id_col="surface",
-        max_edits=max_edits,
-        min_len=min_len,
-        max_len=max_len,
-    )
+    pairs = edit_distance_pairs(mentions, col="surface", id_col="surface")
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).select(F.col("node").alias("surface"), "component")
@@ -103,7 +86,7 @@ def consolidate_mentions(
     )
     return (
         clustered.join(stats, "component")
-        .filter(F.col("n_members") >= min_members)
+        .filter(F.col("n_members") >= 2)
         .select(
             F.col("id").alias("mention_id"),
             F.concat(
@@ -116,33 +99,28 @@ def consolidate_mentions(
     )
 
 
-def apply_consolidation(
-    triples: DataFrame,
-    mapping: DataFrame,
-    subj_col: str = "subj_id",
-    obj_col: str = "obj_id",
-) -> DataFrame:
+def apply_consolidation(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite consolidated mention endpoints to their minted entity ids
     (two left equi-joins — the mapping is mention-vocabulary-sized and
     deliberately NOT broadcast); unmapped endpoints pass through."""
     m = mapping.select("mention_id", "new_id")
     out = (
         triples.join(
-            m.withColumnRenamed("mention_id", subj_col).withColumnRenamed(
+            m.withColumnRenamed("mention_id", "subj_id").withColumnRenamed(
                 "new_id", "__subj_new"
             ),
-            subj_col,
+            "subj_id",
             "left",
         )
         .join(
-            m.withColumnRenamed("mention_id", obj_col).withColumnRenamed(
+            m.withColumnRenamed("mention_id", "obj_id").withColumnRenamed(
                 "new_id", "__obj_new"
             ),
-            obj_col,
+            "obj_id",
             "left",
         )
-        .withColumn(subj_col, F.coalesce("__subj_new", subj_col))
-        .withColumn(obj_col, F.coalesce("__obj_new", obj_col))
+        .withColumn("subj_id", F.coalesce("__subj_new", "subj_id"))
+        .withColumn("obj_id", F.coalesce("__obj_new", "obj_id"))
         .drop("__subj_new", "__obj_new")
     )
     return out.select(*triples.columns)

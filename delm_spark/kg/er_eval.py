@@ -30,10 +30,8 @@ integer micro-units (1e6-scaled, floor division) so the result is
 bit-reproducible by any SQL engine regardless of aggregation order.
 
 Nodes present on only one side are scored as singletons on the missing
-side by default (``inner=False`` keeps the union of nodes; a node with
-no cluster participates in no same-cluster pair, which is exactly how
-a singleton behaves) — or restrict to the common support with
-``inner=True``.
+side (the union of nodes is kept; a node with no cluster participates
+in no same-cluster pair, which is exactly how a singleton behaves).
 """
 
 from __future__ import annotations
@@ -58,13 +56,7 @@ def _pair_count(labeled: DataFrame, label_cols: list[str]) -> DataFrame:
     )
 
 
-def pairwise_er_metrics(
-    predicted: DataFrame,
-    gold: DataFrame,
-    node_col: str = "node",
-    cluster_col: str = "cluster",
-    inner: bool = False,
-) -> DataFrame:
+def pairwise_er_metrics(predicted: DataFrame, gold: DataFrame) -> DataFrame:
     """Score a predicted (node, cluster) assignment against a gold one.
 
     Returns ONE row: (n_nodes, n_pred_clusters, n_gold_clusters,
@@ -73,17 +65,16 @@ def pairwise_er_metrics(
     (floor((1e6 * num) / den); 1e6 when the denominator is 0, the
     degenerate all-singletons-vs-all-singletons perfect score).
 
-    ``inner=False`` (default) scores over the UNION of nodes, treating
-    a node missing from one side as a singleton there; ``inner=True``
-    restricts both clusterings to their common node support first.
+    Scores over the UNION of nodes, treating a node missing from one side
+    as a singleton there.
     """
     p = predicted.select(
-        F.col(node_col).alias("node"), F.col(cluster_col).alias("pc")
+        F.col("node").alias("node"), F.col("cluster").alias("pc")
     ).distinct()
     g = gold.select(
-        F.col(node_col).alias("node"), F.col(cluster_col).alias("gc")
+        F.col("node").alias("node"), F.col("cluster").alias("gc")
     ).distinct()
-    joined = p.join(g, "node", "inner" if inner else "full_outer")
+    joined = p.join(g, "node", "full_outer")
     # a side-missing node is its own singleton: mint a per-node label
     # that can never collide with a real cluster id
     both = joined.select(

@@ -32,18 +32,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: peeling rounds before k_core stops short of its fixed point (peeling
+#: removes >= 1 node per non-final round; real graphs converge in a few)
+K_CORE_MAX_ITERS = 50
 
-def degree_distribution(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Histogram of node degrees: (degree, n_nodes).
+
+def degree_distribution(edges: DataFrame) -> DataFrame:
+    """Histogram of node degrees over a (src, dst) edge table:
+    (degree, n_nodes).
 
     Degree counts edge *endpoints* (a self-loop contributes 2, parallel
     edges each contribute 1) — the raw multigraph profile of the triple
     table. Two map-side-combinable aggregations, no joins.
     """
-    endpoints = edges.select(F.col(src).alias("node")).unionByName(
-        edges.select(F.col(dst).alias("node"))
+    endpoints = edges.select(F.col("src").alias("node")).unionByName(
+        edges.select(F.col("dst").alias("node"))
     )
     deg = endpoints.groupBy("node").agg(F.count("*").alias("degree"))
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
@@ -62,26 +65,17 @@ def undirected_edges(
     )
 
 
-def k_hop_neighbors(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    directed: bool = False,
-) -> DataFrame:
-    """BFS frontier expansion: every node within k hops of a seed set,
-    with its minimal hop count. `seeds` is a one-column ("node")
-    DataFrame; seeds are emitted at hops=0 whether or not they occur in
-    the edge table. Each hop is one equi-join on node id plus a distinct
+def k_hop_neighbors(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
+    """BFS frontier expansion over the undirected (src, dst) edges: every
+    node within k hops of a seed set, with its minimal hop count. `seeds`
+    is a one-column ("node") DataFrame; seeds are emitted at hops=0
+    whether or not they occur in the edge table. Each hop is one equi-join on node id plus a distinct
     and an anti-join against the visited set; the frontier is
     checkpointed eagerly so hop h+1 does not recompute hops 1..h
     (lineage doubling is the classic iterative-Spark trap)."""
-    adj = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
+    adj = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+    )
     visited = (
         seeds.select("node")
         .distinct()
@@ -216,9 +210,9 @@ def triangles(
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Total triangle count: single row (n_triangles)."""
-    return triangles(edges, src, dst).agg(
+    return triangles(edges).agg(
         F.count("*").cast("long").alias("n_triangles")
     )
 
@@ -266,14 +260,7 @@ def clustering_coefficient(
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 50,
-    counters: dict | None = None,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, counters: dict | None = None) -> DataFrame:
     """Nodes of the k-core: the maximal subgraph where every node keeps
     degree >= k (undirected simple graph — loops and parallel edges
     dropped first). Returns (node, core_degree) with the node's degree
@@ -295,7 +282,7 @@ def k_core(
     round (the repo's iterative convention: linear plan, no
     re-extraction). Convergence is detected with one count per round
     (node count is monotone decreasing, so equal counts = fixed point);
-    rounds are bounded by `max_iters` — peeling removes >= 1 node per
+    rounds are bounded by `K_CORE_MAX_ITERS` — peeling removes >= 1 node per
     non-final round, and real corpus graphs converge in a handful.
 
     ``counters`` (optional dict) receives {"rounds": r, "nodes": n} on
@@ -304,11 +291,9 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    if max_iters < 1:
-        raise ValueError("max_iters must be >= 1")
-    und = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     n_prev = -1
-    for i in range(max_iters):
+    for i in range(K_CORE_MAX_ITERS):
         deg = (
             und.select(F.col("u").alias("node"))
             .unionByName(und.select(F.col("v").alias("node")))
@@ -330,21 +315,16 @@ def k_core(
             .localCheckpoint(eager=True)
         )
     if counters is not None:
-        counters["rounds"] = max_iters
+        counters["rounds"] = K_CORE_MAX_ITERS
         counters["nodes"] = n
     return keep.select("node", "core_degree")
 
 
 def harmonic_centrality(
-    edges: DataFrame,
-    n_sources: int = 32,
-    max_depth: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    directed: bool = False,
+    edges: DataFrame, n_sources: int = 32, max_depth: int = 10
 ) -> DataFrame:
-    """Sampled harmonic centrality (Boldi & Vigna 2014 framing): for a
-    deterministic sample S of sources, ``C(v) = sum over s in S, s != v,
+    """Sampled harmonic centrality (Boldi & Vigna 2014 framing) over the
+    undirected (src, dst) edges: for a deterministic sample S of sources, ``C(v) = sum over s in S, s != v,
     d(s, v) finite of 1/d(s, v)`` — computed in exact integer
     micro-units (``1000000 div d``) so the sum is aggregation-order
     independent and byte-comparable across engines. Harmonic (not
@@ -375,13 +355,10 @@ def harmonic_centrality(
         raise ValueError("n_sources must be >= 1")
     if max_depth < 1:
         raise ValueError("max_depth must be >= 1")
-    adj = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
     adj = (
-        adj.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -38,7 +38,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-#: default deictic subject set — first-person singular and plural,
+#: deictic subject set — first-person singular and plural,
 #: subject/object/possessive forms, matched case-insensitively
 FIRST_PERSON: tuple[str, ...] = (
     "i", "me", "my", "mine", "myself", "we", "us", "our", "ours",
@@ -54,17 +54,11 @@ SECOND_PERSON: tuple[str, ...] = (
 def ground_pronouns(
     triples: DataFrame,
     transcripts: DataFrame,
-    pronouns: Sequence[str] = FIRST_PERSON,
     second_person: Sequence[str] = (),
-    subj_col: str = "subj",
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    speaker_prefix: str = "speaker:",
 ) -> DataFrame:
     """Rewrite pronoun subjects to ``speaker:<conv_id>:<role>`` entities.
 
-    ``pronouns`` (first person) bind to the SPEAKER of the turn the
+    :data:`FIRST_PERSON` subjects bind to the SPEAKER of the turn the
     triple came from. ``second_person`` forms (off by default — pass
     :data:`SECOND_PERSON`) bind to the ADDRESSEE, which is only
     well-defined when the conversation has exactly two distinct roles:
@@ -78,16 +72,16 @@ def ground_pronouns(
     unresolvable lineage, or ambiguous addressee). Row count and
     non-subject columns are preserved exactly.
     """
-    pron_set = [p.lower() for p in pronouns]
+    pron_set = list(FIRST_PERSON)
     second_set = [p.lower() for p in second_person]
     # null-safe: a NULL subject makes isin() NULL, which both a filter
     # and its negation drop — coalesce so null-subject triples pass
     # through the rest branch (grounded=0) instead of vanishing
     is_first = F.coalesce(
-        F.lower(F.col(subj_col)).isin(pron_set), F.lit(False)
+        F.lower(F.col("subj")).isin(pron_set), F.lit(False)
     )
     is_second = (
-        F.coalesce(F.lower(F.col(subj_col)).isin(second_set), F.lit(False))
+        F.coalesce(F.lower(F.col("subj")).isin(second_set), F.lit(False))
         if second_set
         else F.lit(False)
     )
@@ -101,28 +95,28 @@ def ground_pronouns(
 
     # cut the transcript table to exactly the keys the pronoun slice
     # needs, THEN resolve one deterministic role per key
-    keys = pron.select(conv_col, turn_col).distinct()
+    keys = pron.select("conv_id", "turn_idx").distinct()
     roles = (
-        transcripts.join(keys, [conv_col, turn_col], "left_semi")
-        .groupBy(conv_col, turn_col)
-        .agg(F.min(role_col).alias("__role"))
+        transcripts.join(keys, ["conv_id", "turn_idx"], "left_semi")
+        .groupBy("conv_id", "turn_idx")
+        .agg(F.min("role").alias("__role"))
     )
-    joined = pron.join(roles, [conv_col, turn_col], "left")
+    joined = pron.join(roles, ["conv_id", "turn_idx"], "left")
 
     if second_set:
         # addressee map: for each needed conversation with EXACTLY two
         # distinct roles, each role points at the other — built from the
         # semi-cut slice, so its size is bounded by the pronoun volume
-        convs = pron.filter(F.col("__second")).select(conv_col).distinct()
+        convs = pron.filter(F.col("__second")).select("conv_id").distinct()
         addressee = (
-            transcripts.join(convs, conv_col, "left_semi")
-            .select(conv_col, role_col)
+            transcripts.join(convs, "conv_id", "left_semi")
+            .select("conv_id", "role")
             .distinct()
-            .groupBy(conv_col)
-            .agg(F.collect_set(role_col).alias("__rs"))
+            .groupBy("conv_id")
+            .agg(F.collect_set("role").alias("__rs"))
             .filter(F.size("__rs") == 2)
             .select(
-                conv_col,
+                "conv_id",
                 F.explode(
                     F.array(
                         F.struct(
@@ -136,9 +130,9 @@ def ground_pronouns(
                     )
                 ).alias("__p"),
             )
-            .select(conv_col, "__p.__role", "__p.__other")
+            .select("conv_id", "__p.__role", "__p.__other")
         )
-        joined = joined.join(addressee, [conv_col, "__role"], "left")
+        joined = joined.join(addressee, ["conv_id", "__role"], "left")
     else:
         joined = joined.withColumn("__other", F.lit(None).cast("string"))
 
@@ -147,16 +141,16 @@ def ground_pronouns(
     )
     grounded = (
         joined.withColumn(
-            subj_col,
+            "subj",
             F.when(
                 target.isNotNull(),
                 F.concat(
-                    F.lit(speaker_prefix),
-                    F.col(conv_col),
+                    F.lit("speaker:"),
+                    F.col("conv_id"),
                     F.lit(":"),
                     target,
                 ),
-            ).otherwise(F.col(subj_col)),
+            ).otherwise(F.col("subj")),
         )
         .withColumn(
             "grounded",

@@ -42,25 +42,26 @@ def normalize_mention(col: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def surface_embedding(col: Column, dim: int = 64) -> Column:
+def surface_embedding(col: Column) -> Column:
     """Hashing-trick character-trigram embedding of a mention surface
-    (array<double> of bucket counts), fully native. Trigram bucket =
-    first 4 hex chars of md5 mod dim — the md5 family the LSH/minhash
+    (array<double> of 64 bucket counts), fully native. Trigram bucket =
+    first 4 hex chars of md5 mod 64 — the md5 family the LSH/minhash
     operators already use, so an external SQL oracle re-derives identical
     vectors. `^`/`$` padding makes leading/trailing characters count.
 
     Built as ONE aggregate over the bucket array (fold: acc[b] += 1)
-    rather than `dim` filter branches: CollapseProject inlines lambda
-    bodies, so a per-bucket filter would duplicate the whole trigram+md5
-    subtree `dim` times — a megabyte-scale codegen unit that cost ~9 s of
-    Janino compile time per query before any row was processed."""
+    rather than one filter branch per bucket: CollapseProject inlines
+    lambda bodies, so a per-bucket filter would duplicate the whole
+    trigram+md5 subtree 64 times — a megabyte-scale codegen unit that
+    cost ~9 s of Janino compile time per query before any row was
+    processed."""
     padded = F.concat(F.lit("^"), normalize_mention(col), F.lit("$"))
     idx = F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1)))
     tris = F.transform(idx, lambda i: padded.substr(i, F.lit(3)))
     buckets = F.transform(
-        tris, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long") % dim
+        tris, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long") % 64
     )
-    zeros = F.array_repeat(F.lit(0.0), dim)
+    zeros = F.array_repeat(F.lit(0.0), 64)
     return F.aggregate(
         buckets,
         zeros,
@@ -207,7 +208,6 @@ def _best_links(surfaces, ix: dict, dim: int, n_planes: int, cache: dict):
 def embedding_link_candidates(
     mentions: DataFrame,
     dictionary: DataFrame,
-    surface_col: str = "surface",
     dim: int = 64,
     n_planes: int = 8,
     probe_radius: int = 2,
@@ -215,7 +215,7 @@ def embedding_link_candidates(
     bands: int = 1,
 ) -> DataFrame:
     """Embedding-blocked entity-link candidates: each distinct mention
-    surface is matched to its best dictionary entity by trigram-embedding
+    `surface` is matched to its best dictionary entity by trigram-embedding
     cosine, with sign-LSH bucket blocking: a mention scores only the
     dictionary entries whose bucket lies within Hamming distance
     `probe_radius` of its own.
@@ -266,7 +266,7 @@ def embedding_link_candidates(
     # short surfaces coalesce to ONE partition — which would run the
     # Python kernel single-threaded. Explicit repartitions are AQE-exempt.
     return (
-        mentions.select(F.col(surface_col).alias("surface"))
+        mentions.select("surface")
         .dropDuplicates(["surface"])
         .repartition(spark.sparkContext.defaultParallelism)
         .mapInPandas(score, "surface string, canonical_id string, link_score double")
@@ -326,13 +326,9 @@ def resolve_mention_residue(
     )
 
 
-def link_mentions(
-    triples: DataFrame,
-    dictionary: DataFrame,
-    subj_col: str = "subj",
-    obj_col: str = "obj",
-) -> DataFrame:
-    """Attach `subj_id` / `obj_id` via broadcast dictionary lookup.
+def link_mentions(triples: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """Attach `subj_id` / `obj_id` to the `subj` / `obj` surfaces via
+    broadcast dictionary lookup.
 
     Unlinked mentions fall back to a deterministic `mention:<norm>` id so
     downstream canonicalization still groups exact-duplicate surfaces.
@@ -348,8 +344,8 @@ def link_mentions(
         )
     )
     out = (
-        triples.withColumn("__subj_norm", normalize_mention(F.col(subj_col)))
-        .withColumn("__obj_norm", normalize_mention(F.col(obj_col)))
+        triples.withColumn("__subj_norm", normalize_mention(F.col("subj")))
+        .withColumn("__obj_norm", normalize_mention(F.col("obj")))
         .join(dict_s, F.col("__subj_norm") == F.col("__surf_s"), "left")
         .join(dict_o, F.col("__obj_norm") == F.col("__surf_o"), "left")
         .withColumn(

@@ -43,18 +43,20 @@ from pyspark.sql import DataFrame, functions as F
 from delm_spark.kg.analytics import _sorted_pairs
 from delm_spark.kg.canonicalize import connected_components
 
+#: predicate pairs below this extensional Jaccard (micro-units) are not
+#: similar
+MIN_JACCARD_MICRO = 500_000
 
-def _pair_table(
-    triples: DataFrame, subj_col: str, pred_col: str, obj_col: str
-) -> DataFrame:
+
+def _pair_table(triples: DataFrame) -> DataFrame:
     """Distinct (pred, subj, obj) — the ONE corpus-sized shuffle of this
     module. Both public entry points derive everything from this single
     subplan so Spark's ReuseExchange dedupes the scan+distinct when they
     compose into one query."""
     return triples.select(
-        F.col(pred_col).alias("__p"),
-        F.col(subj_col).alias("__s"),
-        F.col(obj_col).alias("__o"),
+        F.col("pred").alias("__p"),
+        F.col("subj_id").alias("__s"),
+        F.col("obj_id").alias("__o"),
     ).distinct()
 
 
@@ -89,13 +91,7 @@ def _similarity_from_pairs(
     )
 
 
-def predicate_similarity(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-    min_jaccard_micro: int = 500_000,
-) -> DataFrame:
+def predicate_similarity(triples: DataFrame) -> DataFrame:
     """Extensional-overlap similarity between predicate pairs.
 
     For each unordered predicate pair (pred_a < pred_b) sharing at least
@@ -106,23 +102,19 @@ def predicate_similarity(
       jaccard_micro — floor(1e6 * n_shared / (n_a + n_b - n_shared)),
                       exact BIGINT end to end.
 
-    Rows below ``min_jaccard_micro`` are dropped. Plan shape: one
+    Rows below ``MIN_JACCARD_MICRO`` are dropped. Plan shape: one
     distinct (shuffle on the triple key) -> per-(subj, obj) predicate
     set (shuffle on the pair key) -> native pair expansion (no join) ->
     vocabulary-sized aggregation -> two broadcast joins against the
     per-predicate size table.
     """
-    pairs = _pair_table(triples, subj_col, pred_col, obj_col)
+    pairs = _pair_table(triples)
     sizes = pairs.groupBy(F.col("__p")).agg(F.count(F.lit(1)).alias("__n"))
-    return _similarity_from_pairs(pairs, sizes, min_jaccard_micro)
+    return _similarity_from_pairs(pairs, sizes, MIN_JACCARD_MICRO)
 
 
 def canonicalize_predicates(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-    min_jaccard_micro: int = 500_000,
+    triples: DataFrame, min_jaccard_micro: int = MIN_JACCARD_MICRO
 ) -> DataFrame:
     """Collapse predicate surface variants to canonical predicates.
 
@@ -148,9 +140,7 @@ def canonicalize_predicates(
     # the CC step is its own action (driver union-find collects the
     # vocabulary-sized edge list), so without a checkpoint the corpus
     # scan+distinct would re-run for the final labeled query
-    pairs = _pair_table(triples, subj_col, pred_col, obj_col).localCheckpoint(
-        eager=False
-    )
+    pairs = _pair_table(triples).localCheckpoint(eager=False)
     sizes = pairs.groupBy(F.col("__p")).agg(F.count(F.lit(1)).alias("__n"))
     sim = _similarity_from_pairs(pairs, sizes, min_jaccard_micro)
     comp = connected_components(

@@ -94,26 +94,21 @@ class StageRunner:
         spark: SparkSession,
         checkpoint_dir: Optional[str] = None,
         fingerprint: Optional[str] = None,
-        storage: Optional[str] = None,
     ):
         self.spark = spark
         self.dir = Path(checkpoint_dir) if checkpoint_dir else None
         self.fingerprint = fingerprint
-        # stage-table format: 'parquet' (default in-sandbox) or 'iceberg'
-        # (auto-selected when the runtime jar + a SparkCatalog are present;
-        # the north star names Iceberg tables — delm_spark/io/iceberg.py).
-        # Sidecars stay files under checkpoint_dir in both modes.
-        if storage is None:
-            from delm_spark.io.iceberg import configured_catalog, iceberg_available
+        # stage-table format: 'iceberg' when the runtime jar + a
+        # SparkCatalog are present (the north star names Iceberg tables —
+        # delm_spark/io/iceberg.py), else 'parquet'. Sidecars stay files
+        # under checkpoint_dir in both modes.
+        from delm_spark.io.iceberg import configured_catalog, iceberg_available
 
-            storage = (
-                "iceberg"
-                if iceberg_available(spark) and configured_catalog(spark)
-                else "parquet"
-            )
-        if storage not in ("parquet", "iceberg"):
-            raise ValueError(f"unknown stage storage {storage!r}")
-        self.storage = storage
+        self.storage = (
+            "iceberg"
+            if iceberg_available(spark) and configured_catalog(spark)
+            else "parquet"
+        )
         self.resumed: list[str] = []
         self.built: list[str] = []
         #: per-stage named metrics (rows, errors, token sums — the

@@ -128,23 +128,14 @@ def consistency_report(
     return stacked.select("r.check_name", "r.n_violations")
 
 
-def functional_violations(
-    triples: DataFrame,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-    functional_preds: list[str] | None = None,
-) -> DataFrame:
-    """The violating (pred, subj) groups themselves, with their distinct
-    object count — the drill-down a data steward triages from."""
-    if functional_preds is None:
-        functional_preds = DEFAULT_FUNCTIONAL_PREDS
+def functional_violations(triples: DataFrame) -> DataFrame:
+    """The violating (pred, subj_id) groups of the
+    ``DEFAULT_FUNCTIONAL_PREDS`` themselves, with their distinct object
+    count — the drill-down a data steward triages from."""
     return (
-        triples.filter(F.col(pred_col).isin(functional_preds))
-        .groupBy(
-            F.col(pred_col).alias("pred"), F.col(subj_col).alias("subj_id")
-        )
-        .agg(F.count_distinct(F.col(obj_col)).alias("n_objects"))
+        triples.filter(F.col("pred").isin(DEFAULT_FUNCTIONAL_PREDS))
+        .groupBy("pred", "subj_id")
+        .agg(F.count_distinct(F.col("obj_id")).alias("n_objects"))
         .filter(F.col("n_objects") > 1)
     )
 

@@ -36,6 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+#: the triple table's (subject, predicate, object) columns
+_COLS = ("subj_id", "pred", "obj_id")
+
+
 def _is_var(term: str) -> bool:
     return isinstance(term, str) and term.startswith("?") and len(term) > 1
 
@@ -43,7 +47,6 @@ def _is_var(term: str) -> bool:
 def _compile_group(
     triples: DataFrame,
     patterns: list[tuple[str, str, str]],
-    cols: tuple[str, str, str],
     allow_cartesian: bool,
     values: dict[str, list] | None = None,
 ) -> tuple[DataFrame, set[str]]:
@@ -64,7 +67,7 @@ def _compile_group(
         # term rewrite at compile time (swap the subject/object COLUMN
         # roles for this one pattern) — the scan, constant pushdown,
         # VALUES pruning, and join planning all apply unchanged.
-        pat, pcols = list(pat), list(cols)
+        pat, pcols = list(pat), list(_COLS)
         if isinstance(pat[1], str) and pat[1].startswith("^"):
             if pat[1] == "^" or _is_var(pat[1][1:]):
                 raise ValueError(
@@ -127,9 +130,6 @@ def _compile_group(
 def match_pattern(
     triples: DataFrame,
     patterns: list[tuple[str, str, str]],
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
     distinct: bool = True,
     allow_cartesian: bool = False,
     optional: list[list[tuple[str, str, str]]] | None = None,
@@ -140,7 +140,8 @@ def match_pattern(
     order_by: list[str] | None = None,
     limit: int | None = None,
 ) -> DataFrame:
-    """Match a conjunctive triple pattern; return variable bindings.
+    """Match a conjunctive triple pattern over the (subj_id, pred, obj_id)
+    triple table; return variable bindings.
 
     Each pattern is a (subject, predicate, object) 3-tuple of strings;
     a term starting with ``?`` is a variable, anything else is matched
@@ -216,7 +217,6 @@ def match_pattern(
     engine. Spark plans the pair as TakeOrdered (per-partition partial
     top-k, no global sort shuffle).
     """
-    cols = (subj_col, pred_col, obj_col)
     if values:
         all_vars = {
             t[1:]
@@ -235,14 +235,10 @@ def match_pattern(
                     f"values for ?{v} is empty — the query can match "
                     "nothing; drop the clause or list constants"
                 )
-    out, bound = _compile_group(
-        triples, patterns, cols, allow_cartesian, values
-    )
+    out, bound = _compile_group(triples, patterns, allow_cartesian, values)
     certain = set(bound)  # required-bound = never null
     for group in optional or []:
-        g, gvars = _compile_group(
-            triples, group, cols, allow_cartesian, values
-        )
+        g, gvars = _compile_group(triples, group, allow_cartesian, values)
         shared = sorted(gvars & bound)
         if not shared:
             raise ValueError(
@@ -263,9 +259,7 @@ def match_pattern(
         out = out.join(g.distinct(), on=shared, how="left")
         bound |= gvars
     for group in not_exists or []:
-        g, gvars = _compile_group(
-            triples, group, cols, allow_cartesian, values
-        )
+        g, gvars = _compile_group(triples, group, allow_cartesian, values)
         shared = sorted(gvars & bound)
         if not shared:
             raise ValueError(
@@ -343,26 +337,16 @@ def ask(
     )
 
 
-def describe(
-    triples: DataFrame,
-    node: str,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-) -> DataFrame:
+def describe(triples: DataFrame, node: str) -> DataFrame:
     """SPARQL DESCRIBE (concise-bounded style, depth 1): every distinct
     triple whose subject OR object is ``node`` — the entity's ego
     neighborhood as emitted/received facts in one frame with a ``role``
     tag. One scan of the triple table with a pushed-down disjunction
     (both branches prune to the constant), no join at all.
     """
-    t = triples.select(
-        F.col(subj_col).alias("subj_id"),
-        F.col(pred_col).alias("pred"),
-        F.col(obj_col).alias("obj_id"),
-    )
     return (
-        t.filter((F.col("subj_id") == node) | (F.col("obj_id") == node))
+        triples.select(*_COLS)
+        .filter((F.col("subj_id") == node) | (F.col("obj_id") == node))
         .withColumn(
             "role",
             F.when(F.col("subj_id") == node, F.lit("subject")).otherwise(
@@ -389,7 +373,6 @@ def match_aggregate(
     patterns: list[tuple[str, str, str]],
     group_by: list[str],
     aggs: list[tuple[str, str | None, str]],
-    having_expr: str | None = None,
     **match_kwargs,
 ) -> DataFrame:
     """SPARQL ``GROUP BY`` + aggregates over pattern solutions — the
@@ -401,8 +384,7 @@ def match_aggregate(
     may be None for ``COUNT(*)``), ``count_distinct``, ``min``, ``max``
     — exactly the SPARQL aggregates that stay EXACT over string
     bindings, so the result is reproducible bit-for-bit by any SQL
-    engine regardless of aggregation order. ``having_expr`` is SPARQL
-    HAVING: a SQL boolean over the aliased aggregate columns.
+    engine regardless of aggregation order.
 
     Solution semantics: SPARQL aggregates over the WHERE clause's
     solution multiset of the RDF GRAPH — a SET of triples — so the
@@ -422,10 +404,7 @@ def match_aggregate(
         raise ValueError("group_by needs at least one variable")
     if not aggs:
         raise ValueError("aggs needs at least one (fn, var, alias)")
-    subj = match_kwargs.get("subj_col", "subj_id")
-    pred = match_kwargs.get("pred_col", "pred")
-    obj = match_kwargs.get("obj_col", "obj_id")
-    store = triples.select(subj, pred, obj).distinct()
+    store = triples.select(*_COLS).distinct()
     bindings = match_pattern(
         store, patterns, **{**match_kwargs, "distinct": False}
     )
@@ -445,19 +424,13 @@ def match_aggregate(
         if fn in ("count", "count_distinct"):
             e = e.cast("long")
         exprs.append(e.alias(alias))
-    out = bindings.groupBy(*group_by).agg(*exprs)
-    if having_expr:
-        out = out.filter(F.expr(having_expr))
-    return out
+    return bindings.groupBy(*group_by).agg(*exprs)
 
 
 def construct(
     triples: DataFrame,
     patterns: list[tuple[str, str, str]],
     template: list[tuple[str, str, str]],
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
     **match_kwargs,
 ) -> DataFrame:
     """SPARQL ``CONSTRUCT``: match ``patterns``, instantiate each
@@ -479,20 +452,14 @@ def construct(
     if not template:
         raise ValueError("construct needs at least one template triple")
     bindings = match_pattern(
-        triples,
-        patterns,
-        subj_col=subj_col,
-        pred_col=pred_col,
-        obj_col=obj_col,
-        **{**match_kwargs, "distinct": False},
+        triples, patterns, **{**match_kwargs, "distinct": False}
     )
-    out_cols = (subj_col, pred_col, obj_col)
     parts = []
     for t in template:
         if len(t) != 3:
             raise ValueError(f"template triple must be a 3-tuple, got {t!r}")
         sel = []
-        for term, col in zip(t, out_cols):
+        for term, col in zip(t, _COLS):
             if _is_var(term):
                 v = term[1:]
                 if v not in bindings.columns:
@@ -506,19 +473,13 @@ def construct(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    notnull = [F.col(c).isNotNull() for c in out_cols]
+    notnull = [F.col(c).isNotNull() for c in _COLS]
     return out.filter(notnull[0] & notnull[1] & notnull[2]).distinct()
 
 
 def match_union(
     triples: DataFrame,
     groups: list[list[tuple[str, str, str]]],
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-    distinct: bool = True,
-    allow_cartesian: bool = False,
-    values: dict[str, list] | None = None,
 ) -> DataFrame:
     """SPARQL UNION of basic graph patterns: ``{ BGP_1 } UNION { BGP_2 }
     UNION ...`` — the alternative-shapes query ("x is affiliated via
@@ -526,28 +487,22 @@ def match_union(
     express.
 
     Each group compiles independently through the shared BGP engine
-    (same constant pushdown, join ordering, cartesian refusal, and
-    VALUES scoping as :func:`match_pattern`); the result has one column
-    per variable bound in ANY group, with SPARQL's unbound-variable
-    semantics — a group that does not bind a variable leaves it null in
-    that group's rows. ``distinct=True`` gives SELECT DISTINCT set
-    semantics ACROSS groups (a binding produced by two branches appears
-    once); ``distinct=False`` keeps bag semantics (branch multiplicity
-    preserved).
+    (same constant pushdown, join ordering and cartesian refusal as
+    :func:`match_pattern`); the result has one column per variable bound
+    in ANY group, with SPARQL's unbound-variable semantics — a group that
+    does not bind a variable leaves it null in that group's rows. The
+    result has SELECT DISTINCT set semantics ACROSS groups (a binding
+    produced by two branches appears once).
 
     Scale shape: a union of k independent join chains — Spark plans
     each branch separately (each with its own pushed filters) and the
-    union is a zero-shuffle concatenation; the optional trailing
-    DISTINCT is the one cross-branch shuffle, on the final
-    (deduplicated) binding width, never on the triple table.
+    union is a zero-shuffle concatenation; the trailing DISTINCT is the
+    one cross-branch shuffle, on the final (deduplicated) binding width,
+    never on the triple table.
     """
     if not groups or not all(groups):
         raise ValueError("match_union needs >= 1 non-empty pattern group")
-    cols = (subj_col, pred_col, obj_col)
-    compiled = [
-        _compile_group(triples, g, cols, allow_cartesian, values)
-        for g in groups
-    ]
+    compiled = [_compile_group(triples, g, False) for g in groups]
     all_vars = sorted(set().union(*(b for _, b in compiled)))
     out = None
     for frame, bound in compiled:
@@ -559,16 +514,13 @@ def match_union(
             )
         )
         out = padded if out is None else out.unionByName(padded)
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 def property_path(
     triples: DataFrame,
     pred: str | list[str],
     max_hops: int | None = 3,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
     zero_or_more: bool = False,
 ) -> DataFrame:
     """SPARQL property-path core ``pred{1,max_hops}``: all (src, dst)
@@ -621,8 +573,8 @@ def property_path(
     if not preds:
         raise ValueError("pred alternation list is empty")
     edges = (
-        triples.filter(F.col(pred_col).isin(*preds))
-        .select(F.col(subj_col).alias("src"), F.col(obj_col).alias("dst"))
+        triples.filter(F.col("pred").isin(*preds))
+        .select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)

@@ -63,14 +63,9 @@ def _decode(col: Column) -> Column:
     return col
 
 
-def to_ntriples(
-    triples: DataFrame,
-    base_iri: str = DEFAULT_BASE,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-) -> DataFrame:
-    """Serialize the distinct triple set to N-Triples lines.
+def to_ntriples(triples: DataFrame, base_iri: str = DEFAULT_BASE) -> DataFrame:
+    """Serialize the distinct (subj_id, pred, obj_id) triple set to
+    N-Triples lines.
 
     Returns a one-column DataFrame ``line: string``, one RDF statement
     per row: ``<base+enc(subj)> <base+enc(pred)> <base+enc(obj)> .``.
@@ -80,9 +75,9 @@ def to_ntriples(
     form a legal IRI and are dropped up front.
     """
     t = triples.select(
-        F.col(subj_col).alias("s"),
-        F.col(pred_col).alias("p"),
-        F.col(obj_col).alias("o"),
+        F.col("subj_id").alias("s"),
+        F.col("pred").alias("p"),
+        F.col("obj_id").alias("o"),
     )
     t = t.filter(
         F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
@@ -103,12 +98,8 @@ def to_ntriples(
 _NT_LINE = r"^\s*<([^<>]*)>\s+<([^<>]*)>\s+<([^<>]*)>\s*\.\s*$"
 
 
-def from_ntriples(
-    lines: DataFrame,
-    base_iri: str = DEFAULT_BASE,
-    line_col: str = "line",
-) -> DataFrame:
-    """Parse N-Triples lines back to (subj_id, pred, obj_id).
+def from_ntriples(lines: DataFrame, base_iri: str = DEFAULT_BASE) -> DataFrame:
+    """Parse N-Triples ``line``s back to (subj_id, pred, obj_id).
 
     Map-only: blank lines and ``#`` comments (legal N-Triples) are
     skipped; a line that is not a well-formed three-IRI statement
@@ -118,7 +109,7 @@ def from_ntriples(
     ``base_iri`` are stripped back to local ids and percent-decoded;
     foreign-base IRIs are kept verbatim (still lossless to re-export).
     """
-    line = F.col(line_col)
+    line = F.col("line")
     kept = lines.filter(
         line.isNotNull()
         & (F.trim(line) != "")

@@ -41,24 +41,14 @@ from pyspark.sql import DataFrame, functions as F
 from delm_spark.kg.query import property_path
 
 
-def rdfs_closure(
-    data: DataFrame,
-    schema: DataFrame,
-    subclass_pred: str = "subclass_of",
-    subproperty_pred: str = "subproperty_of",
-    domain_pred: str = "domain",
-    range_pred: str = "range",
-    type_pred: str = "type",
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
-) -> DataFrame:
+def rdfs_closure(data: DataFrame, schema: DataFrame) -> DataFrame:
     """Materialize the RDFS closure of ``data`` under ``schema``.
 
     ``data`` holds extracted (subj, pred, obj) triples; ``schema`` holds
     the ontology as triples using the four reserved predicates
-    (``subclass_of`` / ``subproperty_of`` / ``domain`` / ``range`` by
-    default — renameable because extraction vocabularies differ).
+    ``subclass_of`` / ``subproperty_of`` / ``domain`` / ``range``; both
+    use the (subj_id, pred, obj_id) columns, and derived types use the
+    predicate ``type``.
 
     Returns the DISTINCT union of asserted and entailed triples with an
     ``inferred`` int column (0 = asserted in ``data`` or ``schema``,
@@ -73,7 +63,7 @@ def rdfs_closure(
     a schema row whose subject/object is null is dropped rather than
     propagated.
     """
-    s, p, o = subj_col, pred_col, obj_col
+    s, p, o = "subj_id", "pred", "obj_id"
     schema = schema.filter(F.col(s).isNotNull() & F.col(o).isNotNull())
 
     def _closure(pred_name: str) -> DataFrame:
@@ -83,13 +73,10 @@ def rdfs_closure(
             return sub.select(
                 F.col(s).alias("src"), F.col(o).alias("dst")
             )
-        return property_path(
-            sub, pred_name, max_hops=None,
-            subj_col=s, pred_col=p, obj_col=o,
-        ).select("src", "dst")
+        return property_path(sub, pred_name, max_hops=None).select("src", "dst")
 
-    subprop = _closure(subproperty_pred).localCheckpoint(eager=True)
-    subclass = _closure(subclass_pred).localCheckpoint(eager=True)
+    subprop = _closure("subproperty_of").localCheckpoint(eager=True)
+    subclass = _closure("subclass_of").localCheckpoint(eager=True)
 
     # rdfs7: propagate every data triple up the property hierarchy
     rule7 = (
@@ -101,24 +88,24 @@ def rdfs_closure(
     props = data.select(s, p, o).unionByName(rule7)
 
     # rdfs2 / rdfs3: domain and range typing over the EXPANDED triples
-    dom = schema.filter(F.col(p) == domain_pred).select(
+    dom = schema.filter(F.col(p) == "domain").select(
         F.col(s).alias(p), F.col(o).alias("__cls")
     )
-    rng = schema.filter(F.col(p) == range_pred).select(
+    rng = schema.filter(F.col(p) == "range").select(
         F.col(s).alias(p), F.col(o).alias("__cls")
     )
     rule2 = props.join(F.broadcast(dom), p).select(
-        F.col(s), F.lit(type_pred).alias(p), F.col("__cls").alias(o)
+        F.col(s), F.lit("type").alias(p), F.col("__cls").alias(o)
     )
     rule3 = props.join(F.broadcast(rng), p).select(
-        F.col(o).alias(s), F.lit(type_pred).alias(p),
+        F.col(o).alias(s), F.lit("type").alias(p),
         F.col("__cls").alias(o),
     )
 
     # rdfs9: propagate type assertions (asserted + derived) up the
     # class hierarchy
     types = (
-        props.filter(F.col(p) == type_pred)
+        props.filter(F.col(p) == "type")
         .unionByName(rule2)
         .unionByName(rule3)
     )
@@ -129,12 +116,12 @@ def rdfs_closure(
     # entailed schema triples: the transitive pairs themselves
     sch5 = subprop.select(
         F.col("src").alias(s),
-        F.lit(subproperty_pred).alias(p),
+        F.lit("subproperty_of").alias(p),
         F.col("dst").alias(o),
     )
     sch11 = subclass.select(
         F.col("src").alias(s),
-        F.lit(subclass_pred).alias(p),
+        F.lit("subclass_of").alias(p),
         F.col("dst").alias(o),
     )
 

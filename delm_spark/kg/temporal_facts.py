@@ -46,21 +46,14 @@ from pyspark.sql import DataFrame, Window, functions as F
 def fact_intervals(
     triples: DataFrame,
     functional_preds: list[str] | None = None,
-    subj_col: str = "subj_id",
-    pred_col: str = "pred",
-    obj_col: str = "obj_id",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Collapse a timestamped triple-occurrence stream to one validity
-    interval per distinct fact. See module docstring for semantics."""
+    """Collapse a timestamped (subj_id, pred, obj_id) occurrence stream
+    to one validity interval per distinct fact. See module docstring for
+    semantics."""
     functional_preds = functional_preds or []
     facts = (
-        triples.select(
-            F.col(subj_col).alias("subj_id"),
-            F.col(pred_col).alias("pred"),
-            F.col(obj_col).alias("obj_id"),
-            F.col(ts_col).alias("__ts"),
-        )
+        triples.select("subj_id", "pred", "obj_id", F.col(ts_col).alias("__ts"))
         .filter(F.col("__ts").isNotNull())
         .groupBy("subj_id", "pred", "obj_id")
         .agg(

@@ -43,15 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def tool_sequences(
-    transcripts: DataFrame,
-    n: int = 2,
-    min_support: int = 1,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    tool_col: str = "tool",
-) -> DataFrame:
+def tool_sequences(transcripts: DataFrame, n: int = 2) -> DataFrame:
     """Consecutive tool n-grams across conversations with support counts.
 
     A tool n-gram is `n` successive tool turns (rows with role='tool'
@@ -59,20 +51,20 @@ def tool_sequences(
     among tool turns, i.e. user/assistant turns in between do not break
     the chain (the standard sequence-mining view of an agent trajectory).
 
-    Returns (tool_seq, n_occurrences, n_convs), filtered to
-    n_convs >= min_support. `tool_seq` joins tool names with '>'.
+    Returns (tool_seq, n_occurrences, n_convs). `tool_seq` joins tool
+    names with '>'.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    w = Window.partitionBy(conv_col).orderBy(turn_col)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     t = transcripts.filter(
-        (F.col(role_col) == "tool") & F.col(tool_col).isNotNull()
+        (F.col("role") == "tool") & F.col("tool").isNotNull()
     )
-    steps = [F.col(tool_col)] + [
-        F.lead(tool_col, i).over(w) for i in range(1, n)
+    steps = [F.col("tool")] + [
+        F.lead("tool", i).over(w) for i in range(1, n)
     ]
     grams = t.select(
-        F.col(conv_col).alias("__conv"),
+        F.col("conv_id").alias("__conv"),
         F.concat_ws(">", *steps).alias("tool_seq"),
         steps[-1].alias("__last"),
     ).filter(F.col("__last").isNotNull())
@@ -82,19 +74,12 @@ def tool_sequences(
             F.count(F.lit(1)).alias("n_occurrences"),
             F.countDistinct("__conv").alias("n_convs"),
         )
-        .filter(F.col("n_convs") >= min_support)
+        # drops n-grams seen only under a null conv_id
+        .filter(F.col("n_convs") >= 1)
     )
 
 
-def entity_timeline(
-    triples: DataFrame,
-    transcripts: DataFrame,
-    subj_col: str = "subj_id",
-    obj_col: str = "obj_id",
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
+def entity_timeline(triples: DataFrame, transcripts: DataFrame) -> DataFrame:
     """Temporal profile per canonical entity.
 
     Joins the extracted triples back to the transcript turns they came
@@ -108,14 +93,14 @@ def entity_timeline(
       span_sec      — last_ts - first_ts, the entity's active span.
     """
     ts_map = transcripts.select(
-        F.col(conv_col).alias("__conv"),
-        F.col(turn_col).alias("__turn"),
-        F.col(ts_col).cast("long").alias("__epoch"),
+        F.col("conv_id").alias("__conv"),
+        F.col("turn_idx").alias("__turn"),
+        F.col("ts").cast("long").alias("__epoch"),
     )
     ents = triples.select(
-        F.col(conv_col).alias("__conv"),
-        F.col(turn_col).alias("__turn"),
-        F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias("entity"),
+        F.col("conv_id").alias("__conv"),
+        F.col("turn_idx").alias("__turn"),
+        F.explode(F.array(F.col("subj_id"), F.col("obj_id"))).alias("entity"),
     )
     joined = ents.join(ts_map, ["__conv", "__turn"])
     return joined.groupBy("entity").agg(
@@ -146,14 +131,7 @@ _RULE_COUNTER = {
 
 
 def transcript_integrity(
-    transcripts: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    tool_col: str = "tool",
-    ts_col: str = "ts",
-    rules: tuple = INTEGRITY_RULES,
+    transcripts: DataFrame, rules: tuple = INTEGRITY_RULES
 ) -> DataFrame:
     """Per-conversation structural QA over the transcript table — the
     admission gate a 10^12-turn corpus needs BEFORE extraction: a
@@ -194,23 +172,23 @@ def transcript_integrity(
     # corruption this gate detects) a turn_idx-only order would leave
     # the lag neighbors engine-dependent; the full key is a total order
     # on every lag-compared column, so counts are deterministic
-    w = Window.partitionBy(conv_col).orderBy(turn_col, ts_col, role_col)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role")
     flagged = transcripts.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col(turn_col).alias("__turn"),
-        F.when(F.col(ts_col) < F.lag(ts_col).over(w), 1)
+        F.col("conv_id").alias("conv_id"),
+        F.col("turn_idx").alias("__turn"),
+        F.when(F.col("ts") < F.lag("ts").over(w), 1)
         .otherwise(0)
         .alias("__ts_reg"),
-        F.when(F.col(role_col) == F.lag(role_col).over(w), 1)
+        F.when(F.col("role") == F.lag("role").over(w), 1)
         .otherwise(0)
         .alias("__role_rep"),
         F.when(
-            F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""), 1
+            F.col("text").isNull() | (F.trim(F.col("text")) == ""), 1
         )
         .otherwise(0)
         .alias("__empty"),
         F.when(
-            F.col(tool_col).isNotNull() & (F.col(tool_col) != ""), 1
+            F.col("tool").isNotNull() & (F.col("tool") != ""), 1
         )
         .otherwise(0)
         .alias("__tool"),
@@ -238,15 +216,7 @@ def transcript_integrity(
     return agg.select("*", disposition.alias("disposition"))
 
 
-def context_windows(
-    transcripts: DataFrame,
-    k: int = 3,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    ts_col: str = "ts",
-) -> DataFrame:
+def context_windows(transcripts: DataFrame, k: int = 3) -> DataFrame:
     """Rolling conversational context per turn — the north star's
     "window-ordered turn assembly" as a standalone operator: each turn
     paired with its previous `k` turns rendered `role: text` and joined
@@ -265,28 +235,22 @@ def context_windows(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     w = (
-        Window.partitionBy(conv_col)
-        .orderBy(turn_col, ts_col, role_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx", "ts", "role")
         .rowsBetween(-k, -1)
     )
-    line = F.concat_ws(": ", F.col(role_col), F.coalesce(F.col(text_col), F.lit("")))
+    line = F.concat_ws(": ", F.col("role"), F.coalesce(F.col("text"), F.lit("")))
     return transcripts.select(
-        conv_col,
-        turn_col,
-        role_col,
-        text_col,
+        "conv_id",
+        "turn_idx",
+        "role",
+        "text",
         F.concat_ws("\n", F.collect_list(line).over(w)).alias("context"),
         F.size(F.collect_list(line).over(w)).cast("long").alias("n_context_turns"),
     )
 
 
-def turn_latency(
-    transcripts: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    ts_col: str = "ts",
-) -> DataFrame:
+def turn_latency(transcripts: DataFrame) -> DataFrame:
     """Per-conversation response-latency profile in exact integer epoch
     seconds — the transcript-QA companion to transcript_integrity: a
     conversation whose assistant turns arrive hours apart is a different
@@ -305,13 +269,13 @@ def turn_latency(
       asst_n             — assistant turns with a predecessor,
       asst_sum_latency_sec / asst_max_latency_sec — gaps preceding
                            assistant turns (user-perceived wait)."""
-    w = Window.partitionBy(conv_col).orderBy(turn_col, ts_col, role_col)
-    delta = (F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w))
+    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role")
+    delta = (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w))
     flagged = transcripts.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col(ts_col).cast("long").alias("__epoch"),
+        F.col("conv_id").alias("conv_id"),
+        F.col("ts").cast("long").alias("__epoch"),
         delta.alias("__delta"),
-        F.when(F.col(role_col) == "assistant", delta).alias("__asst_delta"),
+        F.when(F.col("role") == "assistant", delta).alias("__asst_delta"),
     )
     return flagged.groupBy("conv_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_turns"),

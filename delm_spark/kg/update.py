@@ -55,7 +55,6 @@ def nodes_from_edges(edges: DataFrame) -> DataFrame:
 def merge_graph(
     existing_edges: DataFrame,
     new_edges: DataFrame,
-    conv_col: str = "conv_id",
     counters: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Merge a new batch's edges into the existing edge table with
@@ -82,22 +81,18 @@ def merge_graph(
     recanonicalization pass is needed.
     """
     fresh = new_edges.join(
-        existing_edges.select(conv_col).distinct(), conv_col, "left_anti"
+        existing_edges.select("conv_id").distinct(), "conv_id", "left_anti"
     )
     if counters is not None:
-        n_incoming = new_edges.select(conv_col).distinct().count()
-        n_fresh = fresh.select(conv_col).distinct().count()
+        n_incoming = new_edges.select("conv_id").distinct().count()
+        n_fresh = fresh.select("conv_id").distinct().count()
         counters["dropped_conv_ids"] = n_incoming - n_fresh
         counters["fresh_conv_ids"] = n_fresh
     edges = existing_edges.unionByName(fresh)
     return nodes_from_edges(edges), edges
 
 
-def graph_diff(
-    edges_old: DataFrame,
-    edges_new: DataFrame,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
+def graph_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
     """Set-level diff between two KG snapshots: rows in `edges_new` but
     not `edges_old` tagged 'added', rows in `edges_old` but not
     `edges_new` tagged 'removed' — the audit table an incremental
@@ -105,7 +100,7 @@ def graph_diff(
     so downstream consumers can subscribe to changes instead of
     re-scanning the snapshot.
 
-    `key_cols` defaults to the columns the two tables share. Set
+    The key is the columns the two tables share. Set
     semantics (distinct by key, null-safe equality — two null-keyed rows
     compare equal, like SQL EXCEPT), so support-duplicate edge rows
     collapse and the diff is symmetric-difference exact.
@@ -114,11 +109,7 @@ def graph_diff(
     same composite key (Spark plans one exchange per side which both the
     distinct and the join reuse). No broadcast of either snapshot, no
     all-pairs."""
-    cols = (
-        list(key_cols)
-        if key_cols
-        else [c for c in edges_old.columns if c in edges_new.columns]
-    )
+    cols = [c for c in edges_old.columns if c in edges_new.columns]
     if not cols:
         raise ValueError("graph_diff: no shared key columns")
     old = edges_old.select(*cols).distinct()

@@ -33,15 +33,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def random_walks(
-    edges: DataFrame,
-    length: int = 4,
-    seed: str = "walk",
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def random_walks(edges: DataFrame, length: int = 4, seed: str = "walk") -> DataFrame:
     """One `length`-hop walk from every node of the undirected simple
-    graph induced by `edges` (self-loops dropped, direction ignored).
+    graph induced by the (src, dst) `edges` (self-loops dropped,
+    direction ignored).
 
     Returns (walk_id, path, end_node): walk_id is the start node, path
     the '>'-joined node sequence (length+1 nodes). Symmetrizing the
@@ -51,10 +46,10 @@ def random_walks(
     if length < 1:
         raise ValueError(f"length must be >= 1, got {length}")
     und = (
-        edges.filter(F.col(src_col) != F.col(dst_col))
+        edges.filter(F.col("src") != F.col("dst"))
         .select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
         )
         .distinct()
     )

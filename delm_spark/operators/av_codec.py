@@ -234,13 +234,11 @@ def decode_avi(data: bytes) -> tuple[int, list[np.ndarray]]:
 
 
 def sample_frames(
-    data: bytes, every_k: int = 1, max_frames: Optional[int] = None
+    data: bytes, every_k: int = 1
 ) -> tuple[int, int, list[tuple[int, np.ndarray]]]:
     """AVI bytes -> (fps, n_frames, [(frame_idx, frame), ...]) keeping
     every k-th frame — the fixed-rate frame-sampling step of a video
     training pipeline."""
     fps, frames = decode_avi(data)
     picked = [(i, f) for i, f in enumerate(frames) if i % every_k == 0]
-    if max_frames is not None:
-        picked = picked[:max_frames]
     return fps, len(frames), picked

@@ -77,12 +77,8 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_learn(
-    df: DataFrame,
-    n_merges: int = 4,
-    text_col: str = "text",
-) -> DataFrame:
-    """Learn `n_merges` BPE merges from a text corpus.
+def bpe_learn(df: DataFrame, n_merges: int = 4) -> DataFrame:
+    """Learn `n_merges` BPE merges from the corpus's `text` column.
 
     Returns the merge table (rank 1..n_merges, left, right, pair_count)
     in learning order. Each round's winner is the max-count adjacent
@@ -97,7 +93,7 @@ def bpe_learn(
     spark = df.sparkSession
     words = (
         df.select(
-            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("w")
+            F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")
@@ -134,23 +130,18 @@ def bpe_learn(
     )
 
 
-def bpe_segment(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a learned merge list to a corpus: per-word character split,
-    then the merge replaces in rank order — a pure map-only expression
-    chain (no shuffle, no Python). Returns (id_col, tokens: array of
-    BPE symbols)."""
+def bpe_segment(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Apply a learned merge list to a (doc_id, text) corpus: per-word
+    character split, then the merge replaces in rank order — a pure
+    map-only expression chain (no shuffle, no Python). Returns (doc_id,
+    tokens: array of BPE symbols)."""
     return (
         df.select(
-            F.col(id_col),
-            F.split(normalize_text(F.col(text_col)), " ").alias("__ws"),
+            F.col("doc_id"),
+            F.split(normalize_text(F.col("text")), " ").alias("__ws"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.flatten(
                 F.transform(
                     F.filter(F.col("__ws"), lambda w: w != F.lit("")),

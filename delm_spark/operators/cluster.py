@@ -66,22 +66,18 @@ def _dist2(a: Column, b: Column) -> Column:
     )
 
 
-def kmeans_init(
-    embeddings: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "kmeans",
-) -> DataFrame:
+def kmeans_init(embeddings: DataFrame, k: int) -> DataFrame:
     """Deterministic seed centroids: the k vectors whose
-    ``md5(id || '|salt')`` sorts smallest (the IVF convention —
+    ``md5(vec_id || '|kmeans')`` sorts smallest (the IVF convention —
     quasi-random, engine-reproducible, no RNG). Returns
     (cluster_id 0..k-1 in md5 order, centroid: array<bigint> micro)."""
     from pyspark.sql import Window
 
-    key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|" + salt)))
+    key = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("|kmeans")))
     picked = (
-        embeddings.select(key.alias("__k"), vec_micro(F.col(vec_col)).alias("centroid"))
+        embeddings.select(
+            key.alias("__k"), vec_micro(F.col("embedding")).alias("centroid")
+        )
         .orderBy("__k")
         .limit(k)
     )
@@ -133,14 +129,7 @@ def _div_trunc(s: int, c: int) -> int:
     return -((-s) // c) if s < 0 else s // c
 
 
-def _kmeans_fit_rows(
-    embeddings: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    salt: str,
-):
+def _kmeans_fit_rows(embeddings: DataFrame, k: int, iters: int):
     """Driver-side Lloyd loop (r6): per iteration ONE job — the
     assignment + per-cluster integer sums aggregation — whose k-row
     result is collected and the `sum div count` update applied in exact
@@ -156,9 +145,9 @@ def _kmeans_fit_rows(
     (cluster_id, centroid list) and vm the localCheckpoint-ed micro
     vectors for reuse by the caller's final assignment."""
     vm = embeddings.select(
-        F.col(id_col), vec_micro(F.col(vec_col)).alias("vm")
+        F.col("vec_id"), vec_micro(F.col("embedding")).alias("vm")
     ).localCheckpoint(eager=True)
-    init = kmeans_init(embeddings, k, id_col, vec_col, salt).collect()
+    init = kmeans_init(embeddings, k).collect()
     cent_rows = [(int(r["cluster_id"]), list(r["centroid"])) for r in init]
     if not cent_rows:
         return [], vm
@@ -190,29 +179,22 @@ def _kmeans_fit_rows(
     return cent_rows, vm
 
 
-def kmeans_cluster(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "kmeans",
-) -> DataFrame:
-    """Fit + final assignment: (id_col, cluster_id, dist_micro2), one row
+def kmeans_cluster(embeddings: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
+    """Fit + final assignment: (vec_id, cluster_id, dist_micro2), one row
     per input vector. The final assignment reuses the fit's
     checkpointed micro vectors (the source scan runs once, not twice)."""
-    cent_rows, vm = _kmeans_fit_rows(embeddings, k, iters, id_col, vec_col, salt)
+    cent_rows, vm = _kmeans_fit_rows(embeddings, k, iters)
     if not cent_rows:
         return vm.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(None).cast("int").alias("cluster_id"),
             F.lit(None).cast("long").alias("dist_micro2"),
         )
     # two-step select: the argmin fold is interpreted (HOF) and consumed
     # by two fields — aliasing it once keeps it evaluated once per row
     best = _assign_best_expr(cent_rows, "vm")
-    return vm.select(F.col(id_col), best.alias("__best")).select(
-        id_col,
+    return vm.select(F.col("vec_id"), best.alias("__best")).select(
+        "vec_id",
         F.col("__best.cluster_id").alias("cluster_id"),
         F.col("__best.dist_micro2").alias("dist_micro2"),
     )

@@ -199,28 +199,27 @@ def repetition_stats(
     )
 
 
+#: Gopher rule thresholds: the published rules scaled for short documents
+GOPHER_WORDS = (20, 100_000)
+GOPHER_MEAN_WORD_LEN = (2.0, 10.0)
+GOPHER_MAX_DUP_LINE_FRAC = 0.30
+GOPHER_MAX_TOP_BIGRAM_FRAC = 0.18
+
+
 def gopher_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 10.0,
-    max_dup_line_frac: float = 0.30,
-    max_top_bigram_frac: float = 0.18,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Gopher-style rule filter over `repetition_stats`: one int flag per
-    rule plus the composed `pass_quality`. Thresholds default to the
-    published rules scaled for short documents."""
+    rule plus the composed `pass_quality`, at the `GOPHER_*` thresholds."""
     stats = repetition_stats(df, text_col, id_col)
+    (min_words, max_words), (min_len, max_len) = GOPHER_WORDS, GOPHER_MEAN_WORD_LEN
     checks = {
         "ok_word_count": (F.col("word_count") >= min_words)
         & (F.col("word_count") <= max_words),
-        "ok_mean_word_len": (F.col("mean_word_len") >= min_mean_word_len)
-        & (F.col("mean_word_len") <= max_mean_word_len),
-        "ok_dup_lines": F.col("dup_line_frac") <= max_dup_line_frac,
-        "ok_top_bigram": F.col("top_bigram_frac") <= max_top_bigram_frac,
+        "ok_mean_word_len": (F.col("mean_word_len") >= min_len)
+        & (F.col("mean_word_len") <= max_len),
+        "ok_dup_lines": F.col("dup_line_frac") <= GOPHER_MAX_DUP_LINE_FRAC,
+        "ok_top_bigram": F.col("top_bigram_frac") <= GOPHER_MAX_TOP_BIGRAM_FRAC,
     }
     out = stats
     pass_all = F.lit(True)
@@ -265,13 +264,9 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def unigram_lm_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 30,
-) -> DataFrame:
-    """Mean unigram surprisal per document, in integer micronats.
+def unigram_lm_score(df: DataFrame, vocab_size: int = 30) -> DataFrame:
+    """Mean unigram surprisal per document (doc_id, text), in integer
+    micronats.
 
     Two-pass corpus LM: (1) whitespace-token counts -> top-`vocab_size`
     vocabulary (count desc, word asc tie-break) with per-word
@@ -288,7 +283,7 @@ def unigram_lm_score(
     """
     micronats = _micronats
     tokens = df.select(
-        F.col(id_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("w")
+        F.col("doc_id"), F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
     )
     # vocab AND the corpus total both derive from the one word-count
     # aggregate (ln(sum of counts) == ln(token count)): ReuseExchange
@@ -307,13 +302,13 @@ def unigram_lm_score(
         tokens.join(F.broadcast(vocab), "w", "left")
         .crossJoin(F.broadcast(total))
         .select(
-            id_col,
+            "doc_id",
             (
                 F.col("ln_total_micro") - F.coalesce(F.col("ln_cnt_micro"), F.lit(0))
             ).alias("surprisal_micro"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("surprisal_micro").cast("long").alias("sum_surprisal_micro"),
         F.expr("sum(surprisal_micro) div count(1)").cast("long").alias("avg_surprisal_micro"),
@@ -341,13 +336,13 @@ def hashed_features(col: Column, dim: int) -> Column:
     return hash_bucket(col, dim)
 
 
-def _nonempty_tokens(text_col: str):
-    """Normalized whitespace tokens of a document, null-safe: null text
+def _nonempty_tokens():
+    """Normalized whitespace tokens of a document's text, null-safe: null text
     coalesces to '' and empty tokens are filtered, so neither a null doc
     nor an empty one contributes a phantom '' feature (training) or a
     phantom token count (scoring)."""
     return F.filter(
-        F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " "),
+        F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "),
         lambda t: t != "",
     )
 
@@ -355,11 +350,11 @@ def _nonempty_tokens(text_col: str):
 def nb_logodds_weights(
     df: DataFrame,
     label_col: Column,
-    text_col: str = "text",
     dim: int = 1024,
 ) -> DataFrame:
     """Train a naive-Bayes log-odds linear model over hashed unigram
-    features: weight(f) = ln(count_pos(f) + 1) - ln(count_neg(f) + 1),
+    features of the `text` column: weight(f) = ln(count_pos(f) + 1) -
+    ln(count_neg(f) + 1),
     in integer micronats. This is the classic cheap quality classifier
     (a fastText-style linear text scorer with NB-initialized weights):
     ONE token shuffle (map-side combinable conditional counts), model
@@ -372,7 +367,7 @@ def nb_logodds_weights(
     """
     tokens = df.select(
         label_col.cast("boolean").alias("__y"),
-        F.explode(_nonempty_tokens(text_col)).alias("w"),
+        F.explode(_nonempty_tokens()).alias("w"),
     )
     return (
         tokens.select(hashed_features(F.col("w"), dim).alias("feature"), "__y")
@@ -393,11 +388,10 @@ def nb_logodds_weights(
 def hashed_linear_score(
     df: DataFrame,
     weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     dim: int = 1024,
 ) -> DataFrame:
-    """Score every document under a (feature, weight_micro) linear model:
+    """Score every (doc_id, text) document under a (feature, weight_micro)
+    linear model:
     sum / floor-mean of its hashed-token weights (integer micronats, so
     scores are exact and aggregation-order independent; the sign of
     avg_weight_micro IS the NB class decision). Unseen features score 0.
@@ -413,9 +407,9 @@ def hashed_linear_score(
     '' token (split of ''). explode_outer keeps token-less docs as one
     null-token row that counts 0 and sums 0."""
     tokens = df.select(
-        F.col(id_col), F.explode_outer(_nonempty_tokens(text_col)).alias("__w")
+        F.col("doc_id"), F.explode_outer(_nonempty_tokens()).alias("__w")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "__w",
         F.when(
             F.col("__w").isNotNull(), hashed_features(F.col("__w"), dim)
@@ -423,7 +417,7 @@ def hashed_linear_score(
     )
     return (
         tokens.join(F.broadcast(weights), "feature", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("__w").alias("n_tokens"),
             F.sum(F.coalesce(F.col("weight_micro"), F.lit(0)))
@@ -438,13 +432,9 @@ def hashed_linear_score(
     )
 
 
-def bigram_lm_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 30,
-) -> DataFrame:
-    """Mean BIGRAM surprisal per document in integer micronats — the
+def bigram_lm_score(df: DataFrame, vocab_size: int = 30) -> DataFrame:
+    """Mean BIGRAM surprisal per (doc_id, text) document in integer
+    micronats — the
     second-order companion of `unigram_lm_score` (fluency-sensitive
     where the unigram score only sees word choice).
 
@@ -466,13 +456,13 @@ def bigram_lm_score(
     per-doc aggregation are the only exchanges; the conditional tables
     join back broadcast (bounded by (V+1)^2 observed entries).
 
-    Returns (id_col, n_bigrams, sum_surprisal_micro, avg_surprisal_micro)
+    Returns (doc_id, n_bigrams, sum_surprisal_micro, avg_surprisal_micro)
     with single-token/empty docs keeping an n_bigrams=0 zero row.
     """
     micronats = _micronats
-    words = F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
+    words = F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " ")
     docs = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(words, lambda w: w != F.lit("")).alias("__ws"),
     )
     tokens = docs.select(F.explode("__ws").alias("w"))
@@ -492,13 +482,13 @@ def bigram_lm_score(
         w,
     )
     mapped = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
             "__ws", lambda w: F.when(in_vocab(w), w).otherwise(F.lit("<unk>"))
         ).alias("__ms"),
     )
     grams = mapped.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(
@@ -510,7 +500,7 @@ def bigram_lm_score(
                 lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
             )
         ).alias("g"),
-    ).select(id_col, F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
+    ).select("doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
     uni = (
         grams.groupBy("w1")
         .agg(F.count(F.lit(1)).alias("c1"))
@@ -524,19 +514,19 @@ def bigram_lm_score(
     scored = (
         grams.join(F.broadcast(bi), ["w1", "w2"])
         .join(F.broadcast(uni), "w1")
-        .select(id_col, (F.col("ln_den") - F.col("ln_num")).alias("s"))
+        .select("doc_id", (F.col("ln_den") - F.col("ln_num")).alias("s"))
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.sum("s").cast("long").alias("sum_surprisal_micro"),
         F.expr("sum(s) div count(1)").cast("long").alias("avg_surprisal_micro"),
     )
     # zero rows for docs with < 2 tokens (LEFT join back over all inputs)
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.coalesce("sum_surprisal_micro", F.lit(0))
             .cast("long")
@@ -551,10 +541,9 @@ def bigram_lm_score(
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
     dim: int = 4096,
 ) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023, "Data Selection for
+    """DSIR importance weights over the `text` column (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): per hashed-unigram
     feature, ln p_target(f) - ln p_raw(f) with add-one smoothing, in
     integer micronats — the model a pretraining pipeline uses to
@@ -576,7 +565,7 @@ def dsir_weights(
 
     def bucket_counts(df: DataFrame, out: str) -> DataFrame:
         return (
-            df.select(F.explode(_nonempty_tokens(text_col)).alias("__w"))
+            df.select(F.explode(_nonempty_tokens()).alias("__w"))
             .select(hashed_features(F.col("__w"), dim).alias("feature"))
             .groupBy("feature")
             .agg(F.count(F.lit(1)).alias(out))

@@ -328,6 +328,8 @@ def containment_pairs(
 
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 — sign-safe in a BIGINT, SQL-reproducible
+#: contiguous signature blocks of the rotating multi-block LSH
+SIMHASH_BLOCKS = 4
 
 
 def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -381,15 +383,14 @@ def simhash_dedup_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    n_blocks: int = 4,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
-    Rotating multi-block LSH: the signature is cut into `n_blocks`
+    Rotating multi-block LSH: the signature is cut into `SIMHASH_BLOCKS`
     contiguous blocks; by pigeonhole, any pair within Hamming distance
-    <= n_blocks - 1 shares at least one exact block, so blocking on
+    <= SIMHASH_BLOCKS - 1 shares at least one exact block, so blocking on
     every block (one posexplode + equi-join on (block_pos, block_value))
-    gives FULL recall for max_hamming <= n_blocks - 1. Bucket sizes stay
+    gives FULL recall for max_hamming <= SIMHASH_BLOCKS - 1. Bucket sizes stay
     bounded per block value; the pair join is a plain equi-join AQE can
     re-plan at scale.
 
@@ -403,7 +404,7 @@ def simhash_dedup_pairs(
     sig = simhash_signatures_agg(df, text_col, id_col).withColumnRenamed(
         id_col, "__id"
     )
-    bits_per_block = SIMHASH_BITS // n_blocks
+    bits_per_block = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << bits_per_block) - 1
 
     def _block(side: str, k: int):
@@ -420,7 +421,7 @@ def simhash_dedup_pairs(
                     F.shiftrightunsigned("__sh", k * bits_per_block).bitwiseAND(
                         F.lit(mask)
                     )
-                    for k in range(n_blocks)
+                    for k in range(SIMHASH_BLOCKS)
                 ]
             )
         ).alias("__bpos", "__blk"),
@@ -432,7 +433,7 @@ def simhash_dedup_pairs(
     # first-match guard: drop a candidate when ANY earlier block already
     # matched (that copy of the pair is emitted by the earlier bucket)
     not_earlier = F.lit(True)
-    for k in range(n_blocks - 1):
+    for k in range(SIMHASH_BLOCKS - 1):
         not_earlier = not_earlier & (
             (F.col("a.__bpos") <= F.lit(k)) | (_block("a", k) != _block("b", k))
         )
@@ -470,18 +471,17 @@ def band_buckets(sig: Column, k: int, bands: int) -> Column:
     )
 
 
-def minhash_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """Persistent LSH index of a (deduplicated) corpus, for incremental
-    dedup of future batches: returns `(bands_df, shingles_df)` where
-    bands_df is (id_col, __band int, __bucket string) — one row per
-    (doc, band) — and shingles_df is (id_col, __sh array<string>).
+#: MinHash signature length, LSH bands and shingle width of the persistent
+#: index: `minhash_index` builds it and `incremental_dedup` probes it, so
+#: both read these
+INDEX_K, INDEX_BANDS, INDEX_N = 16, 4, 3
+
+
+def minhash_index(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Persistent LSH index of a (deduplicated) (doc_id, text) corpus, for
+    incremental dedup of future batches: returns `(bands_df, shingles_df)`
+    where bands_df is (doc_id, __band int, __bucket string) — one row per
+    (doc, band) — and shingles_df is (doc_id, __sh array<string>).
 
     Both are meant to be WRITTEN as staging tables once and appended to
     as batches survive; a catalog table bucketed by __bucket
@@ -489,15 +489,15 @@ def minhash_index(
     co-located join on the corpus side. At 100 TB the index is the only
     state the dedup pass keeps — the corpus text itself is never re-read.
     """
-    sig = minhash_signatures_agg(df, text_col, id_col, k=k, n=n)
+    sig = minhash_signatures_agg(df, "text", "doc_id", k=INDEX_K, n=INDEX_N)
     bands_df = sig.select(
-        id_col,
-        F.posexplode(band_buckets(F.col("__sig"), k, bands)).alias(
+        "doc_id",
+        F.posexplode(band_buckets(F.col("__sig"), INDEX_K, INDEX_BANDS)).alias(
             "__band", "__bucket"
         ),
     )
     shingles_df = df.select(
-        F.col(id_col), shingles(F.col(text_col), n).alias("__sh")
+        F.col("doc_id"), shingles(F.col("text"), INDEX_N).alias("__sh")
     )
     return bands_df, shingles_df
 
@@ -506,19 +506,13 @@ def incremental_dedup(
     new_df: DataFrame,
     index_bands: DataFrame,
     index_shingles: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
     jaccard_threshold: float = 0.5,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
-    """Near-dup verdict for each NEW document against an existing corpus
-    index (from `minhash_index`), without touching corpus text: returns
-    (id_col, is_dup int, dup_of, jaccard) where dup_of is the corpus id
-    with the highest exact shingle Jaccard >= threshold among the LSH
-    candidates (ties -> smallest corpus id), else null.
+    """Near-dup verdict for each NEW (doc_id, text) document against an
+    existing corpus index (from `minhash_index`), without touching corpus
+    text: returns (doc_id, is_dup int, dup_of, jaccard) where dup_of is
+    the corpus id with the highest exact shingle Jaccard >= threshold
+    among the LSH candidates (ties -> smallest corpus id), else null.
 
     Plan shape for the steady state (batch << corpus): the batch's band
     table and shingles are BROADCAST, so the corpus index is scanned
@@ -528,10 +522,8 @@ def incremental_dedup(
     Self-dedup within the batch is a separate (cheap) `minhash_lsh_pairs`
     over the batch alone; run it first, then this against the corpus.
     """
-    new_bands, new_shingles = minhash_index(
-        new_df, text_col, id_col, k=k, bands=bands, n=n
-    )
-    nb = F.broadcast(new_bands) if broadcast_batch else new_bands
+    new_bands, new_shingles = minhash_index(new_df)
+    nb = F.broadcast(new_bands)
     cand = (
         index_bands.alias("c")
         .join(
@@ -540,26 +532,26 @@ def incremental_dedup(
             & (F.col("c.__bucket") == F.col("b.__bucket")),
         )
         .select(
-            F.col(f"b.{id_col}").alias("__new_id"),
-            F.col(f"c.{id_col}").alias("__corpus_id"),
+            F.col("b.doc_id").alias("__new_id"),
+            F.col("c.doc_id").alias("__corpus_id"),
         )
         .distinct()
     )
-    ns = F.broadcast(new_shingles) if broadcast_batch else new_shingles
+    ns = F.broadcast(new_shingles)
     # candidates are bounded by the batch (x a small LSH match factor),
     # so broadcast THEM into the shingle lookup too: the corpus shingle
     # store is then scan-only, never reshuffled (at 500k docs this cut a
     # ~350 MB shingle-array exchange to zero)
-    cb = F.broadcast(cand) if broadcast_batch else cand
+    cb = F.broadcast(cand)
     jacc = (
         cb.join(
             index_shingles.select(
-                F.col(id_col).alias("__corpus_id"), F.col("__sh").alias("__csh")
+                F.col("doc_id").alias("__corpus_id"), F.col("__sh").alias("__csh")
             ),
             "__corpus_id",
         )
         .join(
-            ns.select(F.col(id_col).alias("__new_id"), F.col("__sh").alias("__nsh")),
+            ns.select(F.col("doc_id").alias("__new_id"), F.col("__sh").alias("__nsh")),
             "__new_id",
         )
         .select(
@@ -584,16 +576,16 @@ def incremental_dedup(
             ).alias("t")
         )
         .select(
-            F.col("__new_id").alias(id_col),
+            F.col("__new_id").alias("doc_id"),
             F.col("t.cid").alias("dup_of"),
             F.round(-F.col("t.nj"), 6).alias("jaccard"),
         )
     )
     return (
-        new_df.select(id_col)
-        .join(best, id_col, "left")
+        new_df.select("doc_id")
+        .join(best, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("dup_of").isNotNull().cast("int").alias("is_dup"),
             "dup_of",
             "jaccard",
@@ -656,13 +648,12 @@ def duplicate_spans(
     text_col: str,
     id_col: str,
     width: int = 8,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Exact duplicate-substring detection (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better" ExactSubstr
     operator, re-expressed at token granularity): find every maximal span
     of >= `width` consecutive normalized tokens that also appears in at
-    least `min_docs` documents, so a curation pass can cut the span (or
+    least 2 documents, so a curation pass can cut the span (or
     drop the doc) instead of near-dup-ing whole documents.
 
     Mechanism — shingle fingerprints, never suffix arrays (a distributed
@@ -672,7 +663,7 @@ def duplicate_spans(
       1. tokenize (shared normalize_text contract) with positions,
       2. width-token shingles per position via a lead chain over the
          per-document window (bounded by the doc's own length),
-      3. shingle hashes appearing in >= min_docs DISTINCT docs — the
+      3. shingle hashes appearing in >= 2 DISTINCT docs — the
          (hash, doc) pairs are deduped FIRST so the count aggregation
          is bounded by distinct pairs, then
       4. surviving positions merge per doc into maximal spans by
@@ -692,8 +683,6 @@ def duplicate_spans(
     band join and partial-aggregates all the way."""
     if width < 2:
         raise ValueError(f"width must be >= 2, got {width}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     from pyspark.sql import Window
 
     toks = df.select(
@@ -717,7 +706,7 @@ def duplicate_spans(
         .distinct()
         .groupBy("__h")
         .count()
-        .filter(F.col("count") >= min_docs)
+        .filter(F.col("count") >= 2)
         .select("__h", F.col("count").alias("__n_docs"))
     )
     hits = shingles.join(dup, "__h").select("__doc", "__pos", "__n_docs")

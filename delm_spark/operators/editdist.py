@@ -71,31 +71,30 @@ def deletion_variants(s: Column, d: int) -> Column:
     return F.array_distinct(F.concat(base, two))
 
 
+#: (min, max) key length in characters that takes part in the pair search
+KEY_LEN = (3, 64)
+
+
 def edit_distance_pairs(
     df: DataFrame,
     col: str,
     id_col: str,
     max_edits: int = 1,
-    min_len: int = 3,
-    max_len: int = 64,
 ) -> DataFrame:
     """All pairs (id_a < id_b) whose `col` strings are within Levenshtein
     distance `max_edits` (1 or 2): FastSS deletion-neighborhood blocking
     + one variant equi-join + exact native levenshtein refine.
 
-    Keys shorter than `min_len` or longer than `max_len` are excluded
-    (short keys flood the variant buckets, long keys blow up the d=2
-    neighborhood quadratically); at web scale tune both to the key
-    domain. Returns (id_a, id_b, str_a, str_b, lev) ordered by nothing —
-    callers sort.
+    Keys outside `KEY_LEN` are excluded (short keys flood the variant
+    buckets, long keys blow up the d=2 neighborhood quadratically).
+    Returns (id_a, id_b, str_a, str_b, lev) ordered by nothing — callers
+    sort.
     """
-    if not 0 < min_len <= max_len:
-        raise ValueError(f"need 0 < min_len <= max_len, got {min_len}, {max_len}")
     keys = df.select(
         F.col(id_col).alias("id"), F.col(col).alias("s")
     ).filter(
         F.col("s").isNotNull()
-        & F.length("s").between(min_len, max_len)
+        & F.length("s").between(*KEY_LEN)
     )
     exploded = keys.select(
         "id", "s",

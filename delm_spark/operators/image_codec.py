@@ -258,10 +258,11 @@ def luma(img: np.ndarray) -> np.ndarray:
     return rgb @ np.array([0.299, 0.587, 0.114], np.float32)
 
 
-def pixel_stats(img: np.ndarray, hist_bins: int = 16) -> dict:
-    """Deterministic pixel features: mean/std luma + normalized histogram."""
+def pixel_stats(img: np.ndarray) -> dict:
+    """Deterministic pixel features: mean/std luma + normalized 16-bin
+    histogram."""
     y = luma(img)
-    hist, _ = np.histogram(y, bins=hist_bins, range=(0.0, 256.0))
+    hist, _ = np.histogram(y, bins=16, range=(0.0, 256.0))
     n = y.size or 1
     return {
         "mean_luma": float(y.mean()) if y.size else 0.0,

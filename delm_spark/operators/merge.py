@@ -25,50 +25,44 @@ from pyspark.sql import functions as F
 from delm_spark.schemas.spec import MultipleSpec, NestedSpec, SchemaSpec, SimpleSpec
 
 
-def majority_vote_df(
-    values: DataFrame,
-    record_col: str = "record_id",
-    value_col: str = "value",
-    pos_col: str = "pos",
-) -> DataFrame:
+def majority_vote_df(values: DataFrame) -> DataFrame:
     """A1: per record, the most frequent value; ties -> value whose FIRST
-    occurrence (min pos) is earliest. Input rows = one row per occurrence.
+    occurrence (min pos) is earliest. Input rows = one (record_id, value,
+    pos) row per occurrence.
 
-    Returns (record_col, value_col).
+    Returns (record_id, value).
     """
-    counted = values.groupBy(record_col, value_col).agg(
-        F.count(F.lit(1)).alias("__cnt"), F.min(pos_col).alias("__first_pos")
+    counted = values.groupBy("record_id", "value").agg(
+        F.count(F.lit(1)).alias("__cnt"), F.min("pos").alias("__first_pos")
     )
-    w = Window.partitionBy(record_col).orderBy(
+    w = Window.partitionBy("record_id").orderBy(
         F.desc("__cnt"), F.asc("__first_pos")
     )
     return (
         counted.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(record_col, value_col)
+        .select("record_id", "value")
     )
 
 
-def merge_nested_records(
-    triples: DataFrame,
-    record_col: str = "conv_id",
-    order_cols: tuple = ("turn_idx", "chunk_pos", "item_pos"),
-    item_cols: tuple = ("subj", "pred", "obj"),
-) -> DataFrame:
-    """A3: concatenate nested-container items per record in chunk order.
+def merge_nested_records(triples: DataFrame) -> DataFrame:
+    """A3: concatenate nested-container items per conversation in chunk
+    order.
 
-    Returns (record_col, items: array<struct<item_cols>>), items ordered by
-    `order_cols` — the distributed equivalent of merge_jsons_for_record for
-    nested schemas (post_processing.py:99-110).
+    Returns (conv_id, items: array<struct<subj, pred, obj>>), items
+    ordered by (turn_idx, chunk_pos, item_pos) — the distributed
+    equivalent of merge_jsons_for_record for nested schemas
+    (post_processing.py:99-110).
     """
+    item_cols = ("subj", "pred", "obj")
     ordered_struct = F.struct(
-        *[F.col(c) for c in order_cols], *[F.col(c) for c in item_cols]
+        *[F.col(c) for c in ("turn_idx", "chunk_pos", "item_pos", *item_cols)]
     )
-    agg = triples.groupBy(record_col).agg(
+    agg = triples.groupBy("conv_id").agg(
         F.array_sort(F.collect_list(ordered_struct)).alias("__sorted")
     )
     return agg.select(
-        record_col,
+        "conv_id",
         F.transform(
             F.col("__sorted"),
             lambda s: F.struct(*[s.getField(c).alias(c) for c in item_cols]),

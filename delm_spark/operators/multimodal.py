@@ -58,6 +58,10 @@ MEDIA_SCHEMA = StructType(
 
 FEATURE_DIM = 64
 
+#: media rows per decode chunk inside one Arrow batch, so one huge batch of
+#: large blobs cannot blow worker memory (video frames decode larger)
+MEDIA_BATCH_ROWS, VIDEO_BATCH_ROWS = 64, 16
+
 _FEATURE_FIELDS = [
     StructField("media_id", StringType()),
     StructField("kind", StringType()),
@@ -120,7 +124,7 @@ def image_header_dims(content: bytes) -> tuple[Optional[str], Optional[int], Opt
     return None, None, None
 
 
-def image_pixel_stats(media: DataFrame, batch_rows: int = 64) -> DataFrame:
+def image_pixel_stats(media: DataFrame) -> DataFrame:
     """media -> (media_id, format, width, height, mean_luma, std_luma,
     luma_hist, n_pixels): REAL pixel decode for PNG / GIF / JPEG
     (baseline + progressive) / uncompressed BMP payloads
@@ -145,8 +149,8 @@ def image_pixel_stats(media: DataFrame, batch_rows: int = 64) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                part = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), MEDIA_BATCH_ROWS):
+                part = pdf.iloc[start : start + MEDIA_BATCH_ROWS]
                 out = {k: [] for k in ("format", "width", "height", "mean_luma",
                                        "std_luma", "luma_hist", "n_pixels")}
                 for content in part["content"]:
@@ -181,7 +185,7 @@ def image_pixel_stats(media: DataFrame, batch_rows: int = 64) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, schema=schema)
 
 
-def audio_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """media -> (media_id, format, sample_rate, channels, n_samples,
     duration_ms, sample_sum, peak_abs, zero_crossings): REAL audio decode
     for PCM WAV payloads (operators/av_codec.py, pure stdlib+numpy);
@@ -208,8 +212,8 @@ def audio_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                part = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), MEDIA_BATCH_ROWS):
+                part = pdf.iloc[start : start + MEDIA_BATCH_ROWS]
                 out: dict = {k: [] for k in ("format",) + cols}
                 for content in part["content"]:
                     b = bytes(content) if content is not None else b""
@@ -242,10 +246,7 @@ def audio_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, schema=schema)
 
 
-def video_frame_stats(
-    media: DataFrame, every_k: int = 1, max_frames: Optional[int] = None,
-    batch_rows: int = 16,
-) -> DataFrame:
+def video_frame_stats(media: DataFrame, every_k: int = 1) -> DataFrame:
     """media -> one row per SAMPLED frame (media_id, frame_idx, n_frames,
     fps, width, height, mean_luma, n_pixels): REAL video decode + fixed-
     rate frame sampling for uncompressed-DIB AVI payloads
@@ -270,15 +271,13 @@ def video_frame_stats(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                part = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), VIDEO_BATCH_ROWS):
+                part = pdf.iloc[start : start + VIDEO_BATCH_ROWS]
                 rows = []
                 for mid, content in zip(part["media_id"], part["content"]):
                     b = bytes(content) if content is not None else b""
                     try:
-                        fps, n_frames, picked = sample_frames(
-                            b, every_k=every_k, max_frames=max_frames
-                        )
+                        fps, n_frames, picked = sample_frames(b, every_k=every_k)
                     except ValueError:
                         rows.append((mid, None, None, None, None, None, None, None))
                         continue
@@ -305,21 +304,20 @@ def video_frame_stats(
 def extract_media_features(
     media: DataFrame,
     decoder: Optional[Callable[[bytes, str], np.ndarray]] = None,
-    batch_rows: int = 64,
 ) -> DataFrame:
     """media table -> (media_id, kind, n_bytes, content_sha, features).
 
     `decoder(content_bytes, kind) -> np.ndarray[FEATURE_DIM]` is the only
-    pluggable piece. Batches are re-chunked to `batch_rows` inside the UDF
-    so one huge Arrow batch of large blobs cannot blow worker memory.
+    pluggable piece. Batches are re-chunked to `MEDIA_BATCH_ROWS` inside
+    the UDF.
     """
     decode = decoder or _fake_decode
     out_schema = StructType(_FEATURE_FIELDS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                part = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), MEDIA_BATCH_ROWS):
+                part = pdf.iloc[start : start + MEDIA_BATCH_ROWS]
                 feats, shas, sizes = [], [], []
                 for content in part["content"]:
                     b = bytes(content) if content is not None else b""

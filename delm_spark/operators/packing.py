@@ -93,24 +93,19 @@ def pack_sequences(
     )
 
 
-def pack_summary(packed: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def pack_summary(packed: DataFrame) -> DataFrame:
     """Per-pack census over `pack_sequences` output: document count,
     token total, and the id span (packs are contiguous id ranges by
     construction, so min/max fully describe membership)."""
     return packed.groupBy("pack_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
-def shard_assign(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-    seed: str = "shard0",
-) -> DataFrame:
+def shard_assign(df: DataFrame, id_col: str = "doc_id", n_shards: int = 8) -> DataFrame:
     """Deterministic global pseudo-shuffle into training shards — the
     export stage of a training-data pipeline. Data loaders want (a) a
     fixed shard count, (b) within-shard order uncorrelated with corpus
@@ -120,26 +115,24 @@ def shard_assign(
     task attempt — a retried task reshuffles its rows).
 
     Both the shard AND the within-shard position derive from ONE
-    md5(seed|id): shard = hash % n_shards, position = rank of the hash
+    md5('shard0|' || id): shard = hash % n_shards, position = rank of the hash
     inside the shard (md5 collisions are the only tie source — none in
     practice, and a collision still yields a total order via the id
     tie-break). Map-only except the per-shard rank window — and that
     window's partition count IS n_shards, so at 100 TB pick n_shards >>
     executors (standard practice: thousands of shards) and every window
-    partition stays executor-sized. Re-running with a new `seed` epoch
-    produces an independent permutation (epoch reshuffling without
-    rewriting the corpus).
+    partition stays executor-sized.
 
     Returns (id_col, shard, shard_pos) with int64 shard/shard_pos.
     """
-    return _with_shard(df.select(id_col), id_col, n_shards, seed)
+    return _with_shard(df.select(id_col), id_col, n_shards)
 
 
-def _with_shard(df: DataFrame, id_col: str, n_shards: int, seed: str) -> DataFrame:
+def _with_shard(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
     """df + (shard, shard_pos), payload columns carried through — so
     write_shards computes the assignment inline instead of re-scanning
     the input for a second pass + an extra join exchange."""
-    h = F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("shard0|"), F.col(id_col).cast("string")))
     hv = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
     w = Window.partitionBy("shard").orderBy(F.col("__h"), F.col(id_col))
     return (
@@ -150,22 +143,17 @@ def _with_shard(df: DataFrame, id_col: str, n_shards: int, seed: str) -> DataFra
     )
 
 
-def write_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-    seed: str = "shard0",
-) -> None:
-    """Materialize shard-shuffled training data: one directory per shard
+def write_shards(df: DataFrame, path: str) -> None:
+    """Materialize `shard_assign`'s 8-shard shuffle of (doc_id, ...)
+    training data: one directory per shard
     (`shard=K/`), rows physically ordered by shard_pos inside each file
     so a loader streams them in shuffle order without its own sort.
     repartition ON THE SHARD KEY + sortWithinPartitions keeps this a
     single shuffle; partitionBy lays out the directories. The assignment
     is computed inline on df (no join, no second scan of the input)."""
-    assigned = _with_shard(df, id_col, n_shards, seed)
+    assigned = _with_shard(df, "doc_id", 8)
     (
-        assigned.repartition(n_shards, "shard")
+        assigned.repartition(8, "shard")
         .sortWithinPartitions("shard", "shard_pos")
         .write.mode("overwrite")
         .partitionBy("shard")

@@ -49,34 +49,30 @@ def _l2sq_fx(a, b):
     return F.round(d2 * 1e9).cast("long")
 
 
-def _explode_subvectors(
-    embeddings: DataFrame, m: int, d_sub: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _explode_subvectors(embeddings: DataFrame, m: int, d_sub: int) -> DataFrame:
     """(id, subspace, sv): every vector split into its m subvectors —
     shared by the catalyst encode and the Lloyd trainer so the slicing
     convention can never diverge between them."""
     return embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(j).alias("subspace"),
-                        _subvec(F.col(vec_col), j, d_sub).alias("sv"),
+                        _subvec(F.col("embedding"), j, d_sub).alias("sv"),
                     )
                     for j in range(m)
                 ]
             )
         ).alias("e"),
-    ).select(id_col, "e.subspace", "e.sv")
+    ).select("vec_id", "e.subspace", "e.sv")
 
 
 def pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Deterministic per-subspace codebooks: subspace j's k code vectors
@@ -84,7 +80,7 @@ def pq_codebooks(
     md5(vec_id || '|pq' || j); code_id is their rank in that order.
     Returns (subspace, code_id, codevec) — m*k rows, always broadcast."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     d_sub = dim // m
@@ -94,9 +90,9 @@ def pq_codebooks(
         parts.append(
             embeddings.select(
                 F.lit(j).alias("subspace"),
-                _subvec(F.col(vec_col), j, d_sub).alias("codevec"),
+                _subvec(F.col("embedding"), j, d_sub).alias("codevec"),
                 F.md5(
-                    F.concat(F.col(id_col).cast("string"), F.lit(f"|pq{j}"))
+                    F.concat(F.col("vec_id").cast("string"), F.lit(f"|pq{j}"))
                 ).alias("__r"),
             )
             .orderBy("__r")
@@ -114,8 +110,6 @@ def pq_encode(
     embeddings: DataFrame,
     codebooks: DataFrame,
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Quantize every vector: per subspace, the code with the smallest
@@ -123,20 +117,20 @@ def pq_encode(
     Returns (vec_id, subspace, code) — the m-bytes-per-vector table the
     query path scans instead of raw floats."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     d_sub = dim // m
-    subs = _explode_subvectors(embeddings, m, d_sub, id_col, vec_col)
+    subs = _explode_subvectors(embeddings, m, d_sub)
     scored = subs.join(F.broadcast(codebooks), "subspace").select(
-        id_col,
+        "vec_id",
         "subspace",
         "code_id",
         _l2sq_fx(F.col("sv"), F.col("codevec")).alias("__d"),
     )
     best = F.min(F.struct("__d", "code_id")).alias("__b")
     return (
-        scored.groupBy(id_col, "subspace")
+        scored.groupBy("vec_id", "subspace")
         .agg(best)
-        .select(id_col, "subspace", F.col("__b.code_id").alias("code"))
+        .select("vec_id", "subspace", F.col("__b.code_id").alias("code"))
     )
 
 
@@ -147,9 +141,6 @@ def pq_topk(
     k_codes: int = 16,
     k: int = 10,
     refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     dim: int | None = None,
     fast_encode: bool = False,
     codebooks: DataFrame | None = None,
@@ -178,37 +169,33 @@ def pq_topk(
     vec_id asc), the same output contract as ivf_topk/lsh_topk.
     """
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     d_sub = dim // m
     books = (
         codebooks
         if codebooks is not None
-        else pq_codebooks(embeddings, m, k_codes, id_col, vec_col, dim)
+        else pq_codebooks(embeddings, m, k_codes, dim)
     )
     if encoded_packed is not None:
-        packed = encoded_packed.select(id_col, "__codes")
+        packed = encoded_packed.select("vec_id", "__codes")
     elif fast_encode:
-        packed = pq_encode_fast(
-            embeddings, books, m, id_col, vec_col, dim, packed=True
-        )
+        packed = pq_encode_fast(embeddings, books, m, dim, packed=True)
     else:
         # pivot the oracle-path encode to one row per vector; array_sort
         # on (subspace, code) structs puts code j at position j
         packed = (
-            pq_encode(embeddings, books, m, id_col, vec_col, dim)
-            .groupBy(id_col)
+            pq_encode(embeddings, books, m, dim)
+            .groupBy("vec_id")
             .agg(
                 F.array_sort(F.collect_list(F.struct("subspace", "code"))).alias(
                     "__sc"
                 )
             )
             .select(
-                id_col, F.transform("__sc", lambda s: s["code"]).alias("__codes")
+                "vec_id", F.transform("__sc", lambda s: s["code"]).alias("__codes")
             )
         )
-    qs = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
+    qs = queries.select("query_id", F.col("embedding").alias("__qv"))
     # per-query flattened ADC table: entry (subspace, code) at index
     # subspace * k_codes + code — n_queries x (m * k_codes) longs, always
     # broadcast-sized
@@ -246,22 +233,22 @@ def pq_topk(
         adc_expr = term if adc_expr is None else adc_expr + term
     adc = packed.join(
         F.broadcast(qtab.select("query_id", "__dtab")), how="cross"
-    ).select("query_id", id_col, adc_expr.cast("long").alias("__adc"))
-    wc = Window.partitionBy("query_id").orderBy(F.asc("__adc"), F.asc(id_col))
+    ).select("query_id", "vec_id", adc_expr.cast("long").alias("__adc"))
+    wc = Window.partitionBy("query_id").orderBy(F.asc("__adc"), F.asc("vec_id"))
     cands = (
         adc.withColumn("__r", F.row_number().over(wc))
         .filter(F.col("__r") <= refine * k)
-        .select("query_id", id_col)
+        .select("query_id", "vec_id")
     )
     from delm_spark.operators.similarity import cosine
 
     exact = (
-        cands.join(embeddings.select(id_col, vec_col), id_col)
+        cands.join(embeddings.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(qs), "query_id")
         .select(
             "query_id",
-            F.col(id_col).alias("vec_id"),
-            cosine(F.col(vec_col), F.col("__qv")).alias("__score"),
+            "vec_id",
+            cosine(F.col("embedding"), F.col("__qv")).alias("__score"),
         )
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("vec_id"))
@@ -276,8 +263,6 @@ def pq_encode_fast(
     embeddings: DataFrame,
     codebooks: DataFrame,
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     packed: bool = False,
 ) -> DataFrame:
@@ -299,7 +284,7 @@ def pq_encode_fast(
     import numpy as np
 
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     d_sub = dim // m
     rows = codebooks.collect()
     k = max(r["code_id"] for r in rows) + 1
@@ -311,8 +296,8 @@ def pq_encode_fast(
         import pandas as pd
 
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            v = np.asarray(list(pdf[vec_col]), dtype="float64")
+            ids = pdf["vec_id"].to_numpy()
+            v = np.asarray(list(pdf["embedding"]), dtype="float64")
             out_ids, out_sub, out_code = [], [], []
             for j in range(m):
                 sv = v[:, j * d_sub : (j + 1) * d_sub]
@@ -350,23 +335,23 @@ def pq_encode_fast(
                 # zero-shuffle input shape of pq_topk's native ADC fold
                 yield pd.DataFrame(
                     {
-                        id_col: ids,
+                        "vec_id": ids,
                         "__codes": list(np.stack(out_code, axis=1)),
                     }
                 )
             else:
                 yield pd.DataFrame(
                     {
-                        id_col: np.concatenate(out_ids),
+                        "vec_id": np.concatenate(out_ids),
                         "subspace": np.concatenate(out_sub),
                         "code": np.concatenate(out_code),
                     }
                 )
 
     schema = (
-        f"{id_col} long, __codes array<int>"
+        "vec_id long, __codes array<int>"
         if packed
-        else f"{id_col} long, subspace int, code int"
+        else "vec_id long, subspace int, code int"
     )
     return embeddings.mapInPandas(enc, schema=schema)
 
@@ -376,8 +361,6 @@ def pq_train(
     m: int = 8,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Lloyd-refined codebooks: md5-sample init (pq_codebooks) + `iters`
@@ -390,26 +373,26 @@ def pq_train(
     multiply PQ recall vs raw sampled init (BENCH/PQ_SCALE.md measures
     exactly this delta)."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     d_sub = dim // m
-    books = pq_codebooks(embeddings, m, k, id_col, vec_col, dim)
-    subs = _explode_subvectors(embeddings, m, d_sub, id_col, vec_col)
+    books = pq_codebooks(embeddings, m, k, dim)
+    subs = _explode_subvectors(embeddings, m, d_sub)
     # component quantization for the update step: micro-units keep the
     # int64 sum safe to ~1e12 members per code at |v| ~ 1e3 while making
     # the mean aggregation-order independent (F.avg over raw doubles
     # would drift in the last ulp across partial-merge orders and the
     # encode's nano-rounding can amplify that into different codes)
     q = subs.select(
-        id_col,
+        "vec_id",
         "subspace",
         F.transform(
             "sv", lambda x: F.floor(x * 1e6 + F.lit(0.5)).cast("long")
         ).alias("svq"),
     )
     for _ in range(iters):
-        enc = pq_encode_fast(embeddings, books, m, id_col, vec_col, dim)
+        enc = pq_encode_fast(embeddings, books, m, dim)
         means = (
-            q.join(enc, [id_col, "subspace"])
+            q.join(enc, ["vec_id", "subspace"])
             .groupBy("subspace", F.col("code").alias("code_id"))
             .agg(
                 F.array(

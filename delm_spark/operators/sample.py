@@ -26,13 +26,13 @@ def seeded_sample(
     return df.orderBy(h.asc(), *[F.col(c) for c in key_cols]).limit(n)
 
 
-def seeded_sample_records(
-    df: DataFrame, n: int, record_col: str, seed: int = SYSTEM_RANDOM_SEED
-) -> DataFrame:
+def seeded_sample_records(df: DataFrame, n: int, record_col: str) -> DataFrame:
     """Sample n RECORDS (all rows of each sampled record), the reference's
-    record-level sample semantics: pick record ids by hash order, then a
-    broadcast semi-join keeps their rows."""
-    ids = seeded_sample(df.select(record_col).distinct(), n, [record_col], seed)
+    record-level sample semantics under its seed: pick record ids by hash
+    order, then a broadcast semi-join keeps their rows."""
+    ids = seeded_sample(
+        df.select(record_col).distinct(), n, [record_col], SYSTEM_RANDOM_SEED
+    )
     return df.join(F.broadcast(ids), record_col, "left_semi")
 
 

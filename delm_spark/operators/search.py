@@ -27,23 +27,22 @@ from delm_spark.operators.dedup import normalize_text
 
 __all__ = ["bm25_topk", "tfidf_top_terms", "term_count_topk", "rrf_fuse"]
 
+#: Okapi BM25 term-saturation and length-normalization constants
+BM25_K1, BM25_B = 1.2, 0.75
+
 
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """Top-k documents for `query_terms` under Okapi BM25.
+    """Top-k (doc_id, text) documents for `query_terms` under Okapi BM25.
 
     idf(t) = ln((N - df + 0.5) / (df + 0.5) + 1)   (Robertson-Sparck
     Jones, the +1 form that keeps weights positive); per-term
-    contribution idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)),
-    quantized to micro-units per (doc, term) then summed. Returns
-    (id_col, score_micro, n_terms_hit) ordered by score desc, id asc,
+    contribution idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) with
+    k1, b = `BM25_K1`, `BM25_B`, quantized to micro-units per (doc, term)
+    then summed. Returns (doc_id, score_micro, n_terms_hit) ordered by score desc, id asc,
     limited to k.
     """
     # dedupe after lowercasing (order-preserving): duplicate or
@@ -51,8 +50,9 @@ def bm25_topk(
     terms = list(dict.fromkeys(t.lower() for t in query_terms))
     if not terms:
         raise ValueError("bm25_topk requires at least one query term")
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    docs = df.select(F.col(id_col), F.size(words).alias("dl"), words.alias("__w"))
+    k1, b = BM25_K1, BM25_B
+    words = F.split(normalize_text(F.col("text")), " ")
+    docs = df.select(F.col("doc_id"), F.size(words).alias("dl"), words.alias("__w"))
     profile = docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
@@ -65,9 +65,9 @@ def bm25_topk(
         return F.size(F.filter(F.col("__w"), lambda w: w == F.lit(term)))
 
     tf_cols = [_tf(t).alias(f"__tf_{i}") for i, t in enumerate(terms)]
-    per_doc = docs.select(id_col, "dl", *tf_cols)
+    per_doc = docs.select("doc_id", "dl", *tf_cols)
     stacked = per_doc.select(
-        id_col,
+        "doc_id",
         "dl",
         F.explode(
             F.filter(
@@ -83,13 +83,13 @@ def bm25_topk(
                 lambda s: s.getField("tf") > 0,
             )
         ).alias("m"),
-    ).select(id_col, "dl", F.col("m.term").alias("term"), F.col("m.tf").alias("tf"))
+    ).select("doc_id", "dl", F.col("m.term").alias("term"), F.col("m.tf").alias("tf"))
     dfreq = stacked.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     scored = (
         stacked.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(profile))
         .select(
-            id_col,
+            "doc_id",
             F.floor(
                 F.log(
                     (F.col("n_docs") - F.col("df") + F.lit(0.5))
@@ -118,12 +118,12 @@ def bm25_topk(
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.sum("score_micro").cast("long").alias("score_micro"),
             F.count(F.lit(1)).cast("int").alias("n_terms_hit"),
         )
-        .orderBy(F.desc("score_micro"), F.asc(id_col))
+        .orderBy(F.desc("score_micro"), F.asc("doc_id"))
         .limit(k)
     )
 
@@ -131,11 +131,8 @@ def bm25_topk(
 def tfidf_top_terms(
     df: DataFrame,
     top_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
 ) -> DataFrame:
-    """Per-document top-n keyword terms by TF-IDF — the distributed
+    """Per-(doc_id, text)-document top-n keyword terms by TF-IDF — the distributed
     keyword-extraction pass used to label / facet a training corpus.
 
     tfidf_micro(d, t) = tf(d, t) * (ln(N) - ln(df(t))) in integer
@@ -160,24 +157,22 @@ def tfidf_top_terms(
     the single reused exchange — pruning tf out of the df aggregate
     demotes the plan to a second full token pass.
 
-    Returns (id_col, term, tf, df, max_tf, tfidf_micro) with <= top_n
-    rows per document, terms with df < min_df excluded.
+    Returns (doc_id, term, tf, df, max_tf, tfidf_micro) with <= top_n
+    rows per document.
     """
     if top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
     ).filter(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(
+    tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     dftab = tf.groupBy("term").agg(
-        F.count(id_col).cast("long").alias("df"),
+        F.count("doc_id").cast("long").alias("df"),
         F.max("tf").alias("max_tf"),
     )
-    if min_df > 1:
-        dftab = dftab.filter(F.col("df") >= min_df)
     n_docs = df.agg(
         F.floor(F.log(F.count(F.lit(1))) * 1e6 + 0.5)
         .cast("long")
@@ -187,7 +182,7 @@ def tfidf_top_terms(
         tf.join(dftab, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             "df",
@@ -203,7 +198,7 @@ def tfidf_top_terms(
     )
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf_micro"), F.asc("term")
     )
     return (
@@ -216,11 +211,10 @@ def tfidf_top_terms(
 def term_count_topk(
     df: DataFrame,
     query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 20,
 ) -> DataFrame:
-    """Boolean retrieval with raw term-frequency ranking: score_micro =
+    """Boolean retrieval over (doc_id, text) documents with raw
+    term-frequency ranking: score_micro =
     total occurrences of the query terms (an exact integer — the
     micro-suffix keeps the column contract shared with bm25_topk), docs
     with zero hits dropped. Same scale shape as BM25's tf stage: the
@@ -229,7 +223,7 @@ def term_count_topk(
     terms = list(dict.fromkeys(t.lower() for t in query_terms))
     if not terms:
         raise ValueError("term_count_topk requires at least one query term")
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
 
     # factory capture — a defaulted second lambda arg would be bound to
     # the array index by PySpark's HOF dispatch (see bm25_topk._tf)
@@ -238,25 +232,23 @@ def term_count_topk(
 
     score = sum((_hits(t) for t in terms), start=F.lit(0))
     return (
-        df.select(F.col(id_col), score.cast("long").alias("score_micro"))
+        df.select(F.col("doc_id"), score.cast("long").alias("score_micro"))
         .filter(F.col("score_micro") > 0)
-        .orderBy(F.desc("score_micro"), F.asc(id_col))
+        .orderBy(F.desc("score_micro"), F.asc("doc_id"))
         .limit(k)
     )
 
 
 def rrf_fuse(
     rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    score_col: str = "score_micro",
     k_rrf: int = 60,
     k: int = 20,
 ) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009) of top-k retrieval
-    lists: each list contributes 1e6 div (k_rrf + rank) micro-units per
-    document, ranks assigned by (score desc, id asc) — integer terms, so
-    the fused score is aggregation-order independent and
-    SQL-reproducible. Returns (id_col, rrf_micro, n_lists) ordered by
+    """Reciprocal-rank fusion (Cormack et al. 2009) of top-k (doc_id,
+    score_micro) retrieval lists: each list contributes 1e6 div (k_rrf +
+    rank) micro-units per document, ranks assigned by (score desc, id
+    asc) — integer terms, so the fused score is aggregation-order
+    independent and SQL-reproducible. Returns (doc_id, rrf_micro, n_lists) ordered by
     fused score desc, id asc, limited to k.
 
     The rank window is global by construction, which is CORRECT here and
@@ -269,13 +261,13 @@ def rrf_fuse(
         raise ValueError(f"k_rrf must be >= 1, got {k_rrf}")
     from pyspark.sql.window import Window
 
-    w = Window.orderBy(F.desc(score_col), F.asc(id_col))
+    w = Window.orderBy(F.desc("score_micro"), F.asc("doc_id"))
     contribs = [
         r.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.row_number().over(w).alias("__rank"),
         ).select(
-            id_col,
+            "doc_id",
             F.expr(f"CAST(1000000 div ({k_rrf} + __rank) AS BIGINT)").alias(
                 "__rrf_term"
             ),
@@ -286,11 +278,11 @@ def rrf_fuse(
     for c in contribs[1:]:
         u = u.unionByName(c)
     return (
-        u.groupBy(id_col)
+        u.groupBy("doc_id")
         .agg(
             F.sum("__rrf_term").cast("long").alias("rrf_micro"),
             F.count(F.lit(1)).cast("int").alias("n_lists"),
         )
-        .orderBy(F.desc("rrf_micro"), F.asc(id_col))
+        .orderBy(F.desc("rrf_micro"), F.asc("doc_id"))
         .limit(k)
     )

@@ -42,12 +42,10 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k per query. `queries` (query_id, embedding) is
-    broadcast; ranking is a window per query id.
+    """Exact cosine top-k per query over (vec_id, embedding) rows.
+    `queries` (query_id, embedding) is broadcast; ranking is a window per
+    query id.
 
     The rank<=k filter over row_number() compiles to WindowGroupLimit
     pushdown (Spark 3.5+): a PARTIAL group-limit runs in each map task
@@ -61,14 +59,12 @@ def brute_force_topk(
     from pyspark.sql import Window
 
     q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
+        queries.select("query_id", F.col("embedding").alias("__qv"))
     )
     scored = embeddings.crossJoin(q).select(
         "query_id",
-        F.col(id_col).alias("vec_id"),
-        cosine(F.col(vec_col), F.col("__qv")).alias("score"),
+        "vec_id",
+        cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -77,12 +73,7 @@ def brute_force_topk(
     )
 
 
-def ivf_centroids(
-    embeddings: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_centroids(embeddings: DataFrame, n_centroids: int) -> DataFrame:
     """Deterministic coarse quantizer for IVF: the `n_centroids` vectors
     with the smallest md5(vec_id || '|ivf') — a reproducible pseudo-random
     sample any SQL engine re-derives (no RNG state ships around; same
@@ -90,9 +81,9 @@ def ivf_centroids(
     without changing the search path."""
     return (
         embeddings.select(
-            F.col(id_col).alias("centroid_id"),
-            F.col(vec_col).alias("__cv"),
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|ivf"))).alias("__r"),
+            F.col("vec_id").alias("centroid_id"),
+            F.col("embedding").alias("__cv"),
+            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("|ivf"))).alias("__r"),
         )
         .orderBy("__r")
         .limit(n_centroids)
@@ -100,22 +91,17 @@ def ivf_centroids(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (max cosine; ties break
     to the smallest centroid_id). The N x C distance pass is the standard
     IVF build cost; the centroid set is broadcast, so the build is one
     map-side pass + one groupBy(id) — no all-pairs shuffle. Returns
-    (id_col, vec_col, __cell)."""
+    (vec_id, embedding, __cell)."""
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.col("centroid_id"),
-        cosine(F.col(vec_col), F.col("__cv")).alias("__sim"),
+        cosine(F.col("embedding"), F.col("__cv")).alias("__sim"),
     )
     # argmax via min(struct(-sim, centroid_id)): smallest -sim = largest
     # sim, tie -> smallest centroid_id. Negating the SIM (always double)
@@ -125,9 +111,9 @@ def ivf_assign(
         F.struct((-F.col("__sim")).alias("__ns"), F.col("centroid_id"))
     ).alias("__best")
     return (
-        scored.groupBy(id_col)
-        .agg(best, F.first(vec_col).alias(vec_col))
-        .select(id_col, vec_col, F.col("__best.centroid_id").alias("__cell"))
+        scored.groupBy("vec_id")
+        .agg(best, F.first("embedding").alias("embedding"))
+        .select("vec_id", "embedding", F.col("__best.centroid_id").alias("__cell"))
     )
 
 
@@ -137,9 +123,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: vectors are pre-binned into `n_centroids`
     cells (nearest centroid); each query probes its `nprobe` closest cells
@@ -159,11 +142,9 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    cents = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-    qs = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
+    cents = ivf_centroids(embeddings, n_centroids)
+    assigned = ivf_assign(embeddings, cents)
+    qs = queries.select("query_id", F.col("embedding").alias("__qv"))
     qc = qs.crossJoin(F.broadcast(cents)).select(
         "query_id",
         "__qv",
@@ -180,8 +161,8 @@ def ivf_topk(
     )
     scored = assigned.join(F.broadcast(probes), "__cell").select(
         "query_id",
-        F.col(id_col).alias("vec_id"),
-        cosine(F.col(vec_col), F.col("__qv")).alias("score"),
+        "vec_id",
+        cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -191,14 +172,12 @@ def embedding_near_dup_pairs(
     embeddings: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int = 8,
     probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
-    threshold): the dedup-flavored sibling of lsh_topk — a sign-LSH
-    bucket SELF-join blocks the candidate space (pairs within Hamming
+    threshold) over (vec_id, embedding) rows: the dedup-flavored sibling
+    of lsh_topk — an 8-plane sign-LSH bucket SELF-join blocks the
+    candidate space (pairs within Hamming
     distance `probe_radius` of each other's bucket), exact cosine
     re-ranks candidates only. Never all-pairs; the join key is the
     bucket id, uniformly distributed, so the shuffle survives a 100x
@@ -208,12 +187,12 @@ def embedding_near_dup_pairs(
     Returns (id_a, id_b, cos_sim).
     """
     sig = embeddings.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("__bkt", lsh_bucket(F.col("__v"), dim, n_planes))
+        F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
+    ).withColumn("__bkt", lsh_bucket(F.col("__v"), dim, 8))
     probed = sig.select(
         "__id",
         "__v",
-        F.explode(_probe_buckets("__bkt", n_planes, probe_radius)).alias("__pbkt"),
+        F.explode(_probe_buckets("__bkt", 8, probe_radius)).alias("__pbkt"),
     )
     a, b = probed.alias("a"), sig.alias("b")
     # a's probe set meets b's home bucket exactly once per pair within
@@ -244,12 +223,9 @@ def hyperplane_signs(dim: int, plane_idx: int) -> list:
     return signs
 
 
-def lsh_bucket(
-    vec: Column, dim: int, n_planes: int = 8, plane_offset: int = 0
-) -> Column:
-    """Sign-LSH bucket id: n_planes-bit signature of hyperplane sign bits.
-    `plane_offset` selects an independent plane family — band b of a
-    banded scheme uses planes [b*n_planes, (b+1)*n_planes).
+def lsh_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
+    """Sign-LSH bucket id: n_planes-bit signature of the sign bits of
+    hyperplanes 0..n_planes-1.
 
     Each plane is ONE SQL-text array literal (`array(1.0D, -1.0D, ...)`,
     parsed in the JVM), so building the expression costs O(n_planes) py4j
@@ -259,7 +235,7 @@ def lsh_bucket(
     analyzes about twice as slowly."""
     acc = F.lit(0).cast("long")
     for p in range(n_planes):
-        signs = hyperplane_signs(dim, plane_offset + p)
+        signs = hyperplane_signs(dim, p)
         plane = F.expr("array(" + ", ".join(f"{s!r}D" for s in signs) + ")")
         bit = (dot(vec, plane) >= 0).cast("long")
         acc = acc + bit * F.lit(1 << p)
@@ -286,9 +262,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     probe_radius: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: multi-probe sign-LSH. Candidates are embeddings
     whose bucket is within Hamming distance `probe_radius` of the query's
@@ -307,9 +280,9 @@ def lsh_topk(
     fundamentally not LSH-recoverable at useful candidate reductions."""
     from pyspark.sql import Window
 
-    emb_b = embeddings.withColumn("__bkt", lsh_bucket(F.col(vec_col), dim, n_planes))
+    emb_b = embeddings.withColumn("__bkt", lsh_bucket(F.col("embedding"), dim, n_planes))
     q_sig = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        "query_id", F.col("embedding").alias("__qv")
     ).withColumn("__qbkt", lsh_bucket(F.col("__qv"), dim, n_planes))
     q_b = F.broadcast(
         q_sig.withColumn(
@@ -320,8 +293,8 @@ def lsh_topk(
     # through at most one probe mask — no post-join dedup needed
     scored = emb_b.join(q_b, "__bkt").select(
         "query_id",
-        F.col(id_col).alias("vec_id"),
-        cosine(F.col(vec_col), F.col("__qv")).alias("score"),
+        "vec_id",
+        cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -331,8 +304,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_clusters: int = 16,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, then mark a vector a
@@ -355,15 +326,15 @@ def semantic_dedup(
     keeps `is_dup = false` rows (the earliest representative of every
     semantic neighborhood survives, deterministically).
     """
-    cents = ivf_centroids(embeddings, n_clusters, id_col, vec_col)
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
+    cents = ivf_centroids(embeddings, n_clusters)
+    assigned = ivf_assign(embeddings, cents)
     left = assigned.select(
-        F.col("__cell"), F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+        F.col("__cell"), F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
     )
     right = assigned.select(
         F.col("__cell"),
-        F.col(id_col).alias("__id2"),
-        F.col(vec_col).alias("__v2"),
+        F.col("vec_id").alias("__id2"),
+        F.col("embedding").alias("__v2"),
     )
     hits = (
         left.join(right, "__cell")
@@ -375,11 +346,11 @@ def semantic_dedup(
     return (
         assigned.join(
             hits.withColumn("__dup", F.lit(True)),
-            assigned[id_col] == hits["__id"],
+            assigned["vec_id"] == hits["__id"],
             "left",
         )
         .select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id"),
             F.col("__cell").alias("cell"),
             F.coalesce(F.col("__dup"), F.lit(False)).alias("is_dup"),
         )

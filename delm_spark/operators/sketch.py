@@ -86,12 +86,12 @@ def hll_alpha_micro(m: int) -> int:
     return round(0.7213 / (1 + 1.079 / m) * 1_000_000)
 
 
-def hll_cardinality(df: DataFrame, col: str, p: int = 8) -> DataFrame:
+def hll_cardinality(df: DataFrame, col: str) -> DataFrame:
     """HyperLogLog distinct-count estimate over `col`, exact-integer.
 
-    p=8 is fixed by the 63-bit headroom analysis in the module
-    docstring (m=256 registers, 24-bit rank field, rho in [1, 25]);
-    other p would need re-derived bounds, so it is validated hard.
+    p=8 (m=256 registers, 24-bit rank field, rho in [1, 25]) is fixed by
+    the 63-bit headroom analysis in the module docstring; other p would
+    need re-derived bounds.
 
     Returns one row (m, n_used, s_scaled, est_distinct):
       s_scaled     — sum_j 2^(25 - M_j) over all m registers (empty
@@ -102,9 +102,7 @@ def hll_cardinality(df: DataFrame, col: str, p: int = 8) -> DataFrame:
                      (micronat-quantized ln of whole-sketch counts),
                      else the raw (alpha_micro * m^2 * 2^25) div s.
     """
-    if p != 8:
-        raise ValueError(f"only p=8 is supported (integer bounds), got {p}")
-    m = 1 << p
+    m = 1 << 8
     alpha_micro = hll_alpha_micro(m)
     h = F.md5(F.col(col).cast("string"))
     rem_hex = F.substring(h, 3, 6)
@@ -214,13 +212,12 @@ def count_min_table(
 def cms_estimate_counts(
     df: DataFrame,
     col: str,
-    keys: DataFrame | None = None,
     depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
-    """Point-query the Count-Min sketch of `df[col]` for every key in
-    `keys` (default: the distinct keys of the corpus itself): estimate =
-    min over the depth rows of the key's cell counts.
+    """Point-query the Count-Min sketch of `df[col]` for every distinct
+    key of the corpus itself: estimate = min over the depth rows of the
+    key's cell counts.
 
     Returns (key, est_count) with est_count >= the true frequency by
     CMS's one-sided guarantee. The sketch (<= depth*width rows) is
@@ -229,10 +226,7 @@ def cms_estimate_counts(
     shuffle of the corpus beyond the sketch build's own combine.
     """
     sketch = count_min_table(df, col, depth, width)
-    if keys is None:
-        keys = df.select(F.col(col).alias("key")).distinct()
-    else:
-        keys = keys.select(F.col(keys.columns[0]).alias("key"))
+    keys = df.select(F.col(col).alias("key")).distinct()
     probes = keys.select(
         "key",
         F.posexplode(_cms_buckets(F.col("key"), depth, width)).alias(
@@ -241,10 +235,7 @@ def cms_estimate_counts(
     )
     return (
         # LEFT join: a probe cell absent from the sparse sketch table is an
-        # EMPTY cell (count 0) — an inner join would drop it, inflating the
-        # min for never-seen keys (or losing the key's output row entirely
-        # when all its cells are empty) and breaking the one-row-per-key
-        # contract for external `keys`.
+        # EMPTY cell (count 0), so every key keeps its one output row
         probes.join(F.broadcast(sketch), ["depth_row", "bucket"], "left")
         .groupBy("key")
         .agg(

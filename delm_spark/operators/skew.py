@@ -28,11 +28,9 @@ def salt_col(df_cols: list, buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in df_cols]), F.lit(buckets))
 
 
-def salted_count(
-    df: DataFrame, key: str, buckets: int = 16, salt_by: list | None = None
-) -> DataFrame:
+def salted_count(df: DataFrame, key: str, buckets: int = 16) -> DataFrame:
     """Two-phase count per key: partial count on (key, salt), final sum on
-    key. Returns (key, n)."""
-    salted = df.withColumn("__salt", salt_col(salt_by or df.columns, buckets))
+    key, salted by the whole row. Returns (key, n)."""
+    salted = df.withColumn("__salt", salt_col(df.columns, buckets))
     partial = salted.groupBy(key, "__salt").agg(F.count(F.lit(1)).alias("__pn"))
     return partial.groupBy(key).agg(F.sum("__pn").alias("n"))

@@ -111,18 +111,15 @@ def fixed_window_split_udf(window: int = DEFAULT_FIXED_WINDOW_SIZE,
     return _split
 
 
-def explode_chunks(
-    df: DataFrame,
-    chunks_col: Column,
-    keep_cols: Optional[list] = None,
-) -> DataFrame:
-    """posexplode chunk arrays into (chunk_pos, delm_text_chunk) rows.
+def explode_chunks(df: DataFrame, chunks_col: Column) -> DataFrame:
+    """posexplode chunk arrays into (chunk_pos, delm_text_chunk) rows,
+    keeping every column of `df`.
 
     Replaces the reference's pandas explode + positional chunk id
     (data_processor.py:125-133) — position is per-record and explicit,
     so ordering survives any shuffle.
     """
-    cols = [F.col(c) for c in (keep_cols or df.columns)]
+    cols = [F.col(c) for c in df.columns]
     return df.select(
         *cols, F.posexplode(chunks_col).alias(CHUNK_POS_COL, CHUNK_COL)
     )

@@ -66,12 +66,11 @@ def asof_join(
     right_ts: str,
     right_cols: list[str],
     tolerance_sec: int | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward inclusive as-of join.
 
-    Every `left` row gains `<c><suffix>` for each c in `right_cols` plus
-    `<right_ts><suffix>`, taken from the most recent `right` row with the
+    Every `left` row gains `<c>_asof` for each c in `right_cols` plus
+    `<right_ts>_asof`, taken from the most recent `right` row with the
     same `on` key and `right_ts` <= `left_ts` (ties: right row visible to
     a left row at the identical timestamp). With `tolerance_sec`, matches
     older than `left_ts - tolerance_sec` are nulled out (match too stale
@@ -80,12 +79,12 @@ def asof_join(
     reserved = {_SIDE, _VAL, "__evt_ts", "__m"}
     taken = set(left.columns)
     clashes = (reserved & taken) | (
-        {f"{c}{suffix}" for c in [right_ts, *right_cols]} & taken
+        {f"{c}_asof" for c in [right_ts, *right_cols]} & taken
     )
     if clashes:
         raise ValueError(
             f"asof_join output/scratch columns collide with left columns: "
-            f"{sorted(clashes)} — rename them or pass a different suffix"
+            f"{sorted(clashes)} — rename them"
         )
     payload = F.struct(
         F.col(right_ts).alias("__ts"), *[F.col(c) for c in right_cols]
@@ -123,8 +122,8 @@ def asof_join(
         .filter(F.col(_SIDE) == 1)
         .select(
             *out,
-            F.col(f"__m.__ts").alias(f"{right_ts}{suffix}"),
-            *[F.col(f"__m.{c}").alias(f"{c}{suffix}") for c in right_cols],
+            F.col(f"__m.__ts").alias(f"{right_ts}_asof"),
+            *[F.col(f"__m.{c}").alias(f"{c}_asof") for c in right_cols],
         )
     )
 
@@ -136,12 +135,10 @@ def range_bucket_join(
     right_start: str,
     right_end: str,
     bucket_sec: int,
-    on: list[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Distributed interval-containment join: left rows (points) matched
-    to right rows (intervals) with `right_start <= left_ts < right_end`,
-    optionally ALSO equi-keyed on `on`.
+    """Distributed interval-containment (inner) join: left rows (points)
+    matched to right rows (intervals) with `right_start <= left_ts <
+    right_end`.
 
     Spark plans a bare range predicate as BroadcastNestedLoopJoin (fine
     only when one side broadcasts) or refuses outright at scale. The
@@ -159,14 +156,7 @@ def range_bucket_join(
     cap them upstream or split the dimension into a broadcastable
     long-interval side. Fully incremental at 100 TB: both sides shuffle
     once on the bucket key, no global sort, AQE handles bucket skew.
-
-    `how='left'` keeps unmatched points with null right columns (single
-    extra anti-join-free pass: the equi-join is left and the range
-    filter folds into the join condition).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"range_bucket_join supports inner/left, got {how!r}")
-    on = on or []
     # bucket on integer MICROseconds: a whole-second cast would truncate a
     # sub-second interval end into the previous bucket and silently drop
     # points in the final partially-covered bucket
@@ -189,15 +179,13 @@ def range_bucket_join(
         ),
     )
     cond = [l2["__bkt"] == r2["__bkt"]]
-    cond += [l2[c] == r2[c] for c in on]
     cond.append(
         l2[left_ts].cast("timestamp") >= r2[right_start].cast("timestamp")
     )
     cond.append(l2[left_ts].cast("timestamp") < r2[right_end].cast("timestamp"))
     from functools import reduce
 
-    joined = l2.join(r2, reduce(lambda a, b: a & b, cond), how)
-    keep_r = [c for c in right.columns if c not in set(on)]
+    joined = l2.join(r2, reduce(lambda a, b: a & b, cond), "inner")
     return joined.select(
-        *[l2[c] for c in left.columns], *[r2[c] for c in keep_r]
+        *[l2[c] for c in left.columns], *[r2[c] for c in right.columns]
     )

@@ -17,16 +17,14 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "delm-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        # ~2x cores keeps all slots busy without tiny-partition overhead
-        # at local scale; at 100 TB this is set per-job (or left to AQE
-        # coalescing from a high initial value).
-        shuffle_partitions = max(cores * 2, 8)
+    # ~2x cores keeps all slots busy without tiny-partition overhead at
+    # local scale; at 100 TB this is set per-job through `extra_conf` (or
+    # left to AQE coalescing from a high initial value).
+    shuffle_partitions = max(cores * 2, 8)
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

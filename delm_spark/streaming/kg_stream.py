@@ -56,12 +56,12 @@ def run_streaming_kg_merge(
     dictionary: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    config: Optional[PipelineConfig] = None,
     available_now: bool = True,
 ):
     """Drive the incremental KG merge from a transcript stream.
 
-    Each micro-batch runs the full batch pipeline (chunk -> score ->
+    Each micro-batch runs the full batch pipeline under the default
+    PipelineConfig (chunk -> score ->
     Arrow extract -> clean -> link -> canonicalize -> edges) and appends
     only conversations not yet on disk. Returns the StreamingQuery.
 
@@ -69,7 +69,7 @@ def run_streaming_kg_merge(
     arrive whole within one micro-batch (file-drop feeds satisfy this by
     writing one file per conversation window).
     """
-    config = config or PipelineConfig()
+    config = PipelineConfig()
     edges_path = f"{out_dir}/edges"
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:

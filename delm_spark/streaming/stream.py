@@ -10,15 +10,12 @@ anti-join for exactly-once progress tracking.
 
 The transformation chain is IDENTICAL code to the batch path — chunking
 and scoring are stateless narrow ops, and the rule backend's native items
-explode through the same helper as the batch pipeline's triples stage
-(a backend without a native form takes inline extract_chunks, whose
-mapInPandas is streaming-safe) — so batch/stream parity holds by
-construction (asserted in tests/test_streaming.py).
+explode through the same helper as the batch pipeline's triples stage —
+so batch/stream parity holds by construction (asserted in
+tests/test_streaming.py).
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,15 +27,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from delm_spark.data.synthetic import FACT_KEYWORDS, TRIPLE_SCHEMA_CFG
 from delm_spark.extraction.backend import RuleTripleExtractor
-from delm_spark.extraction.extract import extract_chunks
 from delm_spark.kg.pipeline import (
     PipelineConfig,
     chunk_transcripts,
     native_triples,
     score_and_filter,
-    triples_from_extracted,
 )
 from delm_spark.schemas.spec import spec_from_dict
 
@@ -65,25 +59,16 @@ def read_transcript_stream(
     )
 
 
-def streaming_triples(
-    stream: DataFrame, config: Optional[PipelineConfig] = None
-) -> DataFrame:
+def streaming_triples(stream: DataFrame) -> DataFrame:
     """Transcripts stream -> triples stream (stateless; same operators as
-    the batch pipeline stages 1-5)."""
-    config = config or PipelineConfig()
+    the batch pipeline stages 1-5 under the default PipelineConfig, whose
+    rule backend always has native items)."""
+    config = PipelineConfig()
     spec = spec_from_dict(config.schema_cfg)
-    backend = RuleTripleExtractor(spec)
     chunks = score_and_filter(
         chunk_transcripts(stream), config.keywords, config.score_threshold
     )
-    triples = native_triples(chunks, spec, backend)
-    if triples is not None:
-        return triples
-    # dedup=False: dropDuplicates on arbitrary keys isn't allowed without
-    # watermark state in streaming; exact-dup extraction cost is bounded per
-    # micro-batch instead.
-    extracted = extract_chunks(chunks, spec, backend, dedup=False)
-    return triples_from_extracted(extracted, spec)
+    return native_triples(chunks, spec, RuleTripleExtractor(spec))
 
 
 def hourly_triple_counts(triples_with_ts: DataFrame) -> DataFrame:

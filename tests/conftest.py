@@ -117,11 +117,13 @@ def spark():
     s = get_spark(
         app_name="delm-spark-tests",
         cores=int(os.environ.get("DELM_TEST_CORES", "4")),
-        shuffle_partitions=int(os.environ.get("DELM_TEST_SHUFFLE", "4")),
-        # defense in depth for the module-boundary GC below: the driver's
-        # own periodic cleaner GC defaults to 30min — longer than the
-        # whole suite
-        extra_conf={"spark.cleaner.periodicGC.interval": "2min"},
+        extra_conf={
+            "spark.sql.shuffle.partitions": os.environ.get("DELM_TEST_SHUFFLE", "4"),
+            # defense in depth for the module-boundary GC below: the
+            # driver's own periodic cleaner GC defaults to 30min — longer
+            # than the whole suite
+            "spark.cleaner.periodicGC.interval": "2min",
+        },
     )
     _SESSION["spark"] = s
     yield s

@@ -55,7 +55,7 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     after the first assignment; their centroids must persist (no NULL
     centroids, the fit kmeans_cluster assigns against keeps k rows)."""
     rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [1.0, 1.0])]
-    cent, _ = _kmeans_fit_rows(_emb(spark, rows), 3, 2, "vec_id", "embedding", "kmeans")
+    cent, _ = _kmeans_fit_rows(_emb(spark, rows), 3, 2)
     assert len(cent) == 3
     assert all(c is not None for _, c in cent)
     out = kmeans_cluster(_emb(spark, rows), k=3, iters=2).collect()

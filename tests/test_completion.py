@@ -105,12 +105,3 @@ class TestLinkPrediction:
         e = _edges(spark, [(1, 0), (0, 1), (2, 1), (3, 2), (2, 3)])
         got = {(r["u"], r["v"]) for r in link_prediction_scores(e).collect()}
         assert got == {(0, 2), (1, 3)}
-
-    def test_hub_cut_drops_wedges(self, spark):
-        # star: hub 0 connected to 1..4 — every leaf pair scores through
-        # the hub (degree 4); max_hub_degree=3 removes them all
-        e = _edges(spark, [(0, i) for i in range(1, 5)])
-        full = link_prediction_scores(e)
-        assert full.count() == 6  # C(4,2) leaf pairs
-        cut = link_prediction_scores(e, max_hub_degree=3)
-        assert cut.count() == 0

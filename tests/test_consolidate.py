@@ -60,8 +60,6 @@ def test_consolidation_counts_subject_endpoints_too(spark):
 
 def test_consolidation_guards(spark):
     t = _triples(spark, ["abcd"])
-    with pytest.raises(ValueError, match="min_members"):
-        consolidate_mentions(t, min_members=1)
     # no pairs at all: empty result, correct schema
     out = consolidate_mentions(t)
     assert out.count() == 0

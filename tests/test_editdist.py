@@ -59,5 +59,3 @@ def test_length_gates_and_validation(spark):
     out = edit_distance_pairs(df, "s", "id", max_edits=1)
     # "ab" (below min_len) and the 70-char key (above max_len) never join
     assert out.count() == 0
-    with pytest.raises(ValueError):
-        edit_distance_pairs(df, "s", "id", min_len=0)

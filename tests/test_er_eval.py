@@ -15,10 +15,10 @@ from delm_spark.kg.er_eval import pairwise_er_metrics
 SCHEMA = "node string, cluster string"
 
 
-def _row(spark, pred, gold, **kw):
+def _row(spark, pred, gold):
     p = spark.createDataFrame(list(pred.items()), SCHEMA)
     g = spark.createDataFrame(list(gold.items()), SCHEMA)
-    return pairwise_er_metrics(p, g, **kw).collect()[0]
+    return pairwise_er_metrics(p, g).collect()[0]
 
 
 def _brute(pred, gold):
@@ -62,13 +62,6 @@ def test_side_missing_nodes_are_singletons(spark):
     r = _row(spark, pred, gold)
     assert r.n_nodes == 4
     assert (r.pred_pairs, r.gold_pairs, r.agree_pairs) == (3, 3, 1)
-    inner = _row(spark, pred, gold, inner=True)
-    assert inner.n_nodes == 2
-    assert (inner.pred_pairs, inner.gold_pairs, inner.agree_pairs) == (
-        1,
-        1,
-        1,
-    )
 
 
 @settings(

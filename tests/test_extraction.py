@@ -177,30 +177,6 @@ def test_disqualified_spec_falls_back_to_extract_raw(spark):
     assert jsons == _slow_reference(texts, spec, backend)[0]
 
 
-def test_native_one_pass_fallback_on_conflicting_phrases(spark):
-    """Custom phrase sets that defeat the one-pass guards (substring
-    conflicts / non-lowercase shapes) must fall back to the 3-pass form
-    and still produce byte-identical output."""
-    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
-    phrases = [
-        (r" is located in ", "located_in"),
-        (r" in ", "works_at"),  # substring of the phrase above
-    ]
-    backend = RuleTripleExtractor(spec, predicate_phrases=phrases)
-    texts = [
-        "Acme Corp is located in Paris.",
-        "Alice Smith in Acme Corp.",
-        "no match",
-    ]
-    out = extract_chunks(_text_df(spark, texts), spec, backend, dedup=False).collect()
-    got = {r["id"]: r["delm_extracted_data_json"] for r in out}
-    for i, t in enumerate(texts):
-        expect = json.dumps(
-            clean_response(backend.extract_raw(t), spec, t), sort_keys=False
-        )
-        assert got[i] == expect, (t, got[i], expect)
-
-
 def test_native_extract_items_matches_json_roundtrip(spark):
     """array<struct> items == from_json(reference JSON)[container],
     element for element (order included), over adversarial chunks — the

@@ -53,15 +53,6 @@ def test_k_hop_min_hops_with_shortcut(spark):
     assert got == {1: 0, 2: 1, 3: 1, 4: 2, 5: 3}
 
 
-def test_k_hop_directed_respects_orientation(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
-    got = {
-        r["node"]: r["hops"]
-        for r in k_hop_neighbors(e, _seeds(spark, [3]), k=2, directed=True).collect()
-    }
-    assert got == {3: 0, 4: 1, 5: 2}
-
-
 def test_k_hop_emits_absent_seed_at_hop_zero(spark):
     e = _edges(spark, [(1, 2)])
     got = {
@@ -170,9 +161,8 @@ def test_harmonic_centrality_depth_truncation(spark):
 
 
 def test_harmonic_centrality_directed_and_disconnected(spark):
-    """Directed a->b->c plus isolated pair x->y: harmonic is defined on
-    the disconnected graph (unreached pairs contribute nothing), and
-    direction is respected."""
+    """Path a-b-c plus isolated pair x-y: harmonic is defined on the
+    disconnected graph (unreached pairs contribute nothing)."""
     from delm_spark.kg.graph import harmonic_centrality
 
     edges = spark.createDataFrame(
@@ -180,14 +170,14 @@ def test_harmonic_centrality_directed_and_disconnected(spark):
     )
     got = {
         r.node: (r.harmonic_micro, r.n_reached)
-        for r in harmonic_centrality(
-            edges, n_sources=5, max_depth=6, directed=True
-        ).collect()
+        for r in harmonic_centrality(edges, n_sources=5, max_depth=6).collect()
     }
-    # a reaches nothing inbound; b <- a (1); c <- b (1), <- a (2); y <- x
+    # a <- b (1), <- c (2); b <- a, c (1 each); x and y reach each other
     assert got == {
-        "b": (1_000_000, 1),
+        "a": (1_500_000, 2),
+        "b": (2_000_000, 2),
         "c": (1_500_000, 2),
+        "x": (1_000_000, 1),
         "y": (1_000_000, 1),
     }
 

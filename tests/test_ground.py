@@ -58,22 +58,6 @@ def test_duplicate_turn_rows_do_not_duplicate_triples(spark):
     assert _rows(out) == {("c1", 0, "speaker:c1:assistant", "works_at", "acme", 1)}
 
 
-def test_custom_pronoun_set_and_prefix(spark):
-    triples = spark.createDataFrame(
-        [("c1", 0, "ich", "works_at", "acme"),
-         ("c1", 0, "i", "works_at", "acme")],
-        TRIPLE_SCHEMA,
-    )
-    turns = spark.createDataFrame([("c1", 0, "user")], TURN_SCHEMA)
-    out = ground_pronouns(
-        triples, turns, pronouns=("ich",), speaker_prefix="sprecher:"
-    )
-    assert _rows(out) == {
-        ("c1", 0, "sprecher:c1:user", "works_at", "acme", 1),
-        ("c1", 0, "i", "works_at", "acme", 0),
-    }
-
-
 def test_plan_no_cartesian_no_python(spark):
     triples = spark.createDataFrame(
         [("c1", 0, "i", "works_at", "acme")], TRIPLE_SCHEMA

@@ -129,11 +129,11 @@ class TestStreamingKgMerge:
         from delm_spark.streaming.kg_stream import run_streaming_kg_merge
         from delm_spark.streaming.stream import read_transcript_stream
 
-        d, cfg = built["d"], built["cfg"]
+        d = built["d"]
         feed = self._feed(spark, tmp_path, [built["b1"], built["b2"]])
         stream = read_transcript_stream(spark, feed, max_files_per_trigger=1)
         q = run_streaming_kg_merge(
-            stream, d, str(tmp_path / "kg"), str(tmp_path / "ckpt"), cfg
+            stream, d, str(tmp_path / "kg"), str(tmp_path / "ckpt")
         )
         q.awaitTermination()
         # >=2 micro-batches actually ran (one file per trigger)
@@ -152,12 +152,12 @@ class TestStreamingKgMerge:
         from delm_spark.streaming.kg_stream import run_streaming_kg_merge
         from delm_spark.streaming.stream import read_transcript_stream
 
-        d, cfg = built["d"], built["cfg"]
+        d = built["d"]
         feed = self._feed(spark, tmp_path, [built["b1"], built["b2"]])
         for ckpt in ("ckpt_a", "ckpt_b"):
             stream = read_transcript_stream(spark, feed, max_files_per_trigger=1)
             q = run_streaming_kg_merge(
-                stream, d, str(tmp_path / "kg"), str(tmp_path / ckpt), cfg
+                stream, d, str(tmp_path / "kg"), str(tmp_path / ckpt)
             )
             q.awaitTermination()
             if ckpt == "ckpt_a":

@@ -185,20 +185,6 @@ def test_entity_cooccurrence_singleton_conv_emits_nothing(spark):
     assert r.lift_micro == 1_000_000
 
 
-def test_entity_cooccurrence_no_broadcast_path_identical(spark):
-    t = _triples(
-        spark,
-        [
-            ("c1", 0, "s", "p", "o", 1, 2),
-            ("c2", 0, "s", "p", "o", 2, 3),
-            ("c2", 1, "s", "p", "o", 1, 3),
-        ],
-    )
-    a = sorted(map(tuple, entity_cooccurrence(t, broadcast_entity_counts=True).collect()))
-    b = sorted(map(tuple, entity_cooccurrence(t, broadcast_entity_counts=False).collect()))
-    assert a == b
-
-
 def test_entity_cooccurrence_pair_expansion_is_native(spark):
     """The pair expansion must stay a native HOF expression — no Python
     stage, no join, in the plan up to the pair aggregation."""

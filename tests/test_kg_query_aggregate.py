@@ -63,17 +63,6 @@ def test_aggregate_join_multiplicity_is_bag(triples):
     assert rows == {"acme": 3}
 
 
-def test_aggregate_having(triples):
-    rows = match_aggregate(
-        triples,
-        [("?p", "works_at", "?org")],
-        group_by=["org"],
-        aggs=[("count_distinct", "p", "n_people")],
-        having_expr="n_people >= 2",
-    ).collect()
-    assert [(r.org, r.n_people) for r in rows] == [("acme", 2)]
-
-
 def test_aggregate_rejects_bad_specs(triples):
     with pytest.raises(ValueError, match="unsupported aggregate"):
         match_aggregate(

@@ -117,7 +117,7 @@ def aliased(spark):
 
 
 def test_predicate_similarity_exact_integers(aliased):
-    rows = predicate_similarity(aliased, min_jaccard_micro=0).collect()
+    rows = predicate_similarity(aliased).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["pred_a"], r["pred_b"]) == ("works_at", "works_at_alt")

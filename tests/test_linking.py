@@ -194,7 +194,7 @@ def test_surface_embeddings_fast_identical_to_native(spark):
     native = {
         r["surface"]: list(r["e"])
         for r in df.select(
-            "surface", surface_embedding(F.col("surface"), 64).alias("e")
+            "surface", surface_embedding(F.col("surface")).alias("e")
         ).collect()
     }
     fast = {

@@ -456,8 +456,6 @@ def test_duplicate_spans_hand_values(spark):
 
     with pytest.raises(ValueError):
         duplicate_spans(df, "text", "doc_id", width=1)
-    with pytest.raises(ValueError):
-        duplicate_spans(df, "text", "doc_id", min_docs=1)
 
 
 def test_duplicate_spans_null_text_and_partition_invariance(spark):

