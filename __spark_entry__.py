@@ -395,8 +395,10 @@ def bpe_token_count_docs(spark, sf_dir):
 
 def doc_fingerprint(spark, sf_dir):
     """F6/F7: canonical-text md5 fingerprint per document."""
+    from delm_spark.operators.dedup import normalize_text
+
     docs = _t(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
+    norm = normalize_text(F.col("text"))
     return docs.select("doc_id", F.md5(norm).alias("fingerprint")).orderBy("doc_id")
 
 

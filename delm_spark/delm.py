@@ -3,16 +3,21 @@
 `process_via_llm` -> results/cost/evaluate, driven from YAML or a dict.
 
 Spark-first re-expression: every method returns a DataFrame (lazy plan)
-instead of pandas; experiment artifacts are parquet tables under
-`experiment_directory/experiment_name/` (the reference's
-DiskExperimentManager writes feather batches, delm.py:203-209); record and
-chunk ids are content-derived xxhash64 values rather than ordinal indices
-so they are stable under any partitioning (the reference's sequential ids
-assume a single pandas frame, data_processor.py:111-133).
+instead of pandas; record and chunk ids are content-derived xxhash64
+values rather than ordinal indices so they are stable under any
+partitioning (the reference's sequential ids assume a single pandas
+frame, data_processor.py:111-133).
+
+Artifacts live under `experiment_directory/experiment_name/` (the
+reference's DiskExperimentManager writes feather batches there,
+delm.py:203-209): `preprocessed/` and `extracted/` are `StageRunner`
+stages (kg/pipeline.py, config-fingerprint guarded), and
+`_delm_spend.json` holds the accumulated extraction spend.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from pathlib import Path
 from typing import Any, Optional, Union
 
@@ -25,9 +30,11 @@ from delm_spark.constants import (
     CHUNK_ID_COL,
     CHUNK_POS_COL,
     FILE_NAME_COL,
+    PART_ID_COL,
     RECORD_ID_COL,
     SCORE_COL,
 )
+from delm_spark.kg.pipeline import StageRunner, config_digest
 
 
 class DelmSpark:
@@ -72,6 +79,18 @@ class DelmSpark:
 
                 shutil.rmtree(self.dir)
             self.dir.mkdir(parents=True, exist_ok=True)
+        # artifacts persisted under one config must not silently serve a
+        # different one: the same resume guard as run_pipeline's stages
+        fingerprint = config_digest(
+            {
+                "llm": dataclasses.asdict(config.llm_extraction),
+                "prep": dataclasses.asdict(config.data_preprocessing),
+                "cache": dataclasses.asdict(config.semantic_cache),
+                "pipeline": dataclasses.asdict(config.pipeline),
+                "schema": config.schema_cfg,
+            }
+        )
+        self.stages = StageRunner(spark, self.dir and str(self.dir), fingerprint)
         self.backend = backend
         self._preprocessed: Optional[DataFrame] = None
         self._extracted: Optional[DataFrame] = None
@@ -85,50 +104,6 @@ class DelmSpark:
     @classmethod
     def from_dict(cls, data: dict, spark=None, **kwargs) -> "DelmSpark":
         return cls(DelmConfig.from_dict(data), spark, **kwargs)
-
-    # -- stage artifacts ------------------------------------------------------
-
-    def _fingerprint(self) -> str:
-        """Config identity for artifact reuse — same guard the StageRunner
-        enforces (kg/pipeline.py config_fingerprint): artifacts persisted
-        under one config must not silently serve a different one."""
-        import dataclasses
-        import hashlib
-        import json
-
-        material = {
-            "llm": dataclasses.asdict(self.config.llm_extraction),
-            "prep": dataclasses.asdict(self.config.data_preprocessing),
-            "cache": dataclasses.asdict(self.config.semantic_cache),
-            "pipeline": dataclasses.asdict(self.config.pipeline),
-            "schema": self.config.schema_cfg,
-        }
-        return hashlib.sha256(
-            json.dumps(material, sort_keys=True, default=str).encode()
-        ).hexdigest()
-
-    def _save(self, df: DataFrame, name: str) -> DataFrame:
-        if self.dir is None:
-            return df
-        path = str(self.dir / name)
-        df.write.mode("overwrite").parquet(path)
-        (self.dir / name / "_delm_config_fingerprint").write_text(
-            self._fingerprint()
-        )
-        return self.spark.read.parquet(path)
-
-    def _load(self, name: str) -> Optional[DataFrame]:
-        if self.dir is None or not (self.dir / name / "_SUCCESS").exists():
-            return None
-        fp = self.dir / name / "_delm_config_fingerprint"
-        if not fp.exists() or fp.read_text() != self._fingerprint():
-            raise RuntimeError(
-                f"experiment artifact {name!r} at {self.dir} was built with "
-                "a different config; pass overwrite_experiment=True or use "
-                "a fresh experiment_directory (reference "
-                "verify_resume_config semantics)"
-            )
-        return self.spark.read.parquet(str(self.dir / name))
 
     # -- prep_data (reference delm.py:222-249) --------------------------------
 
@@ -239,7 +214,7 @@ class DelmSpark:
             if prep.pandas_score_filter:
                 op, thr = parse_score_filter(prep.pandas_score_filter)
                 chunked = chunked.filter(SCORE_OPS[op](F.col(SCORE_COL), thr))
-        self._preprocessed = self._save(chunked, "preprocessed")
+        self._preprocessed = self.stages.commit("preprocessed", chunked)
         return self._preprocessed
 
     # -- process_via_llm (reference delm.py:170-219) ---------------------------
@@ -289,7 +264,7 @@ class DelmSpark:
                 f"max_budget ${max_budget}; refusing to schedule another "
                 "extraction stage"
             )
-        data = preprocessed or self._preprocessed or self._load("preprocessed")
+        data = preprocessed or self._preprocessed or self.stages.resume("preprocessed")
         if data is None:
             raise RuntimeError("run prep_data first (no preprocessed table found)")
         if self.config.spec is None:
@@ -337,10 +312,12 @@ class DelmSpark:
             driver_cache=driver_cache,
             call_spec=self.config.llm_extraction.call_spec(),
         )
-        # metadata back on chunk id (reference delm.py:208: left join)
-        meta = data.drop(CHUNK_COL)
+        # metadata back on chunk id (reference delm.py:208: left join);
+        # `out` carries the extraction's task lineage, so a committed
+        # preprocessed stage's lineage column stays out of the join
+        meta = data.drop(CHUNK_COL, PART_ID_COL)
         joined = out.join(meta, CHUNK_ID_COL, "left")
-        self._extracted = self._save(joined, "extracted")
+        self._extracted = self.stages.commit("extracted", joined)
         if max_budget is not None and self.config.llm_extraction.track_cost:
             self._record_spend(
                 summarize_cost(
@@ -352,7 +329,7 @@ class DelmSpark:
     # -- results / cost (reference delm.py:252-280) -----------------------------
 
     def get_extraction_results(self) -> DataFrame:
-        res = self._extracted or self._load("extracted")
+        res = self._extracted or self.stages.resume("extracted")
         if res is None:
             raise RuntimeError("run process_via_llm first (no extracted table)")
         return res

@@ -12,7 +12,8 @@ On a cluster with the runtime on the classpath and a catalog configured
 
 the StageRunner detects it at construction and commits stages as Iceberg
 snapshots via `writeTo(...).createOrReplace()` instead, keyed as
-`<catalog>.<namespace>.<stage_name>` tables.
+`<catalog>.delm_stages.<stage_name>_<checkpoint-dir key>` tables in the
+catalog found here (one table per stage and checkpoint dir).
 
 The runtime probe, the catalog lookup and the write/read/exists
 primitives live at module level so the dispatch logic is unit-testable

@@ -123,8 +123,6 @@ def entity_cooccurrence(triples: DataFrame) -> DataFrame:
             F.col("__p.a").alias("entity_a"), F.col("__p.b").alias("entity_b")
         )
         .agg(F.count(F.lit(1)).alias("n_cooccur"))
-        # always true; kept so the optimized plan stays byte-identical
-        .filter(F.col("n_cooccur") >= 1)
     )
     ent_counts = F.broadcast(
         ents.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))

@@ -108,11 +108,8 @@ def pagerank(
     rank'(v) = (1-d)/N + d * (sum_{u->v} rank(u)/outdeg(u) + dangling/N)
 
     where `dangling` is the rank mass sitting on nodes with no out-edges
-    (redistributed uniformly, the standard correction). The dangling sum
-    is a one-row aggregate broadcast-crossed into the update so each
-    iteration is one checkpoint action (no separate driver collect;
-    AQE may split the action into query-stage jobs); contributions
-    reduce map-side before the dst shuffle. Ranks sum to 1 at every step.
+    (redistributed uniformly, the standard correction); the rounds run in
+    :func:`_power_iteration`. Ranks sum to 1 at every step.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     nodes = (
@@ -122,36 +119,14 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    outdeg = (
-        e.groupBy("u").agg(F.count("*").alias("outdeg")).localCheckpoint(eager=True)
+    return _power_iteration(
+        e,
+        nodes,
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        iters,
+        lambda c, dangling: F.lit((1.0 - damping) / n)
+        + F.lit(damping) * (c + dangling / n),
     )
-    e_deg = e.join(outdeg, "u").localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iters):
-        contrib = (
-            e_deg.join(ranks.withColumnRenamed("node", "u"), "u")
-            .select("v", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-        )
-        dangling = (
-            ranks.join(outdeg.withColumnRenamed("u", "node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
-        )
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("v", "node"), "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dangling") / n)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def triangles(
@@ -419,8 +394,8 @@ def personalized_pagerank(
 
     with p(v) = 1/|S| for seed nodes and 0 elsewhere; ranks start AT
     the seed distribution and stay a probability vector every step.
-    Identical join shape to :func:`pagerank` — the teleport vector is
-    one extra left-join column on the node table, computed once; each
+    The same power iteration as :func:`pagerank` — the teleport vector
+    is one extra column on the node table, computed once; each
     iteration is still one dst-shuffled contribution reduce plus a
     broadcast one-row dangling aggregate. Seeds not present in the
     edge table still teleport (they are unioned into the node set), so
@@ -443,11 +418,28 @@ def personalized_pagerank(
         s.withColumn("tele", F.lit(1.0 / n_seeds)), "node", "left"
     ).select("node", F.coalesce("tele", F.lit(0.0)).alias("tele"))
     tele = tele.localCheckpoint(eager=True)
+    return _power_iteration(
+        e,
+        tele,
+        tele.select("node", F.col("tele").alias("rank")),
+        iters,
+        lambda c, dangling: F.lit(1.0 - damping) * F.col("tele")
+        + F.lit(damping) * (c + dangling * F.col("tele")),
+    )
+
+
+def _power_iteration(e, nodes, ranks, iters, update):
+    """`iters` rounds of rank'(node) = update(c, dangling) over `nodes`
+    (with the teleport columns `update` reads), from the (node, rank)
+    vector `ranks`, over the (u, v) edges `e`: c = sum_{u->v}
+    rank(u)/outdeg(u), dangling = the rank on nodes without out-edges.
+    That sum is a one-row aggregate broadcast-crossed into the update,
+    so each round is one checkpoint action; contributions reduce
+    map-side before the dst shuffle."""
     outdeg = (
         e.groupBy("u").agg(F.count("*").alias("outdeg")).localCheckpoint(eager=True)
     )
     e_deg = e.join(outdeg, "u").localCheckpoint(eager=True)
-    ranks = tele.select("node", F.col("tele").alias("rank"))
     for _ in range(iters):
         contrib = (
             e_deg.join(ranks.withColumnRenamed("node", "u"), "u")
@@ -460,17 +452,12 @@ def personalized_pagerank(
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
         )
         ranks = (
-            tele.join(contrib.withColumnRenamed("v", "node"), "node", "left")
+            nodes.join(contrib.withColumnRenamed("v", "node"), "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
-                (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dangling") * F.col("tele")
-                    )
+                update(
+                    F.coalesce(F.col("c"), F.lit(0.0)), F.col("dangling")
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)

@@ -27,7 +27,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: normalize_mention's whitespace class: Java regex \s is ASCII-only
+from delm_spark.operators.dedup import normalize_text
+
+#: normalize_text's whitespace class: Java regex \s is ASCII-only
 _WS = re.compile(r"\s+", re.ASCII)
 
 #: mention rows per matmul block inside the scoring kernel — bounds the
@@ -35,11 +37,6 @@ _WS = re.compile(r"\s+", re.ASCII)
 #: bucket gets (a skewed 50k x 50k bucket would otherwise be a 20 GB
 #: dense matrix in one task)
 _MENTION_BLOCK = 2048
-
-
-def normalize_mention(col: Column) -> Column:
-    """Canonical surface form: lowercase, trim, collapse whitespace."""
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
 def surface_embedding(col: Column) -> Column:
@@ -55,7 +52,7 @@ def surface_embedding(col: Column) -> Column:
     trigram+md5 subtree 64 times — a megabyte-scale codegen unit that
     cost ~9 s of Janino compile time per query before any row was
     processed."""
-    padded = F.concat(F.lit("^"), normalize_mention(col), F.lit("$"))
+    padded = F.concat(F.lit("^"), normalize_text(col), F.lit("$"))
     idx = F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1)))
     tris = F.transform(idx, lambda i: padded.substr(i, F.lit(3)))
     buckets = F.transform(
@@ -74,7 +71,7 @@ def surface_embedding(col: Column) -> Column:
 def _trigram_counts(surfaces, dim: int, cache: dict) -> np.ndarray:
     """numpy twin of `surface_embedding` over raw surfaces: one float64
     row of integer trigram counts per surface (a null surface gets a zero
-    row). Normalization replicates normalize_mention exactly: ASCII-\\s+
+    row). Normalization replicates normalize_text exactly: ASCII-\\s+
     collapse, space-only trim (Spark trim strips ' ' only), then
     lowercase. Then padded '^s$', windows substr(i, 3) for i in
     1..max(len-2, 1) (the tail window of a length-2 padded string is the
@@ -315,7 +312,7 @@ def resolve_mention_residue(
             yield pd.DataFrame({"subj_id": subj.map(batch), "obj_id": obj.map(batch)})
 
     def residue(c: str) -> Column:
-        # the id minus its 'mention:' prefix: already normalize_mention()ed
+        # the id minus its 'mention:' prefix: already normalize_text()ed
         return F.when(F.col(c).startswith("mention:"), F.expr(f"substring({c}, 9)"))
 
     udf = F.pandas_udf(resolve, "subj_id string, obj_id string")
@@ -344,8 +341,8 @@ def link_mentions(triples: DataFrame, dictionary: DataFrame) -> DataFrame:
         )
     )
     out = (
-        triples.withColumn("__subj_norm", normalize_mention(F.col("subj")))
-        .withColumn("__obj_norm", normalize_mention(F.col("obj")))
+        triples.withColumn("__subj_norm", normalize_text(F.col("subj")))
+        .withColumn("__obj_norm", normalize_text(F.col("obj")))
         .join(dict_s, F.col("__subj_norm") == F.col("__surf_s"), "left")
         .join(dict_o, F.col("__obj_norm") == F.col("__surf_o"), "left")
         .withColumn(

@@ -15,6 +15,7 @@ idempotent by construction.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import shutil
 from dataclasses import dataclass, field
@@ -44,8 +45,9 @@ from delm_spark.operators.splitting import paragraph_split_expr
 from delm_spark.schemas.compile import spark_schema_for
 from delm_spark.schemas.spec import NestedSpec, SchemaSpec, spec_from_dict
 
-#: Iceberg namespace of the stage tables when stages are stored as Iceberg
-ICEBERG_NAMESPACE = "delm.stages"
+#: Iceberg namespace, in the configured catalog, of the stage tables when
+#: stages are stored as Iceberg
+ICEBERG_NAMESPACE = "delm_stages"
 
 #: columns of the edge table, in order (s4_edges; the streaming sink
 #: appends the same columns)
@@ -67,10 +69,12 @@ EDGE_COLS = [
 class StageRunner:
     """Checkpointed stage execution with resume.
 
-    `stage(name, build)` returns the committed staging table if present,
-    else builds, writes (adding `delm_part_id` lineage if missing), and
-    re-reads it. Without a checkpoint dir it is a passthrough (pure lazy
-    plan; Catalyst fuses stages).
+    `stage(name, build)` returns the committed stage if present (`resume`),
+    else builds it and commits it (`commit`: writes, adding
+    `delm_part_id` lineage if missing, and re-reads it). Without a
+    checkpoint dir it is a passthrough (pure lazy plan; Catalyst fuses
+    stages). `DelmSpark` calls `resume` and `commit` directly: its
+    artifacts are rewritten on every call, not reused.
 
     A committed stage directory holds the parquet files, `_SUCCESS` and
     two `_`-prefixed sidecars (invisible to the parquet reader), each
@@ -80,7 +84,8 @@ class StageRunner:
     schema-inference job and "007" partition values stay strings. A stage
     committed without `_delm_stage.json` resumes with an inferred schema
     and the metrics the earlier layout's shared `_delm_state.json` holds
-    for it (read, never rewritten). Iceberg stages read via the catalog.
+    for it (read, never rewritten). Iceberg stages are tables of the
+    configured catalog, one per stage and checkpoint dir.
 
     `fingerprint` guards resume against config drift, like the reference's
     verify_resume_config (experiment_manager.py): each committed stage
@@ -92,8 +97,8 @@ class StageRunner:
     def __init__(
         self,
         spark: SparkSession,
-        checkpoint_dir: Optional[str] = None,
-        fingerprint: Optional[str] = None,
+        checkpoint_dir: Optional[str],
+        fingerprint: str,
     ):
         self.spark = spark
         self.dir = Path(checkpoint_dir) if checkpoint_dir else None
@@ -104,11 +109,8 @@ class StageRunner:
         # under checkpoint_dir in both modes.
         from delm_spark.io.iceberg import configured_catalog, iceberg_available
 
-        self.storage = (
-            "iceberg"
-            if iceberg_available(spark) and configured_catalog(spark)
-            else "parquet"
-        )
+        self.catalog = configured_catalog(spark) if iceberg_available(spark) else None
+        self.storage = "iceberg" if self.catalog else "parquet"
         self.resumed: list[str] = []
         self.built: list[str] = []
         #: per-stage named metrics (rows, errors, token sums — the
@@ -127,7 +129,9 @@ class StageRunner:
         return self._path(name) / "_delm_config_fingerprint"
 
     def _ident(self, name: str) -> str:
-        return f"{ICEBERG_NAMESPACE}.{name}"
+        """The configured catalog's table of stage `name` for this dir."""
+        key = hashlib.sha256(str(self.dir.resolve()).encode("utf-8")).hexdigest()[:16]
+        return f"{self.catalog}.{ICEBERG_NAMESPACE}.{name}_{key}"
 
     def _write_stage(
         self, df: DataFrame, name: str, partition_by=None, sort_by=None
@@ -174,12 +178,6 @@ class StageRunner:
             return iceberg.stage_exists(self.spark, self._ident(name))
         return (self._path(name) / "_SUCCESS").exists()
 
-    def _fingerprint_ok(self, name: str) -> bool:
-        if self.fingerprint is None:
-            return True
-        fp = self._fp_path(name)
-        return fp.exists() and fp.read_text() == self.fingerprint
-
     def stage(
         self,
         name: str,
@@ -196,25 +194,44 @@ class StageRunner:
         # consumes every stage exactly once, so neither mechanism is needed.
         if self.dir is None:
             return build()
+        resumed = self.resume(name)
+        if resumed is not None:
+            return resumed
+        return self.commit(name, build(), partition_by=partition_by, sort_by=sort_by)
+
+    def resume(self, name: str) -> Optional[DataFrame]:
+        """The committed stage `name` read back, or None when there is
+        none. A stage committed under another fingerprint refuses."""
+        if not self.is_committed(name):
+            return None
         p = self._path(name)
-        if self.is_committed(name):
-            if not self._fingerprint_ok(name):
-                raise RuntimeError(
-                    f"checkpointed stage {name!r} at {p} was built with a "
-                    "different pipeline config/schema; refusing to resume "
-                    "(reference experiment_manager.verify_resume_config "
-                    "semantics). Use a fresh checkpoint_dir, or delete "
-                    f"{p} to rebuild this stage (later stages built with the "
-                    "old config are refused the same way)."
-                )
-            self.resumed.append(name)
-            return self._read_stage(name)
+        fp = self._fp_path(name)
+        if not (fp.exists() and fp.read_text() == self.fingerprint):
+            raise RuntimeError(
+                f"checkpointed stage {name!r} at {p} was built with a "
+                "different config (a different pipeline config/schema); "
+                "refusing to resume (reference experiment_manager."
+                "verify_resume_config semantics). Use a fresh checkpoint_dir "
+                f"or experiment directory, or delete {p} to rebuild this "
+                "stage (later stages built with the old config are refused "
+                "the same way)."
+            )
+        self.resumed.append(name)
+        return self._read_stage(name)
+
+    def commit(
+        self, name: str, df: DataFrame, partition_by=None, sort_by=None
+    ) -> DataFrame:
+        """Write `df` as stage `name` (replacing what its directory holds)
+        and read it back; without a checkpoint dir, `df` itself."""
+        if self.dir is None:
+            return df
+        p = self._path(name)
         if p.exists():
-            # partial write from a killed run — rebuild atomically (an
-            # uncommitted iceberg snapshot is invisible by construction;
+            # a stale or partial write (a killed run leaves no _SUCCESS;
+            # an uncommitted iceberg snapshot is invisible by construction,
             # its directory holds only sidecars of a table that is gone)
             shutil.rmtree(p)
-        df = build()
         if PART_ID_COL not in df.columns:
             df = df.withColumn(PART_ID_COL, F.spark_partition_id().cast("long"))
         from pyspark.sql import Observation
@@ -241,10 +258,9 @@ class StageRunner:
             [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
         )
         # each sidecar is a new file (the directory was cleared before the
-        # build): replacing one just after a parquet write stalled 30-80 ms
+        # write): replacing one just after a parquet write stalled 30-80 ms
         p.mkdir(parents=True, exist_ok=True)
-        if self.fingerprint is not None:
-            self._fp_path(name).write_text(self.fingerprint)
+        self._fp_path(name).write_text(self.fingerprint)
         (p / "_delm_stage.json").write_text(
             json.dumps({"metrics": self.metrics[name], "schema": read_schema.jsonValue()})
         )
@@ -325,8 +341,6 @@ def config_fingerprint(config: "PipelineConfig", backend) -> str:
     """Stable hash of everything a committed stage's contents depend on —
     resuming under a different config must not silently return stale
     results (reference experiment_manager.verify_resume_config)."""
-    import hashlib
-
     material = {
         "schema_cfg": config.schema_cfg,
         "keywords": list(config.keywords),
@@ -362,6 +376,12 @@ def config_fingerprint(config: "PipelineConfig", backend) -> str:
             "system_prompt": call.system_prompt,
             "prompt_template": call.prompt_template,
         }
+    return config_digest(material)
+
+
+def config_digest(material) -> str:
+    """sha256 hex of `material` as sorted-key JSON: the fingerprint a
+    committed stage stores, for run_pipeline and DelmSpark alike."""
     return hashlib.sha256(
         json.dumps(material, sort_keys=True, default=str).encode("utf-8")
     ).hexdigest()

@@ -174,7 +174,7 @@ def transcript_integrity(
     # on every lag-compared column, so counts are deterministic
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role")
     flagged = transcripts.select(
-        F.col("conv_id").alias("conv_id"),
+        "conv_id",
         F.col("turn_idx").alias("__turn"),
         F.when(F.col("ts") < F.lag("ts").over(w), 1)
         .otherwise(0)
@@ -272,7 +272,7 @@ def turn_latency(transcripts: DataFrame) -> DataFrame:
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role")
     delta = (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w))
     flagged = transcripts.select(
-        F.col("conv_id").alias("conv_id"),
+        "conv_id",
         F.col("ts").cast("long").alias("__epoch"),
         delta.alias("__delta"),
         F.when(F.col("role") == "assistant", delta).alias("__asst_delta"),

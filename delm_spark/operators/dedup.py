@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 
 def normalize_text(col: Column) -> Column:
+    """Canonical text (and mention surface) form: whitespace runs
+    collapsed to one space, trimmed, lowercased."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
@@ -209,6 +211,22 @@ def minhash_lsh_pairs(
     )
 
 
+def _shingle_set_pairs(
+    df: DataFrame, text_col: str, id_col: str, n: int, candidates: DataFrame | None
+) -> DataFrame:
+    """`a.__id`, `a.__sh`, `b.__id`, `b.__sh` (n-gram shingle sets) for
+    each `candidates` (id_a, id_b) pair, or for every a < b if None."""
+    sh = df.select(
+        F.col(id_col).alias("__id"), shingles(F.col(text_col), n).alias("__sh")
+    )
+    a, b = sh.alias("a"), sh.alias("b")
+    if candidates is None:
+        return a.join(b, F.col("a.__id") < F.col("b.__id"))
+    return candidates.join(a, candidates["id_a"] == F.col("a.__id")).join(
+        b, candidates["id_b"] == F.col("b.__id")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -226,24 +244,14 @@ def ngram_jaccard_pairs(
     with `allow_all_pairs=True`; reaching it by accident on a corpus is
     the classic quadratic blow-up. Returns (id_a, id_b, jaccard).
     """
-    sh = df.select(
-        F.col(id_col).alias("__id"), shingles(F.col(text_col), n).alias("__sh")
-    )
-    if candidates is None:
-        if not allow_all_pairs:
-            raise ValueError(
-                "ngram_jaccard_pairs without `candidates` scores all "
-                "O(n^2) pairs; pass candidates from minhash_lsh_pairs "
-                "(the scale path) or opt in with allow_all_pairs=True "
-                "(test scale only)"
-            )
-        a, b = sh.alias("a"), sh.alias("b")
-        pairs = a.join(b, F.col("a.__id") < F.col("b.__id"))
-    else:
-        pairs = (
-            candidates.join(sh.alias("a"), candidates["id_a"] == F.col("a.__id"))
-            .join(sh.alias("b"), candidates["id_b"] == F.col("b.__id"))
+    if candidates is None and not allow_all_pairs:
+        raise ValueError(
+            "ngram_jaccard_pairs without `candidates` scores all "
+            "O(n^2) pairs; pass candidates from minhash_lsh_pairs "
+            "(the scale path) or opt in with allow_all_pairs=True "
+            "(test scale only)"
         )
+    pairs = _shingle_set_pairs(df, text_col, id_col, n, candidates)
     inter = F.size(F.array_intersect(F.col("a.__sh"), F.col("b.__sh")))
     union = F.size(F.array_union(F.col("a.__sh"), F.col("b.__sh")))
     return (
@@ -290,15 +298,9 @@ def containment_pairs(
     the doc with the smaller shingle set (the near-subset; ties break to
     the smaller id). Pairs below `threshold_micro` are dropped.
     """
-    sh = df.select(
-        F.col(id_col).alias("__id"), shingles(F.col(text_col), n).alias("__sh")
-    )
     if candidates is None:
         candidates = minhash_lsh_pairs(df, text_col, id_col, k=k, bands=bands, n=n)
-    pairs = (
-        candidates.join(sh.alias("a"), candidates["id_a"] == F.col("a.__id"))
-        .join(sh.alias("b"), candidates["id_b"] == F.col("b.__id"))
-    )
+    pairs = _shingle_set_pairs(df, text_col, id_col, n, candidates)
     inter = F.size(F.array_intersect(F.col("a.__sh"), F.col("b.__sh")))
     size_a = F.size(F.col("a.__sh"))
     size_b = F.size(F.col("b.__sh"))

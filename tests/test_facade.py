@@ -121,6 +121,81 @@ def test_prep_data_accepts_dataframe_and_samples(spark, tmp_path):
     assert {"delm_record_id", "delm_chunk_id", "delm_text_chunk"} <= set(out.columns)
 
 
+def _extracted_rows(df):
+    return sorted(
+        (r["delm_chunk_id"], r["delm_extracted_data_json"] or "") for r in df.collect()
+    )
+
+
+def test_facade_artifacts_are_committed_stages(spark, corpus, tmp_path):
+    """The experiment's artifacts are StageRunner stages: a second facade
+    reads `extracted` with its stored schema (no Spark job before the
+    first action), and a changed config refuses, naming the artifact."""
+    corpus_dir, cfg_path = corpus
+    exp = tmp_path / "exp" / "st"
+    delm = DelmSpark.from_yaml(
+        cfg_path, spark, experiment_name="st", experiment_directory=str(tmp_path / "exp")
+    )
+    delm.prep_data(str(corpus_dir))
+    extracted = delm.process_via_llm()
+    for name in ("preprocessed", "extracted"):
+        assert (exp / name / "_delm_stage.json").exists(), name
+        assert (exp / name / "_delm_config_fingerprint").exists(), name
+
+    sc = spark.sparkContext
+    sc.setJobGroup("facade-resume", "facade resume read")
+    try:
+        again = DelmSpark.from_yaml(
+            cfg_path, spark, experiment_name="st",
+            experiment_directory=str(tmp_path / "exp"),
+        ).get_extraction_results()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("facade-resume")) == []
+    assert again.schema == extracted.schema
+    assert _extracted_rows(again) == _extracted_rows(extracted)
+
+    changed = tmp_path / "changed.yaml"
+    changed.write_text(CONFIG_YAML.replace("delm_score >= 1.0", "delm_score >= 2.0"))
+    stale = DelmSpark.from_yaml(
+        changed, spark, experiment_name="st", experiment_directory=str(tmp_path / "exp")
+    )
+    with pytest.raises(RuntimeError, match="different config") as err:
+        stale.process_via_llm()
+    assert str(exp / "preprocessed") in str(err.value)
+
+
+def test_facade_resumes_earlier_artifact_layout(spark, corpus, tmp_path):
+    """An experiment directory written before artifacts carried
+    `_delm_stage.json` (parquet, `_SUCCESS` and the config fingerprint,
+    sha256 of the sorted-key JSON of the config sections) still loads."""
+    import dataclasses
+    import hashlib
+
+    corpus_dir, cfg_path = corpus
+    prepped = DelmSpark.from_yaml(cfg_path, spark).prep_data(str(corpus_dir))
+    art = tmp_path / "exp" / "old" / "preprocessed"
+    prepped.write.parquet(str(art))
+    delm = DelmSpark.from_yaml(
+        cfg_path, spark, experiment_name="old", experiment_directory=str(tmp_path / "exp")
+    )
+    c = delm.config
+    material = {
+        "llm": dataclasses.asdict(c.llm_extraction),
+        "prep": dataclasses.asdict(c.data_preprocessing),
+        "cache": dataclasses.asdict(c.semantic_cache),
+        "pipeline": dataclasses.asdict(c.pipeline),
+        "schema": c.schema_cfg,
+    }
+    (art / "_delm_config_fingerprint").write_text(
+        hashlib.sha256(json.dumps(material, sort_keys=True, default=str).encode()).hexdigest()
+    )
+    extracted = delm.process_via_llm()
+    assert delm.stages.resumed == ["preprocessed"]
+    assert extracted.count() == prepped.count() == 3
+    assert set(extracted.columns) >= set(prepped.columns)
+
+
 # ---------------------------------------------------------------------------
 # PromptedApiBackend e2e through the facade: an Instructor-shaped transport
 # double with injected transient + permanent failures, exercising retry/

@@ -18,7 +18,7 @@ from delm_spark.operators.similarity import hyperplane_signs
 
 def _ref_vector(surface: str, dim: int) -> list:
     """Trigram counts of one raw surface, written out longhand:
-    normalize_mention (ASCII whitespace collapse, space trim, lowercase),
+    normalize_text (ASCII whitespace collapse, space trim, lowercase),
     '^s$' padding, md5 bucket of every 3-char window."""
     padded = "^" + re.sub(r"\s+", " ", surface, flags=re.ASCII).strip(" ").lower() + "$"
     v = [0] * dim

@@ -1,5 +1,6 @@
 """Every public module-level def/class in delm_spark/ has a program caller,
-and so does every defaulted parameter of the public surface.
+and so does every defaulted parameter of the public surface; and no two
+functions of the program share one implementation.
 
 A public name counts as called when a program file — the package itself,
 __spark_entry__.py, submit_*.py, bench*.py or perfbench/ — references it
@@ -8,7 +9,10 @@ definition. A defaulted parameter counts as set when some program call
 site of its function passes it: by keyword, by position, or through a
 `*`/`**` splat. Tests do not count: public code or parameters that only
 tests use are deleted, or listed in ALLOWED / ALLOWED_PARAMS with the
-one-line reason they stay. Pure `ast` parsing, no Spark."""
+one-line reason they stay. Two functions or methods of delm_spark/ or
+__spark_entry__.py with equal arguments and body (docstrings aside) are
+one behaviour written twice: one goes, unless ALLOWED_DUPLICATES says why
+both stay. Pure `ast` parsing, no Spark."""
 
 from __future__ import annotations
 
@@ -77,6 +81,15 @@ ALLOWED_PARAMS = {
 }
 
 PARAM_REASONS = ("DELM port:", "deployment:", "test seam:", "encoder option:")
+
+#: groups of functions (`path:qualname`, sorted) whose arguments and body
+#: are equal, and why each copy stays
+ALLOWED_DUPLICATES = {
+    (
+        "delm_spark/extraction/fs_cache.py:FilesystemSemanticCache.maybe_prune",
+        "delm_spark/extraction/sqlite_cache.py:SqliteSemanticCache.maybe_prune",
+    ): "DELM port: one method per cache class",
+}
 
 
 def _program_files() -> list[Path]:
@@ -239,3 +252,48 @@ def test_every_parameter_has_a_caller():
     assert not stale, f"ALLOWED_PARAMS entries that are not unset parameters: {stale}"
     bad = sorted(k for k, r in ALLOWED_PARAMS.items() if not r.startswith(PARAM_REASONS))
     assert not bad, f"ALLOWED_PARAMS reasons outside {PARAM_REASONS}: {bad}"
+
+
+def _functions(node: ast.AST, prefix: str = ""):
+    """(qualname, def) for every function and method under `node`,
+    nested ones included."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            qual = f"{prefix}{child.name}"
+            if not isinstance(child, ast.ClassDef):
+                yield qual, child
+            yield from _functions(child, f"{qual}.")
+        else:
+            yield from _functions(child, prefix)
+
+
+def _implementation(fn: ast.FunctionDef) -> str:
+    """The arguments and body of `fn` without its docstring, as an ast
+    dump (no names of its own, no line numbers)."""
+    body = fn.body
+    first = body[0]
+    if (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Constant)
+        and isinstance(first.value.value, str)
+    ):
+        body = body[1:]
+    return ast.dump(fn.args) + "".join(ast.dump(stmt) for stmt in body)
+
+
+def test_no_duplicate_function_bodies():
+    files = [*sorted((REPO / "delm_spark").rglob("*.py")), REPO / "__spark_entry__.py"]
+    by_impl: dict[str, list[str]] = {}
+    for f in files:
+        rel = f.relative_to(REPO)
+        for qual, fn in _functions(ast.parse(f.read_text(), str(f))):
+            by_impl.setdefault(_implementation(fn), []).append(f"{rel}:{qual}")
+    dups = {tuple(sorted(names)) for names in by_impl.values() if len(names) > 1}
+    missing = sorted(dups - set(ALLOWED_DUPLICATES))
+    assert not missing, (
+        f"functions with equal arguments and body: {missing}. Keep one and "
+        "call it from the others' callers, or add the group to "
+        "ALLOWED_DUPLICATES with the reason each copy stays."
+    )
+    stale = sorted(set(ALLOWED_DUPLICATES) - dups)
+    assert not stale, f"ALLOWED_DUPLICATES entries that are not duplicates: {stale}"

@@ -172,7 +172,7 @@ def test_partition_column_keeps_written_type(spark, tmp_path):
     def build():
         return spark.createDataFrame([("a", "2020"), ("b", "007")], "k string, pred string")
 
-    runner = StageRunner(spark, str(tmp_path / "ck"))
+    runner = StageRunner(spark, str(tmp_path / "ck"), fingerprint="f1")
     for _ in ("commit", "resume"):
         df = runner.stage("s", build, partition_by=["pred"])
         assert df.columns == ["k", "delm_part_id", "pred"]

@@ -233,7 +233,7 @@ def test_iceberg_probe_is_false_in_sandbox(spark):
     assert iceberg_available(spark) is False
     assert configured_catalog(spark) is None
     # auto-detection therefore lands on parquet — no behavior change
-    assert StageRunner(spark, None).storage == "parquet"
+    assert StageRunner(spark, None, "f1").storage == "parquet"
 
 
 def test_iceberg_and_parquet_stage_paths_identical(spark, tmp_path, monkeypatch):
@@ -292,6 +292,15 @@ def test_iceberg_and_parquet_stage_paths_identical(spark, tmp_path, monkeypatch)
     ib3 = StageRunner(spark, str(tmp_path / "ib"), fingerprint="f2")
     with pytest.raises(RuntimeError, match="different pipeline config"):
         ib3.stage("s1", build)
+
+    # stage tables live in the configured catalog, one per checkpoint dir:
+    # the refusal's remedy, a fresh checkpoint dir, builds afresh
+    fresh = StageRunner(spark, str(tmp_path / "ib_fresh"), fingerprint="f2")
+    assert fresh._ident("s1") != ib._ident("s1")
+    fresh.stage("s1", build)
+    assert fresh.built == ["s1"] and fresh.resumed == []
+    assert len(tables) == 2
+    assert all(ident.startswith("cat.") for ident in tables), sorted(tables)
 
 
 # ---------------------------------------------------------------------------
