@@ -276,12 +276,28 @@ class DelmConfig:
         return validate_score_filter(f) if f is not None else None
 
     def to_pipeline_config(self):
-        """Bridge to the KG pipeline's config for nested triple specs."""
+        """Bridge to the KG pipeline's config for nested triple specs.
+        `run_pipeline` splits paragraphs, scores keywords and caches to a
+        parquet table; a config asking for anything else is refused."""
         from delm_spark.kg.pipeline import PipelineConfig
 
         from delm_spark.operators.scoring import parse_score_filter
 
-        kw = (self.data_preprocessing.scoring or {}).get("keywords") or []
+        prep, cache = self.data_preprocessing, self.semantic_cache
+        for setting, value, honoured in (
+            ("data_preprocessing.splitting.type",
+             (prep.splitting or {}).get("type"), "ParagraphSplit"),
+            ("data_preprocessing.scoring.type",
+             (prep.scoring or {"type": "KeywordScorer"}).get("type"), "KeywordScorer"),
+            ("semantic_cache.backend",
+             cache.backend if cache.path else "parquet", "parquet"),
+        ):
+            if value != honoured:
+                raise ValueError(
+                    f"{setting}={value!r}: the KG pipeline runs only "
+                    f"{honoured!r}; use DelmSpark, which honours this setting"
+                )
+        kw = (prep.scoring or {}).get("keywords") or []
         op, threshold = ">=", 1.0
         f = self.data_preprocessing.pandas_score_filter
         if f:

@@ -60,12 +60,8 @@ class CurationConfig:
     """Knobs for `run_curation`; defaults mirror the standalone demos."""
 
     near_dup_threshold: Optional[float] = 0.5  # Jaccard; None disables stage 2
-    minhash_k: int = 16
-    minhash_bands: int = 4
-    shingle_n: int = 3
     quality: bool = True
     decontam_n: int = 8
-    decontam_max_overlap: int = 0
     redact: bool = True
     pack_budget: Optional[int] = 2048
     #: pack_sequences block width (id div block_size); raise it when ids
@@ -109,19 +105,11 @@ def run_curation(
 
     # stage 2: near-dup — greedy keep-first over verified LSH pairs
     if config.near_dup_threshold is not None:
-        cand = minhash_lsh_pairs(
-            s1,
-            text_col,
-            id_col,
-            k=config.minhash_k,
-            bands=config.minhash_bands,
-            n=config.shingle_n,
-        )
+        cand = minhash_lsh_pairs(s1, text_col, id_col)
         verified = ngram_jaccard_pairs(
             s1,
             text_col,
             id_col,
-            n=config.shingle_n,
             threshold=config.near_dup_threshold,
             candidates=cand,
         )
@@ -156,7 +144,6 @@ def run_curation(
             text_col,
             id_col,
             n=config.decontam_n,
-            max_overlap=config.decontam_max_overlap,
         ).select(id_col, "contaminated").localCheckpoint(eager=True)
         s4 = s3.join(verdicts.filter("contaminated = 0"), id_col, "left_semi")
         contaminated = verdicts.filter("contaminated = 1").select(id_col)
@@ -234,11 +221,7 @@ class TranscriptCurationConfig:
     min_turns: int = 4          # conversations shorter than this: 'too_short'
     max_tool_pct: int = 40      # tool-role turns above this %: 'tool_heavy'
     near_dup_threshold: Optional[float] = 0.5
-    minhash_k: int = 16
-    minhash_bands: int = 4
-    shingle_n: int = 3
     decontam_n: int = 8
-    decontam_max_overlap: int = 0
     redact: bool = True
     pack_budget: Optional[int] = 400
 
@@ -336,13 +319,9 @@ def run_transcript_curation(
         test_df=test_df,
         config=CurationConfig(
             near_dup_threshold=config.near_dup_threshold,
-            minhash_k=config.minhash_k,
-            minhash_bands=config.minhash_bands,
-            shingle_n=config.shingle_n,
             quality=False,  # Gopher bounds are per-document prose rules;
             # transcript structure is gated by stage 2 instead
             decontam_n=config.decontam_n,
-            decontam_max_overlap=config.decontam_max_overlap,
             redact=config.redact,
             pack_budget=config.pack_budget,
             pack_block_size=block,

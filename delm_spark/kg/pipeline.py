@@ -20,7 +20,7 @@ import json
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Callable, Optional
+from typing import Callable, ClassVar, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -306,35 +306,12 @@ class PipelineConfig:
     #: recover their canonical entity. Off by default: it adds a candidate
     #: search stage, and exact-only linking is the reference-parity shape.
     embedding_link: bool = False
-    #: bind first-person pronoun subjects ("I works at Acme" from a user
-    #: turn) to per-conversation speaker:<conv_id>:<role> entities BEFORE
-    #: dictionary linking (kg/ground.py) — grounded subjects take their
-    #: speaker string as subj_id directly, bypassing mention minting and
-    #: the embedding residue pass (a speaker entity must never fuzzy-match
-    #: a dictionary surface). Off by default: the reference emits the
-    #: verbatim extraction.
-    ground_pronouns: bool = False
-    #: also bind second-person subjects to the ADDRESSEE role — only in
-    #: conversations whose role census is exactly two (kg/ground.py);
-    #: requires ground_pronouns
-    ground_second_person: bool = False
     embedding_link_threshold: float = 0.5
-    embedding_dim: int = 64
-    embedding_planes: int = 8
-    embedding_probe_radius: int = 2
-    #: admission gate (kg/trajectory.transcript_integrity): quarantine
-    #: conversations with duplicated/missing turn indices, timestamp
-    #: regressions, stuck roles, or blank turns BEFORE chunking — a
-    #: malformed conversation produces garbage triples, and at 10^12
-    #: turns it is cheaper to gate than to clean downstream. Off by
-    #: default: the fixture corpus is gate-clean only for structural
-    #: rules a given deployment opts into.
-    integrity_gate: bool = False
-    #: which rules quarantine (severity order fixed in
-    #: trajectory.INTEGRITY_RULES). Default = structural only: agent
-    #: transcripts legitimately repeat roles and may carry blank turns,
-    #: so those counters report but don't drop unless opted in.
-    integrity_rules: tuple = ("dup_turn_idx", "gap_turn_idx", "ts_regression")
+    #: the residue resolver's trigram-embedding width, sign-LSH planes and
+    #: multi-probe radius (constants, not settings)
+    embedding_dim: ClassVar[int] = 64
+    embedding_planes: ClassVar[int] = 8
+    embedding_probe_radius: ClassVar[int] = 2
 
 
 def config_fingerprint(config: "PipelineConfig", backend) -> str:
@@ -356,14 +333,11 @@ def config_fingerprint(config: "PipelineConfig", backend) -> str:
             config.embedding_planes,
             config.embedding_probe_radius,
         ],
-        # gated vs ungated corpora differ from stage s1 on — a resumed
-        # checkpoint must not silently mix them; rule set matters too
-        "integrity_gate": config.integrity_gate,
-        "integrity_rules": list(config.integrity_rules),
-        # grounding flags change the checkpointed s3_triples contents
-        # (ADVICE r5): resuming after toggling either must not silently
-        # return stale (un)grounded triples
-        "ground": [config.ground_pronouns, config.ground_second_person],
+        # the one value each of the removed integrity-gate and grounding
+        # settings had, so stages committed with them still resume
+        "integrity_gate": False,
+        "integrity_rules": ["dup_turn_idx", "gap_turn_idx", "ts_regression"],
+        "ground": [False, False],
     }
     # a PromptedApiBackend with a changed model/temperature/template produces
     # different extractions — the class name alone must not pass the resume
@@ -395,9 +369,6 @@ class PipelineResult:
     nodes: DataFrame
     edges: DataFrame
     runner: StageRunner
-    #: per-conversation integrity report (only when
-    #: config.integrity_gate) — the quarantine ledger
-    integrity: Optional[DataFrame] = None
 
 
 def chunk_transcripts(transcripts: DataFrame) -> DataFrame:
@@ -485,13 +456,6 @@ def run_pipeline(
     backend: Optional[ExtractorBackend] = None,
 ) -> PipelineResult:
     config = config or PipelineConfig()
-    if config.ground_second_person and not config.ground_pronouns:
-        # (ADVICE r5): the second-person pass rides the grounding stage;
-        # without it the flag silently no-ops, which reads as "grounded"
-        raise ValueError(
-            "ground_second_person requires ground_pronouns=True "
-            "(second-person grounding rides the pronoun-grounding stage)"
-        )
     spec = spec_from_dict(config.schema_cfg)
     backend = backend or RuleTripleExtractor(spec)
     runner = StageRunner(
@@ -512,25 +476,6 @@ def run_pipeline(
     # anything: no eager checkpoints (each one costs a dedicated ~0.5 s
     # job in local mode).
     labels = canonical_map(dictionary)
-
-    integrity = None
-    if config.integrity_gate:
-        from .trajectory import transcript_integrity
-
-        integrity = runner.stage(
-            "s0_integrity",
-            lambda: transcript_integrity(
-                transcripts, rules=tuple(config.integrity_rules)
-            ),
-        )
-        # semi join, not broadcast: the ok list is corpus-scale (most
-        # conversations pass), and conv_id is the key every downstream
-        # stage already hashes on
-        transcripts = transcripts.join(
-            integrity.filter(F.col("disposition") == "ok").select("conv_id"),
-            "conv_id",
-            "left_semi",
-        )
 
     if config.sample_size:
         from delm_spark.operators.sample import seeded_sample_records
@@ -579,28 +524,7 @@ def run_pipeline(
             raw = native_triples(chunks, spec, backend)
         if raw is None:
             raw = triples_from_extracted(extracted, spec)
-        if config.ground_pronouns:
-            from delm_spark.kg.ground import SECOND_PERSON, ground_pronouns
-
-            # transcripts here is the post-integrity-gate frame, so a
-            # quarantined conversation can never donate a speaker role
-            raw = ground_pronouns(
-                raw,
-                transcripts,
-                second_person=(
-                    SECOND_PERSON if config.ground_second_person else ()
-                ),
-            )
         linked = link_mentions(raw, dictionary)
-        if config.ground_pronouns:
-            # a grounded speaker string IS its entity id — skip mention
-            # minting so the residue resolver below never sees it
-            linked = linked.withColumn(
-                "subj_id",
-                F.when(F.col("grounded") == 1, F.col("subj")).otherwise(
-                    F.col("subj_id")
-                ),
-            ).drop("grounded")
         if config.embedding_link:
             from delm_spark.kg.linking import resolve_mention_residue
 
@@ -658,5 +582,4 @@ def run_pipeline(
         nodes=nodes,
         edges=edges,
         runner=runner,
-        integrity=integrity,
     )

@@ -48,9 +48,7 @@ MENTION_PREFIX = "mention:"
 def consistency_report(
     triples: DataFrame,
     subj_col: str = "subj_id",
-    pred_col: str = "pred",
     obj_col: str = "obj_id",
-    functional_preds: list[str] | None = None,
     occurrence_cols: list[str] | None = None,
 ) -> DataFrame:
     """One (check_name, n_violations) row per check, always all checks (a
@@ -67,9 +65,7 @@ def consistency_report(
     — and duplicate_triple counts extra copies of the full
     (triple + occurrence) key instead: genuine upstream idempotency
     regressions, zero on a healthy build."""
-    if functional_preds is None:
-        functional_preds = DEFAULT_FUNCTIONAL_PREDS
-    s, p, o = F.col(subj_col), F.col(pred_col), F.col(obj_col)
+    s, p, o = F.col(subj_col), F.col("pred"), F.col(obj_col)
 
     # one scan: the three row-local checks as conditional counts
     row_local = triples.select(
@@ -93,7 +89,7 @@ def consistency_report(
     )
 
     func = (
-        triples.filter(p.isin(functional_preds))
+        triples.filter(p.isin(DEFAULT_FUNCTIONAL_PREDS))
         .groupBy(p.alias("p"), s.alias("s"))
         .agg(
             F.greatest(F.count_distinct(o) - 1, F.lit(0)).alias("excess")
@@ -143,11 +139,7 @@ def functional_violations(triples: DataFrame) -> DataFrame:
 def resolve_functional(
     triples: DataFrame,
     subj_col: str = "subj_id",
-    pred_col: str = "pred",
     obj_col: str = "obj_id",
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    functional_preds: list[str] | None = None,
 ) -> DataFrame:
     """Contradiction RESOLUTION for functional predicates — the repair
     step after ``functional_violations`` has quantified the damage.
@@ -182,13 +174,11 @@ def resolve_functional(
     """
     from pyspark.sql.window import Window
 
-    if functional_preds is None:
-        functional_preds = DEFAULT_FUNCTIONAL_PREDS
     per_obj = (
-        triples.filter(F.col(pred_col).isin(functional_preds))
+        triples.filter(F.col("pred").isin(DEFAULT_FUNCTIONAL_PREDS))
         .groupBy(
             F.col(subj_col).alias("subj"),
-            F.col(pred_col).alias("pred"),
+            F.col("pred").alias("pred"),
             F.col(obj_col).alias("obj"),
         )
         .agg(
@@ -196,8 +186,8 @@ def resolve_functional(
             F.max(
                 F.concat_ws(
                     "#",
-                    F.col(conv_col),
-                    F.lpad(F.col(turn_col).cast("string"), 6, "0"),
+                    F.col("conv_id"),
+                    F.lpad(F.col("turn_idx").cast("string"), 6, "0"),
                 )
             ).alias("last_seen"),
         )

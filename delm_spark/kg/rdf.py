@@ -118,10 +118,10 @@ def from_ntriples(lines: DataFrame, base_iri: str = DEFAULT_BASE) -> DataFrame:
 
     def term(group: int) -> Column:
         iri = F.regexp_extract(line, _NT_LINE, group)
-        local = F.when(
-            iri.startswith(base_iri), F.substring(iri, len(base_iri) + 1, 2**30)
+        return F.when(
+            iri.startswith(base_iri),
+            _decode(F.substring(iri, len(base_iri) + 1, 2**30)),
         ).otherwise(iri)
-        return _decode(local)
 
     ok = F.regexp_like(line, F.lit(_NT_LINE))
     return kept.select(

@@ -130,9 +130,7 @@ _RULE_COUNTER = {
 }
 
 
-def transcript_integrity(
-    transcripts: DataFrame, rules: tuple = INTEGRITY_RULES
-) -> DataFrame:
+def transcript_integrity(transcripts: DataFrame) -> DataFrame:
     """Per-conversation structural QA over the transcript table — the
     admission gate a 10^12-turn corpus needs BEFORE extraction: a
     conversation with duplicated or missing turn indices, out-of-order
@@ -152,22 +150,18 @@ def transcript_integrity(
       n_role_repeats      — turns repeating the previous turn's role,
       n_empty_text        — null-or-blank text turns,
       n_tool_turns        — turns with a tool recorded,
-      disposition         — first failing *enforced* rule in the fixed
-                            severity order dup_turn_idx > gap_turn_idx >
+      disposition         — first failing rule in the fixed severity
+                            order dup_turn_idx > gap_turn_idx >
                             ts_regression > role_repeat > empty_text,
                             else 'ok' (the first-drop-wins discipline of
                             curate.run_curation).
 
-    ``rules`` selects which counters participate in the disposition
-    (severity order is always the fixed chain above, restricted to the
-    enforced subset); all counters are reported regardless. Agent
-    transcripts legitimately repeat roles (assistant tool-call then
-    assistant text), so a deployment typically enforces only the
-    structural rules — see PipelineConfig.integrity_rules.
+    Gating a corpus is this report plus a `left_semi` join of the
+    transcripts on the `conv_id`s a caller accepts (`disposition == 'ok'`,
+    or a filter on the counters when some rules should only report:
+    agent transcripts legitimately repeat roles, assistant tool call then
+    assistant text).
     """
-    unknown = set(rules) - set(INTEGRITY_RULES)
-    if unknown:
-        raise ValueError(f"unknown integrity rules: {sorted(unknown)}")
     # (ts, role) tiebreak: with duplicated turn indices (exactly the
     # corruption this gate detects) a turn_idx-only order would leave
     # the lag neighbors engine-dependent; the full key is a total order
@@ -209,10 +203,9 @@ def transcript_integrity(
     disposition = F.lit("ok")
     # build the when-chain back-to-front so severity order is preserved
     for rule in reversed(INTEGRITY_RULES):
-        if rule in rules:
-            disposition = F.when(
-                F.col(_RULE_COUNTER[rule]) > 0, F.lit(rule)
-            ).otherwise(disposition)
+        disposition = F.when(
+            F.col(_RULE_COUNTER[rule]) > 0, F.lit(rule)
+        ).otherwise(disposition)
     return agg.select("*", disposition.alias("disposition"))
 
 

@@ -54,7 +54,6 @@ def infer_entity_types(
     triples: DataFrame,
     signatures: DataFrame,
     subj_col: str = "subj_id",
-    pred_col: str = "pred",
     obj_col: str = "obj_id",
 ) -> DataFrame:
     """Majority-vote entity typing.
@@ -80,7 +79,7 @@ def infer_entity_types(
     votes = (
         triples.select(
             F.col(subj_col).alias("__s"),
-            F.col(pred_col).alias("pred"),
+            F.col("pred").alias("pred"),
             F.col(obj_col).alias("__o"),
         )
         .join(sig, "pred")
@@ -126,7 +125,6 @@ def type_violations(
     triples: DataFrame,
     signatures: DataFrame,
     subj_col: str = "subj_id",
-    pred_col: str = "pred",
     obj_col: str = "obj_id",
     types: DataFrame | None = None,
 ) -> DataFrame:
@@ -158,15 +156,13 @@ def type_violations(
     twice.
     """
     if types is None:
-        types = infer_entity_types(
-            triples, signatures, subj_col, pred_col, obj_col
-        )
+        types = infer_entity_types(triples, signatures, subj_col, obj_col)
     types = types.select("entity", "entity_type")
     sig = F.broadcast(signatures.select("pred", "domain_type", "range_type"))
     t = (
         triples.select(
             F.col(subj_col).alias("subj"),
-            F.col(pred_col).alias("pred"),
+            F.col("pred").alias("pred"),
             F.col(obj_col).alias("obj"),
         )
         .distinct()

@@ -57,13 +57,12 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    max_overlap: int = 0,
 ) -> DataFrame:
     """Per-train-document n-gram overlap against a held-out test set.
 
     Returns one row per train document: `n_ngrams` (distinct word
     n-grams), `n_contam` (how many also occur anywhere in `test`),
-    `contam_frac`, and `contaminated` (1 when n_contam > max_overlap).
+    `contam_frac`, and `contaminated` (1 when any n-gram does).
     Callers drop or quarantine flagged rows before training.
 
     Plan shape: the test side is collapsed to a distinct n-gram set and
@@ -94,7 +93,7 @@ def decontaminate(
         "n_ngrams",
         "n_contam",
         F.round(F.col("n_contam") / F.col("n_ngrams"), 6).alias("contam_frac"),
-        (F.col("n_contam") > max_overlap).cast("int").alias("contaminated"),
+        (F.col("n_contam") > 0).cast("int").alias("contaminated"),
     )
 
 

@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG, entity_dictionary, generate_transcripts
 from delm_spark.extraction.backend import RuleTripleExtractor
 from delm_spark.extraction.cost import summarize_cost
-from delm_spark.extraction.extract import _extract_series, extract_chunks
+from delm_spark.extraction.extract import (
+    _count_run_partitions,
+    _extract_series,
+    _migrate_legacy_cache_layout,
+    extract_chunks,
+)
 from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
 from delm_spark.operators.sample import seeded_sample, seeded_sample_records
 from delm_spark.schemas.spec import spec_from_dict
@@ -50,6 +55,7 @@ TEXTS = [
     "Alice Smith works at Acme Corp.",  # duplicate: one extraction call
     "the weather was nice that day.",
 ]
+DISTINCT_TEXTS = list(dict.fromkeys(TEXTS))
 
 
 def test_persistent_cache_warm_run_zero_backend_calls(spark, tmp_path):
@@ -166,3 +172,78 @@ def test_resume_refuses_on_config_change(spark, tmp_path):
     res = run_pipeline(spark, t, d, PipelineConfig(checkpoint_dir=ckpt))
     res.edges.count()
     assert res.runner.resumed and not res.runner.built
+
+
+def test_empty_run_partition_reads_as_cold_cache(spark, tmp_path):
+    """A cache_dir holding only an empty run partition (a prior zero-miss
+    run) reads as cold, not as a cache that poisons every later run."""
+    cache = tmp_path / "cache"
+    empty_run = cache / "delm_run_id=rdeadbeef"
+    empty_run.mkdir(parents=True)
+    (empty_run / "_SUCCESS").touch()
+
+    df = _chunk_df(spark, DISTINCT_TEXTS)
+    out = extract_chunks(df, SPEC, RuleTripleExtractor(SPEC), cache_dir=str(cache))
+    rows = out.collect()
+    assert len(rows) == len(DISTINCT_TEXTS)
+    assert all(not r["delm_cache_hit"] for r in rows)
+    # and the next run is warm
+    warm = extract_chunks(df, SPEC, CacheOnlyBackend(), cache_dir=str(cache))
+    assert all(r["delm_cache_hit"] for r in warm.collect())
+
+
+def test_legacy_flat_cache_layout_migrates_and_serves_hits(spark, tmp_path):
+    """Part files of the earlier flat cache layout migrate into a
+    delm_run_id=legacy0/ partition instead of breaking discovery."""
+    cache = tmp_path / "cache"
+    df = _chunk_df(spark, DISTINCT_TEXTS)
+    extract_chunks(df, SPEC, RuleTripleExtractor(SPEC), cache_dir=str(cache)).collect()
+
+    # simulate the old append-mode layout: part files flat at the root
+    run_dirs = [d for d in cache.iterdir() if d.name.startswith("delm_run_id=")]
+    assert len(run_dirs) == 1
+    for f in run_dirs[0].iterdir():
+        if f.name.endswith(".parquet") or f.name == "_SUCCESS":
+            f.rename(cache / f.name)
+    run_dirs[0].rmdir() if not any(run_dirs[0].iterdir()) else None
+    import shutil
+
+    if run_dirs[0].exists():
+        shutil.rmtree(run_dirs[0])
+    assert any(f.suffix == ".parquet" for f in cache.iterdir() if f.is_file())
+
+    # a warm run must migrate the flat files and serve every key as a hit
+    warm = extract_chunks(df, SPEC, CacheOnlyBackend(), cache_dir=str(cache))
+    rows = warm.collect()
+    assert len(rows) == len(DISTINCT_TEXTS)
+    assert all(r["delm_cache_hit"] and r["delm_errors"] is None for r in rows)
+    assert not any(
+        f.is_file() and f.suffix == ".parquet" for f in cache.iterdir()
+    )  # nothing left flat
+    assert (cache / "delm_run_id=legacy0").is_dir()
+    # idempotent second call is a no-op
+    assert _migrate_legacy_cache_layout(str(cache)) == 0
+
+
+def test_auto_compaction_bounds_run_partitions(spark, tmp_path, monkeypatch):
+    """Auto-compaction bounds the run-partition count, which every warm
+    read scans, without changing results."""
+    from delm_spark.extraction import extract
+
+    cache = str(tmp_path / "cache")
+    df = _chunk_df(spark, DISTINCT_TEXTS)
+    limit = 3
+    monkeypatch.setattr(extract, "AUTO_COMPACT_RUNS", limit)
+    baseline = None
+    for i in range(limit + 2):
+        backend = RuleTripleExtractor(SPEC) if i == 0 else CacheOnlyBackend()
+        out = extract_chunks(df, SPEC, backend, cache_dir=cache)
+        got = sorted(
+            (r["chunk_id"], r["delm_extracted_data_json"]) for r in out.collect()
+        )
+        if baseline is None:
+            baseline = got
+        assert got == baseline  # results unchanged across compactions
+        assert _count_run_partitions(cache) <= limit
+    # and compaction really ran at least once (partitions collapsed)
+    assert _count_run_partitions(cache) < limit + 2

@@ -84,6 +84,9 @@ def test_defaults_validate():
     cfg = DelmConfig.from_dict({})
     assert cfg.llm_extraction.name == "deterministic-rules"
     assert cfg.to_pipeline_config().score_threshold == 1.0
+    # without a cache path no cache is written, so the backend is moot
+    sqlite = DelmConfig.from_dict({"semantic_cache": {"backend": "sqlite"}})
+    assert sqlite.to_pipeline_config().cache_dir is None
 
 
 def test_schema_spec_path(tmp_path):
@@ -146,7 +149,8 @@ def test_reference_example_config_loads(tmp_path):
     assert cfg.llm_extraction.get_provider_string() == "openai/gpt-4o-mini"
     assert cfg.llm_extraction.prompt_template.startswith("Extract prices.")
     assert cfg.spec is not None and cfg.spec.container_name == "commodity_prices"
-    assert cfg.semantic_cache.backend == "sqlite"  # recorded; storage is parquet
+    # DelmSpark caches in sqlite; the KG pipeline bridge refuses it
+    assert cfg.semantic_cache.backend == "sqlite"
     # call spec carries the schema-level prompt override
     assert "Extract prices." in cfg.llm_extraction.call_spec().prompt_template
 
@@ -161,3 +165,39 @@ def test_track_cost_false_blocks_cost_summary(tmp_path):
     d = DelmSpark(cfg, spark=object.__new__(object))  # session unused here
     with pytest.raises(ValueError, match="track_cost"):
         d.get_cost_summary()
+
+
+@pytest.mark.parametrize(
+    "section, setting",
+    [
+        ({"data_preprocessing": {"splitting": {"type": "FixedWindowSplit"}}},
+         "data_preprocessing.splitting.type"),
+        ({"data_preprocessing": {"splitting": {"type": None}}},
+         "data_preprocessing.splitting.type"),
+        ({"data_preprocessing": {"scoring": {"type": "FuzzyScorer", "keywords": ["a"]}}},
+         "data_preprocessing.scoring.type"),
+        ({"semantic_cache": {"backend": "sqlite", "path": "/tmp/delm_cache_test"}},
+         "semantic_cache.backend"),
+    ],
+)
+def test_to_pipeline_config_refuses_unhonoured_settings(section, setting):
+    """The KG pipeline splits paragraphs, scores keywords and caches to
+    parquet: the bridge refuses any other choice, naming the setting and
+    DelmSpark, instead of running the pipeline's own in its place."""
+    cfg = DelmConfig.from_dict(section)
+    with pytest.raises(ValueError, match=rf"{setting}=.*DelmSpark"):
+        cfg.to_pipeline_config()
+
+
+def test_pipeline_section_embedding_link_threads_through():
+    """The pipeline section's embedding-link settings reach PipelineConfig,
+    and an out-of-range threshold is refused."""
+    cfg = DelmConfig.from_dict(
+        {"pipeline": {"embedding_link": True, "embedding_link_threshold": 0.7}}
+    ).to_pipeline_config()
+    assert cfg.embedding_link is True
+    assert cfg.embedding_link_threshold == 0.7
+    with pytest.raises(ValueError, match="embedding_link_threshold"):
+        DelmConfig.from_dict(
+            {"pipeline": {"embedding_link_threshold": 1.5}}
+        ).to_pipeline_config()

@@ -68,3 +68,41 @@ def test_iteration_costs_one_job(spark):
     # iteration adds exactly ONE (its checkpoint — the old scheme added a
     # second join/limit/count job per round)
     assert n_jobs <= 5 + iters + 1, (n_jobs, iters)
+
+
+def test_connected_components_long_ids_above_2_53(spark):
+    """64-bit ids above 2^53 keep their values and their bigint type on
+    both paths: the convergence sentinel carries the labels' component
+    type instead of round-tripping through double."""
+    base = 1 << 60  # far above double's 2^53 integer precision
+    edges = spark.createDataFrame(
+        [
+            (base + 1, base + 2),
+            (base + 2, base + 3),
+            (base + 10, base + 11),
+        ],
+        "src long, dst long",
+    )
+    expected = {
+        base + 1: base + 1,
+        base + 2: base + 1,
+        base + 3: base + 1,
+        base + 10: base + 10,
+        base + 11: base + 10,
+    }
+    cc = connected_components(edges, driver_cutoff=0)
+    # the label column keeps the node type end-to-end (no string coercion)
+    assert cc.schema["component"].dataType.simpleString() == "bigint"
+    got = {r["node"]: r["component"] for r in cc.collect()}
+    assert got == expected
+
+    # the DRIVER union-find path must agree in values AND type — a
+    # hardcoded string schema would silently fall back to a Python-RDD
+    # frame (Arrow can't cast int64 -> string) and flip the dtype
+    ccd = connected_components(edges)  # under the cutoff -> driver path
+    assert ccd.schema["component"].dataType.simpleString() == "bigint"
+    assert {r["node"]: r["component"] for r in ccd.collect()} == expected
+    plan = ccd._sc._jvm.PythonSQLUtils.explainString(
+        ccd._jdf.queryExecution(), "simple"
+    )
+    assert "ExistingRDD" not in plan

@@ -64,12 +64,6 @@ def test_decontaminate_flags_and_threshold(spark):
     assert out[1]["n_ngrams"] == 3 and out[1]["n_contam"] == 2
     assert out[1]["contaminated"] == 1
     assert out[2]["n_contam"] == 0 and out[2]["contaminated"] == 0
-    # raising max_overlap clears the flag without changing the counts
-    relaxed = {
-        r["doc_id"]: r
-        for r in decontaminate(train, test, n=3, max_overlap=2).collect()
-    }
-    assert relaxed[1]["contaminated"] == 0
 
 
 def test_decontaminate_broadcasts_test_side(spark):

@@ -8,6 +8,7 @@ import json
 
 import pytest
 
+from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
 from delm_spark.delm import DelmSpark
 
 CONFIG_YAML = """
@@ -322,3 +323,57 @@ def test_prompted_backend_flaky_transport_e2e(spark, tmp_path):
     )
     with pytest.raises(BudgetExceededError):
         d1b.process_via_llm()
+
+
+def _prep_plan(prepped):
+    return prepped._sc._jvm.PythonSQLUtils.explainString(
+        prepped._jdf.queryExecution(), "simple"
+    )
+
+
+def _facade(spark, target="text"):
+    return DelmSpark.from_dict(
+        {
+            "data_preprocessing": {
+                "target_column": target,
+                "splitting": {"type": None},
+            },
+            "schema": {"spec": TRIPLE_SCHEMA_CFG},
+        },
+        spark,
+    )
+
+
+def test_record_id_parquet_source_no_exchange(spark, tmp_path):
+    """A parquet-backed corpus gets record ids from _metadata
+    (file_path, row_index) — a pure map stage, NO shuffle — while
+    byte-identical duplicate rows still get distinct ids."""
+    p = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [("same text",)] * 3 + [("other",)], "text string"
+    ).coalesce(1).write.parquet(p)
+    prepped = _facade(spark).prep_data(spark.read.parquet(p))
+    assert prepped.select("delm_record_id").distinct().count() == 4
+    assert "Exchange" not in _prep_plan(prepped)
+
+
+def test_record_id_text_corpus_no_exchange(spark, tmp_path):
+    """Whole-file corpora suffix by file name: byte-identical FILES get
+    distinct ids with no exchange in the prep plan."""
+    c = tmp_path / "corpus"
+    c.mkdir()
+    (c / "a.txt").write_text("hello world")
+    (c / "b.txt").write_text("hello world")
+    prepped = _facade(spark, target="delm_raw_data").prep_data(str(c))
+    assert prepped.select("delm_record_id").distinct().count() == 2
+    assert "Exchange" not in _prep_plan(prepped)
+
+
+def test_record_id_in_memory_fallback_still_distinct(spark):
+    """Frames without file provenance keep the deterministic window
+    fallback — ids stay distinct for duplicate rows."""
+    df = spark.createDataFrame(
+        [("same text",)] * 3 + [("other",)], "text string"
+    )
+    prepped = _facade(spark).prep_data(df)
+    assert prepped.select("delm_record_id").distinct().count() == 4

@@ -4,8 +4,6 @@ rather than guessed."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from delm_spark.kg.ground import ground_pronouns
 
 TRIPLE_SCHEMA = "conv_id string, turn_idx int, subj string, pred string, obj string"
@@ -71,39 +69,6 @@ def test_plan_no_cartesian_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_pipeline_composes_grounding(spark):
-    """run_pipeline(ground_pronouns=True) binds an extracted first-person
-    subject to the speaker entity end-to-end; off by default the same
-    triple keeps the verbatim 'I' and a minted mention id."""
-    from delm_spark.data.synthetic import entity_dictionary
-    from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-
-    transcripts = spark.createDataFrame(
-        [
-            ("cg1", 0, "user", "I works at Acme Corp.", None, "2024-01-01 00:00:00"),
-            ("cg1", 1, "assistant", "Alice Smith works at Acme Corp.", None,
-             "2024-01-01 00:00:01"),
-        ],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = entity_dictionary(spark)
-
-    on = run_pipeline(
-        spark, transcripts, d, PipelineConfig(ground_pronouns=True)
-    ).edges
-    subj = {r["subj"]: r["subj_id"] for r in on.collect()}
-    assert subj["speaker:cg1:user"] == "speaker:cg1:user"
-    assert "I" not in subj
-    # the non-pronoun triple is untouched by the flag
-    assert "Alice Smith" in subj
-
-    off = run_pipeline(spark, transcripts, d, PipelineConfig()).edges
-    subj_off = {r["subj"]: r["subj_id"] for r in off.collect()}
-    assert subj_off["I"] == "mention:i"
-    assert on.count() == off.count()
-
-
 def test_second_person_binds_to_addressee(spark):
     """'you' grounds to the other role in a two-party conversation;
     monologues and 3+-party conversations leave it ungrounded."""
@@ -149,34 +114,6 @@ def test_second_person_off_by_default(spark):
     assert _rows(ground_pronouns(triples, turns)) == {
         ("two", 0, "you", "works_at", "acme", 0)
     }
-
-
-def test_pipeline_second_person_flag(spark):
-    """ground_second_person=True additionally binds an extracted 'You'
-    subject to the two-party addressee."""
-    from delm_spark.data.synthetic import entity_dictionary
-    from delm_spark.kg.pipeline import PipelineConfig, run_pipeline
-
-    transcripts = spark.createDataFrame(
-        [
-            ("cg2", 0, "user", "You works at Acme Corp.", None,
-             "2024-01-01 00:00:00"),
-            ("cg2", 1, "assistant", "I works at Initech.", None,
-             "2024-01-01 00:00:01"),
-        ],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = entity_dictionary(spark)
-
-    edges = run_pipeline(
-        spark, transcripts, d,
-        PipelineConfig(ground_pronouns=True, ground_second_person=True),
-    ).edges
-    subj = {r["subj"]: r["subj_id"] for r in edges.collect()}
-    # 'You' spoken by the user -> the assistant; 'I' by the assistant
-    assert subj["speaker:cg2:assistant"] == "speaker:cg2:assistant"
-    assert "You" not in subj and "I" not in subj
 
 
 def test_null_subject_passes_through(spark):

@@ -130,105 +130,20 @@ def test_linking_and_canonicalization(spark, pipeline_result):
     assert all(r["obj_canonical"].startswith("org:") for r in orgs.collect())
 
 
-def test_integrity_gate_quarantines_malformed_conversations(spark):
-    """integrity_gate=True drops structurally broken conversations before
-    chunking (default rules = structural only); the surviving triple set
-    equals the ungated pipeline run on the clean subset, soft counters
-    (role repeats, empty text) report without dropping, and the report
-    rides along on the result."""
-    from delm_spark.kg.pipeline import config_fingerprint
-
-    t = generate_transcripts(spark, n_convs=12)
-    # corrupt three conversations three different structural ways
-    bad_dup = t.filter(F.col("conv_id") == "conv_00000000").withColumn(
-        "turn_idx", F.when(F.col("turn_idx") == 1, 0).otherwise(F.col("turn_idx"))
-    )
-    bad_gap = t.filter(F.col("conv_id") == "conv_00000001").filter(
-        F.col("turn_idx") != 1
-    )
-    bad_ts = t.filter(F.col("conv_id") == "conv_00000002").withColumn(
-        "ts",
-        F.when(
-            F.col("turn_idx") == 2, F.col("ts") - F.expr("INTERVAL 1000 SECONDS")
-        ).otherwise(F.col("ts")),
-    )
-    # a soft defect: blank text — reported, NOT quarantined by default
-    soft_empty = t.filter(F.col("conv_id") == "conv_00000003").withColumn(
-        "text", F.when(F.col("turn_idx") == 0, "").otherwise(F.col("text"))
-    )
-    broken = ("conv_00000000", "conv_00000001", "conv_00000002")
-    clean = t.filter(~F.col("conv_id").isin(*broken, "conv_00000003"))
-    corrupted = (
-        clean.unionByName(bad_dup)
-        .unionByName(bad_gap)
-        .unionByName(bad_ts)
-        .unionByName(soft_empty)
-    )
-
-    gated = run_pipeline(
-        spark,
-        corrupted,
-        entity_dictionary(spark),
-        PipelineConfig(integrity_gate=True),
-    )
-    assert gated.integrity is not None
-    # materialize once: the lazy result is collected three times below,
-    # and each action would otherwise re-run the whole gated pipeline
-    gated.triples = gated.triples.localCheckpoint(eager=True)
-    gated.integrity = gated.integrity.localCheckpoint(eager=True)
-    report = {r["conv_id"]: r.asDict() for r in gated.integrity.collect()}
-    assert report["conv_00000000"]["disposition"] == "dup_turn_idx"
-    assert report["conv_00000001"]["disposition"] == "gap_turn_idx"
-    assert report["conv_00000002"]["disposition"] == "ts_regression"
-    # soft defect: counter fires, disposition stays ok (role_repeat and
-    # empty_text are not in the default enforced rule set)
-    assert report["conv_00000003"]["n_empty_text"] >= 1
-    assert report["conv_00000003"]["disposition"] == "ok"
-
-    # surviving triples == ungated run over clean + the soft-defect conv
-    kept = clean.unionByName(soft_empty)
-    ungated_on_kept = run_pipeline(spark, kept, entity_dictionary(spark))
-    key = ["conv_id", "turn_idx", "chunk_pos", "subj", "pred", "obj"]
-    a = sorted(map(tuple, gated.triples.select(*key).collect()))
-    b = sorted(map(tuple, ungated_on_kept.triples.select(*key).collect()))
-    assert a == b
-    surviving = {
-        r["conv_id"] for r in gated.triples.select("conv_id").distinct().collect()
-    }
-    assert not surviving & set(broken)
-    # ungated result carries no report
-    assert ungated_on_kept.integrity is None
-
-    # the gate participates in the resume fingerprint: a checkpoint built
-    # without it (or with different rules) must not satisfy a gated resume
-    backend = RuleTripleExtractor(spec_from_dict(TRIPLE_SCHEMA_CFG))
-    fp_gated = config_fingerprint(PipelineConfig(integrity_gate=True), backend)
-    assert fp_gated != config_fingerprint(PipelineConfig(), backend)
-    assert fp_gated != config_fingerprint(
-        PipelineConfig(
-            integrity_gate=True,
-            integrity_rules=("dup_turn_idx",),
-        ),
-        backend,
-    )
-
-
 def test_integrity_rules_validation(spark):
-    """Unknown rule names fail fast, and a full-chain disposition ranks
-    role_repeat above empty_text per the fixed severity order."""
-    from delm_spark.kg.trajectory import INTEGRITY_RULES, transcript_integrity
+    """The disposition ranks role_repeat above empty_text per the fixed
+    severity order."""
+    from delm_spark.kg.trajectory import transcript_integrity
 
     t = generate_transcripts(spark, n_convs=2)
-    with pytest.raises(ValueError, match="unknown integrity rules"):
-        transcript_integrity(t, rules=("dup_turn_idx", "bogus"))
-    # full chain on a conversation with both a stuck role and blank text
+    # a conversation with both a stuck role and blank text
     bad = t.filter(F.col("conv_id") == "conv_00000000").withColumn(
         "role", F.lit("agent")
     ).withColumn(
         "text", F.when(F.col("turn_idx") == 0, "").otherwise(F.col("text"))
     )
     row = (
-        transcript_integrity(bad, rules=INTEGRITY_RULES)
+        transcript_integrity(bad)
         .filter(F.col("conv_id") == "conv_00000000")
         .collect()[0]
     )

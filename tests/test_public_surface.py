@@ -5,11 +5,23 @@ functions of the program share one implementation.
 A public name counts as called when a program file — the package itself,
 __spark_entry__.py, submit_*.py, bench*.py or perfbench/ — references it
 as an identifier (a name, an attribute or an import) outside its own
-definition. A defaulted parameter counts as set when some program call
-site of its function passes it: by keyword, by position, or through a
-`*`/`**` splat. Tests do not count: public code or parameters that only
-tests use are deleted, or listed in ALLOWED / ALLOWED_PARAMS with the
-one-line reason they stay. Two functions or methods of delm_spark/ or
+definition. The defaulted parameters are those of public functions and
+methods plus the defaulted fields of public dataclasses (the parameters
+of the `__init__` they generate). One counts as set when some program
+call site of its function or class (`cls(...)` in a classmethod calls
+its class) passes it: by keyword, by position, or through a `*args`
+splat; a `**name` splat sets only the keys of the `dict(k=…)` or
+`{"k": …}` it is bound to in the same function plus its `name["k"] = …`
+stores, and sets any parameter when those keys are unknown. Passing on
+the enclosing function's own arguments sets nothing by itself: a
+defaulted parameter of a public function (`spark`) sets the callee's
+where that function's callers set it, and a splat of its own `**kwargs`
+sets nothing (the keywords its callers pass are not followed, so a
+finding there is a false alarm, never a miss). An attribute store
+outside `self` (`config.checkpoint_dir = …`) sets that dataclass field.
+Tests do not count: public code or parameters that only tests use are
+deleted, or listed in ALLOWED / ALLOWED_PARAMS with the one-line reason
+they stay. Two functions or methods of delm_spark/ or
 __spark_entry__.py with equal arguments and body (docstrings aside) are
 one behaviour written twice: one goes, unless ALLOWED_DUPLICATES says why
 both stay. Pure `ast` parsing, no Spark."""
@@ -159,50 +171,174 @@ def _import_aliases(tree: ast.AST) -> dict[str, str]:
     }
 
 
-def _call_sites(trees) -> dict[str, list[ast.Call]]:
-    """callee name -> every program call of it: `f(...)` through import
-    aliases, and `x.f(...)` by attribute name (a method call matches
-    every def of that name — it can only hide an unset parameter, never
-    invent one)."""
-    out: dict[str, list[ast.Call]] = {}
+def _decorated(node, name: str) -> bool:
+    """`node` carries `@name`, `@name(...)` or `@mod.name`."""
+    for d in node.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        if (isinstance(d, ast.Name) and d.id == name) or (
+            isinstance(d, ast.Attribute) and d.attr == name
+        ):
+            return True
+    return False
+
+
+def _scoped_calls(node, scope, klass=None, owner=None):
+    """(call, enclosing function or module, the class `cls` names there)
+    for every call under `node`."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, ast.ClassDef):
+            yield from _scoped_calls(child, scope, child.name, owner)
+        elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            inner = owner
+            if klass is not None:
+                inner = klass if _decorated(child, "classmethod") else None
+            yield from _scoped_calls(child, child, None, inner)
+        else:
+            if isinstance(child, ast.Call):
+                yield child, scope, owner
+            yield from _scoped_calls(child, scope, klass, owner)
+
+
+def _splat_keys(scope, name: str):
+    """The parameter names a `**name` splat in `scope` sets: the keys of
+    the `dict(k=…)` or `{"k": …}` that `name` is bound to there, plus its
+    `name["k"] = …` stores; nothing for the enclosing function's own
+    `**kwargs`, which passes its callers' keywords through. None when the
+    keys are unknown (the splat may set any parameter)."""
+    a = getattr(scope, "args", None)
+    own = a is not None and a.kwarg is not None and a.kwarg.arg == name
+    keys: set = set()
+    for n in ast.walk(scope):
+        if isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == name for t in n.targets
+        ):
+            v = n.value
+            if (
+                isinstance(v, ast.Call)
+                and isinstance(v.func, ast.Name)
+                and v.func.id == "dict"
+                and not v.args
+                and all(k.arg for k in v.keywords)
+            ):
+                keys.update(k.arg for k in v.keywords)
+            elif isinstance(v, ast.Dict) and all(
+                isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+            ):
+                keys.update(k.value for k in v.keys)
+            else:
+                return None
+            own = True
+        elif isinstance(n, ast.Subscript) and isinstance(n.ctx, ast.Store):
+            if isinstance(n.value, ast.Name) and n.value.id == name:
+                if not (isinstance(n.slice, ast.Constant) and isinstance(n.slice.value, str)):
+                    return None
+                keys.add(n.slice.value)
+        elif isinstance(n, (ast.AugAssign, ast.AnnAssign, ast.Attribute)):
+            t = n.target if not isinstance(n, ast.Attribute) else n.value
+            if isinstance(t, ast.Name) and t.id == name:
+                return None  # `kw |= …`, `kw.update(…)`: keys unknown
+    return keys if own else None
+
+
+def _call_sites(trees, quals) -> dict[str, list[tuple[dict, object, bool]]]:
+    """callee name -> (positions, keywords, splats `*args`) per program
+    call: `f(...)` through import aliases, `x.f(...)` by attribute name (a
+    method call matches every def of that name — it can only hide an unset
+    parameter, never invent one), and `cls(...)` in a classmethod by its
+    class. Positions and keywords map to None when the call sets them, or
+    to the `qualname(param)` whose value they pass through: an argument
+    that is a defaulted parameter of the enclosing public function (named
+    in `quals`) sets the callee's only where that one is set, unless the
+    call recurses. Keywords is None when a `**` splat may set any
+    parameter."""
+    out: dict[str, list] = {}
     for tree in trees.values():
         aliases = _import_aliases(tree)
-        for n in ast.walk(tree):
-            if not isinstance(n, ast.Call):
-                continue
+        for n, scope, owner in _scoped_calls(tree, tree):
             if isinstance(n.func, ast.Name):
-                name = aliases.get(n.func.id, n.func.id)
+                name = owner if n.func.id == "cls" and owner else n.func.id
+                name = aliases.get(name, name)
             elif isinstance(n.func, ast.Attribute):
                 name = n.func.attr
             else:
                 continue
-            out.setdefault(name, []).append(n)
+            qual = quals.get(id(scope))
+            through = set()
+            if qual and name != scope.name:  # a recursive call sets, as a call
+                through = {p for p, _ in _defaulted(scope, 0)}
+
+            def via(v):
+                if isinstance(v, ast.Name) and v.id in through:
+                    return f"{qual}({v.id})"
+                return None
+
+            positions = {i: via(a) for i, a in enumerate(n.args)}
+            keys: dict | None = {}
+            for k in n.keywords:
+                if k.arg:
+                    more = {k.arg: via(k.value)}
+                elif isinstance(k.value, ast.Name):
+                    more = _splat_keys(scope, k.value.id)
+                    if more is not None:
+                        more = dict.fromkeys(more)
+                else:
+                    more = None
+                keys = None if keys is None or more is None else {**keys, **more}
+            starred = any(isinstance(a, ast.Starred) for a in n.args)
+            out.setdefault(name, []).append((positions, keys, starred))
     return out
 
 
-def _public_defs(trees):
-    """(qualified name, callee name, def, leading params a call skips) for
-    every public function of the package, and every `__init__`/public
-    method of its public classes (a class is called by its own name)."""
+def _dataclass_fields(cls: ast.ClassDef):
+    """(name, call position) of every public defaulted field of a
+    dataclass: the parameters of the `__init__` it generates."""
+    if not _decorated(cls, "dataclass") or any(
+        isinstance(m, ast.FunctionDef) and m.name == "__init__" for m in cls.body
+    ):
+        return
+    pos = 0
+    for s in cls.body:
+        if not (isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)):
+            continue
+        if "ClassVar" in ast.unparse(s.annotation):
+            continue
+        v = s.value
+        if isinstance(v, ast.Call) and any(
+            k.arg == "init" and isinstance(k.value, ast.Constant) and k.value.value is False
+            for k in v.keywords
+        ):
+            continue
+        if v is not None and not s.target.id.startswith("_"):
+            yield s.target.id, pos
+        pos += 1
+
+
+def _public_params(trees):
+    """(qualified name, callee name, def or None for a dataclass field,
+    parameter, call position or None if keyword-only) for every defaulted
+    parameter of every public function of the package, every
+    `__init__`/public method of its public classes (a class is called by
+    its own name) and every public field of its public dataclasses."""
     for f, tree in trees.items():
         if REPO / "delm_spark" not in f.parents:
             continue
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 if not node.name.startswith("_"):
-                    yield node.name, node.name, node, 0
+                    for p, i in _defaulted(node, 0):
+                        yield node.name, node.name, node, p, i
             elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                for p, i in _dataclass_fields(node):
+                    yield f"{node.name}.__init__", node.name, None, p, i
                 for m in node.body:
                     if not isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
                         continue
                     if m.name != "__init__" and m.name.startswith("_"):
                         continue
-                    static = any(
-                        isinstance(d, ast.Name) and d.id == "staticmethod"
-                        for d in m.decorator_list
-                    )
+                    skip = 0 if _decorated(m, "staticmethod") else 1
                     callee = node.name if m.name == "__init__" else m.name
-                    yield f"{node.name}.{m.name}", callee, m, 0 if static else 1
+                    for p, i in _defaulted(m, skip):
+                        yield f"{node.name}.{m.name}", callee, m, p, i
 
 
 def _defaulted(fn: ast.FunctionDef, skip: int):
@@ -218,25 +354,49 @@ def _defaulted(fn: ast.FunctionDef, skip: int):
             yield p.arg, None
 
 
-def _sets(call: ast.Call, name: str, index) -> bool:
-    if any(isinstance(a, ast.Starred) for a in call.args):
+def _sets(site, name: str, index, unset: set) -> bool:
+    """Whether a call site sets parameter `name` at position `index`; a
+    pass-through sets it unless its source is in `unset`."""
+    positions, keys, starred = site
+    if starred or keys is None:
         return True
-    if index is not None and len(call.args) > index:
-        return True
-    return any(k.arg is None or k.arg == name for k in call.keywords)
+    via = [d[k] for d, k in ((positions, index), (keys, name)) if k in d]
+    return any(v is None or v not in unset for v in via)
+
+
+def _attribute_stores(trees) -> set[str]:
+    """Attribute names a program file assigns outside `self`
+    (`config.checkpoint_dir = …` sets that dataclass field)."""
+    return {
+        n.attr
+        for tree in trees.values()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and isinstance(n.ctx, ast.Store)
+        and not (isinstance(n.value, ast.Name) and n.value.id == "self")
+    }
 
 
 def _unset_params() -> set[str]:
     """`qualname(param)` of every defaulted public parameter no program
     call site sets."""
     trees = {f: ast.parse(f.read_text(), str(f)) for f in _program_files()}
-    calls = _call_sites(trees)
-    return {
-        f"{qual}({name})"
-        for qual, callee, fn, skip in _public_defs(trees)
-        for name, index in _defaulted(fn, skip)
-        if not any(_sets(c, name, index) for c in calls.get(callee, []))
-    }
+    params = list(_public_params(trees))
+    calls = _call_sites(trees, {id(fn): q for q, _, fn, _, _ in params if fn})
+    stored = _attribute_stores(trees)
+    # start from "nothing is set" and let call sites set parameters until
+    # nothing changes: a pass-through is set only once its source is
+    unset = {f"{q}({p})" for q, _, _, p, _ in params}
+    while True:
+        still = {
+            f"{qual}({name})"
+            for qual, callee, fn, name, index in params
+            if not (fn is None and name in stored)
+            and not any(_sets(c, name, index, unset) for c in calls.get(callee, []))
+        }
+        if still == unset:
+            return unset
+        unset = still
 
 
 def test_every_parameter_has_a_caller():

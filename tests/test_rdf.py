@@ -90,11 +90,19 @@ def test_malformed_comment_blank_disposition(spark):
 
 
 def test_foreign_base_iri_kept_verbatim(spark):
+    """Only base-stripped ids are percent-decoded: a foreign IRI keeps
+    its escapes, so it re-exports to the same IRI."""
     lines = spark.createDataFrame(
-        [("<http://other.org/s> <urn:delm:p> <urn:delm:o> .",)], "line string"
+        [
+            ("<http://other.org/s> <urn:delm:p> <urn:delm:o> .",),
+            ("<http://ex.org/a%20b> <urn:delm:p> <urn:delm:a%20b> .",),
+        ],
+        "line string",
     )
-    row = from_ntriples(lines).collect()[0]
-    assert row.subj_id == "http://other.org/s" and row.pred == "p"
+    rows = from_ntriples(lines).collect()
+    assert rows[0].subj_id == "http://other.org/s" and rows[0].pred == "p"
+    assert rows[1].subj_id == "http://ex.org/a%20b"
+    assert rows[1].obj_id == "a b"
 
 
 def test_escape_table_order_pins_percent_first():

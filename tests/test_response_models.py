@@ -113,3 +113,37 @@ def test_prompted_backend_passes_response_model():
 
     out = PromptedApiBackend(spec, transport4).extract_raw("text")
     assert out["items"][0]["subj"] == "X"
+
+
+def test_transport_defaulted_fifth_param_is_not_response_model():
+    """Transport signature inference hands the dynamic response model
+    to a required 5th parameter or one named response_model, never to an
+    unrelated defaulted one."""
+    from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
+    from delm_spark.extraction.backend import PromptedApiBackend
+
+    spec = spec_from_dict(TRIPLE_SCHEMA_CFG)
+    seen = {}
+
+    def with_timeout(prompt, system, model, temp, timeout=30):
+        seen["timeout"] = timeout
+        return {"triples": []}
+
+    PromptedApiBackend(spec, with_timeout).extract_raw("t")
+    # the defaulted unrelated 5th param must keep its default
+    assert seen["timeout"] == 30
+
+    def instructor_shaped(prompt, system, model, temp, response_model):
+        seen["rm"] = response_model
+        return {"triples": []}
+
+    PromptedApiBackend(spec, instructor_shaped).extract_raw("t")
+    assert seen["rm"] is not None  # required 5th -> model passed
+
+    def named_with_default(prompt, system, model, temp, response_model=None):
+        seen["rm2"] = response_model
+        return {"triples": []}
+
+    # literally named response_model -> passed even when defaulted
+    PromptedApiBackend(spec, named_with_default).extract_raw("t")
+    assert seen["rm2"] is not None
