@@ -965,21 +965,33 @@ def _rn_graph_base(spark, sf_dir, n):
 _PR_N, _PR_ITERS, _PR_DAMPING = 1024, 3, 0.85
 
 
+def _block_graph(spark, sf_dir, hub: bool):
+    """(u, v) edges over _rn_graph_base(_PR_N): 64-node blocks, each a
+    chain i->i+1 plus, with `hub`, edges i->block head for i in 1..62
+    (block tails dangle), else skip edges i->i+2."""
+    rn = _rn_graph_base(spark, sf_dir, _PR_N)
+    chain = rn.filter(F.col("rn") % 64 != 63).select(
+        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
+    )
+    if hub:
+        extra = rn.filter((F.col("rn") % 64).between(1, 62)).select(
+            F.col("rn").alias("u"), (F.col("rn") - F.col("rn") % 64).alias("v")
+        )
+    else:
+        extra = rn.filter(F.col("rn") % 64 <= 61).select(
+            F.col("rn").alias("u"), (F.col("rn") + 2).alias("v")
+        )
+    return chain.unionByName(extra)
+
+
 def pagerank_demo(spark, sf_dir):
     """Power-iteration PageRank (kg/graph.py) on a deterministic synthetic
     graph: 64-node blocks with a chain i->i+1 plus hub edges i->block head;
     block tails (i%64==63) are dangling, exercising the dangling-mass
     redistribution. The oracle unrolls the identical 3 iterations as CTEs;
     ranks are scaled by N and rounded to 4dp for FP-stable comparison."""
-    rn = _rn_graph_base(spark, sf_dir, _PR_N)
-    chain = rn.filter(F.col("rn") % 64 != 63).select(
-        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
-    )
-    hub = rn.filter((F.col("rn") % 64).between(1, 62)).select(
-        F.col("rn").alias("u"), (F.col("rn") - F.col("rn") % 64).alias("v")
-    )
     ranks = pagerank(
-        chain.unionByName(hub),
+        _block_graph(spark, sf_dir, hub=True),
         iters=_PR_ITERS,
         damping=_PR_DAMPING,
         src="u",
@@ -1001,15 +1013,9 @@ def ppr_demo(spark, sf_dir):
     from delm_spark.kg.graph import personalized_pagerank
 
     rn = _rn_graph_base(spark, sf_dir, _PR_N)
-    chain = rn.filter(F.col("rn") % 64 != 63).select(
-        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
-    )
-    hub = rn.filter((F.col("rn") % 64).between(1, 62)).select(
-        F.col("rn").alias("u"), (F.col("rn") - F.col("rn") % 64).alias("v")
-    )
     seeds = rn.filter(F.col("rn") % 64 == 0).select(F.col("rn").alias("node"))
     ranks = personalized_pagerank(
-        chain.unionByName(hub),
+        _block_graph(spark, sf_dir, hub=True),
         seeds,
         iters=_PR_ITERS,
         damping=_PR_DAMPING,
@@ -1026,14 +1032,7 @@ def triangle_blocks_demo(spark, sf_dir):
     synthetic graph whose 64-node blocks carry chain (i,i+1) and skip
     (i,i+2) edges — 62 triangles per block; counts grouped by block. The
     oracle counts the same triangles with an a<b<c three-way self-join."""
-    rn = _rn_graph_base(spark, sf_dir, _PR_N)
-    chain = rn.filter(F.col("rn") % 64 != 63).select(
-        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
-    )
-    skip = rn.filter(F.col("rn") % 64 <= 61).select(
-        F.col("rn").alias("u"), (F.col("rn") + 2).alias("v")
-    )
-    tri = triangles(chain.unionByName(skip), src="u", dst="v")
+    tri = triangles(_block_graph(spark, sf_dir, hub=False), src="u", dst="v")
     return (
         tri.groupBy(F.floor(F.col("a") / 64).cast("long").alias("block"))
         .agg(F.count("*").cast("long").alias("n_triangles"))
@@ -1046,9 +1045,7 @@ def minhash_lsh_pairs_docs(spark, sf_dir):
     corpus is one parquet file (one scan task); the explicit round-robin
     repartition spreads the shingle+md5 work across all cores — on a real
     multi-file table the scan parallelism makes it unnecessary."""
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4).orderBy(
         "id_a", "id_b"
     )
@@ -1058,9 +1055,7 @@ def near_dup_pipeline_docs(spark, sf_dir):
     """The composed near-dup SCALE path: MinHash-LSH candidate pairs ->
     exact n-gram Jaccard re-rank on candidates only (never all-pairs).
     Oracle reproduces both stages in SQL."""
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_t(spark, sf_dir, "documents"))
     cands = minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4)
     return (
         ngram_jaccard_pairs(
@@ -1079,9 +1074,7 @@ def near_dup_canonical_docs(spark, sf_dir):
     the whole chain incl. components via a recursive reachability CTE."""
     from delm_spark.operators.dedup import near_dup_canonical
 
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return near_dup_canonical(
         docs, "text", "doc_id", k=16, bands=4, n=3, threshold=0.5
     ).orderBy("doc_id")
@@ -1097,9 +1090,7 @@ def containment_dedup_docs(spark, sf_dir):
     the same integer arithmetic."""
     from delm_spark.operators.dedup import containment_pairs
 
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return containment_pairs(
         docs, "text", "doc_id", n=3, k=16, bands=4, threshold_micro=600_000
     ).orderBy("id_a", "id_b")
@@ -2160,15 +2151,8 @@ def clustering_coeff_graph(spark, sf_dir):
     integer cc_micro = (2e6 * triangles) div (d * (d-1)); composition of
     the degree-ordered triangle enumeration with the degree table. The
     oracle re-derives triangles with an a<b<c three-way self-join."""
-    rn = _rn_graph_base(spark, sf_dir, _PR_N)
-    chain = rn.filter(F.col("rn") % 64 != 63).select(
-        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
-    )
-    skip = rn.filter(F.col("rn") % 64 <= 61).select(
-        F.col("rn").alias("u"), (F.col("rn") + 2).alias("v")
-    )
     return clustering_coefficient(
-        chain.unionByName(skip), src="u", dst="v"
+        _block_graph(spark, sf_dir, hub=False), src="u", dst="v"
     ).orderBy("node")
 
 
@@ -2211,15 +2195,8 @@ def link_prediction_kg(spark, sf_dir):
     The oracle replays the wedge join and the exact-integer scoring."""
     from delm_spark.kg.completion import link_prediction_scores
 
-    rn = _rn_graph_base(spark, sf_dir, _PR_N)
-    chain = rn.filter(F.col("rn") % 64 != 63).select(
-        F.col("rn").alias("u"), (F.col("rn") + 1).alias("v")
-    )
-    skip = rn.filter(F.col("rn") % 64 <= 61).select(
-        F.col("rn").alias("u"), (F.col("rn") + 2).alias("v")
-    )
     return link_prediction_scores(
-        chain.unionByName(skip), src="u", dst="v"
+        _block_graph(spark, sf_dir, hub=False), src="u", dst="v"
     ).orderBy("u", "v")
 
 
@@ -2227,9 +2204,7 @@ def simhash_pairs_docs(spark, sf_dir):
     """SimHash near-dup pairs (Hamming <= 3, rotating 4-block LSH — full
     recall for Hamming <= 3 by pigeonhole; md5-derived 60-bit signatures
     so the oracle reproduces them)."""
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return (
         simhash_dedup_pairs(docs, "text", "doc_id")
         .withColumn("hamming", F.col("hamming").cast("long"))
@@ -2255,6 +2230,23 @@ def multimodal_media_features(spark, sf_dir):
     return feats.select("media_id", "n_bytes", "content_sha").orderBy("media_id")
 
 
+def _media_docs(spark, sf_dir, n_docs, encode, *cols):
+    """(media_id, content) for the documents with doc_id < n_docs and
+    non-empty text: media_id is 'm%08d' of doc_id, content the bytes the
+    pandas function `encode` makes from the columns `cols`."""
+    from pyspark.sql.types import BinaryType
+
+    docs = _t(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") < n_docs) & (F.length("text") > 0)
+    )
+    # returnType passed explicitly: pd.Series annotations break typehint
+    # resolution when pandas is imported inside the enclosing function
+    return docs.select(
+        F.format_string("m%08d", F.col("doc_id")).alias("media_id"),
+        F.pandas_udf(encode, BinaryType())(*cols).alias("content"),
+    )
+
+
 def image_pixel_stats_docs(spark, sf_dir):
     """REAL pixel-decode path under the correctness gate: each document's
     text becomes a 32x32 gray image — pure function of the text — encoded
@@ -2270,7 +2262,6 @@ def image_pixel_stats_docs(spark, sf_dir):
     (Gray pixels make float32 luma exact: the Rec.601 coefficients sum to
     1.0 in float32.)"""
     import pandas as pd
-    from pyspark.sql.types import BinaryType
 
     from delm_spark.operators.multimodal import image_pixel_stats
 
@@ -2300,18 +2291,7 @@ def image_pixel_stats_docs(spark, sf_dir):
 
         return pd.Series([one(i, t) for i, t in zip(ids, texts)])
 
-    # returnType passed explicitly: pd.Series annotations break typehint
-    # resolution when pandas is imported inside the enclosing function
-    to_img = F.pandas_udf(_to_img, BinaryType())
-
-    docs = _t(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") < 200) & (F.length("text") > 0)
-    )
-    media = docs.select(
-        F.format_string("m%08d", F.col("doc_id")).alias("media_id"),
-        to_img(F.col("doc_id"), F.col("text")).alias("content"),
-    )
-    stats = image_pixel_stats(media)
+    stats = image_pixel_stats(_media_docs(spark, sf_dir, 200, _to_img, "doc_id", "text"))
     return stats.select(
         "media_id",
         "format",
@@ -2341,8 +2321,6 @@ def audio_features_docs(spark, sf_dir):
     (stdlib RIFF/PCM decode -> integer features), and comes back as
     integers the oracle re-derives closed-form from the SAME text — so
     the encode->decode->stats roundtrip must be numerically exact."""
-    from pyspark.sql.types import BinaryType
-
     from delm_spark.operators.multimodal import audio_features
 
     N = 1000
@@ -2363,16 +2341,7 @@ def audio_features_docs(spark, sf_dir):
 
         return texts.map(one)
 
-    to_wav = F.pandas_udf(_to_wav, BinaryType())
-
-    docs = _t(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") < 200) & (F.length("text") > 0)
-    )
-    media = docs.select(
-        F.format_string("m%08d", F.col("doc_id")).alias("media_id"),
-        to_wav(F.col("text")).alias("content"),
-    )
-    return audio_features(media).select(
+    return audio_features(_media_docs(spark, sf_dir, 200, _to_wav, "text")).select(
         "media_id",
         "format",
         F.col("sample_rate").cast("int").alias("sample_rate"),
@@ -2393,8 +2362,6 @@ def video_frame_sample_docs(spark, sf_dir):
     every 2nd frame, and the per-frame luma sums come back as integers
     the oracle re-derives closed-form from the SAME text. (Gray pixels
     make float32 luma exact, as in image_pixel_stats_docs.)"""
-    from pyspark.sql.types import BinaryType
-
     from delm_spark.operators.multimodal import video_frame_stats
 
     FRAMES, W = 8, 8
@@ -2424,15 +2391,7 @@ def video_frame_sample_docs(spark, sf_dir):
 
         return texts.map(one)
 
-    to_avi = F.pandas_udf(_to_avi, BinaryType())
-
-    docs = _t(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") < 100) & (F.length("text") > 0)
-    )
-    media = docs.select(
-        F.format_string("m%08d", F.col("doc_id")).alias("media_id"),
-        to_avi(F.col("text")).alias("content"),
-    )
+    media = _media_docs(spark, sf_dir, 100, _to_avi, "text")
     return video_frame_stats(media, every_k=2).select(
         "media_id",
         F.col("frame_idx").cast("int").alias("frame_idx"),

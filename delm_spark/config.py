@@ -278,7 +278,8 @@ class DelmConfig:
     def to_pipeline_config(self):
         """Bridge to the KG pipeline's config for nested triple specs.
         `run_pipeline` splits paragraphs, scores keywords and caches to a
-        parquet table; a config asking for anything else is refused."""
+        parquet table; a config asking for anything else, or giving no
+        keywords, is refused."""
         from delm_spark.kg.pipeline import PipelineConfig
 
         from delm_spark.operators.scoring import parse_score_filter
@@ -298,6 +299,12 @@ class DelmConfig:
                     f"{honoured!r}; use DelmSpark, which honours this setting"
                 )
         kw = (prep.scoring or {}).get("keywords") or []
+        if not kw:
+            raise ValueError(
+                "data_preprocessing.scoring.keywords is missing or empty: the KG "
+                "pipeline keeps the chunks that score on these keywords; use "
+                "DelmSpark, which runs without scoring"
+            )
         op, threshold = ">=", 1.0
         f = self.data_preprocessing.pandas_score_filter
         if f:

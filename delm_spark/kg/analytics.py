@@ -90,6 +90,20 @@ def _sorted_pairs(arr: Column) -> Column:
     )
 
 
+def _pair_counts(sets: DataFrame, col: str, pair: str, prefix: str, n: str) -> DataFrame:
+    """(`prefix`_a, `prefix`_b, `n`) for every pair a < b of the sorted
+    distinct arrays in column `col` of `sets`: `n` counts the rows whose
+    array holds both. The pairs explode as the struct column `pair`."""
+    return (
+        sets.select(F.explode(_sorted_pairs(F.col(col))).alias(pair))
+        .groupBy(
+            F.col(f"{pair}.a").alias(f"{prefix}_a"),
+            F.col(f"{pair}.b").alias(f"{prefix}_b"),
+        )
+        .agg(F.count(F.lit(1)).alias(n))
+    )
+
+
 def entity_cooccurrence(triples: DataFrame) -> DataFrame:
     """Entity-pair co-occurrence counts and exact-integer lift.
 
@@ -117,13 +131,7 @@ def entity_cooccurrence(triples: DataFrame) -> DataFrame:
     per_conv = ents.groupBy("__conv").agg(
         F.sort_array(F.collect_set("__e")).alias("__es")
     )
-    pair_counts = (
-        per_conv.select(F.explode(_sorted_pairs(F.col("__es"))).alias("__p"))
-        .groupBy(
-            F.col("__p.a").alias("entity_a"), F.col("__p.b").alias("entity_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_cooccur"))
-    )
+    pair_counts = _pair_counts(per_conv, "__es", "__p", "entity", "n_cooccur")
     ent_counts = F.broadcast(
         ents.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
     )

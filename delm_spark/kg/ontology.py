@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from delm_spark.kg.analytics import _sorted_pairs
+from delm_spark.kg.analytics import _pair_counts
 from delm_spark.kg.canonicalize import connected_components
 
 #: predicate pairs below this extensional Jaccard (micro-units) are not
@@ -66,13 +66,7 @@ def _similarity_from_pairs(
     per_so = pairs.groupBy("__s", "__o").agg(
         F.sort_array(F.collect_set("__p")).alias("__ps")
     )
-    co = (
-        per_so.select(F.explode(_sorted_pairs(F.col("__ps"))).alias("__pp"))
-        .groupBy(
-            F.col("__pp.a").alias("pred_a"), F.col("__pp.b").alias("pred_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+    co = _pair_counts(per_so, "__ps", "__pp", "pred", "n_shared")
     sizes = F.broadcast(sizes)
     return (
         co.join(sizes.select(F.col("__p").alias("pred_a"), F.col("__n").alias("n_a")), "pred_a")

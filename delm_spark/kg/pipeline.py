@@ -5,12 +5,14 @@
 
 Each stage can be checkpointed to a staging parquet directory with
 per-partition lineage (`delm_part_id`); a rerun reuses every committed
-stage (atomic via Spark's _SUCCESS marker), which replaces the reference's
-feather-batch checkpoint/resume with corruption repair
+stage, which replaces the reference's feather-batch checkpoint/resume
+with corruption repair
 (/root/reference/src/delm/core/extraction_manager.py:109-167,
-experiment_manager.py:385-484): a partially-written stage has no _SUCCESS
-file and is rebuilt from the previous committed stage, so restarts are
-idempotent by construction.
+experiment_manager.py:385-484). A stage commits when its config
+fingerprint file is written, after the data (with Spark's _SUCCESS
+marker) and its metrics sidecar: a stage killed anywhere before that has
+no fingerprint file and is rebuilt from the previous committed stage, so
+restarts are idempotent by construction.
 """
 
 from __future__ import annotations
@@ -78,9 +80,11 @@ class StageRunner:
 
     A committed stage directory holds the parquet files, `_SUCCESS` and
     two `_`-prefixed sidecars (invisible to the parquet reader), each
-    created once after the write: `_delm_config_fingerprint` (below) and
-    `_delm_stage.json`, the observed metrics and the read schema
-    (partition columns last). Reads pass that schema, so they run no
+    created once after the write: `_delm_stage.json`, the observed
+    metrics and the read schema (partition columns last), and last
+    `_delm_config_fingerprint` (below), the commit marker: a stage
+    without it (a commit killed after the data write) is not committed
+    and rebuilds. Reads pass that schema, so they run no
     schema-inference job and "007" partition values stay strings. A stage
     committed without `_delm_stage.json` resumes with an inferred schema
     and the metrics the earlier layout's shared `_delm_state.json` holds
@@ -170,7 +174,7 @@ class StageRunner:
         return reader.parquet(str(self._path(name)))
 
     def is_committed(self, name: str) -> bool:
-        if self.dir is None:
+        if self.dir is None or not self._fp_path(name).exists():
             return False
         if self.storage == "iceberg":
             from delm_spark.io import iceberg
@@ -205,8 +209,7 @@ class StageRunner:
         if not self.is_committed(name):
             return None
         p = self._path(name)
-        fp = self._fp_path(name)
-        if not (fp.exists() and fp.read_text() == self.fingerprint):
+        if self._fp_path(name).read_text() != self.fingerprint:
             raise RuntimeError(
                 f"checkpointed stage {name!r} at {p} was built with a "
                 "different config (a different pipeline config/schema); "
@@ -228,9 +231,10 @@ class StageRunner:
             return df
         p = self._path(name)
         if p.exists():
-            # a stale or partial write (a killed run leaves no _SUCCESS;
-            # an uncommitted iceberg snapshot is invisible by construction,
-            # its directory holds only sidecars of a table that is gone)
+            # a stale or partial write (a killed run leaves no fingerprint
+            # file; an uncommitted iceberg snapshot is invisible by
+            # construction, its directory holds only sidecars of a table
+            # that is gone)
             shutil.rmtree(p)
         if PART_ID_COL not in df.columns:
             df = df.withColumn(PART_ID_COL, F.spark_partition_id().cast("long"))
@@ -258,12 +262,13 @@ class StageRunner:
             [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
         )
         # each sidecar is a new file (the directory was cleared before the
-        # write): replacing one just after a parquet write stalled 30-80 ms
+        # write): replacing one just after a parquet write stalled 30-80 ms.
+        # The fingerprint goes last: it marks the stage committed.
         p.mkdir(parents=True, exist_ok=True)
-        self._fp_path(name).write_text(self.fingerprint)
         (p / "_delm_stage.json").write_text(
             json.dumps({"metrics": self.metrics[name], "schema": read_schema.jsonValue()})
         )
+        self._fp_path(name).write_text(self.fingerprint)
         self.built.append(name)
         return self._read_stage(name)
 

@@ -30,6 +30,8 @@ from typing import Optional
 
 import numpy as np
 
+from delm_spark.operators.image_codec import _dib_pixels
+
 # --------------------------------------------------------------------------
 # WAV (RIFF/WAVE, PCM)
 # --------------------------------------------------------------------------
@@ -129,18 +131,6 @@ def audio_stats(sample_rate: int, samples: np.ndarray) -> dict:
 _DIB_FOURCC = (b"\x00\x00\x00\x00", b"DIB ", b"RGB ", b"raw ")
 
 
-def _encode_dib_frame(img: np.ndarray) -> bytes:
-    """HxWx3 uint8 RGB -> bottom-up 24-bit BGR DIB pixel array (the BMP
-    pixel layout without the file header), rows padded to 4 bytes."""
-    h, w, _ = img.shape
-    row_bytes = (w * 3 + 3) & ~3
-    pix = bytearray()
-    for y in range(h - 1, -1, -1):
-        line = img[y][:, [2, 1, 0]].astype(np.uint8).tobytes()
-        pix += line + b"\x00" * (row_bytes - len(line))
-    return bytes(pix)
-
-
 def _decode_dib_frame(data: bytes, w: int, h: int) -> np.ndarray:
     row_bytes = (w * 3 + 3) & ~3
     if len(data) < row_bytes * h:
@@ -193,7 +183,7 @@ def encode_avi(frames: list[np.ndarray], fps: int = 10) -> bytes:
         + _riff_list(b"strl", _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf)),
     )
     movi = _riff_list(
-        b"movi", b"".join(_riff_chunk(b"00db", _encode_dib_frame(f)) for f in frames)
+        b"movi", b"".join(_riff_chunk(b"00db", _dib_pixels(f)) for f in frames)
     )
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body

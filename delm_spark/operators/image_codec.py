@@ -177,15 +177,23 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
     )
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    """HxWx3 uint8 RGB -> uncompressed 24-bit bottom-up BMP (4-byte row
-    padding) — the mirror of decode_bmp; any image viewer opens it."""
+def _dib_pixels(img: np.ndarray) -> bytes:
+    """HxWx3 uint8 RGB -> bottom-up 24-bit BGR DIB pixel array (the BMP
+    pixel layout without the file header), rows padded to 4 bytes."""
     h, w, _ = img.shape
     row_bytes = (w * 3 + 3) & ~3
     pix = bytearray()
     for y in range(h - 1, -1, -1):
         line = img[y][:, [2, 1, 0]].astype(np.uint8).tobytes()  # RGB -> BGR
         pix += line + b"\x00" * (row_bytes - len(line))
+    return bytes(pix)
+
+
+def encode_bmp(img: np.ndarray) -> bytes:
+    """HxWx3 uint8 RGB -> uncompressed 24-bit bottom-up BMP (4-byte row
+    padding) — the mirror of decode_bmp; any image viewer opens it."""
+    h, w, _ = img.shape
+    pix = _dib_pixels(img)
     header = (
         b"BM"
         + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54)
@@ -342,17 +350,20 @@ def _lzw_decode(payload: bytes, min_code_size: int, n_pixels: int) -> bytearray:
     return out
 
 
-def _deinterlace(idx: np.ndarray, w: int, h: int) -> np.ndarray:
-    """Undo GIF's 4-pass row interleave."""
-    rows = np.empty(h, np.int64)
-    order = (
+def _interlace_order(h: int) -> np.ndarray:
+    """GIF's 4-pass row interleave: the image row stored at each position."""
+    return np.array(
         list(range(0, h, 8))
         + list(range(4, h, 8))
         + list(range(2, h, 4))
-        + list(range(1, h, 2))
+        + list(range(1, h, 2)),
+        np.int64,
     )
-    rows[np.array(order, np.int64)] = np.arange(h)
-    return idx.reshape(h, w)[rows]
+
+
+def _deinterlace(idx: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Undo GIF's 4-pass row interleave."""
+    return idx.reshape(h, w)[np.argsort(_interlace_order(h))]
 
 
 def decode_gif(data: bytes) -> np.ndarray:
@@ -465,13 +476,7 @@ def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
     min_code_size = max(2, bits)
     idx = inverse.astype(np.uint8).reshape(h, w)
     if interlace:
-        order = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-        idx = idx[np.array(order, np.int64)]
+        idx = idx[_interlace_order(h)]
     out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
     out += pal.tobytes()

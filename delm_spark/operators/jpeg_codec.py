@@ -330,10 +330,16 @@ def _decode_scan(data, pos, frame, scan, qtables, htables, restart):
                     x0 = (mx * comp["h"] + bx) * 8
                     planes[comp["id"]][y0 : y0 + 8, x0 : x0 + 8] = px
 
+    comps = [comp for comp, _, _ in scan]
+    return _to_pixels([planes[comp["id"]] for comp in comps], comps, hmax, vmax, h, w)
+
+
+def _to_pixels(planes, comps, hmax: int, vmax: int, h: int, w: int) -> np.ndarray:
+    """Sample planes (one per component, at the component's resolution)
+    -> HxWx1 or HxWx3 uint8: replicate-upsample each to full MCU-aligned
+    resolution, crop to h x w, then YCbCr -> RGB for three components."""
     out_planes = []
-    for comp, _, _ in scan:
-        p = planes[comp["id"]]
-        # replicate-upsample to full MCU-aligned resolution, then crop
+    for p, comp in zip(planes, comps):
         ry, rx = vmax // comp["v"], hmax // comp["h"]
         if vmax % comp["v"] or hmax % comp["h"]:
             raise ValueError("non-integer JPEG sampling ratios unsupported")
@@ -538,7 +544,7 @@ def _reconstruct_progressive(frame, coefs, qtables):
     exactly like the sequential path (upsample, crop, color-convert)."""
     h, w = frame["h"], frame["w"]
     hmax, vmax, _, _ = _frame_geometry(frame)
-    out_planes = []
+    planes = []
     for comp in frame["comps"]:
         # qtables store zigzag order; natural position n needs q_zig[k]
         # where ZIGZAG[k] == n, i.e. q_zig[_DEZIG] (same as _decode_scan)
@@ -547,23 +553,8 @@ def _reconstruct_progressive(frame, coefs, qtables):
         nby, nbx = c.shape[:2]
         s = c.reshape(nby, nbx, 8, 8)
         px = np.einsum("km,ijkl,ln->ijmn", _A, s, _A) + 128.0
-        plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        ry, rx = vmax // comp["v"], hmax // comp["h"]
-        if vmax % comp["v"] or hmax % comp["h"]:
-            raise ValueError("non-integer JPEG sampling ratios unsupported")
-        plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
-        out_planes.append(plane[:h, :w])
-    if len(out_planes) == 1:
-        y = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
-        return y[:, :, None]
-    if len(out_planes) != 3:
-        raise ValueError(f"{len(out_planes)}-component JPEG unsupported")
-    y, cb, cr = out_planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+        planes.append(px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8))
+    return _to_pixels(planes, frame["comps"], hmax, vmax, h, w)
 
 # _DEZIG maps natural index -> zigzag rank?  We need, for natural position
 # ZIGZAG[k], the quant entry k.  coef is already stored in natural order via
@@ -716,35 +707,7 @@ def encode_jpeg(
     and embedded in the stream. `restart_interval` > 0 writes DRI and
     emits RSTn markers every that many MCUs (exercises the decoder's
     resync path)."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    if img.dtype != np.uint8 or img.shape[2] not in (1, 3):
-        raise ValueError("encode_jpeg expects HxWx{1,3} uint8")
-    h, w, nch = img.shape
-    q = (EXACT_QTABLE if qtable is None else np.asarray(qtable, np.int64)).copy()
-    if q.shape != (64,) or (q < 1).any() or (q > 255).any():
-        raise ValueError("qtable must be 64 ints in [1, 255] (zigzag order)")
-
-    if nch == 3:
-        f = img.astype(np.float64)
-        y = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-        cb = 128.0 - 0.168736 * f[:, :, 0] - 0.331264 * f[:, :, 1] + 0.5 * f[:, :, 2]
-        cr = 128.0 + 0.5 * f[:, :, 0] - 0.418688 * f[:, :, 1] - 0.081312 * f[:, :, 2]
-        planes = [y, cb, cr]
-    else:
-        planes = [img[:, :, 0].astype(np.float64)]
-
-    bh, bw = -(-h // 8) * 8, -(-w // 8) * 8
-    q_nat = np.empty(64, np.int64)
-    q_nat[ZIGZAG] = q  # natural-order table for the vectorized quantize
-    blocks_per_plane = []
-    for p in planes:
-        padded = np.pad(p, ((0, bh - h), (0, bw - w)), mode="edge") - 128.0
-        nby, nbx = bh // 8, bw // 8
-        blk = padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("km,ijmn,ln->ijkl", _A, blk, _A)
-        qc = np.round(coef / q_nat.reshape(8, 8)).astype(np.int64)
-        blocks_per_plane.append(qc.reshape(nby * nbx, 64))
+    blocks_per_plane, h, w, nch, q = _quantized_planes(img, qtable)
 
     # ---- symbol pass (shared by histogram + emission); DC prediction
     # resets at every restart boundary (MCU == one block at 1x1 sampling)
@@ -778,14 +741,7 @@ def encode_jpeg(
         tables[("dc", 1)] = table_for("dc", chroma_idx)
         tables[("ac", 1)] = table_for("ac", chroma_idx)
 
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HHBB", 1, 1, 0, 0
-    )
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(v) for v in q)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * nch, 8, h, w, nch)
-    for ci in range(nch):
-        out += bytes([ci + 1, 0x11, 0])  # component id, 1x1 sampling, qtable 0
+    out = _frame_header(0xC0, q, h, w, nch)
     for (kind, tid), (counts, symbols, _) in sorted(tables.items()):
         tc = 0 if kind == "dc" else 1
         out += b"\xff\xc4" + struct.pack(">H", 19 + len(symbols))
@@ -859,6 +815,21 @@ def _quantized_planes(img, qtable):
         coef = np.einsum("km,ijmn,ln->ijkl", _A, blk, _A)
         out.append(np.round(coef / q_nat.reshape(8, 8)).astype(np.int64).reshape(-1, 64))
     return out, h, w, nch, q
+
+
+def _frame_header(sof: int, q, h: int, w: int, nch: int) -> bytearray:
+    """SOI, JFIF APP0, the one DQT (table 0) and the SOFn frame header
+    (`sof` 0xC0 baseline or 0xC2 progressive) with every component at
+    1x1 sampling on quantization table 0."""
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
+        ">HHBB", 1, 1, 0, 0
+    )
+    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(v) for v in q)
+    out += bytes([0xFF, sof]) + struct.pack(">HBHHB", 8 + 3 * nch, 8, h, w, nch)
+    for ci in range(nch):
+        out += bytes([ci + 1, 0x11, 0])  # component id, 1x1 sampling, qtable 0
+    return out
 
 
 class _OpStream:
@@ -1010,14 +981,7 @@ def encode_jpeg_progressive(
         for ci in range(nch):
             scans.append(([ci], 1, 63, 1, 0))
 
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HHBB", 1, 1, 0, 0
-    )
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(v) for v in q)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * nch, 8, h, w, nch)
-    for ci in range(nch):
-        out += bytes([ci + 1, 0x11, 0])
+    out = _frame_header(0xC2, q, h, w, nch)
 
     nblocks = qc[0].shape[0]
     # per-coefficient completion tracking is the caller's responsibility;

@@ -240,7 +240,7 @@ def pq_topk(
         .filter(F.col("__r") <= refine * k)
         .select("query_id", "vec_id")
     )
-    from delm_spark.operators.similarity import cosine
+    from delm_spark.operators.similarity import _topk_per_query, cosine
 
     exact = (
         cands.join(embeddings.select("vec_id", "embedding"), "vec_id")
@@ -251,12 +251,7 @@ def pq_topk(
             cosine(F.col("embedding"), F.col("__qv")).alias("__score"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    return _topk_per_query(exact, "__score", k).select("query_id", "vec_id", "rank")
 
 
 def pq_encode_fast(

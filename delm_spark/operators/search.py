@@ -31,6 +31,20 @@ __all__ = ["bm25_topk", "tfidf_top_terms", "term_count_topk", "rrf_fuse"]
 BM25_K1, BM25_B = 1.2, 0.75
 
 
+def _sum_topk(parts: DataFrame, part: str, total: str, hits: str, k: int) -> DataFrame:
+    """Per doc_id, `total` sums the `part` column and `hits` counts the
+    rows summed; the k docs with the highest total, ties by doc_id asc."""
+    return (
+        parts.groupBy("doc_id")
+        .agg(
+            F.sum(part).cast("long").alias(total),
+            F.count(F.lit(1)).cast("int").alias(hits),
+        )
+        .orderBy(F.desc(total), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
@@ -117,15 +131,7 @@ def bm25_topk(
             .alias("score_micro"),
         )
     )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("score_micro").cast("long").alias("score_micro"),
-            F.count(F.lit(1)).cast("int").alias("n_terms_hit"),
-        )
-        .orderBy(F.desc("score_micro"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _sum_topk(scored, "score_micro", "score_micro", "n_terms_hit", k)
 
 
 def tfidf_top_terms(
@@ -277,12 +283,4 @@ def rrf_fuse(
     u = contribs[0]
     for c in contribs[1:]:
         u = u.unionByName(c)
-    return (
-        u.groupBy("doc_id")
-        .agg(
-            F.sum("__rrf_term").cast("long").alias("rrf_micro"),
-            F.count(F.lit(1)).cast("int").alias("n_lists"),
-        )
-        .orderBy(F.desc("rrf_micro"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _sum_topk(u, "__rrf_term", "rrf_micro", "n_lists", k)

@@ -14,7 +14,7 @@ shuffles once on bucket id.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -38,6 +38,13 @@ def cosine(a: Column, b: Column) -> Column:
     ).cast("double")
 
 
+def _topk_per_query(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """`scored` with rank = row_number per query_id by `score` desc, then
+    vec_id asc, kept where rank <= k."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -56,8 +63,6 @@ def brute_force_topk(
 
     Returns (query_id, vec_id, score, rank).
     """
-    from pyspark.sql import Window
-
     q = F.broadcast(
         queries.select("query_id", F.col("embedding").alias("__qv"))
     )
@@ -66,11 +71,7 @@ def brute_force_topk(
         "vec_id",
         cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_per_query(scored, "score", k)
 
 
 def ivf_centroids(embeddings: DataFrame, n_centroids: int) -> DataFrame:
@@ -140,8 +141,6 @@ def ivf_topk(
 
     Returns (query_id, vec_id, score, rank).
     """
-    from pyspark.sql import Window
-
     cents = ivf_centroids(embeddings, n_centroids)
     assigned = ivf_assign(embeddings, cents)
     qs = queries.select("query_id", F.col("embedding").alias("__qv"))
@@ -164,8 +163,7 @@ def ivf_topk(
         "vec_id",
         cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_per_query(scored, "score", k)
 
 
 def embedding_near_dup_pairs(
@@ -278,8 +276,6 @@ def lsh_topk(
     near-duplicates (cos >= 0.95) n_planes=8, radius=2 gives recall >= 0.9
     (pytest-asserted), while uniform-random 'neighbors' (cos ~ 0.3) are
     fundamentally not LSH-recoverable at useful candidate reductions."""
-    from pyspark.sql import Window
-
     emb_b = embeddings.withColumn("__bkt", lsh_bucket(F.col("embedding"), dim, n_planes))
     q_sig = queries.select(
         "query_id", F.col("embedding").alias("__qv")
@@ -296,8 +292,7 @@ def lsh_topk(
         "vec_id",
         cosine(F.col("embedding"), F.col("__qv")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_per_query(scored, "score", k)
 
 
 def semantic_dedup(

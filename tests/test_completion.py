@@ -28,6 +28,37 @@ class TestEntityRanks:
         got = {r["entity"]: r["rank"] for r in entity_ranks(t).collect()}
         assert got == {"a": 0, "b": 1, "c": 2}
 
+    def test_two_phase_matches_global_window(self, spark):
+        """The range-partitioned two-phase rank must equal the old global
+        row_number dense rank on a vocabulary large enough to span many
+        partitions, and its plan must not sort the vocabulary in one task."""
+        from pyspark.sql import Window
+
+        tri = spark.range(20000).select(
+            F.concat(F.lit("e"), F.lpad((F.col("id") * 7919 % 15013).cast("string"), 6, "0")).alias("subj"),
+            F.lit("p").alias("pred"),
+            F.concat(F.lit("x"), F.lpad((F.col("id") * 104729 % 9973).cast("string"), 5, "0")).alias("obj"),
+        )
+        got = entity_ranks(tri).collect()
+        ents = (
+            tri.select(F.col("subj").alias("entity"))
+            .unionByName(tri.select(F.col("obj").alias("entity")))
+            .distinct()
+        )
+        old = ents.select(
+            "entity",
+            (F.row_number().over(Window.orderBy("entity")) - 1).cast("long").alias("rank"),
+        ).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, old))
+        # plan gate: the only SinglePartition window input is the per-block
+        # census (an aggregate), never the vocabulary
+        plan = entity_ranks(tri)._jdf.queryExecution().executedPlan().toString()
+        import re
+
+        for m in re.finditer(r"Window .*SinglePartition", plan):
+            tail = plan[m.start() : m.start() + 2000]
+            assert "HashAggregate" in tail, tail
+
 
 class TestNegativeSamples:
     def test_deterministic_and_filtered(self, spark):

@@ -8,6 +8,9 @@ import pytest
 from delm_spark.config import DelmConfig
 from delm_spark.data.synthetic import TRIPLE_SCHEMA_CFG
 
+#: the keyword scoring every config bridged to the KG pipeline needs
+SCORING = {"scoring": {"type": "KeywordScorer", "keywords": ["works at"]}}
+
 YAML = """
 llm_extraction:
   name: gpt-4o-mini
@@ -83,10 +86,23 @@ def test_validation_errors(mutation, match):
 def test_defaults_validate():
     cfg = DelmConfig.from_dict({})
     assert cfg.llm_extraction.name == "deterministic-rules"
-    assert cfg.to_pipeline_config().score_threshold == 1.0
+    scored = DelmConfig.from_dict({"data_preprocessing": SCORING})
+    assert scored.to_pipeline_config().score_threshold == 1.0
     # without a cache path no cache is written, so the backend is moot
-    sqlite = DelmConfig.from_dict({"semantic_cache": {"backend": "sqlite"}})
+    sqlite = DelmConfig.from_dict(
+        {"data_preprocessing": SCORING, "semantic_cache": {"backend": "sqlite"}}
+    )
     assert sqlite.to_pipeline_config().cache_dir is None
+
+
+@pytest.mark.parametrize("prep", [{}, {"scoring": {}}])
+def test_to_pipeline_config_refuses_missing_keywords(prep):
+    """DelmSpark runs a config without keyword scoring, but the KG
+    pipeline scores every chunk: the bridge refuses it by the setting's
+    name instead of failing later inside the keyword scorer."""
+    cfg = DelmConfig.from_dict({"data_preprocessing": prep})
+    with pytest.raises(ValueError, match=r"data_preprocessing\.scoring\.keywords.*DelmSpark"):
+        cfg.to_pipeline_config()
 
 
 def test_schema_spec_path(tmp_path):
@@ -94,7 +110,7 @@ def test_schema_spec_path(tmp_path):
 
     p = tmp_path / "spec.json"
     p.write_text(json.dumps(TRIPLE_SCHEMA_CFG))
-    cfg = DelmConfig.from_dict({"schema": {"spec_path": str(p)}})
+    cfg = DelmConfig.from_dict({"data_preprocessing": SCORING, "schema": {"spec_path": str(p)}})
     assert cfg.spec.container_name == "triples"
     assert cfg.to_pipeline_config().schema_cfg == TRIPLE_SCHEMA_CFG
 
@@ -193,7 +209,10 @@ def test_pipeline_section_embedding_link_threads_through():
     """The pipeline section's embedding-link settings reach PipelineConfig,
     and an out-of-range threshold is refused."""
     cfg = DelmConfig.from_dict(
-        {"pipeline": {"embedding_link": True, "embedding_link_threshold": 0.7}}
+        {
+            "data_preprocessing": SCORING,
+            "pipeline": {"embedding_link": True, "embedding_link_threshold": 0.7},
+        }
     ).to_pipeline_config()
     assert cfg.embedding_link is True
     assert cfg.embedding_link_threshold == 0.7

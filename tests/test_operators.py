@@ -10,6 +10,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from delm_spark.constants import PARAGRAPH_SPLIT_REGEX
 from delm_spark.operators.dedup import (
     SIMHASH_BITS,
     exact_dedup,
@@ -85,6 +86,136 @@ def test_score_filter_validation():
     assert validate_score_filter("delm_score >= 0.7") == "delm_score >= 0.7"
     with pytest.raises(ValueError):
         validate_score_filter("__import__('os')")
+
+
+# The paragraph/regex split and keyword-score expressions were rewritten
+# for speed; these pin each against the expression it replaced, on
+# adversarial inputs.
+
+
+def _old_strip(x):
+    return F.regexp_replace(F.regexp_replace(x, r"^\s+", ""), r"\s+$", "")
+
+
+def _old_paragraph_split(col):
+    """The pre-r6 chain: split -> transform(regex strip) -> filter."""
+    return F.filter(
+        F.transform(F.split(col, PARAGRAPH_SPLIT_REGEX), lambda x: _old_strip(x)),
+        lambda x: x != F.lit(""),
+    )
+
+
+NASTY_TEXTS = [
+    None,
+    "",
+    " ",
+    "\n\n",
+    " \t \n\n \t ",
+    "plain single paragraph",
+    "a\n\nb",
+    "a \n\n b",
+    "a\nb\n\nc",
+    "a \nb\n\nc d",
+    "a\n\n\n\nb",
+    "a\n\n \t \n\nb",
+    "a\r\n\r\nb",
+    "a\r\n \r\nb",
+    "a\r \n\nb",
+    "a\n\nb",
+    "\n\nleading break",
+    "trailing break\n\n",
+    "  edge ws  \n\n  and more  ",
+    "tab\tinside\n\nkeeps\ttabs",
+    "multi\n\nthree\n\npieces here",
+    "unicode éü\n\nsnowman ☃",
+    "a\f\n\nb",
+    "a\n\r\nb",
+    "x \n \n y",
+    "inner  spaces   kept\n\nok",
+]
+
+
+def test_paragraph_split_matches_old_chain(spark):
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(NASTY_TEXTS)], "i int, t string")
+    got = df.select(
+        "i",
+        paragraph_split_expr(F.col("t")).alias("new"),
+        _old_paragraph_split(F.col("t")).alias("old"),
+    ).collect()
+    for r in got:
+        assert r["new"] == r["old"], (NASTY_TEXTS[r["i"]], r["new"], r["old"])
+
+
+def test_paragraph_split_posexplode_positions(spark):
+    """chunk_pos must be identical under the new expression (the KG
+    pipeline's composite key depends on it)."""
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(NASTY_TEXTS)], "i int, t string")
+    new = df.select(
+        "i", F.posexplode(paragraph_split_expr(F.col("t"))).alias("p", "c")
+    ).collect()
+    old = df.select(
+        "i", F.posexplode(_old_paragraph_split(F.col("t"))).alias("p", "c")
+    ).collect()
+    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+
+
+def test_regex_split_strip_matches_old(spark):
+    """_strip is now btrim over the ASCII-\\s set; must equal the old
+    regexp_replace pair for every piece."""
+    def old_regex_split(col, pattern):
+        return F.filter(
+            F.transform(F.split(col, pattern), lambda x: _old_strip(x)),
+            lambda x: x != F.lit(""),
+        )
+
+    texts = [
+        None,
+        "",
+        "the quick the lazy",
+        "  x the y\t",
+        "a the  the b",
+        "\tthe\t",
+        "unicode é the ☃ end",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = df.select(
+        "i",
+        regex_split_expr(F.col("t"), r"\s+the\s+").alias("new"),
+        old_regex_split(F.col("t"), r"\s+the\s+").alias("old"),
+    ).collect()
+    for r in got:
+        assert r["new"] == r["old"], (texts[r["i"]], r["new"], r["old"])
+
+
+def test_keyword_score_matches_exists_form(spark):
+    keywords = ["works at", "uses the", "Dislikes"]
+
+    def old_score(col):
+        kw_arr = F.array(*[F.lit(k.lower()) for k in keywords])
+        lowered = F.lower(col)
+        return F.exists(kw_arr, lambda kw: lowered.contains(kw)).cast("double")
+
+    texts = [
+        None,
+        "",
+        "Alice WORKS AT Acme.",
+        "nothing relevant",
+        "she dislikes it; he uses the tool",
+        "works  at (double space)",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = df.select(
+        "i",
+        keyword_score_expr(F.col("t"), keywords).alias("new"),
+        old_score(F.col("t")).alias("old"),
+    ).collect()
+    for r in got:
+        assert r["new"] == r["old"], (texts[r["i"]], r["new"], r["old"])
+
+
+def test_keyword_score_empty_keywords_raises(spark):
+    with pytest.raises(ValueError):
+        keyword_score_expr(F.lit("x"), [])
 
 
 def test_majority_vote_df_matches_pure(spark):

@@ -24,11 +24,20 @@ deleted, or listed in ALLOWED / ALLOWED_PARAMS with the one-line reason
 they stay. Two functions or methods of delm_spark/ or
 __spark_entry__.py with equal arguments and body (docstrings aside) are
 one behaviour written twice: one goes, unless ALLOWED_DUPLICATES says why
-both stay. Pure `ast` parsing, no Spark."""
+both stay. The same holds below the function level: a run of consecutive
+statements of one statement list (a body of a function, loop, branch,
+`with` or `try`; a nested def or class ends the run) of at least
+RUN_NODES ast nodes that two functions share, up to the names of
+variables and arguments and the values of constants (attribute names
+count), is one behaviour copied; it becomes one helper, or its pair of
+functions goes into ALLOWED_DUPLICATES with the reason the two must be
+able to diverge. `oracle_sql` and the `*_oracle_sql` functions are
+exempt: their SQL text is frozen. Pure `ast` parsing, no Spark."""
 
 from __future__ import annotations
 
 import ast
+import copy
 from collections import Counter
 from pathlib import Path
 
@@ -95,7 +104,7 @@ ALLOWED_PARAMS = {
 PARAM_REASONS = ("DELM port:", "deployment:", "test seam:", "encoder option:")
 
 #: groups of functions (`path:qualname`, sorted) whose arguments and body
-#: are equal, and why each copy stays
+#: are equal, or pairs that share a statement run, and why each copy stays
 ALLOWED_DUPLICATES = {
     (
         "delm_spark/extraction/fs_cache.py:FilesystemSemanticCache.maybe_prune",
@@ -427,33 +436,131 @@ def _functions(node: ast.AST, prefix: str = ""):
             yield from _functions(child, prefix)
 
 
-def _implementation(fn: ast.FunctionDef) -> str:
-    """The arguments and body of `fn` without its docstring, as an ast
-    dump (no names of its own, no line numbers)."""
-    body = fn.body
-    first = body[0]
+def _body(fn: ast.FunctionDef) -> list[ast.stmt]:
+    """The body of `fn` without its docstring."""
+    first = fn.body[0]
     if (
         isinstance(first, ast.Expr)
         and isinstance(first.value, ast.Constant)
         and isinstance(first.value.value, str)
     ):
-        body = body[1:]
-    return ast.dump(fn.args) + "".join(ast.dump(stmt) for stmt in body)
+        return fn.body[1:]
+    return fn.body
 
 
-def test_no_duplicate_function_bodies():
-    files = [*sorted((REPO / "delm_spark").rglob("*.py")), REPO / "__spark_entry__.py"]
+def _implementation(fn: ast.FunctionDef) -> str:
+    """The arguments and body of `fn` without its docstring, as an ast
+    dump (no names of its own, no line numbers)."""
+    return ast.dump(fn.args) + "".join(ast.dump(stmt) for stmt in _body(fn))
+
+
+def _lint_files() -> list[Path]:
+    return [*sorted((REPO / "delm_spark").rglob("*.py")), REPO / "__spark_entry__.py"]
+
+
+def _duplicate_bodies() -> set[tuple[str, ...]]:
     by_impl: dict[str, list[str]] = {}
-    for f in files:
+    for f in _lint_files():
         rel = f.relative_to(REPO)
         for qual, fn in _functions(ast.parse(f.read_text(), str(f))):
             by_impl.setdefault(_implementation(fn), []).append(f"{rel}:{qual}")
-    dups = {tuple(sorted(names)) for names in by_impl.values() if len(names) > 1}
-    missing = sorted(dups - set(ALLOWED_DUPLICATES))
+    return {tuple(sorted(names)) for names in by_impl.values() if len(names) > 1}
+
+
+def test_no_duplicate_function_bodies():
+    missing = sorted(_duplicate_bodies() - set(ALLOWED_DUPLICATES))
     assert not missing, (
         f"functions with equal arguments and body: {missing}. Keep one and "
         "call it from the others' callers, or add the group to "
         "ALLOWED_DUPLICATES with the reason each copy stays."
     )
-    stale = sorted(set(ALLOWED_DUPLICATES) - dups)
+
+
+#: the smallest statement run, in `ast.walk` nodes, that counts as a copy
+RUN_NODES = 60
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+class _Anonymous(ast.NodeTransformer):
+    """Every name and argument becomes `_` and every constant its type's
+    name, so copies that differ only there dump alike."""
+
+    def visit_Name(self, node):
+        return ast.Name(id="_", ctx=node.ctx)
+
+    def visit_arg(self, node):
+        self.generic_visit(node)
+        node.arg = "_"
+        return node
+
+    def visit_Constant(self, node):
+        return ast.Constant(type(node.value).__name__)
+
+
+def _statement_lists(fn: ast.FunctionDef):
+    """The statement lists of `fn`'s own code: its body without the
+    docstring, and every loop, branch, `with`, `try` and `match` body in
+    it; the code of nested defs and classes is theirs."""
+    todo = [_body(fn)]
+    while todo:
+        stmts = todo.pop()
+        yield stmts
+        for stmt in stmts:
+            if isinstance(stmt, _SCOPES):
+                continue
+            inner = [getattr(stmt, f, []) for f in ("body", "orelse", "finalbody")]
+            inner += [h.body for h in getattr(stmt, "handlers", [])]
+            inner += [c.body for c in getattr(stmt, "cases", [])]
+            todo += [b for b in inner if b]
+
+
+def _duplicate_runs() -> dict[tuple[str, str], str]:
+    """(`path:qualname`, `path:qualname`) -> the lines of one run of at
+    least RUN_NODES nodes the two functions share. Each run is indexed by
+    its shortest prefix that reaches RUN_NODES: a longer shared run
+    shares that prefix too."""
+    runs: dict[tuple[str, ...], list[tuple[str, str]]] = {}
+    for f in _lint_files():
+        rel = f.relative_to(REPO)
+        for qual, fn in _functions(ast.parse(f.read_text(), str(f))):
+            if any(p == "oracle_sql" or p.endswith("_oracle_sql") for p in qual.split(".")):
+                continue
+            for stmts in _statement_lists(fn):
+                keys = [
+                    None
+                    if isinstance(s, _SCOPES)
+                    else (ast.dump(_Anonymous().visit(copy.deepcopy(s))), len(list(ast.walk(s))))
+                    for s in stmts
+                ]
+                for i in range(len(stmts)):
+                    run, size = [], 0
+                    for j in range(i, len(stmts)):
+                        if keys[j] is None:
+                            break
+                        run.append(keys[j][0])
+                        size += keys[j][1]
+                        if size >= RUN_NODES:
+                            where = f"{rel}:{stmts[i].lineno}-{stmts[j].end_lineno}"
+                            runs.setdefault(tuple(run), []).append((f"{rel}:{qual}", where))
+                            break
+    found = {}
+    for occurrences in runs.values():
+        for a, where_a in occurrences:
+            for b, where_b in occurrences:
+                if a < b:
+                    found.setdefault((a, b), f"{where_a} ~ {where_b}")
+    return found
+
+
+def test_no_duplicate_statement_runs():
+    runs = _duplicate_runs()
+    missing = sorted(set(runs) - set(ALLOWED_DUPLICATES))
+    assert not missing, (
+        f"functions sharing a run of statements up to names and constants: "
+        f"{[(pair, runs[pair]) for pair in missing]}. Move the run into one "
+        "helper both call, or add the pair to ALLOWED_DUPLICATES with the "
+        "reason the two must be able to diverge."
+    )
+    stale = sorted(set(ALLOWED_DUPLICATES) - set(runs) - _duplicate_bodies())
     assert not stale, f"ALLOWED_DUPLICATES entries that are not duplicates: {stale}"

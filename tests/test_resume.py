@@ -64,6 +64,39 @@ def test_partial_stage_is_rebuilt(spark, ckpt_dir):
     assert _triples_set(second) == baseline
 
 
+def test_commit_killed_after_data_write_is_rebuilt(spark, ckpt_dir, monkeypatch):
+    """A commit killed between the data write (parquet + _SUCCESS) and
+    the fingerprint file leaves no committed stage: the rerun rebuilds
+    it, resumes the stages before it and returns the same edges."""
+    from delm_spark.kg.pipeline import EDGE_COLS, StageRunner
+
+    def edges(res):
+        return sorted(tuple(r) for r in res.edges.select(*EDGE_COLS).collect())
+
+    t = generate_transcripts(spark, n_convs=20)
+    d = entity_dictionary(spark)
+    cfg = PipelineConfig(checkpoint_dir=ckpt_dir)
+    direct = edges(run_pipeline(spark, t, d, PipelineConfig()))
+
+    write = StageRunner._write_stage
+
+    def killed(runner, df, name, **kwargs):
+        write(runner, df, name, **kwargs)
+        if name == "s3_triples":
+            raise KeyboardInterrupt("killed after the data write")
+
+    monkeypatch.setattr(StageRunner, "_write_stage", killed)
+    with pytest.raises(KeyboardInterrupt):
+        run_pipeline(spark, t, d, cfg)
+    assert (Path(ckpt_dir) / "s3_triples" / "_SUCCESS").exists()
+    monkeypatch.setattr(StageRunner, "_write_stage", write)
+
+    second = run_pipeline(spark, t, d, cfg)
+    assert second.runner.resumed == ["s1_chunks", "s2_extracted"]
+    assert second.runner.built[0] == "s3_triples"
+    assert edges(second) == direct
+
+
 def test_checkpointed_and_direct_runs_agree(spark, ckpt_dir):
     t = generate_transcripts(spark, n_convs=20)
     d = entity_dictionary(spark)

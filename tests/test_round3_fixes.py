@@ -17,6 +17,7 @@ from delm_spark.extraction.extract import compact_cache, extract_chunks
 from delm_spark.kg.pipeline import score_and_filter
 from delm_spark.schemas.spec import spec_from_dict
 from tests.backends import CacheOnlyBackend
+from tests.test_config import SCORING
 
 SPEC = spec_from_dict(TRIPLE_SCHEMA_CFG)
 
@@ -41,16 +42,16 @@ def _chunks(spark):
 
 def test_to_pipeline_config_preserves_operator():
     cfg = DelmConfig.from_dict(
-        {"data_preprocessing": {"pandas_score_filter": "delm_score > 1.0"}}
+        {"data_preprocessing": {**SCORING, "pandas_score_filter": "delm_score > 1.0"}}
     )
     pc = cfg.to_pipeline_config()
     assert pc.score_op == ">" and pc.score_threshold == 1.0
     lt = DelmConfig.from_dict(
-        {"data_preprocessing": {"pandas_score_filter": "delm_score < 1.0"}}
+        {"data_preprocessing": {**SCORING, "pandas_score_filter": "delm_score < 1.0"}}
     ).to_pipeline_config()
     assert lt.score_op == "<"
     eq = DelmConfig.from_dict(
-        {"data_preprocessing": {"pandas_score_filter": "delm_score == 1.0"}}
+        {"data_preprocessing": {**SCORING, "pandas_score_filter": "delm_score == 1.0"}}
     ).to_pipeline_config()
     assert eq.score_op == "="
 
